@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Session factory + catalog bootstrap for the engine.
   *
@@ -115,6 +115,45 @@ object Engine {
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(desc)
     try f finally sc.setJobDescription(prev)
+  }
+
+  /** The one gate of every driver-local twin: an operator whose input
+    * is usually small keeps a driver-side loop that computes the same
+    * result as its distributed plan, and takes it when `df` fits.
+    *
+    * Bounded probe: one job collects at most bound+1 rows of `df`; when
+    * at most `bound` come back they ARE the local path's working set
+    * (one job whichever path is taken), otherwise `None` and the caller
+    * runs its distributed plan. The distributed plans of these
+    * operators are pure fixed job overhead at bounded sizes (~10
+    * exchange-stage jobs for a graph of 45k edges), while each twin is
+    * differential-pinned equal to its distributed path (GraphSpec,
+    * DedupSpec, BpeSpec, SimilaritySpec, ConfigInvarianceSpec's
+    * twins-off sweep).
+    *
+    * The bound is `min(cap, spark.graft.localTwin.maxRows)` (default
+    * 1,000,000 rows; 0 forces every twin distributed), clamped below
+    * Int.MaxValue so the probe's `limit` cannot overflow. `None`
+    * without a job when the bound is ≤ 0 or when any top-level column
+    * of `df` is binary, float or double: driver-side equality differs
+    * from Spark's on those (byte arrays compare by reference; Spark
+    * normalizes -0.0 and NaN, boxed doubles do not), so no twin keyed
+    * on them would agree with its distributed path. */
+  def boundedLocal(df: DataFrame, op: String,
+      cap: Long = Long.MaxValue): Option[Array[Row]] = {
+    import org.apache.spark.sql.types.{BinaryType, DoubleType, FloatType}
+    val spark = df.sparkSession
+    val bound = math.min(Int.MaxValue - 1L, math.min(cap,
+      spark.conf.get("spark.graft.localTwin.maxRows", "1000000").toLong))
+    val sparkEqualKeys = df.schema.forall(_.dataType match {
+      case BinaryType | FloatType | DoubleType => false
+      case _ => true
+    })
+    if (bound <= 0 || !sparkEqualKeys) None
+    else label(spark, s"local-twin probe: $op") {
+      val rows = df.limit(bound.toInt + 1).collect()
+      if (rows.length <= bound) Some(rows) else None
+    }
   }
 
   /** Finish a lifecycle query that staged state under a per-run temp

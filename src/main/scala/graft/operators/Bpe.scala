@@ -91,27 +91,22 @@ object Bpe {
     * one sequential ROUND — the only question is where a round runs.
     * The word-frequency table is bounded by the language's VOCABULARY
     * (~1M rows for web text), not the corpus, so when it fits the
-    * driver's working bound (`spark.graft.bpe.localVocabMax`, default
-    * 1,000,000 rows — same bounded-collect convention as the IVF
-    * centroid table and the k-means Lloyd loop) the whole merge loop
-    * runs DRIVER-LOCAL with incremental pair-count maintenance: one
-    * corpus shuffle + one bounded collect + an in-memory loop,
-    * instead of 2 Spark jobs per merge (a 32k-merge production
-    * vocabulary was 64k scheduler round-trips — pure fixed latency —
-    * and is now one collect plus seconds of driver CPU; the planted
-    * 10-merge suite query dropped ~4x). A vocab table larger than the
-    * bound falls back to the distributed per-round loop below, whose
-    * merge sequence is IDENTICAL (BpeSpec pins local == distributed
-    * on random corpora; both tie-break count-desc, then
+    * driver's working bound ([[graft.Engine.boundedLocal]]) the whole
+    * merge loop runs DRIVER-LOCAL with incremental pair-count
+    * maintenance: one corpus shuffle + one bounded collect + an
+    * in-memory loop, instead of 2 Spark jobs per merge (a 32k-merge
+    * production vocabulary was 64k scheduler round-trips — pure fixed
+    * latency — and is now one collect plus seconds of driver CPU; the
+    * planted 10-merge suite query dropped ~4x). A vocab table larger
+    * than the bound falls back to the distributed per-round loop
+    * below, whose merge sequence is IDENTICAL (BpeSpec pins local ==
+    * distributed on random corpora; both tie-break count-desc, then
     * lexicographically smallest pair). Pipelines that find even the
     * fallback too slow learn on a word-table snapshot of a corpus
     * SAMPLE (statistically equivalent for frequent pairs): pass
     * `wordCounts(sample)` here, then [[bpeTokens]] — corpus-scale and
     * map-only — encodes everything. */
   def learnFromCounts(words: DataFrame, numMerges: Int): Seq[(String, String)] = {
-    val conf = words.sparkSession.conf
-    val maxLocal = conf
-      .get("spark.graft.bpe.localVocabMax", "1000000").toInt
     // BYTE-aware second bound: the local loop's working set is the
     // per-codepoint symbol arrays plus pair/occurrence indexes —
     // proportional to total word LENGTH, not row count, so a
@@ -121,21 +116,19 @@ object Bpe {
     // ~20-40x of one boxed String per codepoint, so the 32 MiB
     // default keeps the loop's footprint ~1 GiB worst-case on the 8g
     // driver.
-    val maxChars = conf
+    val maxChars = words.sparkSession.conf
       .get("spark.graft.bpe.localVocabMaxChars", "33554432").toLong
-    // bounded probe: maxLocal+1 RAW (word, cnt) rows decide the path
-    // and, when small, ARE the working set (one job either way). The
-    // codepoint split happens driver-side only once the local path is
-    // chosen — the previous form collected fully char-split symbol
-    // ARRAYS, several times the payload, and discarded them on the
-    // distributed path.
-    val probe = words.select(col("word"), col("cnt").cast("long").as("cnt"))
-      .limit(maxLocal + 1).collect()
-    val chars = probe.foldLeft(0L)((s, r) => s + r.getString(0).length)
-    if (probe.length <= maxLocal && chars <= maxChars)
-      learnLocal(probe.map(r =>
-        (charSplit(r.getString(0)).toArray, r.getLong(1))), numMerges)
-    else learnDistributed(words, numMerges)
+    // the probe collects RAW (word, cnt) rows; the codepoint split
+    // happens driver-side only once the local path is chosen
+    graft.Engine.boundedLocal(
+        words.select(col("word"), col("cnt").cast("long").as("cnt")),
+        "learnFromCounts") match {
+      case Some(rows)
+          if rows.foldLeft(0L)(_ + _.getString(0).length) <= maxChars =>
+        learnLocal(rows.map(r =>
+          (charSplit(r.getString(0)).toArray, r.getLong(1))), numMerges)
+      case _ => learnDistributed(words, numMerges)
+    }
   }
 
   /** Driver-local BPE merge loop with incremental pair counts — exact

@@ -669,31 +669,20 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIter: Int = 30): DataFrame = {
     val spark = pairs.sparkSession
-    // bounded-collect twin (same convention as the BPE merge loop and
-    // the exact graph recurrences): every path of this operator —
-    // label propagation, and the star-contraction fallback — computes
-    // the SAME function, cluster_id = min node id per component, so a
-    // driver-side union-find over a bounded pair list is exactly
-    // equal (differential-pinned in DedupSpec). A near-dup pair graph
-    // is many orders of magnitude smaller than its corpus (256 pairs
-    // at sf0.1), and the distributed loop pays per-round
-    // join+aggregate+checkpoint jobs that dwarf the data; past the
-    // bound (or with null ids, whose three-valued join semantics the
-    // local twin does not replicate) the distributed loop runs
-    // unchanged.
-    val maxLocal = spark.conf
-      .get("spark.graft.graph.localEdgeMax", "1000000").toLong
-    if (maxLocal > 0) {
-      val probe = pairs.select(col(idA).cast("long").as("src"),
-          col(idB).cast("long").as("dst"))
-        .limit((maxLocal + 1).toInt).collect()
-      if (probe.length <= maxLocal &&
-          !probe.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-        return ccLocal(spark, probe)
-    }
-    val par = spark.sparkContext.defaultParallelism
+    // driver-local twin ([[graft.Engine.boundedLocal]]): every path of
+    // this operator — label propagation, and the star-contraction
+    // fallback — computes cluster_id = min node id per component, so a
+    // driver-side union-find over the pair list is exactly equal. Null
+    // ids, whose three-valued join semantics the union-find does not
+    // replicate, take the distributed loop.
     val half = pairs.select(col(idA).cast("long").as("src"),
       col(idB).cast("long").as("dst"))
+    graft.Engine.boundedLocal(half, "connectedComponents") match {
+      case Some(rows) if !rows.exists(r => r.isNullAt(0) || r.isNullAt(1)) =>
+        return ccLocal(spark, rows)
+      case _ =>
+    }
+    val par = spark.sparkContext.defaultParallelism
     val wide = half
       .unionByName(half.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(par, col("src"))

@@ -330,35 +330,23 @@ object Graph {
     * damping constant; throws if the degree profile or damping make
     * exactness impossible. `damping` is a ratio of small integers,
     * e.g. (85, 100). Output pr is DOUBLE cast from the exact decimal
-    * (equal decimals cast to equal doubles). */
-  /** Edge count at or below which the EXACT recurrences run driver-
-    * local (same bounded-collect convention as the BPE merge loop and
-    * the k-means Lloyd loop): the exact modes are ≤4-round validation
-    * paths whose distributed plans are pure fixed job overhead at
-    * bounded graph sizes (~10 exchange-stage jobs for 45k edges), and
-    * exact decimal arithmetic is ORDER-INDEPENDENT by construction, so
-    * a driver loop reproduces the distributed result bit for bit
-    * (differential-pinned in GraphSpec, incl. null keys, parallel
-    * edges, and every overflow/precondition throw). Set to 0 to force
-    * the distributed path. */
-  private def localEdgeMax(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.get("spark.graft.graph.localEdgeMax", "1000000").toLong
-
+    * (equal decimals cast to equal doubles).
+    *
+    * Runs as a driver-local twin ([[graft.Engine.boundedLocal]]) when
+    * the edge list fits: exact decimal arithmetic is order-independent,
+    * so the driver loop reproduces the distributed result bit for bit. */
   def pageRankExact(edges: DataFrame, iterations: Int,
       damping: (Int, Int) = (85, 100),
       srcCol: String = "src", dstCol: String = "dst",
       saltThreshold: Long = hotOutDegreeShard): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val sparkL = edges.sparkSession
-    val maxLocal = localEdgeMax(sparkL)
-    if (maxLocal > 0) {
-      // bounded probe: maxLocal+1 rows decide the path and, when the
-      // graph fits, ARE the working set (one job either way)
-      val probe = edges.select(col(srcCol).cast("long").as("src"),
-          col(dstCol).cast("long").as("dst"))
-        .limit((maxLocal + 1).toInt).collect()
-      if (probe.length <= maxLocal)
-        return pageRankExactLocal(sparkL, probe, iterations, damping)
+    graft.Engine.boundedLocal(edges.select(
+        col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst")), "pageRankExact") match {
+      case Some(rows) =>
+        return pageRankExactLocal(edges.sparkSession, rows, iterations,
+          damping)
+      case None =>
     }
     // materialize = false: the whole ≤4-round recurrence below compiles
     // into ONE plan (no per-iteration checkpoints), so weighted/nodes
@@ -645,18 +633,18 @@ object Graph {
     // distributed union+join coercions
     val idType = edges.select(col(srcCol).as("id"))
       .union(edges.select(col(dstCol).as("id"))).schema.head.dataType
-    val maxLocal = localEdgeMax(edges.sparkSession)
-    if (maxLocal > 0) {
-      // bounded probe, one job either way: the weight CAST rides the
-      // probe select so the local loop sees exactly Spark's cast
-      // values (incl. its rounding and overflow-null)
-      val probe = edges.select(col(srcCol).cast(idType).as("src"),
-          col(dstCol).cast(idType).as("dst"),
-          col(weightCol).cast(DecimalType(12, 0)).as("w"))
-        .limit((maxLocal + 1).toInt).collect()
-      if (probe.length <= maxLocal)
-        return katzExactLocal(edges.sparkSession, probe, iterations,
+    // driver-local twin, exact like pageRankExact's: the weight CAST
+    // rides the probe select so the local loop sees exactly Spark's
+    // cast values (incl. its rounding and overflow-null)
+    graft.Engine.boundedLocal(edges.select(
+        col(srcCol).cast(idType).as("src"),
+        col(dstCol).cast(idType).as("dst"),
+        col(weightCol).cast(DecimalType(12, 0)).as("w")),
+        "katzCentralityExact") match {
+      case Some(rows) =>
+        return katzExactLocal(edges.sparkSession, rows, iterations,
           aExact, inc, idType)
+      case None =>
     }
     // w at (12,0): pr (s+12, s) * w (12, 0) -> (s+25, s) <= 31 for
     // s <= 6, sum caps precision at 38 with scale PRESERVED; a long
@@ -729,7 +717,9 @@ object Graph {
     val overflowInAgg = "katzCentralityExact: decimal overflow; " +
       "lower alpha or iterations"
     // ids collected AS SPARK VALUES (coerced to the union type in the
-    // probe select): equality below is the equi-join's equality
+    // probe select): equality below is the equi-join's equality, as
+    // boundedLocal refuses the binary and floating id types where the
+    // two differ
     val edges: Array[(Option[Any], Option[Any], JBD)] = edgeRows.map(r =>
       (Option(r.get(0)), Option(r.get(1)),
         if (r.isNullAt(2)) null else r.getDecimal(2)))

@@ -258,39 +258,27 @@ object Similarity {
     * partial-aggregated means. Returns a CACHED (bucket, centroid)
     * frame — callers unpersist when done. Shared by the IVF index build
     * and [[Dedup.semanticDedup]]. */
-  /** Training sets at or below this many vectors run the Lloyd loop on
-    * the driver: ≤ 65,536 rows at dim 64 is 32 MiB — the same memory
-    * class as the centroid broadcast the distributed loop ships every
-    * iteration — and the local loop replaces iters × (broadcast +
-    * shuffle job) with one bounded collect. Above it, the iteration
-    * stays fully distributed (and at 100 TB the caller trains on a
-    * sample anyway — `sampleFraction` exists precisely so the training
-    * set is a bounded draw of the corpus). */
-  private val localKmeansTrainMax = 65536L
-
   private[graft] def kmeansCentroids(train0: DataFrame,
       nCentroids: Int, iters: Int,
-      sampleFraction: Double = 1.0,
-      // test hook only: forces the distributed Lloyd path on a small
-      // planted set so its semantics can be differenced against the
-      // local loop (production callers never pass it)
-      localTrainMax: Long = localKmeansTrainMax): DataFrame = {
+      sampleFraction: Double = 1.0): DataFrame = {
     val spark = train0.sparkSession
     val train = (if (sampleFraction < 1.0)
       train0.filter(pmod(xxhash64(col("id")), lit(1000)) <
         lit((sampleFraction * 1000).toLong))
     else train0).select("id", "nv")
 
-    // bounded size probe FUSED with the local path's collect: one
-    // limited job that early-exits once the cap is passed, so a 100 TB
-    // training set is never fully counted (let alone collected) here —
-    // and when the set IS small, these collected rows are the local
-    // loop's input, no second job
-    val probe = train
-      .select(xxhash64(col("id")).as("h"), col("id"), col("nv"))
-      .limit((localTrainMax + 1).toInt).collect()
-    if (probe.length <= localTrainMax)
-      return localKmeans(spark, probe, nCentroids, iters)
+    // driver-local twin ([[graft.Engine.boundedLocal]]) capped at
+    // 65,536 vectors, since the rows are vectors: at dim 64 that is
+    // 32 MiB — the same memory class as the centroid broadcast the
+    // distributed loop ships every iteration — and the local loop
+    // replaces iters × (broadcast + shuffle job) with the one probe.
+    // At 100 TB the caller trains on a bounded draw (`sampleFraction`).
+    graft.Engine.boundedLocal(
+        train.select(xxhash64(col("id")).as("h"), col("id"), col("nv")),
+        "kmeansCentroids", cap = 65536L) match {
+      case Some(rows) => return localKmeans(spark, rows, nCentroids, iters)
+      case None =>
+    }
 
     // The centroid table lives DRIVER-SIDE through the Lloyd loop: it
     // is tiny by construction (k ≤ 65,536 at dim 64 is 32 MiB — the

@@ -7,7 +7,8 @@ import graft.operators.Bpe
   * (overlapping adjacencies included), same tie-break (count desc,
   * then lexicographically smallest pair), same greedy non-overlapping
   * merge application. Differential-tested on random corpora by forcing
-  * the path switch via `spark.graft.bpe.localVocabMax`. */
+  * the path switch via `spark.graft.localTwin.maxRows`; the bound
+  * 2^32+10 must not truncate the local path's probe. */
 class BpeSpec extends SparkSuite {
 
   import spark.implicits._
@@ -16,9 +17,11 @@ class BpeSpec extends SparkSuite {
     words.zipWithIndex.map { case (w, i) => (i.toLong, w) }
       .toDF("doc_id", "text")
 
-  private def learnWith(localMax: Int, docs: org.apache.spark.sql.DataFrame,
+  private val hugeBound = 4294967306L // 2^32+10
+
+  private def learnWith(localMax: Long, docs: org.apache.spark.sql.DataFrame,
       n: Int): Seq[(String, String)] =
-    withSQLConf("spark.graft.bpe.localVocabMax" -> localMax.toString) {
+    withSQLConf("spark.graft.localTwin.maxRows" -> localMax.toString) {
       Bpe.learn(docs, n)
     }
 
@@ -28,6 +31,7 @@ class BpeSpec extends SparkSuite {
     val local = learnWith(1000000, docs, 10)
     val dist = learnWith(0, docs, 10) // vocab > 0 forces the fallback
     assert(local == dist)
+    assert(learnWith(hugeBound, docs, 10) == dist)
     assert(local.take(3) == Seq(("e", "s"), ("es", "t"), ("est", "</w>")))
   }
 
@@ -45,6 +49,7 @@ class BpeSpec extends SparkSuite {
       val local = learnWith(1000000, docs, n)
       val dist = learnWith(0, docs, n)
       assert(local == dist, s"trial $trial: $local vs $dist")
+      assert(learnWith(hugeBound, docs, n) == dist, s"trial $trial: 2^32+10")
     }
   }
 
@@ -53,6 +58,7 @@ class BpeSpec extends SparkSuite {
     val local = learnWith(1000000, docs, 50)
     val dist = learnWith(0, docs, 50)
     assert(local == dist)
+    assert(learnWith(hugeBound, docs, 50) == dist)
     assert(local.nonEmpty && local.length < 50)
   }
 
@@ -69,6 +75,7 @@ class BpeSpec extends SparkSuite {
     val local = learnWith(1000000, docs, 4)
     val dist = learnWith(0, docs, 4)
     assert(local == dist, s"$local vs $dist")
+    assert(learnWith(hugeBound, docs, 4) == dist)
     // merge 1 is the shared (z, </w>); merge 2 is the count-1 TIE —
     // code-point order puts the PUA char (U+F8FF) before 😀 (U+1F600),
     // where UTF-16 code-unit order would put 😀 (0xD83D) first

@@ -19,7 +19,10 @@ package graft
   *     task — catches anything that silently relied on parallelism;
   *   - 13 partitions + AQE off: a prime, co-prime with the local[4]
   *     input split count, reshuffles every hash-distributed merge tree,
-  *     and with AQE off none of it is coalesced back.
+  *     and with AQE off none of it is coalesced back;
+  *   - twins off: `spark.graft.localTwin.maxRows` = 0 sends every
+  *     driver-local twin ([[graft.Engine.boundedLocal]]) down its
+  *     distributed path, which must give the same rows.
   *
   * Partition-order traps this is designed to catch: float sums that
   * bypass the DECIMAL-accumulation rule, top-k ties broken by arrival
@@ -66,6 +69,10 @@ class ConfigInvarianceSpec extends SparkSuite {
     "q_pack_sequences",
     // iterative loops claimed bit-deterministic
     "q_quality_classifier", "q_link_pagerank",
+    // driver-local twins not already listed (exact centrality, graph
+    // keywords, connected components)
+    "q_centrality_gate", "q_textrank_keywords", "q_dedup_cluster",
+    "q_dedup_cluster_keep",
     // cuboid-lattice routing (incl. the budget-selected sub-lattice)
     "q_cube_rollup", "q_cube_budget",
     // binary decode via mapPartitions
@@ -130,5 +137,10 @@ class ConfigInvarianceSpec extends SparkSuite {
     assertInvariant("13-noAQE",
       "spark.sql.shuffle.partitions" -> "13",
       "spark.sql.adaptive.enabled" -> "false")
+  }
+
+  test("results are invariant with every driver-local twin forced " +
+      "distributed") {
+    assertInvariant("twins-off", "spark.graft.localTwin.maxRows" -> "0")
   }
 }

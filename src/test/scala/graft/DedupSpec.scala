@@ -155,7 +155,7 @@ class DedupSpec extends SparkSuite {
       .toDF("id_a", "id_b")
     // force the DISTRIBUTED path — this test pins the star-contraction
     // fallback, which the bounded union-find twin would bypass
-    val labels = withSQLConf("spark.graft.graph.localEdgeMax" -> "0") {
+    val labels = withSQLConf("spark.graft.localTwin.maxRows" -> "0") {
       Dedup.connectedComponents(chain, maxIter = 10)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
@@ -172,15 +172,20 @@ class DedupSpec extends SparkSuite {
         rng.nextInt(80).toLong)) ++
         Seq((5L, 5L), (5L, 5L), (901L, 902L))) // self-pairs + isolate
         .toDF("id_a", "id_b")
-      val local = Dedup.connectedComponents(edges)
+      def run() = Dedup.connectedComponents(edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = withSQLConf("spark.graft.graph.localEdgeMax" -> "0") {
-        Dedup.connectedComponents(edges)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val dist = withSQLConf("spark.graft.localTwin.maxRows" -> "0") {
+        run()
       }
-      assert(local == dist, s"trial $trial: " +
-        s"${(local.toSet diff dist.toSet).take(5)} / " +
-        s"${(dist.toSet diff local.toSet).take(5)}")
+      // the default bound, and one past Int.MaxValue (2^32+10) that
+      // must not truncate the probe
+      Seq("1000000", "4294967306").foreach { bound =>
+        val local =
+          withSQLConf("spark.graft.localTwin.maxRows" -> bound)(run())
+        assert(local == dist, s"trial $trial, bound $bound: " +
+          s"${(local.toSet diff dist.toSet).take(5)} / " +
+          s"${(dist.toSet diff local.toSet).take(5)}")
+      }
     }
   }
 

@@ -244,34 +244,52 @@ class GraphSpec extends SparkSuite {
         .map(r => (if (r.isNullAt(0)) -1L else r.getLong(0),
           r.getDouble(1)))
       val local = run() // default bound: local path
-      val dist = withSQLConf("spark.graft.graph.localEdgeMax" -> "0") {
+      val dist = withSQLConf("spark.graft.localTwin.maxRows" -> "0") {
         run() // forced distributed
       }
       assert(local.sameElements(dist), s"graph $i: local != distributed")
+      // a bound past Int.MaxValue (2^32+10) must not truncate the probe
+      val huge =
+        withSQLConf("spark.graft.localTwin.maxRows" -> "4294967306") {
+          run()
+        }
+      assert(huge.sameElements(dist), s"graph $i: 2^32+10 != distributed")
     }
   }
 
   test("katzCentralityExact: driver-local twin == distributed, " +
       "bit for bit (string ids, weights, count ties)") {
     val rnd = new scala.util.Random(23)
-    (1 to 3).foreach { trial =>
-      val toks = Seq("alpha", "beta", "gamma", "delta", "eps")
-      val e = (1 to 25).map { _ =>
+    val toks = Seq("alpha", "beta", "gamma", "delta", "eps")
+    val strings = (1 to 3).map { _ =>
+      (1 to 25).map { _ =>
         (toks(rnd.nextInt(5)), toks(rnd.nextInt(5)),
           (1 + rnd.nextInt(3)).toLong)
       }.filter(p => p._1 != p._2).toDF("src", "dst", "w")
+    }
+    // keys whose driver-side equality differs from Spark's: 0.0 and
+    // -0.0 are one node to Spark (NaN too), and byte arrays compare by
+    // reference on the driver
+    val doubles = Seq((0.0, 1.0, 1L), (-0.0, 2.0, 2L), (Double.NaN, 0.0, 1L),
+      (1.0, Double.NaN, 3L), (2.0, -0.0, 1L), (1.0, 2.0, 1L))
+      .toDF("src", "dst", "w")
+    val binaries = Seq((Array[Byte](1), Array[Byte](2), 1L),
+      (Array[Byte](2), Array[Byte](3), 2L),
+      (Array[Byte](3), Array[Byte](1), 1L)).toDF("src", "dst", "w")
+    (strings :+ doubles :+ binaries).zipWithIndex.foreach { case (e, trial) =>
       def run() = Graph.katzCentralityExact(e, 3, alpha = (1, 100))
-        .orderBy("id").collect()
-        .map(r => (r.getString(0), r.getDecimal(1)))
+        .collect()
+        .map(r => (r.get(0) match {
+          case b: Array[Byte] => b.mkString("bytes(", ",", ")")
+          case id => String.valueOf(id)
+        }, r.getDecimal(1).toString)) // toString: equal value AND scale
+        .sorted
       val local = run()
-      val dist = withSQLConf("spark.graft.graph.localEdgeMax" -> "0") {
+      val dist = withSQLConf("spark.graft.localTwin.maxRows" -> "0") {
         run()
       }
-      assert(local.length == dist.length, s"trial $trial size")
-      local.zip(dist).foreach { case ((li, lp), (di, dp)) =>
-        assert(li == di && lp.compareTo(dp) == 0 &&
-          lp.scale == dp.scale, s"trial $trial: ($li,$lp) vs ($di,$dp)")
-      }
+      assert(local.sameElements(dist), s"trial $trial: " +
+        s"${local.mkString(" ")} vs ${dist.mkString(" ")}")
     }
   }
 

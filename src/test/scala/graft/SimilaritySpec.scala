@@ -435,15 +435,16 @@ class SimilaritySpec extends SparkSuite {
     Similarity.normalized(col("embedding")).as("nv"))
 
   test("distributed Lloyd path == local path on the planted clusters") {
-    // localTrainMax = 0 forces the distributed loop on the same 200
-    // vectors the local loop trains on; identical init (smallest
+    // a local-twin bound of 0 forces the distributed loop on the same
+    // 200 vectors the local loop trains on; identical init (smallest
     // id-hash) and identical skip rules mean the centroid SETS must
     // agree to summation-order tolerance
     val local = Similarity.kmeansCentroids(kmeansTrain, 10, 3)
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    val dist = Similarity.kmeansCentroids(kmeansTrain, 10, 3,
-        localTrainMax = 0L)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val dist = withSQLConf("spark.graft.localTwin.maxRows" -> "0") {
+      Similarity.kmeansCentroids(kmeansTrain, 10, 3)
+        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    }
     assert(dist.keySet == local.keySet,
       s"bucket sets diverge: ${dist.keySet} vs ${local.keySet}")
     dist.foreach { case (b, v) =>
