@@ -16,7 +16,10 @@ import org.apache.spark.sql.SparkSession
   * JDBC are rewritten onto the smallest subsuming cuboid — a fact-table
   * GROUP BY serves from a few-thousand-row summary, never rescanning
   * the 100 TB fact. Queries outside the lattice still run (the full
-  * engine is behind the endpoint); routed ones are just fast.
+  * engine is behind the endpoint); routed ones are just fast. Each
+  * routed aggregate runs as one Spark job: a GROUP BY at a cuboid's
+  * exact grain reads the cuboid rows as they are, and a coarser one
+  * re-aggregates a small cuboid in a single task (no shuffle).
   *
   * Scale shape: the daemon holds no per-query state beyond Spark's own
   * session handles; concurrency is Spark's scheduler (FAIR pool

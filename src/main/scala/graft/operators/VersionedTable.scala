@@ -1245,7 +1245,9 @@ object VersionedTable {
     * Scale shape: computed from the DIR DIFF only — data dirs present
     * in both manifests (the untouched bulk of the table under
     * append/merge traffic) are never read. The bag difference over the
-    * changed dirs (`exceptAll` both ways) is exact for multisets. */
+    * changed dirs (`exceptAll` both ways) is exact for multisets.
+    * A table column named `change` (any case) is refused with an
+    * IllegalArgumentException naming it. */
   def changesBetween(spark: SparkSession, root: String,
       vFrom: Long, vTo: Long): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -1284,6 +1286,13 @@ object VersionedTable {
     val unified = StructType(toSchema.fields ++
       fromSchema.fields.filterNot(fd =>
         toSchema.fieldNames.contains(fd.name)))
+    // the feed appends `change`; a table column of that name would be
+    // ambiguous (or silently replaced) in every consumer of the feed
+    unified.fieldNames.find(_.equalsIgnoreCase("change")).foreach { c =>
+      throw new IllegalArgumentException(
+        s"changesBetween: table column `$c` collides with the feed's " +
+          "`change` column — rename it to read this table's changes")
+    }
     def readDirs(dd: Seq[String]) =
       if (dd.isEmpty) None
       else Some(readDirsAs(spark, root, unified, dd))
@@ -1312,19 +1321,24 @@ object VersionedTable {
         // net-element array per row — exceptAll's ReplicateRows
         // streams, and a changed dir CAN legally hold millions of
         // copies of one row.
+        // working columns get a prefix no table column starts with
+        // (case-insensitively), so none can replace a user column
         val cols = a.columns.toSeq
-        a.withColumn("__sign", lit(1L))
-          .unionByName(r.withColumn("__sign", lit(-1L)))
+        val pre = Iterator.iterate("__cdc")("_" + _).find(p =>
+          !cols.exists(_.toLowerCase.startsWith(p.toLowerCase))).get
+        val (sign, net, n, c) =
+          (s"${pre}_sign", s"${pre}_net", s"${pre}_n", s"${pre}_c")
+        a.withColumn(sign, lit(1L))
+          .unionByName(r.withColumn(sign, lit(-1L)))
           .groupBy(cols.map(col): _*)
-          .agg(sum(col("__sign")).as("__net"))
-          .filter(col("__net") =!= 0L)
+          .agg(sum(col(sign)).as(net))
+          .filter(col(net) =!= 0L)
           .select(cols.map(col) :+
-            when(col("__net") > 0L, lit("insert")).otherwise(lit("delete"))
-              .as("change") :+ abs(col("__net")).as("__n"): _*)
-          .withColumn("__c",
-            explode(expr("sequence(0L, (__n - 1L) div 4096L)")))
-          .withColumn("__dup",
-            explode(expr("sequence(1L, least(__n - __c * 4096L, 4096L))")))
+            when(col(net) > 0L, lit("insert")).otherwise(lit("delete"))
+              .as("change") :+ abs(col(net)).as(n): _*)
+          .withColumn(c, explode(expr(s"sequence(0L, ($n - 1L) div 4096L)")))
+          .withColumn(s"${pre}_dup",
+            explode(expr(s"sequence(1L, least($n - $c * 4096L, 4096L))")))
           .select(cols.map(col) :+ col("change"): _*)
     }
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, HllSketchAgg, Max, Min, Sum}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, Repartition, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.internal.SQLConf
@@ -38,6 +38,24 @@ import org.apache.spark.sql.internal.SQLConf
   * and scanning a table ~|dims-cardinality| rows long: the scan, the
   * shuffle, and the aggregation hash all shrink by the fact-to-summary
   * ratio, for free in every dashboard query that hits the lattice.
+  *
+  * A routed aggregate takes one of three shapes, each one Spark stage
+  * (interactive latency is the fixed cost per stage, not data volume):
+  *
+  *  - EXACT GRAIN — grouping columns equal the route's dims as a set:
+  *    `Project` over the (filtered) summary. [[AggRouting.register]]
+  *    promises one summary row per dims-group, so re-aggregating is
+  *    the identity; each measure is its summary column (cast to the
+  *    query's result type when they differ) and COUNT(DISTINCT x) is
+  *    `bitmap_cardinality` of the stored bitmap, with no merge.
+  *  - COARSER GRAIN, SMALL SUMMARY — the summary's plan statistics are
+  *    at most `spark.sql.autoBroadcastJoinThreshold` (≥ 0): the
+  *    re-aggregating `Aggregate` reads the summary through
+  *    `Repartition(1, shuffle = false)`. Its `CoalesceExec(1)` reports
+  *    `SinglePartition`, so the aggregate plans without an exchange —
+  *    the same size bound Spark already trusts for broadcasts.
+  *  - COARSER GRAIN, LARGE SUMMARY (or threshold -1): the distributed
+  *    re-aggregation, a partial/final `Aggregate` across a shuffle.
   *
   * Output attribute ids, names, and data types are preserved exactly
   * (re-aggregated values are cast back to the original result type
@@ -141,7 +159,10 @@ object AggRouting {
     * (phrased over the fact, e.g. `sum(dec2(col("l_quantity")))`) to
     * the summary column holding its per-(dims-group) value. The
     * summary table must contain one row per distinct dims-group of
-    * the fact (i.e. be the result of `fact.groupBy(dims).agg(...)`). */
+    * the fact (i.e. be the result of `fact.groupBy(dims).agg(...)`).
+    * Exact-grain answers depend on this contract: a query grouped by
+    * exactly `dims` is answered by projecting the summary rows as they
+    * are, so a summary holding two rows for one group returns both. */
   def register(fact: DataFrame, summary: DataFrame, dims: Seq[String],
       measures: Map[Column, String], rows: Long = Long.MaxValue): Unit = {
     val paths = scanPaths(fact)
@@ -347,52 +368,56 @@ object AggRouteRewrite extends Rule[LogicalPlan] {
     def dimAttr(factName: String): Attribute =
       sAttr(r.dims(factName.toLowerCase).toLowerCase)
 
+    // exact grain: the summary already holds one row per query group,
+    // so each measure is read as stored and no Aggregate is planned
+    val exact = groupNames.toSet == r.dims.keySet
+
     // rewrite one aggregate call onto the summary, or None
     def reAgg(ae: AggregateExpression): Option[Expression] = {
       if (ae.filter.nonEmpty) return None
-      if (ae.isDistinct) {
+      val rebased = ae.transformUp {
+        case a: Attribute => r.factAttrs.getOrElse(a.name.toLowerCase, a)
+      }.asInstanceOf[AggregateExpression]
+      val re: Option[Expression] = if (ae.isDistinct) {
         // COUNT(DISTINCT x) routes onto a registered bitmap_build(x)
         // measure as bitmap_card(bitmap_merge(bm)) — EXACT, because a
         // bitmap is the distinct id set itself and union is its
         // combine (Kylin's precise count-distinct answered from the
         // cube, docs/olap.md:24). Plain Count partials don't compose
         // across summary rows; bitmaps exist precisely to fix that.
-        return ae.aggregateFunction match {
+        // At exact grain the group's one bitmap needs no merge.
+        rebased.aggregateFunction match {
           case Count(Seq(child)) =>
-            val rebased = child.transformUp {
-              case a: Attribute =>
-                r.factAttrs.getOrElse(a.name.toLowerCase, a)
-            }
             r.measures.collectFirst {
-              case (m, sumCol) if m.aggregateFunction.isInstanceOf[
-                    graft.functions.BitmapBuildAgg] &&
-                  m.aggregateFunction.asInstanceOf[
-                    graft.functions.BitmapBuildAgg]
-                    .child.semanticEquals(rebased) =>
+              case (m, sumCol) if (m.aggregateFunction match {
+                  case b: graft.functions.BitmapBuildAgg =>
+                    b.child.semanticEquals(child)
+                  case _ => false
+                }) =>
+                val bm = sAttr(sumCol.toLowerCase)
                 graft.functions.BitmapCardinality(
-                  graft.functions.BitmapMergeAgg(sAttr(sumCol.toLowerCase))
+                  if (exact) bm
+                  else graft.functions.BitmapMergeAgg(bm)
                     .toAggregateExpression())
             }
           case _ => None
         }
-      }
-      val rebased = ae.transformUp {
-        case a: Attribute => r.factAttrs.getOrElse(a.name.toLowerCase, a)
-      }
-      r.measures.find(_._1.semanticEquals(rebased)).map { case (_, sumCol) =>
-        val col = sAttr(sumCol.toLowerCase)
-        val fn = ae.aggregateFunction match {
-          case _: Sum => Sum(col)
-          case _: Count => Sum(col) // count re-aggregates as a sum
-          case _: Min => Min(col)
-          case _: Max => Max(col)
-          case _: graft.functions.BitmapBuildAgg =>
-            graft.functions.BitmapMergeAgg(col)
-          case _ => return None
+      } else {
+        r.measures.find(_._1.semanticEquals(rebased)).flatMap {
+          case (_, sumCol) =>
+            val col = sAttr(sumCol.toLowerCase)
+            (ae.aggregateFunction match {
+              case _: Sum => Some(Sum(col))
+              case _: Count => Some(Sum(col)) // count re-aggregates as a sum
+              case _: Min => Some(Min(col))
+              case _: Max => Some(Max(col))
+              case _: graft.functions.BitmapBuildAgg =>
+                Some(graft.functions.BitmapMergeAgg(col))
+              case _ => None // HLL sketches: maintainable, never routed
+            }).map(fn => if (exact) col else fn.toAggregateExpression())
         }
-        val re = fn.toAggregateExpression()
-        if (re.dataType == ae.dataType) re else Cast(re, ae.dataType)
       }
+      re.map(e => if (e.dataType == ae.dataType) e else Cast(e, ae.dataType))
     }
 
     // rewrite every output expression; any unmatched aggregate call or
@@ -422,8 +447,16 @@ object AggRouteRewrite extends Rule[LogicalPlan] {
       })
       .reduceOption(org.apache.spark.sql.catalyst.expressions.And(_, _))
       .map(Filter(_, summary)).getOrElse(summary)
+    if (exact) return Some(Project(outExprs, filtered))
     val newGrouping: Seq[Expression] =
       grouping.map(g => dimAttr(g.asInstanceOf[Attribute].name))
-    Some(Aggregate(newGrouping, outExprs, filtered))
+    // a summary small enough to broadcast re-aggregates in ONE task:
+    // CoalesceExec(1) reports SinglePartition, so no exchange is planned
+    val threshold = SQLConf.get.autoBroadcastJoinThreshold
+    val input =
+      if (threshold >= 0 && summary.stats.sizeInBytes <= threshold)
+        Repartition(1, shuffle = false, filtered)
+      else filtered
+    Some(Aggregate(newGrouping, outExprs, input))
   }
 }

@@ -22,7 +22,11 @@ package graft
   *     and with AQE off none of it is coalesced back;
   *   - twins off: `spark.graft.localTwin.maxRows` = 0 sends every
   *     driver-local twin ([[graft.Engine.boundedLocal]]) down its
-  *     distributed path, which must give the same rows.
+  *     distributed path, which must give the same rows;
+  *   - routing distributed: `spark.sql.autoBroadcastJoinThreshold` = -1
+  *     sends every coarser-grain routed aggregate down its shuffled
+  *     re-aggregation instead of the single-task one (and turns off
+  *     broadcast joins everywhere else).
   *
   * Partition-order traps this is designed to catch: float sums that
   * bypass the DECIMAL-accumulation rule, top-k ties broken by arrival
@@ -73,8 +77,10 @@ class ConfigInvarianceSpec extends SparkSuite {
     // keywords, connected components)
     "q_centrality_gate", "q_textrank_keywords", "q_dedup_cluster",
     "q_dedup_cluster_keep",
-    // cuboid-lattice routing (incl. the budget-selected sub-lattice)
-    "q_cube_rollup", "q_cube_budget",
+    // cuboid-lattice routing (incl. the budget-selected sub-lattice):
+    // exact-grain projections, single-task and distributed re-aggregation
+    "q_cube_rollup", "q_cube_budget", "q_cube_route", "q_agg_route",
+    "q_agg_route_having", "q_agg_route_distinct",
     // binary decode via mapPartitions
     "q_multimodal_features",
     // perceptual media dedup (3-container dHash incl. lossy JPEG) and
@@ -142,5 +148,11 @@ class ConfigInvarianceSpec extends SparkSuite {
   test("results are invariant with every driver-local twin forced " +
       "distributed") {
     assertInvariant("twins-off", "spark.graft.localTwin.maxRows" -> "0")
+  }
+
+  test("results are invariant with routed re-aggregation forced " +
+      "distributed") {
+    assertInvariant("routing-distributed",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
   }
 }

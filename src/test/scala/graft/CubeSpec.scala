@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import graft.operators.Cube
 
@@ -194,15 +197,18 @@ class CubeSpec extends SparkSuite {
       s"cuboid measure types diverge: ${schemas.distinct}")
   }
 
-  private def scannedPaths = {
-    val df = CubeQueries.q_cube_route.run(spark, sf)
-    val plan = df.queryExecution.executedPlan match {
+  /** Physical nodes of a not-yet-run plan, AQE wrapper removed. */
+  private def physical(df: DataFrame) =
+    df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
-    plan.collect { case s: FileSourceScanExec =>
+
+  private def scanPaths(df: DataFrame) =
+    physical(df).collect { case s: FileSourceScanExec =>
       s.relation.location.rootPaths.map(_.toString) }.flatten
-  }
+
+  private def scannedPaths = scanPaths(CubeQueries.q_cube_route.run(spark, sf))
 
   test("q_cube_route scans the smallest subsuming cuboid, not the fact") {
     val suf = sf.replaceAll("[^A-Za-z0-9]", "_")
@@ -222,15 +228,72 @@ class CubeSpec extends SparkSuite {
     // already replaced builtin Sum and routing's canonicals can no
     // longer semanticEquals — one of the two features silently drops.
     // The routed re-aggregation sums the cuboid's DECIMAL(28,2)
-    // measure, so the eligible plan carries the 192-bit kernel.
+    // measure, so the eligible plan carries the 192-bit kernel. The
+    // query groups coarser than its cuboid ({rf,ls}): an exact-grain
+    // query has no re-aggregation, hence no kernel.
     manifest
-    val df = CubeQueries.q_cube_route.run(spark, sf)
+    val df = linestatusQuery
     val planStr = df.queryExecution.executedPlan.toString
-    assert(scannedPaths.forall(_.contains("cube_")),
-      "routed summary scan missing")
+    val paths = scanPaths(df)
+    assert(paths.nonEmpty && paths.forall(_.contains("cube_")),
+      s"routed summary scan missing: $paths")
     assert(planStr.contains("decimal_sum192") ||
       planStr.contains("decimal_sum128"),
       s"decimal-sum kernel missing from the routed plan:\n$planStr")
+  }
+
+  private def exchanges(df: DataFrame) =
+    physical(df).collect { case e: ShuffleExchangeExec => e }.length
+
+  /** Coarser than every cuboid holding l_linestatus: re-aggregates. */
+  private def linestatusQuery = ExtQueries.withAggRouting(spark) {
+    Engine.table(spark, sf, "lineitem")
+      .groupBy("l_linestatus")
+      .agg(count(lit(1)).as("n"),
+        graft.functions.dsum2(col("l_quantity")).as("sum_qty"))
+  }
+
+  test("exact-grain routing plans no aggregate and no exchange") {
+    manifest
+    val df = ExtQueries.withAggRouting(spark) {
+      Engine.table(spark, sf, "lineitem")
+        .groupBy("l_suppkey")
+        .agg(count(lit(1)).as("n"),
+          graft.functions.dsum2(col("l_quantity")).as("sum_qty"),
+          min(col("l_quantity")).as("min_qty"))
+    }
+    val plan = physical(df)
+    assert(plan.collect { case a: BaseAggregateExec => a }.isEmpty,
+      s"exact-grain route must not re-aggregate:\n$plan")
+    assert(exchanges(df) == 0, s"exact-grain route shuffled:\n$plan")
+    val paths = scanPaths(df)
+    assert(paths.nonEmpty && paths.forall(_.contains("cube_")), paths)
+  }
+
+  test("coarser routing over a small cuboid re-aggregates in one task") {
+    manifest
+    val df = linestatusQuery
+    val plan = physical(df)
+    assert(plan.collect { case c: CoalesceExec if c.numPartitions == 1 =>
+      c }.length == 1, s"expected one Coalesce 1:\n$plan")
+    assert(exchanges(df) == 0, s"small-cuboid route shuffled:\n$plan")
+  }
+
+  test("with the broadcast threshold at -1 the re-aggregation stays " +
+      "distributed and returns the same rows") {
+    manifest
+    def rows(df: DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val single = rows(linestatusQuery)
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val df = linestatusQuery
+      val plan = physical(df)
+      assert(exchanges(df) == 1, s"expected one exchange:\n$plan")
+      assert(plan.collect { case c: CoalesceExec => c }.isEmpty,
+        plan.toString)
+      assert(scanPaths(df).forall(_.contains("cube_")), plan.toString)
+      assert(rows(df) == single)
+    }
   }
 
   test("q_cube_budget routes onto the budget-selected lattice: zero " +

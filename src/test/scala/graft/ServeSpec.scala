@@ -72,6 +72,40 @@ class ServeSpec extends SparkSuite {
           .orderBy("l_suppkey").limit(5)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toList
         assert(routed == naive, s"routed $routed != naive $naive")
+        // 2a) an exact-grain GROUP BY with a dim filter (a projection
+        // of the {rf,ls} cuboid) and a coarser GROUP BY (re-aggregated
+        // from a cuboid): each equals the same SQL with routing off
+        Seq(
+          "SELECT l_returnflag, l_linestatus, COUNT(*) AS n, " +
+            "SUM(CAST(l_quantity AS DECIMAL(18,2))) AS s_qty, " +
+            "MIN(l_quantity) AS mn FROM lineitem " +
+            "WHERE l_returnflag = 'R' GROUP BY l_returnflag, " +
+            "l_linestatus ORDER BY l_returnflag, l_linestatus",
+          "SELECT l_linestatus, COUNT(*) AS n, SUM(CAST(l_extendedprice " +
+            "* (1 - l_discount) AS DECIMAL(18,4))) AS s_disc, " +
+            "MAX(l_quantity) AS mx FROM lineitem " +
+            "GROUP BY l_linestatus ORDER BY l_linestatus").foreach { sql =>
+          val plan = spark.sql(sql).queryExecution.executedPlan.toString
+          assert(plan.contains("cube_") && !plan.contains("lineitem"),
+            s"$sql must route onto a cuboid:\n$plan")
+          // BigDecimal by value: the JDBC and Row decimals may differ
+          // in scale only
+          def norm(v: Any): Any = v match {
+            case b: java.math.BigDecimal => BigDecimal(b)
+            case o => o
+          }
+          val rsR = st.executeQuery(sql)
+          val width = rsR.getMetaData.getColumnCount
+          val viaJdbcR = Iterator.continually(rsR).takeWhile(_.next())
+            .map(r => (1 to width).map(i => norm(r.getObject(i)))).toList
+          val unrouted =
+            withSQLConf("spark.graft.aggRouting.enabled" -> "false") {
+              spark.sql(sql).collect()
+                .map(r => (0 until width).map(i => norm(r.get(i)))).toList
+            }
+          assert(viaJdbcR.nonEmpty && viaJdbcR == unrouted,
+            s"$sql: routed $viaJdbcR != unrouted $unrouted")
+        }
         // 2b) the vtab SQL surface over JDBC: a BI tool can time-travel
         // and tail CDC with plain SQL — the serve session shares the
         // suite session (singleSession), so the injected resolution

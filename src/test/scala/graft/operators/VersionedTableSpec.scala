@@ -285,6 +285,33 @@ class VersionedTableSpec extends SparkSuite {
     assert(VersionedTable.changesBetween(spark, root, 2L, 2L).count() == 0)
   }
 
+  test("changesBetween keeps user columns named like its working columns") {
+    val root = tmpDir("vtabcdcnames")
+    VersionedTable.commit(spark, root,
+      Seq((1L, 5L), (2L, 7L)).toDF("id", "__sign"))            // v1
+    VersionedTable.merge(spark, root,
+      Seq((1L, 6L), (3L, 9L)).toDF("id", "__sign"), Seq("id"))  // v2
+    val got = VersionedTable.changesBetween(spark, root, 1L, 2L)
+      .collect().map(r => (r.getString(2), r.getLong(0), r.getLong(1)))
+      .toSeq
+    // exactly three rows: the untouched id 2 is no delete+insert pair
+    // and every __sign value is the user's
+    assert(got.sorted == Seq(("delete", 1L, 5L), ("insert", 1L, 6L),
+      ("insert", 3L, 9L)), got)
+  }
+
+  test("changesBetween refuses a table column named change, any case") {
+    Seq("change", "CHANGE").foreach { name =>
+      val root = tmpDir("vtabcdcchange")
+      VersionedTable.commit(spark, root, Seq((1L, "x")).toDF("id", name))
+      VersionedTable.commit(spark, root, Seq((2L, "y")).toDF("id", name))
+      val ex = intercept[IllegalArgumentException] {
+        VersionedTable.changesBetween(spark, root, 1L, 2L)
+      }
+      assert(ex.getMessage.contains(s"`$name`"), ex.getMessage)
+    }
+  }
+
   test("compact folds the snapshot into one dir, content-preserving") {
     val root = tmpDir("vtabcompact")
     (1 to 4).foreach(i => VersionedTable.commit(spark, root,
