@@ -8,23 +8,25 @@ import graft.operators.Cube
 /** Cuboid-lattice conformance: the Kylin BUILD+ROUTE pair (reference
   * docs/olap.md:24) over lineitem.
   *
-  * Lattice (dims -> measured rows at sf0.1, parent it derives from):
+  * Lattice (dims -> measured rows at sf0.1, source). The fact is
+  * aggregated once, to the base grain; every other cuboid is a grouping
+  * set of one re-aggregation of that base, and all seven land in one
+  * partitioned write ([[Cube.build]]):
   *
   *   {rf,ls,sd,sk}  ~588k   <- fact (the ONLY fact scan)
   *   {rf,ls,sd}     ~15k    <- base
-  *   {rf,sd}        ~7.5k   <- {rf,ls,sd}
+  *   {rf,sd}        ~7.5k   <- base
   *   {ls,sk}        ~2k     <- base
-  *   {rf,ls}        6       <- {rf,ls,sd}
-  *   {sk}           1000    <- {ls,sk}
-  *   {rf}           3       <- {rf,ls}        (depth-3 re-agg chain)
+  *   {rf,ls}        6       <- base
+  *   {sk}           1000    <- base
+  *   {rf}           3       <- base
   *
   * q_cube_build hash-compares five cuboids' contents against DuckDB
   * aggregating the raw fact directly — exactness of the whole
-  * parent-derived lattice, including the depth-3 chain. q_cube_route
-  * answers a fact-table aggregate with routing enabled; the rewrite
-  * must pick the SMALLEST subsuming cuboid ({sk}, 1000 rows —
-  * CubeSpec pins the scan), and the oracle is the naive SQL on the
-  * raw fact.
+  * one-pass lattice. q_cube_route answers a fact-table aggregate
+  * with routing enabled; the rewrite must pick the SMALLEST subsuming
+  * cuboid ({sk}, 1000 rows — CubeSpec pins the scan), and the oracle
+  * is the naive SQL on the raw fact.
   */
 object CubeQueries {
 
@@ -33,7 +35,7 @@ object CubeQueries {
   private val SD = "l_shipdate"
   private val SK = "l_suppkey"
 
-  private def measures = Seq(
+  private[graft] def measures = Seq(
     Cube.MeasureDef("n", Cube.MCountAll),
     Cube.MeasureDef("cnt_qty", Cube.MCountCol, col("l_quantity")),
     Cube.MeasureDef("s_qty", Cube.MSum, dec2(col("l_quantity"))),
@@ -42,7 +44,7 @@ object CubeQueries {
     Cube.MeasureDef("mn_qty", Cube.MMin, col("l_quantity")),
     Cube.MeasureDef("mx_qty", Cube.MMax, col("l_quantity")))
 
-  private val lattice = Seq(
+  private[graft] val lattice = Seq(
     Seq(RF, LS, SD, SK), Seq(RF, LS, SD), Seq(RF, SD), Seq(LS, SK),
     Seq(RF, LS), Seq(SK), Seq(RF))
 

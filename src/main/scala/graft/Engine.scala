@@ -208,7 +208,12 @@ object Engine {
       m
     }
     per.getOrElseUpdate(s"$sfDir/$name", {
-      val df = spark.read.parquet(s"$sfDir/$name.parquet")
+      val path = s"$sfDir/$name.parquet"
+      // the schema comes from one footer read on the driver, so
+      // resolving a table schedules no schema-inference job
+      val footer = footerSchema(spark, path)
+      val df = footer.fold(spark.read.parquet(path))(f =>
+        spark.read.schema(f._1).parquet(path))
       // Older testdata generations wrote events.ts as TIMESTAMP(NANOS),
       // which (with nanosAsLong=true) surfaces as a Long of epoch-nanos;
       // newer generations write timestamp[us], which resolves directly
@@ -220,9 +225,9 @@ object Engine {
       // drift error instead of guessing.
       if (name == "events" &&
           df.schema("ts").dataType == org.apache.spark.sql.types.LongType) {
-        if (!tsLogicalTypeIsNanos(spark, s"$sfDir/$name.parquet"))
+        if (!footer.exists(f => tsIsNanos(f._2)))
           throw new IllegalStateException(
-            s"testdata drift: $sfDir/$name.parquet ts surfaces as LONG " +
+            s"testdata drift: $path ts surfaces as LONG " +
               "but its parquet logical type is not TIMESTAMP(NANOS) — " +
               "cannot infer the epoch unit; regenerate testdata or " +
               "update Engine.table")
@@ -233,35 +238,61 @@ object Engine {
     })
   }
 
-  /** True iff the parquet file's `ts` column carries an explicit
-    * TIMESTAMP(NANOS) logical annotation — the only Long-surfaced
-    * encoding whose epoch unit is KNOWN (parquet-format logical
-    * types). Reads one footer; never the data. */
-  private def tsLogicalTypeIsNanos(spark: SparkSession,
-      path: String): Boolean = {
+  /** The schema `spark.read.parquet(path)` infers without schema
+    * merging, read on the driver from ONE footer (a bare file's own,
+    * else the dir's first data file by name), with that footer's
+    * parquet schema. Spark's row-metadata key wins when the writer
+    * stored one; otherwise the session's parquet converter maps the
+    * parquet schema (honouring `nanosAsLong` and friends). None for a
+    * dir with subdirs (partition columns live in the paths, not the
+    * footer) or without a data file; callers then let Spark infer. */
+  private[graft] def footerSchema(spark: SparkSession, path: String)
+      : Option[(org.apache.spark.sql.types.StructType,
+        org.apache.parquet.schema.MessageType)] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    val conf = spark.sparkContext.hadoopConfiguration
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val conf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(conf)
-    // a dataset dir holds part files; a bare file is itself the footer
-    val file =
-      if (f.getFileStatus(p).isDirectory)
-        f.listStatus(p).map(_.getPath)
-          .find(_.getName.endsWith(".parquet")).getOrElse(return false)
-      else p
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try {
-      val schema = reader.getFooter.getFileMetaData.getSchema
-      if (!schema.containsField("ts")) return false
-      schema.getType(schema.getFieldIndex("ts"))
+    val fs = p.getFileSystem(conf)
+    val st = fs.getFileStatus(p)
+    // names starting with '_' or '.' are hidden, as in Spark's file index
+    val files =
+      if (!st.isDirectory) Array(st)
+      else fs.listStatus(p).filterNot(_.getPath.getName.matches("[._].*"))
+    if (files.exists(_.isDirectory)) return None
+    files.sortBy(_.getPath.getName).headOption.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try {
+        val meta = reader.getFooter.getFileMetaData
+        val fromSpark = Option(meta.getKeyValueMetaData
+            .get("org.apache.spark.sql.parquet.row.metadata"))
+          .flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+          .collect { case t: StructType => t }
+        val schema = fromSpark.getOrElse(
+          new org.apache.spark.sql.execution.datasources.parquet
+            .ParquetToSparkSchemaConverter(spark.sessionState.conf)
+            .convert(meta.getSchema))
+        (org.apache.spark.sql.graft.Bridge.asNullable(schema),
+          meta.getSchema)
+      } finally reader.close()
+    }
+  }
+
+  /** True iff the parquet schema's `ts` column carries an explicit
+    * TIMESTAMP(NANOS) logical annotation — the only Long-surfaced
+    * encoding whose epoch unit is KNOWN (parquet-format logical
+    * types). */
+  private def tsIsNanos(schema: org.apache.parquet.schema.MessageType)
+      : Boolean = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    schema.containsField("ts") &&
+      (schema.getType(schema.getFieldIndex("ts"))
           .getLogicalTypeAnnotation match {
         case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
           t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
         case _ => false
-      }
-    } finally reader.close()
+      })
   }
 
   /** Type CLASS a column resolves to after [[table]] normalization —

@@ -2,23 +2,20 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.hadoop.fs.Path
 
 /** Cuboid-lattice materialization — the Kylin cube BUILD, to pair
   * with [[graft.plans.AggRouting]]'s cube ANSWERING (reference
   * docs/olap.md:24: the MOLAP layer precomputes group-bys and
   * answers queries from them).
   *
-  * The scale property this module exists for: the fact table is
-  * scanned ONCE, for the base cuboid only. Every coarser cuboid is
-  * computed from its smallest already-materialized ancestor by exact
-  * re-aggregation (sum of sums, sum of counts, min of mins, max of
-  * maxes) — Kylin's by-layer build. At 100 TB the base cuboid is one
-  * full-scan aggregation; the rest of the lattice costs aggregations
-  * over progressively tiny summaries (a 6-row cuboid is derived from
-  * a 15 000-row parent, not from 600 M fact rows). Parent selection
-  * uses MEASURED row counts of the cuboids built so far, not dim
-  * arity — a high-cardinality two-dim cuboid can be a worse parent
-  * than a low-cardinality three-dim one.
+  * The build is Gray et al.'s one-pass CUBE ("Data Cube", ICDE '96):
+  * the fact is aggregated ONCE, to the base grain, and every coarser
+  * cuboid is a grouping set of one exact re-aggregation of that base
+  * (sum of sums, min of mins, union of sketches …). The lattice is
+  * one Spark write: its job count does not grow with the cuboid
+  * count, and at interactive sizes jobs, not bytes, cost the time.
   *
   * Every materialized cuboid is registered as a routing summary
   * (with its row count, so [[graft.plans.AggRouteRewrite]] answers
@@ -27,9 +24,8 @@ import org.apache.spark.sql.functions._
   * against the fact table.
   *
   * Measure kinds are exactly the decomposable set routing accepts;
-  * measure columns of every cuboid are cast to the base cuboid's
-  * declared types so re-aggregation up the lattice can't widen
-  * decimals round by round.
+  * measure columns of every cuboid are cast to the base aggregate's
+  * declared types, so re-aggregation can't widen decimals.
   */
 object Cube {
 
@@ -55,14 +51,7 @@ object Cube {
   final case class MeasureDef(name: String, kind: MKind,
       input: Column = lit(1)) {
     /** Aggregate from raw fact rows. */
-    def base: Column = (kind match {
-      case MSum => sum(input)
-      case MCountAll => count(lit(1))
-      case MCountCol => count(input)
-      case MMin => min(input)
-      case MMax => max(input)
-      case MHllSketch => hll_sketch_agg(input)
-    }).as(name)
+    def base: Column = canonical.as(name)
     /** Exact re-aggregate from a parent cuboid's column. */
     def combine: Column = (kind match {
       case MSum | MCountAll | MCountCol => sum(col(name))
@@ -85,7 +74,8 @@ object Cube {
   }
 
   /** Build manifest entry: `parentDims` is None iff the cuboid was
-    * aggregated from the fact table itself. */
+    * aggregated from the fact table itself, else the base grain it
+    * was re-aggregated from. */
   final case class Built(dims: Seq[String], table: String, rows: Long,
       parentDims: Option[Seq[String]])
 
@@ -105,17 +95,13 @@ object Cube {
       case c => "_x%04x_".format(c.toInt)
     }).mkString("_d")
 
-  /** Base-dim reduction contract for [[build]]: a lattice only earns
-    * its keep when the BASE cuboid is much smaller than the fact —
-    * every routing win and every incremental-maintenance win is
-    * proportional to that reduction. When the base grain is nearly
-    * row-unique (the 300x probe measured growth exponent 0.93 for
-    * maintenance exactly in that regime — the "summary" IS the fact,
-    * so every derive rescans fact-sized data), materializing the
-    * lattice burns storage and shuffle for nothing. [[build]] refuses
-    * above this sketched base-groups/fact-rows fraction; pass
-    * `maxBaseRatio = 1.0` to opt out (and accept fact-sized
-    * summaries), or pick lower-cardinality base dims. */
+  /** Base-dim reduction contract for [[build]]: every routing and
+    * maintenance win is proportional to how much smaller the BASE
+    * cuboid is than the fact. Over a near-row-unique base grain the
+    * "summary" IS the fact (the 300x probe measured maintenance growth
+    * exponent 0.93 there), so [[build]] refuses above this sketched
+    * base-groups/fact-rows fraction; pass `maxBaseRatio = 1.0` to opt
+    * out, or pick lower-cardinality base dims. */
   val DefaultMaxBaseRatio: Double = 0.5
 
   /** Facts below this row count skip the reduction guard: a tiny
@@ -123,38 +109,40 @@ object Cube {
     * exists to stop 100 TB mistakes, not unit tests. */
   val BaseRatioGuardMinRows: Long = 1L << 20
 
-  /** Materialize `cuboids` (each a subset of fact columns) as managed
-    * tables `<tablePrefix><dims joined by _>`, building each from its
-    * smallest materialized ancestor, and register every one as a
-    * routing summary. Existing tables are overwritten. Returns the
-    * build manifest in build order (descending dim count).
-    *
-    * Refuses (see [[DefaultMaxBaseRatio]]) when one sketch pass over
-    * the fact (count + HLL of the UNION of all requested cuboid dims
-    * — the true base grain — map-side partial, no shuffle growth)
-    * shows the base would not reduce the fact by at least
-    * `1 - maxBaseRatio`. */
+  /** Materialize `cuboids` (distinct non-empty fact-column sets) as
+    * tables `<tablePrefix><mangled dims>`, overwriting, each registered
+    * as a routing summary; returns the manifest widest first. The fact
+    * is aggregated once, to the base grain (the union of all dims), and
+    * two branches over that aggregate — the base grain itself (grouping
+    * id 0, when requested) and GROUPING SETS of the rest, sharing one
+    * exchange — are written once, partitioned by grouping id. Each id's
+    * dir then moves to its cuboid's table location. Refuses first when
+    * one sketch pass shows the base would not reduce the fact by
+    * `1 - maxBaseRatio` (see [[DefaultMaxBaseRatio]]). */
   def build(fact: DataFrame, measures: Seq[MeasureDef],
       cuboids: Seq[Seq[String]], tablePrefix: String,
       register: Boolean = true,
       maxBaseRatio: Double = DefaultMaxBaseRatio): Seq[Built] = {
     require(cuboids.nonEmpty, "no cuboids requested")
     require(measures.nonEmpty, "no measures declared")
+    require(cuboids.forall(_.nonEmpty),
+      "empty cuboid (grand total) not supported")
+    // one grouping id per dim SET: a twin would overwrite its table
+    require(cuboids.map(_.toSet).distinct.size == cuboids.size,
+      s"duplicate cuboid dim lists: ${cuboids.mkString("; ")}")
+    val spark = fact.sparkSession
+    val ordered = cuboids.sortBy(-_.length)
+    // the union's distinct count bounds every cuboid's: one guards all
+    val union = cuboids.flatten.distinct
+    val baseDims =
+      if (ordered.head.toSet == union.toSet) ordered.head else union
     if (maxBaseRatio < 1.0) {
-      // sketch the TRUE base grain: the union of every requested
-      // cuboid's dims, not an arbitrary widest cuboid — with two
-      // same-length disjoint cuboids, maxBy picked one winner and a
-      // non-reducing co-base slipped through unexamined. The union's
-      // distinct count upper-bounds every cuboid's (each cuboid is a
-      // projection of it), so one sketch pass still guards them all,
-      // and it is exactly the grain an incremental-maintenance base
-      // would carry.
-      val unionDims = cuboids.flatten.distinct
-      val r = fact.agg(count(lit(1)),
-        approx_count_distinct(struct(unionDims.map(col): _*))).head()
+      val r = graft.Engine.label(spark, "cube.build: base-ratio guard")(
+        fact.agg(count(lit(1)),
+          approx_count_distinct(struct(baseDims.map(col): _*))).head())
       val (n, g) = (r.getLong(0), r.getLong(1))
       require(n < BaseRatioGuardMinRows || g <= maxBaseRatio * n,
-        s"base grain (${unionDims.mkString(",")} — the union of all " +
+        s"base grain (${baseDims.mkString(",")} — the union of all " +
           s"requested cuboid dims) sketches ~$g groups over " +
           s"$n fact rows (${String.format(java.util.Locale.ROOT,
             "%.2f", Double.box(g.toDouble / n))} > " +
@@ -162,48 +150,60 @@ object Cube {
           "pick lower-cardinality base dims, or pass maxBaseRatio = 1.0 " +
           "to build fact-sized summaries anyway")
     }
-    // mangle is injective, so mangled-name uniqueness == dim-list
-    // uniqueness; a duplicated dim list would silently overwrite its
-    // twin's table mid-build
-    require(cuboids.map(mangle).distinct.size == cuboids.size,
-      s"duplicate cuboid dim lists: ${cuboids.mkString("; ")}")
-    val spark = fact.sparkSession
-    val ordered = cuboids.sortBy(-_.length)
-    // the widest requested cuboid decides the declared measure types
-    // (sum of DECIMAL(18,2) -> DECIMAL(28,2) etc.); every cuboid is
-    // cast to these so lattice depth never widens a type
-    val declared = fact.groupBy(ordered.head.map(col): _*)
+    val base = fact.groupBy(baseDims.map(col): _*)
       .agg(measures.head.base, measures.tail.map(_.base): _*)
-      .schema.fields.map(f => f.name -> f.dataType).toMap
-    val built = scala.collection.mutable.ArrayBuffer.empty[Built]
-    for (dims <- ordered) {
-      require(dims.nonEmpty, "empty cuboid (grand total) not supported")
-      val parent = built.filter(b => dims.forall(b.dims.contains))
-        .sortBy(_.rows).headOption
-      val (src, aggs) = parent match {
-        case Some(p) =>
-          (spark.table(p.table), measures.map(_.combine))
-        case None => (fact, measures.map(_.base))
+    // Spark's grouping_id(): bit n-1-i set iff baseDims(i) rolled up
+    def gidOf(dims: Seq[String]): Long = baseDims.indices.collect {
+      case i if !dims.contains(baseDims(i)) => 1L << (baseDims.length - 1 - i)
+    }.sum
+    // working column: a prefix no fact or measure column starts with
+    val taken = (fact.columns ++ measures.map(_.name)).map(_.toLowerCase)
+    val gid = Iterator.iterate("__gid")("_" + _)
+      .find(p => !taken.exists(_.startsWith(p))).get
+    val typed = baseDims.map(col) ++ measures.map(m =>
+      col(m.name).cast(base.schema(m.name).dataType).as(m.name))
+    val children = ordered.filter(gidOf(_) != 0L)
+    val out = (
+      (if (ordered.exists(gidOf(_) == 0L))
+        Seq(base.select(typed :+ lit(0L).as(gid): _*)) else Nil) ++
+      (if (children.nonEmpty) Seq(base
+        .groupingSets(children.map(_.map(col)), baseDims.map(col): _*)
+        .agg(grouping_id().as(gid), measures.map(_.combine): _*)
+        .select(typed :+ col(gid): _*)) else Nil)).reduce(_.unionByName(_))
+    val run = java.util.UUID.randomUUID().toString.replace("-", "")
+    val obs = new org.apache.spark.sql.Observation(s"graft-cube-$run")
+    val counts = ordered.zipWithIndex.map { case (d, i) =>
+      count(when(col(gid) === gidOf(d), 1)).as(s"r$i") }
+    def location(tbl: String) = new Path(spark.sessionState.catalog
+      .defaultTablePath(spark.sessionState.sqlParser.parseTableIdentifier(tbl)))
+    // no mangled name contains "_s": the staging dir is never a table's
+    val staging = location(s"${tablePrefix}_staging_$run")
+    val fs = staging.getFileSystem(spark.sessionState.newHadoopConf())
+    val routable = measures.filter(_.routable).map(m => m.canonical -> m.name)
+    try {
+      graft.Engine.label(spark, "cube.build: lattice write")(
+        out.observe(obs, counts.head, counts.tail: _*)
+          .write.partitionBy(gid).parquet(staging.toString))
+      ordered.zipWithIndex.map { case (dims, i) =>
+        val tbl = tablePrefix + mangle(dims)
+        val target = location(tbl)
+        val part = new Path(staging, s"$gid=${gidOf(dims)}")
+        Warehouse.dropManaged(spark, tbl)
+        fs.delete(target, true)
+        // a zero-row cuboid has no partition dir: an empty table
+        require(if (fs.exists(part)) fs.rename(part, target)
+          else fs.mkdirs(target), s"cannot move $part to $target")
+        spark.catalog.createTable(tbl, "parquet", StructType(
+          (dims ++ measures.map(_.name)).map(out.schema(_))),
+          Map("path" -> target.toString))
+        val rows = Checkpoints.metric(obs, s"r$i").collect {
+          case n: Long => n }.getOrElse(spark.table(tbl).count())
+        if (register && routable.nonEmpty)
+          graft.plans.AggRouting.register(fact, spark.table(tbl), dims,
+            routable.toMap, rows)
+        Built(dims, tbl, rows, Option.when(gidOf(dims) != 0L)(baseDims))
       }
-      val out = src.groupBy(dims.map(col): _*)
-        .agg(aggs.head, aggs.tail: _*)
-        .select(dims.map(col) ++ measures.map(m =>
-          col(m.name).cast(declared(m.name)).as(m.name)): _*)
-      val tbl = tablePrefix + mangle(dims)
-      Warehouse.dropManaged(spark, tbl)
-      out.write.format("parquet").saveAsTable(tbl)
-      // one count per cuboid, over the just-written summary (never the
-      // fact): sizes drive both parent selection above and smallest-
-      // cuboid routing below
-      val rows = spark.table(tbl).count()
-      val routable = measures.filter(_.routable)
-        .map(m => m.canonical -> m.name)
-      if (register && routable.nonEmpty)
-        graft.plans.AggRouting.register(fact, spark.table(tbl), dims,
-          routable.toMap, rows)
-      built += Built(dims, tbl, rows, parent.map(_.dims))
-    }
-    built.toSeq
+    } finally fs.delete(staging, true)
   }
 
   /** Benefit-ranked cuboid selection under a ROW BUDGET — the classic
@@ -299,10 +299,8 @@ object Cube {
   def buildBudgeted(fact: DataFrame, measures: Seq[MeasureDef],
       baseDims: Seq[String], candidates: Seq[Seq[String]],
       maxRows: Long, tablePrefix: String,
-      register: Boolean = true): Seq[Built] =
-    build(fact, measures,
-      selectCuboids(fact, baseDims, candidates, maxRows).map(_.dims),
-      tablePrefix, register)
+      register: Boolean = true): Seq[Built] = buildBudgetedBy(fact,
+    measures, baseDims, candidates, _ => maxRows, tablePrefix, register)
 
   /** [[buildBudgeted]] with the budget relative to the base cuboid's
     * sketched size (one sketch pass total). */

@@ -18,6 +18,11 @@ object Bridge {
       plan: LogicalPlan): DataFrame =
     Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
 
+  /** `schema` with every field, nested ones too, nullable — what a
+    * file relation reports for its data schema. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** The analyzed logical plan of a DataFrame (for plan composition). */
   def logicalPlan(df: org.apache.spark.sql.DataFrame): LogicalPlan =
     df.asInstanceOf[Dataset[_]].queryExecution.analyzed

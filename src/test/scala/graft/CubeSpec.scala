@@ -2,15 +2,22 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.graft.JobCount
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec,
+  QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,
+  ShuffleExchangeExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.Cube
 
-/** The cube lattice's two contracts: built-from-parent (fact scanned
+/** The cube lattice's two contracts: built in one pass (fact scanned
   * once) and routed-to-smallest-cuboid. */
-class CubeSpec extends SparkSuite {
+class CubeSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private lazy val manifest = CubeQueries.ensureCube(spark, sf)
 
@@ -180,12 +187,136 @@ class CubeSpec extends SparkSuite {
     }
   }
 
-  test("the {returnflag} cuboid sits on a depth-3 derivation chain") {
-    def depth(dims: Seq[String]): Int =
-      manifest.find(_.dims == dims).get.parentDims
-        .map(p => 1 + depth(p)).getOrElse(0)
-    assert(depth(Seq("l_returnflag")) == 3,
-      "expected fact -> base -> {rf,ls,sd} -> {rf,ls} -> {rf}")
+  /** A fresh build of CubeQueries' 7-cuboid lattice: the manifest,
+    * the jobs it scheduled, and the query executions of its writes. */
+  private lazy val onePass = {
+    spark.sql("CREATE DATABASE IF NOT EXISTS dws")
+    val fact = Engine.table(spark, sf, "lineitem")
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec])
+            .isDefined) writes.add(qe)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val (built, jobs) = JobCount(spark)(Cube.build(fact,
+        CubeQueries.measures, CubeQueries.lattice, "dws.cube_onepass_t_",
+        register = false))
+      (built, jobs, writes.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("one pass: every coarser cuboid re-aggregates the base grain, " +
+      "and the write reads the fact through one exchange, reused") {
+    val (built, _, writes) = onePass
+    val base = built.head
+    assert(base.parentDims.isEmpty)
+    built.tail.foreach(b => assert(b.parentDims.contains(base.dims), b))
+    assert(writes.size == 1, s"expected one write, got ${writes.size}")
+    val plan = writes.head.executedPlan
+    def readsFact(p: SparkPlan) = collect(p) { case s: FileSourceScanExec =>
+      s.relation.location.rootPaths }.flatten
+      .exists(_.toString.contains("lineitem"))
+    assert(collect(plan) { case s: FileSourceScanExec => s }.size == 1,
+      s"the fact must be scanned once:\n$plan")
+    assert(collect(plan) {
+      case e: ShuffleExchangeExec if readsFact(e) => e }.size == 1,
+      s"expected one exchange over the fact:\n$plan")
+    val reused = collect(plan) { case r: ReusedExchangeExec => r }
+    assert(reused.size == 1 && readsFact(reused.head.child),
+      s"the other branch must reuse the fact exchange:\n$plan")
+  }
+
+  test("the 7-cuboid lattice builds in at most 5 jobs, each cuboid " +
+      "equal to a direct aggregate of the fact") {
+    val (built, jobs, _) = onePass
+    assert(jobs <= 5, s"lattice build scheduled $jobs jobs")
+    assert(built.map(_.dims).toSet == CubeQueries.lattice.toSet)
+    assertLatticeIsGroupBy(Engine.table(spark, sf, "lineitem"),
+      CubeQueries.measures, built)
+  }
+
+  /** Each built cuboid's table holds exactly `fact.groupBy(dims)`
+    * with the cuboid's measure types, and its manifest row count. */
+  private def assertLatticeIsGroupBy(fact: DataFrame,
+      ms: Seq[Cube.MeasureDef], built: Seq[Cube.Built]): Unit =
+    built.foreach { b =>
+      val got = spark.table(b.table)
+      val want = fact.groupBy(b.dims.map(col): _*)
+        .agg(ms.head.base, ms.tail.map(_.base): _*)
+        .select(got.columns.map(c =>
+          col(c).cast(got.schema(c).dataType).as(c)).toSeq: _*)
+      assertSameRows(got, want)
+      assert(b.rows == want.count(), s"${b.dims}: rows ${b.rows}")
+    }
+
+  private val hostileMeasures = Seq(
+    Cube.MeasureDef("n", Cube.MCountAll),
+    Cube.MeasureDef("cnt_v", Cube.MCountCol, col("v")),
+    Cube.MeasureDef("s_v", Cube.MSum, col("v")),
+    Cube.MeasureDef("mn_v", Cube.MMin, col("v")),
+    Cube.MeasureDef("mx_v", Cube.MMax, col("v")))
+
+  private def hostileFact(rows: Seq[(Option[String], Option[Int], Option[Long])],
+      names: (String, String) = ("a", "b")): DataFrame = {
+    import spark.implicits._
+    rows.toDF(names._1, names._2, "v")
+  }
+
+  test("hostile lattice: an empty fact builds every cuboid, empty") {
+    val fact = hostileFact(Nil)
+    val built = Cube.build(fact, hostileMeasures,
+      Seq(Seq("a", "b"), Seq("a"), Seq("b")), "cube_empty_t_",
+      register = false)
+    assert(built.size == 3)
+    built.foreach { b =>
+      assert(spark.catalog.tableExists(b.table), b.table)
+      assert(spark.table(b.table).count() == 0 && b.rows == 0, b)
+    }
+    assertLatticeIsGroupBy(fact, hostileMeasures, built)
+  }
+
+  test("hostile lattice: real null groups stay apart from the nulls " +
+      "of rolled-up dims") {
+    val fact = hostileFact(Seq(
+      (None, Some(1), Some(10L)), (Some("x"), None, Some(20L)),
+      (None, None, None), (None, None, Some(5L)),
+      (Some("x"), Some(1), Some(1L)), (Some("y"), Some(2), Some(2L))))
+    val built = Cube.build(fact, hostileMeasures,
+      Seq(Seq("a", "b"), Seq("a"), Seq("b")), "cube_nulls_t_",
+      register = false)
+    assertLatticeIsGroupBy(fact, hostileMeasures, built)
+    // {a}: the a = null group holds exactly the three null-a rows
+    val a = built.find(_.dims == Seq("a")).get
+    assert(spark.table(a.table).filter(col("a").isNull)
+      .select("n").head().getLong(0) == 3L)
+  }
+
+  test("hostile lattice: a fact column named like the grouping-id " +
+      "working column keeps its values") {
+    val fact = hostileFact(Seq(
+      (Some("p"), Some(7), Some(1L)), (Some("q"), Some(7), Some(2L)),
+      (Some("p"), Some(8), Some(3L)), (None, Some(9), Some(4L))),
+      names = ("__gid", "__gid_b"))
+    val cuboids = Seq(Seq("__gid", "__gid_b"), Seq("__gid"), Seq("__gid_b"))
+    val built = Cube.build(fact, hostileMeasures, cuboids,
+      "cube_gidname_t_", register = false)
+    assert(built.map(_.dims).toSet == cuboids.toSet)
+    assertLatticeIsGroupBy(fact, hostileMeasures, built)
+  }
+
+  test("hostile lattice: a requested set missing the base grain still " +
+      "builds every cuboid from one aggregate") {
+    val fact = hostileFact(Seq(
+      (Some("p"), Some(1), Some(1L)), (Some("q"), Some(2), Some(2L)),
+      (None, Some(1), Some(3L))))
+    val built = Cube.build(fact, hostileMeasures,
+      Seq(Seq("a"), Seq("b")), "cube_nobase_t_", register = false)
+    built.foreach(b => assert(b.parentDims.contains(Seq("a", "b")), b))
+    assertLatticeIsGroupBy(fact, hostileMeasures, built)
   }
 
   test("measure types are identical across every cuboid") {
