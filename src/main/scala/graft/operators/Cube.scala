@@ -352,8 +352,11 @@ object Cube {
     * build generalized to every cuboid: fold the delta into the BASE
     * cuboid only ([[graft.plans.AggRouting.maintainSummary]]: one
     * aggregation of the delta, one summary-sized combine — the fact
-    * is never rescanned), then re-derive each coarser cuboid from its
-    * smallest maintained ancestor. Descendant maintenance therefore
+    * is never rescanned), then re-derive each coarser cuboid from the
+    * checkpointed base — one re-aggregation of stored summary rows per
+    * cuboid, like the build's one-pass lattice (a smaller maintained
+    * ancestor would be a lazy frame, re-aggregating the base under
+    * every child it feeds). Descendant maintenance therefore
     * costs aggregations over summaries, exactly like the build; and
     * because every measure combines exactly, maintained lattice ==
     * lattice rebuilt from the full fact, row for row.
@@ -390,17 +393,7 @@ object Cube {
     val base0 = graft.plans.AggRouting.maintainSummary(
       baseSummary, delta, baseDims, canonical)
     val base = if (cuboids.nonEmpty) base0.localCheckpoint() else base0
-    val done = scala.collection.mutable.LinkedHashMap[Seq[String],
-      DataFrame](baseDims -> base)
-    // derive small-from-small: among the maintained frames, pick the
-    // ancestor with the fewest dims beyond the child's (the in-memory
-    // stand-in for the build's measured-rows rule)
-    for (dims <- cuboids.sortBy(-_.length)) {
-      val parent = done.filter { case (d, _) => dims.forall(d.contains) }
-        .toSeq.sortBy(_._1.length).headOption
-        .getOrElse(baseDims -> base)
-      done += dims -> derive(parent._2, dims, measures)
-    }
-    done.toMap
+    Map(baseDims -> base) ++
+      cuboids.map(dims => dims -> derive(base, dims, measures))
   }
 }

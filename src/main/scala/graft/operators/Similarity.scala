@@ -198,8 +198,7 @@ object Similarity {
   def ivfBuildIndex(embeddings: DataFrame, indexDir: String,
       dim: Int = 64, planes: Int = 8,
       vecCol: String = "embedding", idCol: String = "vec_id"): Unit = {
-    resetForRebuild(indexDir, "index", s"$indexDir/vectors",
-      Seq("_maint", "tombstones", "vectors_delta"))
+    resetForRebuild(indexDir, "index", IvfTables)
     val bucketed = embeddings.select(col(idCol), col(vecCol),
       hyperplaneSignature(col(vecCol), dim, planes).as("bucket"))
     graft.Engine.label(embeddings.sparkSession, "ivf build: vectors write")(
@@ -212,7 +211,7 @@ object Similarity {
     // in-memory materialization of a whole bucket
     val spark = embeddings.sparkSession
     graft.Engine.label(spark, "ivf build: centroids")(
-      spark.read.parquet(baseWithSwapFallback(s"$indexDir/vectors"))
+      spark.read.parquet(Segments.readable(s"$indexDir/vectors"))
         .select(col("bucket"),
           transform(col(vecCol), _.cast("double")).as("dv"))
         .groupBy("bucket")
@@ -236,8 +235,7 @@ object Similarity {
   def ivfBuildIndexKMeans(embeddings: DataFrame, indexDir: String,
       nCentroids: Int = 32, iters: Int = 3, sampleFraction: Double = 1.0,
       vecCol: String = "embedding", idCol: String = "vec_id"): Unit = {
-    resetForRebuild(indexDir, "index", s"$indexDir/vectors",
-      Seq("_maint", "tombstones", "vectors_delta"))
+    resetForRebuild(indexDir, "index", IvfTables)
     val vecs = embeddings.select(col(idCol).as("id"),
       col(vecCol).as("v"),
       normalized(col(vecCol)).as("nv"))
@@ -573,7 +571,7 @@ object Similarity {
     // re-read a tiny read-only table (see readCentroids)
     val buckets = nearestBuckets(
       readCentroids(spark, s"$indexDir/centroids"), query, nprobe)
-    resolvedVectors(spark, indexDir, idCol)
+    Segments.resolveDeltaTable(spark, indexDir, s"$indexDir/vectors", idCol)
       .filter(bucketIn(buckets)) // partition-pruned scan
       .select(col(idCol), cosineSimilarity(col(vecCol), q).as("cos"))
       .orderBy(desc("cos"), asc(idCol))
@@ -581,6 +579,10 @@ object Similarity {
   }
 
   // ------------------------------------------ incremental IVF maintenance
+
+  /** The IVF index's maintained tables: its rebuild and its compaction
+    * derive the overlay from this one list ([[Segments.dropOverlay]]). */
+  private val IvfTables = Seq("vectors")
 
   /** Incrementally maintain a persisted IVF index from a change feed —
     * the FAISS add/remove_ids lifecycle on the [[ivfBuildIndexKMeans]]
@@ -601,66 +603,22 @@ object Similarity {
     * snapshot-consistent per scan. PQ code tables are NOT maintained
     * here — re-encode after compaction. Returns the batch seq.
     *
-    * CRASH-IDEMPOTENT: each batch lands in its own `__batch=<seq>`
-    * partition directory under `vectors_delta/` / `tombstones/`,
-    * written with per-directory OVERWRITE, and the seq counter file is
-    * the commit point (written last). A maintainer that dies mid-batch
-    * leaves the counter unadvanced, so the at-least-once redelivery
-    * (foreachBatch, [[graft.streaming.StreamOps.annIndexSink]])
-    * recomputes the SAME seq and overwrites the partial directories
-    * instead of appending duplicates. (The previous layout appended
-    * into the base `vectors/` table; a crash between the append and
-    * the counter write made the retry duplicate every inserted row at
-    * the same seq, and the tombstone resolve keeps ALL rows of the
-    * winning seq — duplicate ids in probe results.) */
+    * CRASH-IDEMPOTENT under at-least-once redelivery (foreachBatch,
+    * [[graft.streaming.StreamOps.annIndexSink]]): the batch is one
+    * [[Segments.commitBatch]]. */
   def ivfUpsert(spark: org.apache.spark.sql.SparkSession, indexDir: String,
       changes: DataFrame, vecCol: String = "embedding",
       idCol: String = "vec_id", changeCol: String = "change"): Long = {
-    val maint = new java.io.File(s"$indexDir/_maint")
-    maint.mkdirs()
-    val seqFile = java.nio.file.Paths.get(s"$indexDir/_maint/seq")
-    val seq = committedSeq(indexDir) + 1
     val cents = readCentroids(spark, s"$indexDir/centroids")
     val ins = changes.filter(col(changeCol) === "insert")
       .select(col(idCol).as("id"), col(vecCol).as("v"),
         normalized(col(vecCol)).as("nv"))
-    graft.Engine.label(spark, "ivf upsert: vectors delta")(
-      assignNearestC(ins, cents)
-        .select(col("id").as(idCol), col("v").as(vecCol), col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$indexDir/vectors_delta/__batch=$seq"))
-    // every changed id is superseded at this seq (deletes die; the
-    // batch's own inserts survive the <= comparison)
-    graft.Engine.label(spark, "ivf upsert: tombstones")(
-      changes.select(col(idCol)).distinct()
-        .write.mode("overwrite")
-        .parquet(s"$indexDir/tombstones/__batch=$seq"))
-    // commit point: the counter names the highest COMPLETE batch
-    writeSeq(indexDir, seq)
-    seq
-  }
-
-  /** Any parquet part file VISIBLE TO SPARK'S READER under `dir`
-    * (driver-side walk, bounded by batches-since-compaction ×
-    * buckets-touched)? Guards the delta reads: a delete-only history
-    * has tombstone rows but possibly not one inserted vector, and
-    * schema inference needs at least one file. Hidden paths
-    * (`_temporary` staging, dot-files) are skipped exactly as Spark's
-    * file index skips them — counting them would send the reader into
-    * a dir it then finds empty (AnalysisException on a crashed batch's
-    * staging debris). */
-  private[operators] def hasParquetFile(dir: java.io.File): Boolean = {
-    if (!dir.exists()) return false
-    val kids = dir.listFiles()
-    if (kids == null) return false
-    kids.exists { f =>
-      // Spark's listing rule: underscore/dot names are hidden UNLESS
-      // they contain '=' (partition dirs — __batch=N must survive)
-      val n = f.getName
-      val hidden =
-        (n.startsWith("_") || n.startsWith(".")) && !n.contains("=")
-      !hidden && ((f.isFile && n.endsWith(".parquet")) ||
-        (f.isDirectory && hasParquetFile(f)))
+    Segments.commitBatch(indexDir, changes, idCol) { seq =>
+      graft.Engine.label(spark, "ivf upsert: vectors delta")(
+        assignNearestC(ins, cents)
+          .select(col("id").as(idCol), col("v").as(vecCol), col("bucket"))
+          .write.mode("overwrite").partitionBy("bucket")
+          .parquet(Segments.deltaDir(s"$indexDir/vectors", seq)))
     }
   }
 
@@ -678,17 +636,12 @@ object Similarity {
     * file: an empty batch's root-level file next to a sibling batch's
     * `bucket=`/`shard=` subdirs would give Spark's partition
     * discovery conflicting depths, and the delta readers are already
-    * guarded by [[hasParquetFile]]. */
+    * guarded by [[Segments.hasParquetFile]]. */
   private[operators] def writePartitionedBase(df: DataFrame,
       partCol: String, path: String): Unit = {
     df.write.mode("overwrite").partitionBy(partCol).parquet(path)
-    if (!hasParquetFile(new java.io.File(path)))
+    if (!Segments.hasParquetFile(path))
       df.limit(0).write.mode("append").parquet(path)
-  }
-
-  private[operators] def rmrfDir(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmrfDir)
-    f.delete(); ()
   }
 
   // --------------------------------------------- build-completion marker
@@ -714,16 +667,17 @@ object Similarity {
     * overwrite needs the base AT its path, not renamed aside), and
     * discard the maintenance overlay — a rebuild is a NEW truth, and
     * leaving the old `_maint`/tombstones/delta state in place would
-    * have [[resolveDeltaTable]] re-applying STALE tombstones and delta
-    * rows on top of the fresh base (a delete from the previous
+    * have [[Segments.resolveDeltaTable]] re-applying STALE tombstones
+    * and delta rows on top of the fresh base (a delete from the previous
     * generation silently erasing a freshly indexed row). Marker first:
-    * every later crash point then reads as an incomplete build. */
+    * every later crash point then reads as an incomplete build.
+    * `tables` are the index's maintained tables (one list per index,
+    * shared with its compaction). */
   private[operators] def resetForRebuild(indexDir: String,
-      artifact: String, basePath: String,
-      overlayDirs: Seq[String]): Unit = {
+      artifact: String, tables: Seq[String]): Unit = {
     clearBuilt(indexDir, artifact)
-    recoverCompactSwap(basePath)
-    overlayDirs.foreach(d => rmrfDir(new java.io.File(s"$indexDir/$d")))
+    tables.foreach(t => Segments.recover(s"$indexDir/$t"))
+    Segments.dropOverlay(indexDir, tables)
   }
 
   private[graft] def clearBuilt(dir: String,
@@ -740,188 +694,33 @@ object Similarity {
     ()
   }
 
-  // ----------------------------------------- compaction base swap
-  //
-  // Shared by every compaction that replaces a live base directory
-  // with a staged rewrite (IVF vectors here; BM25 postings and doc
-  // lengths in TextOps). The live base is NEVER deleted in place —
-  // an rmrf that dies half-way leaves a partially-listed directory
-  // that READS as silently missing rows under the (still correct)
-  // overlay. Instead both sides of the swap are atomic renames:
-  //
-  //   1. staged rewrite lands fully at `<base>_compacting`;
-  //   2. live base renamed ASIDE to `<base>_precompact`  (ATOMIC_MOVE);
-  //   3. staged renamed IN to `<base>`                   (ATOMIC_MOVE);
-  //   4. aside copy deleted (inert once the base exists again).
-  //
-  // Crash windows, all readable:
-  //   - during 1: base + overlay intact, the partial staged dir is
-  //     debris ([[recoverCompactSwap]] clears it, and the next
-  //     staged write overwrites it anyway);
-  //   - between 2 and 3: the base is momentarily ABSENT — readers
-  //     fall back ([[baseWithSwapFallback]]) to the aside copy (the
-  //     exact pre-swap base, still correct under the on-disk
-  //     overlay, which is only cleaned up after the swap), and the
-  //     next compaction first completes the swap (the aside rename
-  //     happens only after the staged write finished, so a present
-  //     aside dir PROVES the staged rewrite is complete);
-  //   - during/after 4: base is the compacted data; a surviving
-  //     aside dir or overlay is inert (the overlay re-applies
-  //     idempotently over the compacted base) and is reclaimed by
-  //     the compaction tail / the next recovery.
-
-  /** Steps 2–4 above. Call [[recoverCompactSwap]] first (clears any
-    * previous crash's debris so the renames cannot hit an existing
-    * target). */
-  private[operators] def swapCompactedBase(basePath: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val base = Paths.get(basePath)
-    val aside = Paths.get(s"${basePath}_precompact")
-    Files.move(base, aside, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(s"${basePath}_compacting"), base,
-      StandardCopyOption.ATOMIC_MOVE)
-    rmrfDir(aside.toFile)
-  }
-
-  /** Repair a compaction that crashed mid-swap, then clear swap
-    * debris — run at the START of every compaction (and harmless on
-    * a clean index). */
-  private[operators] def recoverCompactSwap(basePath: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val base = new java.io.File(basePath)
-    val staged = new java.io.File(s"${basePath}_compacting")
-    val aside = new java.io.File(s"${basePath}_precompact")
-    if (!base.exists() && staged.exists())
-      // crashed between the two swap renames; the staged rewrite is
-      // complete (the aside rename only runs after it) — finish it
-      Files.move(staged.toPath, Paths.get(basePath),
-        StandardCopyOption.ATOMIC_MOVE)
-    if (new java.io.File(basePath).exists()) {
-      if (aside.exists()) rmrfDir(aside)
-      if (staged.exists()) rmrfDir(staged)
-    }
-  }
-
-  /** The readable form of a possibly-mid-swap base: the base itself
-    * when it has data; otherwise the pre-swap aside copy (correct
-    * under the overlay, which outlives the swap); otherwise the
-    * completed staged rewrite (equally correct — the overlay
-    * re-applies idempotently). Read-only: readers never repair. */
-  private[operators] def baseWithSwapFallback(basePath: String): String =
-    if (hasParquetFile(new java.io.File(basePath))) basePath
-    else if (hasParquetFile(new java.io.File(s"${basePath}_precompact")))
-      s"${basePath}_precompact"
-    else if (hasParquetFile(new java.io.File(s"${basePath}_compacting")))
-      s"${basePath}_compacting"
-    else basePath
-
   /** `bucket ∈ buckets` that tolerates an EMPTY probe list (an empty
     * index has no centroids, so no bucket is ever near): `isin()`
     * with zero operands is not a filter Spark accepts. */
   private def bucketIn(buckets: Array[Any]): Column =
     if (buckets.isEmpty) lit(false) else col("bucket").isin(buckets: _*)
 
-  /** Highest COMMITTED maintenance batch (the seq counter file); a
-    * `__batch` directory above it is a crashed writer's partial batch,
-    * awaiting its redelivery. */
-  private[operators] def committedSeq(indexDir: String): Long = {
-    val seqFile = java.nio.file.Paths.get(s"$indexDir/_maint/seq")
-    if (java.nio.file.Files.exists(seqFile))
-      new String(java.nio.file.Files.readAllBytes(seqFile), "UTF-8")
-        .trim.toLong
-    else 0L
-  }
-
-  /** Advance the seq counter ATOMICALLY (tmp + ATOMIC_MOVE). The
-    * counter is the maintenance protocol's commit point and is read by
-    * every probe, so an in-place truncate-then-write would leave a
-    * zero-length file on a crash mid-write — bricking both probes and
-    * the redelivery that is supposed to repair the crash. */
-  private[operators] def writeSeq(indexDir: String, seq: Long): Unit = {
-    val seqFile = java.nio.file.Paths.get(s"$indexDir/_maint/seq")
-    val tmp = seqFile.resolveSibling(
-      s".seq.${java.util.UUID.randomUUID()}.tmp")
-    java.nio.file.Files.write(tmp, seq.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, seqFile,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
-
-  /** A maintained index table's LIVE rows — the shared resolve for
-    * every per-batch-delta index (IVF vectors here, BM25 postings and
-    * doc lengths in [[graft.operators.TextOps]]): base ∪ committed
-    * `__batch=<seq>` delta partitions under `<basePath>_delta/` (base
-    * rows are seq 0; a delta row's seq is its partition-directory
-    * value — a directory name, so a partial rewrite can't lie about
-    * it), last-writer-wins against the broadcast tombstone list
-    * (bounded by churn since the last compaction). Read-committed:
-    * `__batch` partitions above the seq counter are a crashed writer's
-    * partial batch — the filter is on a partition column, so they are
-    * PRUNED outright, never scanned. Never-maintained indexes return
-    * the raw base untouched; bucket/shard filters prune partitions of
-    * the base and every delta batch alike. */
-  private[operators] def resolveDeltaTable(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      basePath: String, idCol: String): DataFrame = {
-    val base = spark.read.parquet(baseWithSwapFallback(basePath))
-    if (!new java.io.File(s"$indexDir/_maint").exists()) return base
-    val committed = committedSeq(indexDir)
-    val raw =
-      if (!hasParquetFile(new java.io.File(s"${basePath}_delta")))
-        base.withColumn("__seq", lit(0L))
-      else base.withColumn("__seq", lit(0L)).unionByName(
-        spark.read.parquet(s"${basePath}_delta")
-          .filter(col("__batch").cast("long") <= committed)
-          .withColumn("__seq", col("__batch").cast("long"))
-          .drop("__batch"))
-    if (!hasParquetFile(new java.io.File(s"$indexDir/tombstones")))
-      return raw.drop("__seq")
-    val tmax = spark.read.parquet(s"$indexDir/tombstones")
-      .filter(col("__batch").cast("long") <= committed)
-      .groupBy(idCol)
-      .agg(max(col("__batch").cast("long")).as("__tmax"))
-    raw.join(broadcast(tmax), Seq(idCol), "left")
-      .filter(col("__tmax").isNull || col("__tmax") <= col("__seq"))
-      .drop("__tmax", "__seq")
-  }
-
-  private def resolvedVectors(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, idCol: String): DataFrame =
-    resolveDeltaTable(spark, indexDir, s"$indexDir/vectors", idCol)
-
   /** Physically reclaim tombstoned rows: rewrite the live vector set
     * as a fresh base (seq resets), clear tombstones and the seq
     * counter. Offline single-writer op, like any compaction.
     *
-    * Crash-ordering: the base swap itself is two atomic renames with
-    * read-time fallback and start-of-compaction repair (see
-    * [[swapCompactedBase]] — the base is never deleted in place), and
-    * after the swap the maintenance overlay (tombstones + deltas,
-    * still on disk) re-applies IDEMPOTENTLY over the compacted base —
-    * an id inserted at seq N exists in the base
-    * at seq 0 and in its delta at seq N; the tombstone at N kills the
-    * base copy and keeps the delta copy, one row either way. The
-    * `_maint` dir is therefore removed FIRST among the cleanups (the
-    * reader's maintained?-switch): once it is gone, readers take the
-    * base-only path and the leftover overlay dirs are inert garbage —
-    * removed next, and any survivor of a crash here is invisible
-    * (stale `__batch` dirs sit above a fresh index's counter until
-    * that seq is re-reached, at which point the upsert OVERWRITES the
-    * dir before committing it). Deleting tombstones or deltas BEFORE
-    * `_maint` instead would create windows where the overlay
-    * half-applies (e.g. tombstones without deltas kill every
-    * recently-upserted id). */
+    * Crash-ordering: the rewrite replaces the base by
+    * [[Segments.replace]] (crash windows documented there), and after
+    * the swap the maintenance overlay, still on disk, re-applies
+    * IDEMPOTENTLY over the compacted base — an id inserted at seq N
+    * exists in the base at seq 0 and in its delta at seq N; the
+    * tombstone at N kills the base copy and keeps the delta copy, one
+    * row either way — until [[Segments.dropOverlay]] removes it. */
   def ivfCompact(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, idCol: String = "vec_id"): Unit = {
-    recoverCompactSwap(s"$indexDir/vectors")
-    graft.Engine.label(spark, "ivf compact: vectors rewrite")(
-      writePartitionedBase(resolvedVectors(spark, indexDir, idCol),
-        "bucket", s"$indexDir/vectors_compacting"))
-    swapCompactedBase(s"$indexDir/vectors")
-    rmrfDir(new java.io.File(s"$indexDir/_maint"))
-    rmrfDir(new java.io.File(s"$indexDir/tombstones"))
-    rmrfDir(new java.io.File(s"$indexDir/vectors_delta"))
+    val base = s"$indexDir/vectors"
+    Segments.replace(base) { staged =>
+      graft.Engine.label(spark, "ivf compact: vectors rewrite")(
+        writePartitionedBase(
+          Segments.resolveDeltaTable(spark, indexDir, base, idCol),
+          "bucket", staged))
+    }
+    Segments.dropOverlay(indexDir, IvfTables)
   }
 
   /** Batched IVF probe: ANN top-k for a whole DataFrame of query
@@ -956,7 +755,8 @@ object Similarity {
     // prune the partitioned vector scan to the union of probed buckets
     // (bounded by 2^planes / nCentroids, so the collect is tiny)
     val buckets = probed.select("bucket").distinct().collect().map(_.get(0))
-    val vecs = resolvedVectors(spark, indexDir, idCol)
+    val vecs = Segments
+      .resolveDeltaTable(spark, indexDir, s"$indexDir/vectors", idCol)
       .filter(bucketIn(buckets))
     val scored = vecs.join(broadcast(probed), Seq("bucket"))
       .select(col("qid"), col(idCol),
@@ -1033,7 +833,7 @@ object Similarity {
       vecCol: String = "embedding", idCol: String = "vec_id"): Unit = {
     clearBuilt(indexDir, "codes")
     writePartitionedBase(
-      spark.read.parquet(baseWithSwapFallback(s"$indexDir/vectors"))
+      spark.read.parquet(Segments.readable(s"$indexDir/vectors"))
         .select(col(idCol), col("bucket"),
           graft.functions.ProductQuant.pqEncode(col(vecCol), cb)
             .as("pq_code")),
@@ -1062,7 +862,7 @@ object Similarity {
       .orderBy(desc("adc"), asc(idCol))
       .limit(k * overfetch)
       .select(idCol)
-    spark.read.parquet(baseWithSwapFallback(s"$indexDir/vectors"))
+    spark.read.parquet(Segments.readable(s"$indexDir/vectors"))
       .filter(bucketIn(buckets)) // pruned again
       .join(broadcast(cand), Seq(idCol))
       .select(col(idCol), cosineSimilarity(col(vecCol), q).as("cos"))

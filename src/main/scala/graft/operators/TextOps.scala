@@ -442,6 +442,11 @@ object TextOps {
       .limit(k)
   }
 
+  /** The inverted index's maintained tables: its rebuild and its
+    * compaction derive the overlay from this one list
+    * ([[Segments.dropOverlay]]). */
+  private val Bm25Tables = Seq("postings", "doclen")
+
   /** Persist an inverted index: term-sharded postings
     * (`postings/shard=S/` holding (doc_id, token, tf)), doc lengths,
     * and 1-row corpus stats. A term lookup then reads ONLY its shard
@@ -459,9 +464,7 @@ object TextOps {
     // any crashed compaction swap, discard the old maintenance
     // overlay (stale tombstones/deltas re-applied over a fresh base
     // would silently erase freshly indexed docs)
-    Similarity.resetForRebuild(indexDir, "invidx", s"$indexDir/postings",
-      Seq("_maint", "tombstones", "postings_delta", "doclen_delta"))
-    Similarity.recoverCompactSwap(s"$indexDir/doclen")
+    Similarity.resetForRebuild(indexDir, "invidx", Bm25Tables)
     val spark = docs.sparkSession
     // ONE tokenize pass over the corpus text (the earlier shape ran
     // three — doclen, stats, and postings each re-derived the
@@ -553,11 +556,13 @@ object TextOps {
       ((h % shards) + shards) % shards // pmod
     }.distinct
     val maintained = new java.io.File(s"$indexDir/_maint").exists()
-    val tf = resolveLive(spark, indexDir, s"$indexDir/postings", idCol)
+    val tf = Segments
+      .resolveDeltaTable(spark, indexDir, s"$indexDir/postings", idCol)
       .filter(col("shard").isin(shardIds: _*) &&
         col("token").isin(terms: _*))
       .select(col(idCol), col("token"), col("tf"))
-    val dl = resolveLive(spark, indexDir, s"$indexDir/doclen", idCol)
+    val dl = Segments
+      .resolveDeltaTable(spark, indexDir, s"$indexDir/doclen", idCol)
       .select(col(idCol), col("dl"))
     val stats =
       if (!maintained) spark.read.parquet(s"$indexDir/stats")
@@ -571,60 +576,48 @@ object TextOps {
     * `changes` carries the document columns plus `change` ∈
     * insert|delete (an update is its delete+insert pair). Inserts
     * tokenize ONLY the changed documents and land sharded postings +
-    * doc-length rows in per-batch `__batch=<seq>` partition dirs
-    * (overwrite-idempotent under at-least-once redelivery; the seq
-    * counter file is the commit point); every changed id becomes an
-    * (id, seq) tombstone resolved at query time by last-writer-wins
-    * (the batch's own inserts survive their tombstone via
-    * `tseq <= seq`).
+    * doc-length rows as one [[Segments.commitBatch]]
+    * (overwrite-idempotent under at-least-once redelivery); every
+    * changed id becomes an (id, seq) tombstone resolved at query time
+    * by last-writer-wins (the batch's own inserts survive their
+    * tombstone via `tseq <= seq`).
     * [[invertedIndexCompact]] physically reclaims. Returns the batch
     * seq. */
   def invertedIndexUpsert(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, changes: DataFrame, shards: Int = 64,
       textCol: String = "text", idCol: String = "doc_id",
       changeCol: String = "change"): Long = {
-    new java.io.File(s"$indexDir/_maint").mkdirs()
-    val seqFile = java.nio.file.Paths.get(s"$indexDir/_maint/seq")
-    val seq = Similarity.committedSeq(indexDir) + 1
     val ins = changes.filter(col(changeCol) === "insert")
-    // per-batch `__batch=<seq>` partition dirs written with OVERWRITE,
-    // seq-file commit written last — identical crash-idempotence
-    // protocol to Similarity.ivfUpsert: a maintainer that dies before
-    // the counter write leaves the retry recomputing the SAME seq and
-    // overwriting the partial dirs instead of appending duplicates.
     // One tokenize pass, like the build: doclen rows derive from the
     // WRITTEN postings delta (+ an id-only re-read for zero-token
     // inserts) instead of re-tokenizing the batch.
-    graft.Engine.label(spark, "bm25 upsert: postings delta")(
-      ins.select(col(idCol),
-          explode(wordTokens(col(textCol))).as("token"))
-        .groupBy(col(idCol), col("token")).agg(count(lit(1)).as("tf"))
-        .withColumn("shard", pmod(xxhash64(col("token")), lit(shards.toLong)))
-        .repartition(col("shard"))
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(s"$indexDir/postings_delta/__batch=$seq"))
-    val postingsDelta = s"$indexDir/postings_delta/__batch=$seq"
-    // an empty/all-zero-token batch writes NO parquet into the delta
-    // dir (delta dirs get no schema backstop by design) — skip the
-    // readback and stamp dl=0 directly
-    val dlRows =
-      if (Similarity.hasParquetFile(new java.io.File(postingsDelta)))
-        ins.select(col(idCol))
-          .join(spark.read.parquet(postingsDelta)
-              .groupBy(col(idCol)).agg(sum(col("tf")).as("__dl")),
-            Seq(idCol), "left")
-          .select(col(idCol), coalesce(col("__dl"), lit(0L))
-            .cast("long").as("dl"))
-      else ins.select(col(idCol), lit(0L).as("dl"))
-    graft.Engine.label(spark, "bm25 upsert: doclen delta")(
-      dlRows.write.mode("overwrite")
-        .parquet(s"$indexDir/doclen_delta/__batch=$seq"))
-    graft.Engine.label(spark, "bm25 upsert: tombstones")(
-      changes.select(col(idCol)).distinct()
-        .write.mode("overwrite")
-        .parquet(s"$indexDir/tombstones/__batch=$seq"))
-    Similarity.writeSeq(indexDir, seq) // atomic commit point
-    seq
+    Segments.commitBatch(indexDir, changes, idCol) { seq =>
+      val postingsDelta = Segments.deltaDir(s"$indexDir/postings", seq)
+      graft.Engine.label(spark, "bm25 upsert: postings delta")(
+        ins.select(col(idCol),
+            explode(wordTokens(col(textCol))).as("token"))
+          .groupBy(col(idCol), col("token")).agg(count(lit(1)).as("tf"))
+          .withColumn("shard",
+            pmod(xxhash64(col("token")), lit(shards.toLong)))
+          .repartition(col("shard"))
+          .write.mode("overwrite").partitionBy("shard")
+          .parquet(postingsDelta))
+      // an empty/all-zero-token batch writes NO parquet into the delta
+      // dir (delta dirs get no schema backstop by design) — skip the
+      // readback and stamp dl=0 directly
+      val dlRows =
+        if (Segments.hasParquetFile(postingsDelta))
+          ins.select(col(idCol))
+            .join(spark.read.parquet(postingsDelta)
+                .groupBy(col(idCol)).agg(sum(col("tf")).as("__dl")),
+              Seq(idCol), "left")
+            .select(col(idCol), coalesce(col("__dl"), lit(0L))
+              .cast("long").as("dl"))
+        else ins.select(col(idCol), lit(0L).as("dl"))
+      graft.Engine.label(spark, "bm25 upsert: doclen delta")(
+        dlRows.write.mode("overwrite")
+          .parquet(Segments.deltaDir(s"$indexDir/doclen", seq)))
+    }
   }
 
   /** Physically reclaim tombstoned index rows: rewrite the live
@@ -632,59 +625,32 @@ object TextOps {
     * stats, clear the maintenance state.
     *
     * Crash-ordering (same argument as
-    * [[graft.operators.Similarity.ivfCompact]]): every base swap
-    * happens while the full overlay (tombstones + BOTH deltas) is
-    * still on disk, over which the resolve re-applies idempotently —
-    * so a crash between the two swaps leaves one table compacted and
-    * the other not, both reading correctly. Each swap is itself
-    * crash-atomic ([[graft.operators.Similarity.swapCompactedBase]]:
-    * rename-aside + rename-in, never an in-place delete of the live
-    * base), with read-time fallback and start-of-compaction repair. `_maint` is removed FIRST
-    * among the cleanups (the reader's maintained?-switch); after that
-    * the leftover overlay dirs are inert and removed last. Stats are
-    * rewritten before `_maint` goes away — while `_maint` exists the
-    * query path recomputes stats live, so the stored file is only read
-    * after the switch. */
+    * [[graft.operators.Similarity.ivfCompact]]): each table is replaced
+    * by [[Segments.replace]] while the full overlay (tombstones + BOTH
+    * deltas) is still on disk, over which the resolve re-applies
+    * idempotently — so a crash between the two replacements leaves one
+    * table compacted and the other not, both reading correctly. Stats
+    * are rewritten before [[Segments.dropOverlay]] removes `_maint` —
+    * while `_maint` exists the query path recomputes stats live, so
+    * the stored file is only read after the switch. */
   def invertedIndexCompact(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, idCol: String = "doc_id"): Unit = {
-    def rewrite(sub: String, partBy: Option[String]): Unit = {
-      val base = s"$indexDir/$sub"
-      Similarity.recoverCompactSwap(base)
-      val staged = s"${base}_compacting"
-      val live = resolveLive(spark, indexDir, base, idCol)
-      graft.Engine.label(spark, s"bm25 compact: $sub rewrite")(partBy match {
-        case Some(p) => Similarity.writePartitionedBase(live, p, staged)
-        case None => live.write.mode("overwrite").parquet(staged)
-      })
-      Similarity.swapCompactedBase(base)
+    def live(table: String) =
+      Segments.resolveDeltaTable(spark, indexDir, s"$indexDir/$table", idCol)
+    Segments.replace(s"$indexDir/postings") { staged =>
+      graft.Engine.label(spark, "bm25 compact: postings rewrite")(
+        Similarity.writePartitionedBase(live("postings"), "shard", staged))
     }
-    rewrite("postings", Some("shard"))
     // the doclen rewrite carries the stats refresh as observed metrics
     // on its staged-write job (writeDoclenWithStats — one scan, no
-    // checkpoint job, no read-back job; the crash-ordering argument is
-    // unchanged: stats still land before _maint is removed, and while
-    // _maint exists the query path recomputes stats live)
-    locally {
-      val base = s"$indexDir/doclen"
-      Similarity.recoverCompactSwap(base)
+    // checkpoint job, no read-back job)
+    Segments.replace(s"$indexDir/doclen") { staged =>
       graft.Engine.label(spark, "bm25 compact: doclen+stats rewrite")(
-        writeDoclenWithStats(spark,
-          resolveLive(spark, indexDir, base, idCol),
-          s"${base}_compacting", s"$indexDir/stats"))
-      Similarity.swapCompactedBase(base)
+        writeDoclenWithStats(spark, live("doclen"), staged,
+          s"$indexDir/stats"))
     }
-    Similarity.rmrfDir(new java.io.File(s"$indexDir/_maint"))
-    Similarity.rmrfDir(new java.io.File(s"$indexDir/tombstones"))
-    Similarity.rmrfDir(new java.io.File(s"$indexDir/postings_delta"))
-    Similarity.rmrfDir(new java.io.File(s"$indexDir/doclen_delta"))
+    Segments.dropOverlay(indexDir, Bm25Tables)
   }
-
-  /** A maintained index table's LIVE rows — see
-    * [[graft.operators.Similarity.resolveDeltaTable]] (shared with the
-    * IVF index; identical delta layout and read-committed rules). */
-  private def resolveLive(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, path: String, idCol: String): DataFrame =
-    Similarity.resolveDeltaTable(spark, indexDir, path, idCol)
 
   /** Common-token ratio: the fraction of a document's tokens that fall
     * in the corpus's top-`topN` vocabulary — the cheap stand-in for a

@@ -414,7 +414,7 @@ object StreamOps {
     val dir = new org.apache.hadoop.fs.Path(fpDir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     ensureFpStoreFormat(fs, dir)
-    recoverFpStoreSwap(fs, dir)
+    graft.operators.Segments.recover(s"$fpDir/__base")
     if (batchDirsOf(fs, dir, batchId).length >= compactEvery)
       compactSubstringFpStore(spark, fpDir, excludeBatchId = Some(batchId))
     val basePath = new org.apache.hadoop.fs.Path(dir, "__base")
@@ -510,75 +510,34 @@ object StreamOps {
         s.getPath.getName != s"__batch=$excludeBatchId")
       .map(_.getPath)
 
-  /** Finish a fingerprint-store compaction that crashed mid-swap
-    * (harmless on a clean store). A missing `__base` with a COMPLETED
-    * `__base_compacting` (its writer's `_SUCCESS` marker present) is
-    * the crash point between the two swap renames — rename it in.
-    * Completion must be checked, not assumed: the FIRST-ever
-    * compaction has no base to move aside, so "base missing + staged
-    * present" also describes a crash in the middle of the staged
-    * write itself, where promoting the partial dir would wedge every
-    * later store read; a marker-less staged dir is debris (the batch
-    * dirs it was absorbing are all still live) and is dropped. A
-    * stranded `__base_precompact` with no base (cannot arise from the
-    * write order, defensive) is restored rather than deleted. */
-  private def recoverFpStoreSwap(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Unit = {
-    val base = new org.apache.hadoop.fs.Path(dir, "__base")
-    val staged = new org.apache.hadoop.fs.Path(dir, "__base_compacting")
-    val aside = new org.apache.hadoop.fs.Path(dir, "__base_precompact")
-    if (!fs.exists(base) && fs.exists(staged) &&
-        fs.exists(new org.apache.hadoop.fs.Path(staged, "_SUCCESS")))
-      require(fs.rename(staged, base),
-        s"fingerprint store: cannot finish crashed swap $staged -> $base")
-    if (!fs.exists(base) && fs.exists(aside))
-      require(fs.rename(aside, base),
-        s"fingerprint store: cannot restore $aside -> $base")
-    if (fs.exists(aside)) fs.delete(aside, true)
-    if (fs.exists(staged)) fs.delete(staged, true)
-    ()
-  }
-
   /** Compact the substring fingerprint store: rewrite the union of the
     * `__base` dir and every committed `__batch=` dir into a fresh
-    * distinct base, swap it in (stage → move base aside → move staged
-    * in — every crash point either recovers via
-    * [[recoverFpStoreSwap]] or leaves redundant-but-correct dirs),
-    * then drop the absorbed batch dirs. `excludeBatchId` names the
-    * one batch that may still be redelivered (the caller's in-flight
-    * batch) — its dir is never absorbed, which is what keeps the
-    * redelivery exclude-self read correct across a compaction. Safe
-    * to run offline between stream runs with `excludeBatchId = None`
-    * (no batch is in flight then). */
+    * distinct base by [[graft.operators.Segments.replace]] (its crash
+    * windows documented there; a crash before the absorbed batch dirs
+    * are dropped leaves redundant-but-correct dirs), then drop the
+    * absorbed batch dirs. `excludeBatchId` names the one batch that
+    * may still be redelivered (the caller's in-flight batch) — its dir
+    * is never absorbed, which is what keeps the redelivery
+    * exclude-self read correct across a compaction. Safe to run
+    * offline between stream runs with `excludeBatchId = None` (no
+    * batch is in flight then). */
   def compactSubstringFpStore(spark: SparkSession, fpDir: String,
       excludeBatchId: Option[Long] = None): Unit = {
     val dir = new org.apache.hadoop.fs.Path(fpDir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    recoverFpStoreSwap(fs, dir)
+    val base = s"$fpDir/__base"
     val absorb = batchDirsOf(fs, dir,
       excludeBatchId.getOrElse(Long.MinValue))
-    if (absorb.isEmpty) return
-    val base = new org.apache.hadoop.fs.Path(dir, "__base")
-    val staged = new org.apache.hadoop.fs.Path(dir, "__base_compacting")
-    val aside = new org.apache.hadoop.fs.Path(dir, "__base_precompact")
-    val srcs = (if (fs.exists(base)) Seq(base.toString) else Nil) ++
-      absorb.map(_.toString)
-    spark.read.parquet(srcs: _*).distinct()
-      .write.mode("overwrite").parquet(staged.toString)
-    // Hadoop rename reports failure by RETURNING false — every rename
-    // must be checked, or the unconditional deletes below would destroy
-    // the only complete copy of the fingerprints. A require failure
-    // aborts the batch BEFORE any delete; the store stays readable
-    // (base/batch dirs untouched) and recovery clears the staged dir.
-    if (fs.exists(base))
-      require(fs.rename(base, aside),
-        s"fingerprint store: rename $base -> $aside failed; aborting " +
-          "compaction with the store intact")
-    require(fs.rename(staged, base),
-      s"fingerprint store: rename $staged -> $base failed; aborting " +
-        "compaction (recoverFpStoreSwap restores the aside copy)")
-    if (fs.exists(aside)) fs.delete(aside, true)
-    absorb.foreach(p => fs.delete(p, true))
+    if (absorb.isEmpty) graft.operators.Segments.recover(base)
+    else {
+      graft.operators.Segments.replace(base) { staged =>
+        val srcs = (if (fs.exists(new org.apache.hadoop.fs.Path(base)))
+          Seq(base) else Nil) ++ absorb.map(_.toString)
+        spark.read.parquet(srcs: _*).distinct()
+          .write.mode("overwrite").parquet(staged)
+      }
+      absorb.foreach(p => fs.delete(p, true))
+    }
   }
 
   /** Stream-stream inner join on a key plus an EVENT-TIME interval:
@@ -923,7 +882,9 @@ object StreamOps {
 
   /** T8: Kappa replay — recompute a result table by re-consuming the
     * source from the beginning into a FRESH checkpoint + staging dir,
-    * then atomically swap. `transform` is the shared batch/stream logic
+    * then swap it in by [[graft.operators.Segments.swap]] (the old
+    * table is renamed aside, never deleted in place; crash windows
+    * documented there). `transform` is the shared batch/stream logic
     * (the reference mandates identical logic for both paths,
     * docs/实时数仓.md:93). */
   def kappaReplay(spark: SparkSession, sourceDf: DataFrame,
@@ -937,26 +898,13 @@ object StreamOps {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val fs = new org.apache.hadoop.fs.Path(finalDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val finalPath = new org.apache.hadoop.fs.Path(finalDir)
-    // swap by rename-aside, never an in-place delete of the live table:
-    // a replay dying mid-delete would leave a PARTIALLY deleted final
-    // dir that reads as silently missing rows. With the aside rename, a
-    // crash at any point leaves the old table, the new table, or a
-    // missing dir (fail-stop — and re-running the replay, the operation
-    // that got here in the first place, repairs it). Aside debris from
-    // an earlier crash is cleared first so the rename cannot nest into
-    // an existing directory (Hadoop rename-into-dir semantics).
-    val aside = new org.apache.hadoop.fs.Path(
-      finalDir.stripSuffix("/") + "__replaced")
-    fs.delete(aside, true)
-    if (fs.exists(finalPath)) fs.rename(finalPath, aside)
-    fs.rename(new org.apache.hadoop.fs.Path(stagingDir), finalPath)
-    // drop the FileStreamSink transaction log: its absolute paths point
-    // at the staging dir; after the swap the table is a plain parquet dir
-    fs.delete(new org.apache.hadoop.fs.Path(finalPath, "_spark_metadata"), true)
-    fs.delete(aside, true)
+    // drop the FileStreamSink transaction log before the swap: its
+    // absolute paths point at the staging dir, and the swapped-in
+    // table is a plain parquet dir
+    val staging = new org.apache.hadoop.fs.Path(stagingDir)
+    staging.getFileSystem(spark.sessionState.newHadoopConf())
+      .delete(new org.apache.hadoop.fs.Path(staging, "_spark_metadata"), true)
+    graft.operators.Segments.swap(stagingDir, finalDir.stripSuffix("/"))
   }
 
   /** T9: batch↔stream differential validation (docs/实时数仓.md:118-124):

@@ -321,6 +321,32 @@ class StreamingSpec extends SparkSuite {
       "partial staged dir poisoned the store after a simulated crash")
     assert(!partial.exists(), "partial staged debris not cleared")
     assert(new java.io.File(crashRoot, "__base").exists())
+    // a compaction that died BETWEEN the swap renames of a store that
+    // already has a base: the staged rewrite is complete and the old
+    // base is renamed aside, so no __base exists — the next batch must
+    // finish the swap and leave no swap debris
+    val swapRoot = tmpDir("fpc_swap_crash")
+    def swapDir(n: String) = new java.io.File(swapRoot, n)
+    val swapCrashed = run(swapRoot, compactEvery = 2, beforeBatch = { id =>
+      // inject at batch 5: batch 4 compacted batches 2-3 into __base
+      // and left its own __batch=4 dir, which the staged rewrite
+      // absorbs. Batch 5's boilerplate is only in the base, so a store
+      // that lost its base would clean batch 5 differently
+      if (id == 5L) {
+        assert(swapDir("__base").exists() && swapDir("__batch=4").exists(),
+          "fixture broken: no base and batch dir to compact")
+        spark.read.parquet(swapDir("__base").getPath,
+            swapDir("__batch=4").getPath)
+          .distinct().write.parquet(swapDir("__base_compacting").getPath)
+        java.nio.file.Files.move(swapDir("__base").toPath,
+          swapDir("__base_precompact").toPath)
+      }
+    })
+    assert(swapCrashed == plain,
+      "a crash between the swap renames changed cleaning")
+    Seq("__base_precompact", "__base_compacting").foreach { d =>
+      assert(!swapDir(d).exists(), s"swap debris not cleared: $d")
+    }
     // a marker-less store that already has data is a pre-upgrade
     // fingerprint scheme: refuse loudly instead of silently matching
     // nothing

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Crash-window coverage for the compaction base swap
-  * ([[Similarity.swapCompactedBase]]): the live base directory is
+  * ([[Segments.swap]]): the live base directory is
   * replaced by two atomic renames, never an in-place delete, so a
   * maintainer dying at ANY instruction of a compaction leaves every
   * reader correct and the next compaction able to finish the job.
@@ -49,7 +49,7 @@ class CompactCrashSpec extends graft.SparkSuite {
     // by-hand replay of ivfCompact up to the instruction between the
     // two renames: staged rewrite complete, base renamed aside
     Similarity.writePartitionedBase(
-      Similarity.resolveDeltaTable(spark, dir, s"$dir/vectors", "vec_id"),
+      Segments.resolveDeltaTable(spark, dir, s"$dir/vectors", "vec_id"),
       "bucket", s"$dir/vectors_compacting")
     Files.move(Paths.get(s"$dir/vectors"),
       Paths.get(s"$dir/vectors_precompact"),
@@ -74,7 +74,7 @@ class CompactCrashSpec extends graft.SparkSuite {
     // a stale, WRONG staged dir (subset of the live rows) with the
     // base intact — readers must prefer the base unconditionally
     Similarity.writePartitionedBase(
-      Similarity.resolveDeltaTable(spark, dir, s"$dir/vectors", "vec_id")
+      Segments.resolveDeltaTable(spark, dir, s"$dir/vectors", "vec_id")
         .limit(1),
       "bucket", s"$dir/vectors_compacting")
     assert(probeIds(dir, q) == before,
@@ -91,9 +91,9 @@ class CompactCrashSpec extends graft.SparkSuite {
     val (dir, q) = maintainedIvf()
     val before = probeIds(dir, q)
     Similarity.writePartitionedBase(
-      Similarity.resolveDeltaTable(spark, dir, s"$dir/vectors", "vec_id"),
+      Segments.resolveDeltaTable(spark, dir, s"$dir/vectors", "vec_id"),
       "bucket", s"$dir/vectors_compacting")
-    Similarity.swapCompactedBase(s"$dir/vectors")
+    Segments.swap(s"$dir/vectors_compacting", s"$dir/vectors")
     // the compacted base now holds the RESOLVED rows; the stale
     // overlay must not double-apply (delta rows re-union but the
     // tombstone keeps exactly one copy; deleted ids are gone from the
@@ -124,9 +124,9 @@ class CompactCrashSpec extends graft.SparkSuite {
         .map(r => (r.getLong(0), r.getDouble(2))).toSeq
     val want = top()
     Similarity.writePartitionedBase(
-      Similarity.resolveDeltaTable(spark, idir, s"$idir/postings", "doc_id"),
+      Segments.resolveDeltaTable(spark, idir, s"$idir/postings", "doc_id"),
       "shard", s"$idir/postings_compacting")
-    Similarity.swapCompactedBase(s"$idir/postings")
+    Segments.swap(s"$idir/postings_compacting", s"$idir/postings")
     assert(top() == want,
       "postings-compacted / doclen-raw mixed state answered wrong")
     TextOps.invertedIndexCompact(spark, idir)
@@ -180,7 +180,7 @@ class CompactCrashSpec extends graft.SparkSuite {
     // completion marker was never written
     Similarity.clearBuilt(dir)
     val cents = new java.io.File(s"$dir/centroids")
-    cents.listFiles().foreach(Similarity.rmrfDir)
+    cents.listFiles().foreach(Segments.rmrf)
     assert(cents.exists(), "fixture must keep the empty dir")
     // the dir-exists guard this replaces would have probed the empty
     // centroids table and returned zero rows; the marker guard rebuilds
@@ -211,7 +211,7 @@ class CompactCrashSpec extends graft.SparkSuite {
     assert(before.map(_._1).contains(5L) && !before.map(_._1).contains(3L))
     // crash window on the postings swap
     Similarity.writePartitionedBase(
-      Similarity.resolveDeltaTable(spark, dir, s"$dir/postings", "doc_id"),
+      Segments.resolveDeltaTable(spark, dir, s"$dir/postings", "doc_id"),
       "shard", s"$dir/postings_compacting")
     Files.move(Paths.get(s"$dir/postings"),
       Paths.get(s"$dir/postings_precompact"),
