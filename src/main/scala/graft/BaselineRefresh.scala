@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
+
 /** Surgical baseline editor for BASELINE_QUERIES.json.
   *
   * Wholesale baseline refreshes ("copy bench_result.json over the
@@ -19,87 +22,76 @@ package graft
   * bench run), never hand-typed.
   */
 object BaselineRefresh {
-  private val benchPath = java.nio.file.Paths.get("bench_result.json")
-  private val basePath = java.nio.file.Paths.get("BASELINE_QUERIES.json")
+  private val benchPath = Paths.get("bench_result.json")
+  private val basePath = Paths.get("BASELINE_QUERIES.json")
 
-  private def queriesOf(text: String): Map[String, Double] = {
-    // the "queries" object is the only place q_* names map to bare
-    // numbers in either file; the flat regex parse matches Bench's
-    val obj = "\"queries\"\\s*:\\s*\\{([^}]*)\\}".r
-      .findFirstMatchIn(text).map(_.group(1)).getOrElse("")
-    "\"(q_[^\"]+)\"\\s*:\\s*([0-9.]+)".r.findAllMatchIn(obj)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-  }
+  /** bench_result.json's calibration fields -> their baseline keys
+    * (`calib_io_scan` is the IO leg's shape: 1 scan+write, 0 write-only). */
+  private val calibLegs = Seq("calib" -> "__calib",
+    "calib_io" -> "__calib_io", "calib_io_scan" -> "__calib_io_scan")
 
-  def main(args: Array[String]): Unit = {
+  private val comment = "Per-query bench baseline (seconds, best-of-3, " +
+    "local[32], sf0.1). Bench flags a query when it exceeds BOTH 2x " +
+    "its baseline AND baseline+1s. Refresh ONLY via graft." +
+    "BaselineRefresh: name the queries whose perf deliberately " +
+    "changed (and say why in the commit), or -new for new queries. " +
+    "Never copy bench_result.json wholesale."
+
+  /** The baseline's "queries" object: per-query bests and calibration
+    * legs. */
+  private[graft] def entries(baseJson: String): Map[String, Double] =
+    Json.doubles(Json.read(baseJson).get("queries"))
+
+  /** The baseline `args` make of `baseJson` with the times in
+    * `benchJson`, or None when nothing changes. Calibration legs
+    * describe the box state the committed times came from, so an
+    * existing leg is overwritten only under `-calib` (a deliberate
+    * whole-state refresh); otherwise legs are seeded when absent and
+    * kept when present — a `-new` addition on a temporarily slow box
+    * cannot re-stamp the whole baseline's calibration. */
+  def refresh(benchJson: String, baseJson: String,
+      args: Seq[String]): Option[String] = {
     require(args.nonEmpty,
-      "usage: BaselineRefresh (-new | q_name ...) — no wholesale refresh")
-    val bench = queriesOf(java.nio.file.Files.readString(benchPath))
-    val baseText = java.nio.file.Files.readString(basePath)
-    val base = queriesOf(baseText)
-    val addNew = args.contains("-new")
-    val named = args.filterNot(_.startsWith("-")).toSeq
+      "usage: BaselineRefresh (-new | -calib | q_name ...) — no wholesale refresh")
+    val benchRoot = Json.read(benchJson)
+    val bench = Json.doubles(benchRoot.get("queries"))
+      .filter(_._1.startsWith("q_"))
+    val baseRoot = Json.read(baseJson)
+    val baseAll = Json.doubles(baseRoot.get("queries"))
+    val base = baseAll.filter(_._1.startsWith("q_"))
+    val named = args.filterNot(_.startsWith("-"))
     val unknown = named.filterNot(bench.contains)
     require(unknown.isEmpty,
       s"not in bench_result.json: ${unknown.mkString(", ")}")
-    val adds = if (addNew) bench.view.filterKeys(!base.contains(_)).toMap
-      else Map.empty[String, Double]
-    val updates = named.map(n => n -> bench(n)).toMap
-    val merged = base ++ adds ++ updates
-    val changed = (adds.keySet ++ updates.keySet).toSeq.sorted
-    val sf = "\"sf\"\\s*:\\s*\"([^\"]+)\"".r
-      .findFirstMatchIn(baseText).map(_.group(1)).getOrElse("")
-    // carry the bench run's box-calibration alongside the times it
-    // produced (Bench relaxes its gate by calib ratio, so the baseline
-    // must record the calibration of the box state its numbers came
-    // from). "__calib" has no q_ prefix, so the query-map regexes in
-    // Bench and here never see it as a query. A run that only seeds or
-    // refreshes the calibration (no query changes) still writes.
-    val benchText = java.nio.file.Files.readString(benchPath)
-    // Calibration legs are part of the baseline's IDENTITY: they must
-    // describe the box state the committed per-query times came from.
-    // So an existing leg is only overwritten under an explicit
-    // `-calib` (a deliberate whole-state refresh, done together with
-    // the query times it calibrates); otherwise legs are SEEDED when
-    // absent and preserved when present — `-new`-style additions on a
-    // temporarily slow box must not re-stamp the whole baseline's
-    // calibration.
-    val refreshCalib = args.contains("-calib")
-    def leg(benchKey: String, baseKey: String): Option[(String, Double)] = {
-      val benchV = ("\"" + benchKey + "\"\\s*:\\s*([0-9.]+)").r
-        .findFirstMatchIn(benchText).map(_.group(1).toDouble)
-      val baseV = ("\"" + baseKey + "\"\\s*:\\s*([0-9.]+)").r
-        .findFirstMatchIn(baseText).map(_.group(1).toDouble)
-      (if (refreshCalib) benchV.orElse(baseV)
-       else baseV.orElse(benchV)).map(baseKey -> _)
-    }
-    val calibOut = Seq(leg("calib", "__calib"),
-      leg("calib_io", "__calib_io"),
-      // the IO leg's workload shape (1 = scan+write, 0 = write-only);
-      // Bench refuses IO-relaxation when current shape differs
-      leg("calib_io_scan", "__calib_io_scan")).flatten
-    val calibBase = Seq("__calib", "__calib_io", "__calib_io_scan").flatMap { k =>
-      ("\"" + k + "\"\\s*:\\s*([0-9.]+)").r
-        .findFirstMatchIn(baseText).map(m => k -> m.group(1).toDouble)
-    }
-    if (changed.isEmpty && calibOut == calibBase) {
-      println("baseline unchanged"); return
-    }
-    if (changed.isEmpty)
-      println(s"calibration only: $calibBase -> $calibOut")
-    val body = (merged.toSeq.sortBy(_._1) ++ calibOut)
-      .map { case (k, v) => f"""  "$k": $v%.4f""" }.mkString(",\n")
-    val comment = "Per-query bench baseline (seconds, best-of-3, " +
-      "local[32], sf0.1). Bench flags a query when it exceeds BOTH 2x " +
-      "its baseline AND baseline+1s. Refresh ONLY via graft." +
-      "BaselineRefresh: name the queries whose perf deliberately " +
-      "changed (and say why in the commit), or -new for new queries. " +
-      "Never copy bench_result.json wholesale."
-    java.nio.file.Files.writeString(basePath,
-      s"""{\n "_comment": "$comment",\n "sf": "$sf",\n "queries": {\n$body\n }\n}\n""")
-    changed.foreach { n =>
-      val was = base.get(n).map(v => f"$v%.4f").getOrElse("(new)")
-      println(f"$n%-28s $was -> ${merged(n)}%.4f")
+    val adds = if (args.contains("-new")) bench -- base.keySet else Map.empty
+    val updates = named.map(n => n -> bench(n))
+    def legs(pick: (Option[Double], Option[Double]) => Option[Double]) =
+      calibLegs.flatMap { case (benchKey, baseKey) =>
+        pick(Option(benchRoot.get(benchKey)).map(_.asDouble),
+          baseAll.get(baseKey)).map(baseKey -> _)
+      }
+    val calib = legs((benchV, baseV) =>
+      if (args.contains("-calib")) benchV.orElse(baseV) else baseV.orElse(benchV))
+    val before = base.toSeq.sortBy(_._1) ++ legs((_, baseV) => baseV)
+    val after = (base ++ adds ++ updates).toSeq.sortBy(_._1) ++ calib
+    if (after == before) None
+    else Some(Json.pretty(ListMap("_comment" -> comment,
+      "sf" -> Option(baseRoot.get("sf")).map(_.asText).getOrElse(""),
+      "queries" -> ListMap(after.map { case (k, v) => k -> Json.num(v, 4) }: _*))))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val baseJson = Files.readString(basePath)
+    refresh(Files.readString(benchPath), baseJson, args.toSeq) match {
+      case None => println("baseline unchanged")
+      case Some(out) =>
+        Files.writeString(basePath, out)
+        val (was, now) = (entries(baseJson), entries(out))
+        now.keys.toSeq.sorted.filterNot(k => was.get(k).contains(now(k)))
+          .foreach { n =>
+            val old = was.get(n).map(v => f"$v%.4f").getOrElse("(new)")
+            println(f"$n%-28s $old -> ${now(n)}%.4f")
+          }
     }
   }
 }

@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.BenchGate.Reading
+import graft.Harness.force
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.{ListMap, TreeMap}
 
 /** Benchmark main: times every SparkEntry query at the target scale
   * factor and emits ONE JSON line (stdout + `bench_result.json`).
@@ -12,42 +15,16 @@ import org.apache.spark.sql.functions._
   *  - one-time artifacts (reference fixture tables, the IVF index) are
   *    built during warmup at the BENCH scale factor, so timings reflect
   *    steady-state query cost, not first-use index builds;
-  *  - timing forces FULL materialization of every output column via a
-  *    hash-of-all-columns aggregate — `count()` lets Catalyst prune
-  *    computed projections and under-measures;
+  *  - timing forces FULL materialization of every output column
+  *    ([[Harness.force]]);
   *  - the JSON also lands in a file because sbt interleaves its own
   *    log noise into stdout.
   */
 object Bench {
 
-  /** Evaluate every cell of every row: hash each row across all output
-    * columns, then aggregate. Nothing prunes, one tiny result row. */
-  private def force(df: DataFrame): Unit = {
-    df.agg(sum(xxhash64(struct(df.columns.map(col): _*)))).collect()
-    ()
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the app-status stores retain per-execution metrics and plan
-      // graphs even with the UI off; at 183 queries × 3 runs × several
-      // jobs each, the default retention (1000 executions/jobs/stages)
-      // is tens of MB of old-gen ballast that taxes every query run
-      // late in the suite — part of the shared-JVM inflation that
-      // phantom-flagged dd_ngram_block/dd_incremental in r10/r11
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "1000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Engine.configure(spark)
+    val spark = Harness.session(4)
     // fail fast with a NAMED diff on testdata type drift, instead of
     // N identical analysis errors across the timed suite
     Engine.assertSchemas(spark, sfDir)
@@ -55,31 +32,25 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
 
     // ---- warmup: JIT + codegen at tiny scale, one-time builds at bench scale
-    val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).exists())
-      names.foreach { n =>
-        try force(SparkEntry.queries(n)(spark, warmDir))
-        catch { case _: Throwable => () }
-      }
+    if (new java.io.File(Harness.WarmDir).exists())
+      names.foreach(n => Harness.warm(SparkEntry.queries(n)(spark, Harness.WarmDir)))
     try RefConformance.ensure(spark, sfDir) catch { case _: Throwable => () }
     // queries with one-time artifact builds (CTAS tables, IVF index):
     // run once at the bench SF so timings reflect steady-state cost
     Seq("q_embed_ivf_topk", "q_embed_ivfpq_topk", "q_ref_decomposed_verbatim",
         "q_bucketed_join", "q_zorder_box", "q_cube_build",
         "q_cube_route", "q_bm25_indexed", "q_index_point",
-        "q_index_range").foreach { n =>
-      try force(SparkEntry.queries(n)(spark, sfDir))
-      catch { case _: Throwable => () }
-    }
+        "q_index_range").foreach(n =>
+      Harness.warm(SparkEntry.queries(n)(spark, sfDir)))
 
     // ---- box calibration: fixed reference workloads timed like
     // queries. The shared box's speed drifts by tens of percent between
     // runs (observed 77s → 106s full-suite swings on identical code),
     // which the absolute regression gate misreads as per-query
     // regressions. The calibration ratio vs the baseline's recorded
-    // __calib RELAXES the gate on a slower box (clamped, and never
-    // tightens it on a faster one), so the gate flags code, not
-    // weather. Two legs, because box weather comes in two kinds:
+    // __calib RELAXES the gate on a slower box (BenchGate.calibAdj), so
+    // the gate flags code, not weather. Two legs, because box weather
+    // comes in two kinds:
     //  - CPU leg: spark.range(CalibRows) codegen'd xxhash64 sum — no
     //    IO, no shuffle; sees scheduler/CPU contention.
     //  - IO leg: full-column hash scan of the fixed sf0.01 lineitem +
@@ -87,29 +58,24 @@ object Bench {
     //    contention, which the CPU leg is blind to (r12's one
     //    confirmed "breach", q_dedup_incremental at 4.6x its mid-round
     //    time with calib flat at 1.0, had exactly this signature).
-    // The gate relaxes by max(cpuAdj, ioAdj).
     val CalibRows = 4000000000L // 4B rows; keep in sync with the CPU leg
-    val calib = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
+    val calib = Harness.best(3) {
       spark.range(CalibRows)
         .select(sum(xxhash64(col("id")))).collect()
-      (System.nanoTime() - t0) / 1e9
-    }.min
+    }
     val ioDir = "/root/testdata/sf0.01"
     // whether the scan half of the IO leg ran is part of the leg's
     // WORKLOAD SHAPE: a box where the fixed sf0.01 dir is absent runs a
     // write-only leg whose time is not comparable to a scan+write
     // baseline. The flag is recorded next to the leg and the gate falls
-    // back to no-IO-relaxation when the shapes differ (see legAdj use).
+    // back to no-IO-relaxation when the shapes differ (see BenchGate.calibAdj).
     val calibIoScan = new java.io.File(ioDir, "lineitem.parquet").exists()
     val calibIo = {
-      val scan = calibIoScan
       val buf = new Array[Byte](1 << 20)
       new java.util.Random(42).nextBytes(buf)
-      (1 to 3).map { i =>
-        val t0 = System.nanoTime()
-        if (scan) force(spark.read.parquet(s"$ioDir/lineitem.parquet"))
-        val tmp = java.io.File.createTempFile(s"graft_calib_io_$i", ".bin")
+      Harness.best(3) {
+        if (calibIoScan) force(spark.read.parquet(s"$ioDir/lineitem.parquet"))
+        val tmp = java.io.File.createTempFile("graft_calib_io_", ".bin")
         try {
           val out = new java.io.FileOutputStream(tmp)
           try {
@@ -118,47 +84,18 @@ object Bench {
             out.getFD.sync()
           } finally out.close()
         } finally tmp.delete()
-        (System.nanoTime() - t0) / 1e9
-      }.min
+      }
     }
 
-    // ---- timed runs: best of 3 per query — single-shot numbers swing
-    // 30%+ on GC/JIT noise, which reads as a phantom regression when
-    // rounds are diffed. A System.gc() before each query drains the
-    // previous query's garbage so one allocation-heavy query doesn't
-    // tax whoever runs after it (the r6 "regressions" on untouched
-    // queries were exactly this: 2-10x slower in the 133-query JVM,
-    // flat when profiled in isolation).
-    // A run that throws must NOT fold its elapsed-until-exception into
-    // the best-of min (a fast failure would read as the query's best
-    // time): only successful runs count; a query with zero successes is
+    // ---- timed runs: best of 3 per query, after a sweep of the
+    // previous query's garbage. A query with zero successful runs is
     // reported as -1 and listed in "errors".
     val errorDetails = scala.collection.mutable.Map[String, String]()
     val runs = names.map { n =>
-      // sweep the previous query's leaked storage before timing this
-      // one: iterative operators (connected components, PageRank, BPE,
-      // the classifier) localCheckpoint per round, and those blocks sit
-      // in the block manager until their RDD is GC'd AND the async
-      // ContextCleaner gets scheduled — across 183 queries that backlog
-      // is exactly the GC contamination the r10/r11 phantom regressions
-      // kept re-flagging. Every cache in this engine is query-local
-      // (no QuerySpec depends on another query's cached frame), so a
-      // blanket unpersist is semantics-free here.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
-      val times = (1 to 3).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try {
-          force(SparkEntry.queries(n)(spark, sfDir))
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          errorDetails(n) = (e.getClass.getSimpleName + ": " +
-            String.valueOf(e.getMessage).replaceAll("[\\s\"\\\\]+", " ")
-          ).take(300)
-          None
-        }
-      }
+      Harness.sweep(spark)
+      val (times, failure) =
+        Harness.timeRuns(3)(force(SparkEntry.queries(n)(spark, sfDir)))
+      failure.foreach(e => errorDetails(n) = Harness.describe(e, 300))
       n -> times
     }
     val failed = runs.collect { case (n, ts) if ts.isEmpty => n }
@@ -166,87 +103,33 @@ object Bench {
       n -> (if (ts.isEmpty) -1.0 else ts.min)
     }
 
-    // ---- mechanical per-query regression gate against the committed
-    // baseline (BASELINE_QUERIES.json, refreshed each round): flag a
-    // query when it exceeds BOTH 2x its baseline and baseline + 1s
-    // (the absolute floor keeps 0.1s->0.25s jitter out of the gate).
-    // New queries (absent from the baseline) are never flagged.
-    val baseline: Map[String, Double] = {
-      val f = java.nio.file.Paths.get("BASELINE_QUERIES.json")
-      if (!java.nio.file.Files.exists(f)) Map.empty
-      else "\"([^\"]+)\"\\s*:\\s*([0-9.]+)".r
-        .findAllMatchIn(java.nio.file.Files.readString(f))
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
-    // gate relaxation from calibration: >= 1 (a slower box widens the
-    // thresholds proportionally), clamped at 3x so a truly broken box
-    // cannot mask everything; 1.0 when the baseline predates __calib.
-    // queriesOf-style q_ filters keep "__calib*" out of the query maps.
-    // The wider of the CPU and IO legs wins: either kind of weather
-    // legitimately slows real queries.
-    def legAdj(key: String, now: Double): Double =
-      baseline.get(key) match {
-        case Some(bc) if bc > 0 => math.min(3.0, math.max(1.0, now / bc))
-        case _ => 1.0
-      }
-    // the IO leg only relaxes when its workload shape matches the
-    // baseline's recorded shape (scan+write vs write-only): a baseline
-    // that predates the shape flag is assumed scan+write (it always
-    // ran on a box with the testdata dir present)
-    val ioShapeMatches =
-      baseline.get("__calib_io_scan").forall(_ == (if (calibIoScan) 1.0 else 0.0))
-    val ioAdj = if (ioShapeMatches) legAdj("__calib_io", calibIo) else 1.0
-    val adj = math.max(legAdj("__calib", calib), ioAdj)
-    // absolute floor on top of the 2x ratio: keeps 0.1s->0.25s jitter
-    // out of the gate. TIERED (r14 verdict item 5): the flat +1s floor
-    // let a 3.6x drift on a 0.17s baseline pass unflagged — sub-300ms
-    // baselines get a +0.3s floor (0.17s baseline gates at ~2.8x), so a
-    // genuine multi-x drift on a tiny query answers to the isolated
-    // recheck; a recheck on jitter costs one fork, never a false flag.
-    def floor(b: Double): Double = if (b < 0.3) 0.3 else 1.0
-    val rawRegressions = results.collect {
-      case (n, t) if t >= 0 && baseline.get(n).exists(b =>
-        t > 2 * b * adj && t > b * adj + floor(b)) => (n, t, baseline(n))
-    }
-    // report-only drift visibility: queries past 2x their baseline that
-    // ONLY the absolute floor exempted from the gate (sub-second
-    // queries can silently triple under the floor — r13's phash did
-    // 2.17x for three rounds before anyone looked). Empty on a clean
-    // run; never flags, only surfaces.
-    val floorExempted = results.collect {
-      case (n, t) if t >= 0 && baseline.get(n).exists(b =>
-        t > 2 * b * adj && !(t > b * adj + floor(b))) => (n, t, baseline(n))
-    }
+    // ---- per-query regression gate against the committed baseline
+    val basePath = Paths.get("BASELINE_QUERIES.json")
+    val baseline: Map[String, Double] =
+      if (!Files.exists(basePath)) Map.empty
+      else Json.doubles(Json.read(Files.readString(basePath)).get("queries"))
+    val adj = BenchGate.calibAdj(baseline, calib, calibIo, calibIoScan)
+    val rawRegressions = BenchGate.rawRegressions(results, baseline, adj)
+    val floorExempted = BenchGate.floorExempted(results, baseline, adj)
 
     // ---- SELF-ADJUDICATION: a shared-JVM breach is re-measured in a
-    // FRESH forked JVM (graft.Profile: tiny-scale warm + untimed bench-
-    // scale pass + best-of-3) before it may be called a regression. Two
-    // rounds of phantom regressions (r6: five, r7: five — every one
-    // cleared when profiled in isolation) established that the shared
-    // 130+-query JVM inflates the allocation-heavy dedup tail 3-5x via
-    // GC contamination; the gate must not cry wolf on harness noise.
-    // A query is FLAGGED only if the isolated run also breaches; if the
-    // recheck cannot run (spawn failure), the breach stays flagged
-    // (conservative). Both numbers always land in bench_result.json
-    // under "isolated_recheck".
+    // FRESH forked JVM (graft.Profile) before it may be called a
+    // regression: two rounds of phantom regressions (r6, r7: five each,
+    // every one cleared in isolation) showed the shared 130+-query JVM
+    // inflates the allocation-heavy dedup tail 3-5x via GC contamination.
     // ---- cross-round isolated-drift ledger (DRIFT.json, committed):
     // slow creep under the 2x gate (phash r13, dd_incremental r14, bm25
-    // r14-r15: 4.73 -> 5.62s isolated with no code cause) was caught by
-    // prose notes for three rounds; this makes it mechanical. Every
-    // bench run at the contract scale also fresh-JVM-profiles a
-    // committed watchlist, appends the bests as a ledger record, and
-    // flags any watched query whose isolated best rose >= 1.25x vs its
-    // previous record — far below the regression gate's threshold.
-    val driftPath = java.nio.file.Paths.get("DRIFT.json")
-    val driftText =
-      if (java.nio.file.Files.exists(driftPath))
-        java.nio.file.Files.readString(driftPath) else ""
-    val driftWatch: Seq[String] =
-      if (!sfDir.endsWith("sf0.1") || driftText.isEmpty) Seq.empty
-      else "\"watch\"\\s*:\\s*\\[([^\\]]*)\\]".r.findFirstMatchIn(driftText)
-        .map(_.group(1)).toSeq
-        .flatMap("\"([^\"]+)\"".r.findAllMatchIn(_).map(_.group(1)))
-        .filter(SparkEntry.queries.contains)
+    // r14-r15) was caught by prose notes for three rounds; every
+    // contract-scale run also fresh-JVM-profiles the ledger's watchlist
+    // and steps it (BenchGate.driftStep). A ledger that does not parse
+    // is left as it is.
+    val driftPath = Paths.get("DRIFT.json")
+    val driftLedger = Some(driftPath)
+      .filter(p => sfDir.endsWith("sf0.1") && Files.exists(p))
+      .map(p => Files.readString(p)).filter(_.nonEmpty)
+      .flatMap(text => scala.util.Try(readDrift(text)).toOption)
+      .map(d => d.copy(watch = d.watch.filter(SparkEntry.queries.contains)))
+    val driftWatch = driftLedger.map(_.watch).getOrElse(Seq.empty)
     val isolateSet =
       (rawRegressions.map(_._1) ++ driftWatch).distinct
     val isolatedTimes: Map[String, Double] =
@@ -273,213 +156,63 @@ object Bench {
         val cmd = (Seq(javaBin) ++ args ++ Seq("-cp",
           sys.props("java.class.path"), "graft.Profile", sfDir) ++
           isolateSet).toArray
-        val pb = new ProcessBuilder(cmd: _*)
-        pb.redirectErrorStream(true)
-        val p = pb.start()
         // bounded wait — a wedged child must not hang the whole bench
         // run (no JSON line at all is worse than a conservative flag).
-        // Output is drained on a daemon thread so the child can't block
-        // on a full pipe either; on timeout, already-printed PROFILE
-        // lines still adjudicate their queries, the rest stay flagged.
-        val sb = new java.lang.StringBuilder
-        val drain = new Thread(() => {
-          val in = p.getInputStream
-          val buf = new Array[Byte](8192)
-          var n = in.read(buf)
-          while (n >= 0) { sb.append(new String(buf, 0, n)); n = in.read(buf) }
-        })
-        drain.setDaemon(true)
-        drain.start()
-        val budgetSec = 120L + 90L * isolateSet.size
-        if (!p.waitFor(budgetSec, java.util.concurrent.TimeUnit.SECONDS))
-          p.destroyForcibly()
-        drain.join(5000)
-        val out = sb.toString
-        "PROFILE\\s+(\\S+)\\s+best=([0-9.]+)s".r.findAllMatchIn(out)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
+        // Output goes to a file, so the child never blocks on a full
+        // pipe; on timeout, already-printed PROFILE lines still
+        // adjudicate their queries, the rest stay flagged.
+        val out = java.io.File.createTempFile("graft_recheck_", ".log")
+        try {
+          val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+            .redirectOutput(out).start()
+          if (!p.waitFor(120L + 90L * isolateSet.size,
+              java.util.concurrent.TimeUnit.SECONDS)) p.destroyForcibly().waitFor()
+          profileBests(new String(Files.readAllBytes(out.toPath)))
+        } finally out.delete()
       } catch { case _: Throwable => Map.empty }
-    // append this run's watchlist bests to the ledger and diff against
-    // each query's most recent prior record. Records are line-oriented
-    // JSON so the no-deps regex parse stays honest; capped at the last
-    // 60 records. ALL numeric renders go through Locale.ROOT — a
-    // comma-decimal default locale (de_DE) would write an unparseable
-    // ledger that the blanket catch silently degrades to empty.
-    //
-    // SELF-EXTENDING WATCHLIST: the ledger only adjudicated
-    // hand-committed names until r17 (r16's dd_semantic/dd_simhash
-    // shared upticks went unwatched). Each contract-scale run now also
-    // records which queries read > 1.5x their committed baseline in
-    // the SHARED suite (weather-normalized by calib adj); a query
-    // seen in TWO CONSECUTIVE records auto-joins the watch (isolated
-    // profiling starts next run), and a watched query whose last 3
-    // isolated records all sit <= 1.25x its baseline auto-retires.
-    // Every mutation lands in "watch_log" with its reason.
     val driftFlags: Map[String, (Double, Double)] =
-      if (!sfDir.endsWith("sf0.1") || driftText.isEmpty) Map.empty
-      else try {
-        val recRe =
-          ("\\{\"label\":\"([^\"]+)\"," +
-            "(?:\"adj\":([0-9.]+),)?\"isolated\":\\{([^}]*)\\}").r
-        val pairRe = "\"([^\"]+)\":([0-9.]+)".r
-        val overRe = "\"shared_over\":\\{([^}]*)\\}".r
-        def pairs(s: String): Map[String, Double] =
-          pairRe.findAllMatchIn(s)
-            .map(p => p.group(1) -> p.group(2).toDouble).toMap
-        // (label, calibAdj, isolated, shared_over) per record,
-        // line-oriented; records predating the adj field read as 1.0
-        val prior = driftText.linesIterator.flatMap { line =>
-          recRe.findFirstMatchIn(line).map { m =>
-            (m.group(1),
-              Option(m.group(2)).map(_.toDouble).getOrElse(1.0),
-              pairs(m.group(3)),
-              overRe.findFirstMatchIn(line).map(o => pairs(o.group(1)))
-                .getOrElse(Map.empty[String, Double]))
-          }
-        }.toVector
-        val nowRec = driftWatch.flatMap(n =>
-          isolatedTimes.get(n).map(n -> _)).toMap
-        // weather-normalized tripwire, BOTH SIDES: records store RAW
-        // isolated bests (truth) PLUS the run's calibration adjustment,
-        // and the comparison normalizes each reading by ITS OWN run's
-        // adj (t/adj vs prev/prevAdj). Normalizing only the current
-        // side (the r17 form) let a slow-box run both escape flagging
-        // AND write its inflated raw reading as the next run's prev —
-        // readings ratcheted upward and a real regression landed on a
-        // slow box was permanently absorbed into the rolling baseline.
-        val flags = nowRec.flatMap { case (n, t) =>
-          prior.reverse.collectFirst {
-            case (_, pAdj, m, _) if m.contains(n) => (m(n), pAdj)
-          }.collect { case (prev, pAdj)
-              if prev > 0 && t / adj >= 1.25 * (prev / pAdj) =>
-            n -> (prev, t)
-          }
-        }
-        // shared readings past 1.5x baseline this run (weather-
-        // normalized), recorded so the NEXT run can see "two in a row"
-        val nowOver = results.collect {
-          case (n, t) if t >= 0 && baseline.get(n).exists(b =>
-            b > 0 && t > 1.5 * b * adj) =>
-            n -> (t / (baseline(n) * adj))
-        }.toMap
-        val prevOver = prior.lastOption.map(_._4.keySet)
-          .getOrElse(Set.empty[String])
-        val adds = nowOver.keySet.intersect(prevOver)
-          .diff(driftWatch.toSet)
-          .filter(SparkEntry.queries.contains).toSeq.sorted
-        // retire: last 3 isolated records (incl. this run) all clean
-        // vs the committed baseline — each reading normalized by its
-        // own run's calib adj, so a slow-box record doesn't block a
-        // genuinely clean retire (the baseline itself is a clean-box
-        // number, adj 1.0 by construction)
-        val isoSeries: Map[String, Seq[Double]] = driftWatch.map { n =>
-          n -> ((prior.map(r => (r._2, r._3)) :+ ((adj, nowRec)))
-            .flatMap { case (a, m) => m.get(n).map(_ / a) })
-        }.toMap
-        val retires = driftWatch.filter { n =>
-          baseline.get(n).exists { b =>
-            val s = isoSeries.getOrElse(n, Seq.empty)
-            b > 0 && s.length >= 3 && s.takeRight(3).forall(_ <= 1.25 * b)
-          }
-        }.sorted
-        val newWatch =
-          (driftWatch.filterNot(retires.contains) ++ adds).distinct
-        val label = sys.env.getOrElse("SPARK_GRAFT_ROUND",
-          "b" + new java.text.SimpleDateFormat("MMddHHmm")
-            .format(new java.util.Date()))
-        def f2(v: Double): String =
-          String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-        def mapJson(m: Map[String, Double]): String =
-          m.toSeq.sortBy(_._1).map { case (k, v) =>
-            "\"" + k + "\":" + f2(v)
-          }.mkString(",")
-        val kept = (prior :+ ((label, adj, nowRec, nowOver))).takeRight(60)
-        val recJson = kept.map { case (l, a, iso, over) =>
-          "  {\"label\":\"" + l + "\",\"adj\":" + f2(a) +
-            ",\"isolated\":{" + mapJson(iso) +
-            "}" + (if (over.isEmpty) ""
-              else ",\"shared_over\":{" + mapJson(over) + "}") + "}"
-        }.mkString(",\n")
-        // mutation log: prior entries survive verbatim, capped at 40
-        val logRe = "\\{\"label\":\"[^\"]*\",\"op\":[^}]*\\}".r
-        val priorLog = "\"watch_log\"\\s*:\\s*\\[([\\s\\S]*?)\\]".r
-          .findFirstMatchIn(driftText)
-          .map(m => logRe.findAllIn(m.group(1)).toVector)
-          .getOrElse(Vector.empty)
-        val newLog = priorLog ++
-          adds.map(n => "{\"label\":\"" + label + "\",\"op\":\"add\"," +
-            "\"q\":\"" + n + "\",\"reason\":\"shared > 1.5x baseline " +
-            "in two consecutive runs (now " +
-            f2(nowOver.getOrElse(n, 0.0)) + "x)\"}") ++
-          retires.map(n => "{\"label\":\"" + label +
-            "\",\"op\":\"retire\",\"q\":\"" + n + "\",\"reason\":" +
-            "\"last 3 isolated records <= 1.25x baseline, " +
-            "adj-normalized (" +
-            isoSeries(n).takeRight(3).map(f2).mkString(",") + " vs " +
-            f2(baseline(n)) + ")\"}")
-        val watchJson = newWatch.map("\"" + _ + "\"").mkString(", ")
-        val logJson = newLog.takeRight(40).map("  " + _).mkString(",\n")
-        java.nio.file.Files.writeString(driftPath,
-          s"""{"watch": [$watchJson],\n "watch_log": [\n$logJson\n ],\n""" +
-            s""" "records": [\n$recJson\n ]}\n""")
-        flags
-      } catch { case _: Throwable => Map.empty }
-    val regressions = rawRegressions.filter { case (n, _, b) =>
-      isolatedTimes.get(n).forall(t =>
-        t > 2 * b * adj && t > b * adj + floor(b))
-    }
-    // isolation is systematically FASTER than the shared JVM (the
-    // 3-5x GC-contamination factor), so an isolated time that merely
-    // clears the shared-baseline gate can still hide a real (smaller)
-    // shape regression. Surface — don't flag — adjudicated queries
-    // whose isolated time still exceeds 1.5x baseline, as a watch list
-    // for the next round's Profile pass.
-    val isolatedWarn = rawRegressions.collect {
-      case (n, _, b) if isolatedTimes.get(n).exists(t =>
-        t > 1.5 * b * adj && !(t > 2 * b * adj && t > b * adj + floor(b))) =>
-        (n, isolatedTimes(n), b)
-    }
-    def line(p: Int): String = {
-      val qs = results.map { case (k, v) =>
-        "\"" + k + "\":" + fmt(v, p)
-      }.mkString("{", ",", "}")
-      val gate =
-        regressions.map { case (n, t, b) =>
-          "\"" + n + "\":[" + fmt(t, 2) + "," + fmt(b, 2) + "]"
-        }.mkString(""","regressions":{""", ",", "}") +
-          rawRegressions.map { case (n, t, b) =>
-            "\"" + n + "\":[" + fmt(t, 2) + "," +
-              fmt(isolatedTimes.getOrElse(n, -1.0), 2) + "," + fmt(b, 2) + "]"
-          }.mkString(""","isolated_recheck":{""", ",", "}") +
-          (if (isolatedWarn.isEmpty) "" else isolatedWarn.map {
-            case (n, t, b) =>
-              "\"" + n + "\":[" + fmt(t, 2) + "," + fmt(b, 2) + "]"
-          }.mkString(""","isolated_warn":{""", ",", "}")) +
-          floorExempted.map { case (n, t, b) =>
-            "\"" + n + "\":[" + fmt(t, 2) + "," + fmt(b, 2) + "]"
-          }.mkString(""","floor_exempted":{""", ",", "}") +
-          (if (driftWatch.isEmpty) "" else
-            driftWatch.flatMap(n => isolatedTimes.get(n).map(t =>
-              "\"" + n + "\":" + fmt(t, 2)))
-              .mkString(""","drift_isolated":{""", ",", "}") +
-            driftFlags.map { case (n, (prev, now)) =>
-              "\"" + n + "\":[" + fmt(prev, 2) + "," + fmt(now, 2) + "]"
-            }.mkString(""","drift_flags":{""", ",", "}"))
-      val extra = gate +
-        s""","unit":"sec","sf":"$sfDir","calib":${fmt(calib, 2)}""" +
-          s""","calib_io":${fmt(calibIo, 2)},"calib_io_scan":${if (calibIoScan) 1 else 0},"calib_adjust":${fmt(adj, 2)}"""
-      val errs = if (failed.isEmpty) ""
-        else failed.map("\"" + _ + "\"").mkString(""","errors":[""", ",", "]")
-      val total = results.map(_._2).filter(_ >= 0).sum
-      s"""{"metric":"total","value":${fmt(total, p)},"queries":$qs$errs$extra}"""
-    }
+      driftLedger.map { prior =>
+        try {
+          val label = sys.env.getOrElse("SPARK_GRAFT_ROUND",
+            "b" + new java.text.SimpleDateFormat("MMddHHmm")
+              .format(new java.util.Date()))
+          val (flags, next) = BenchGate.driftStep(prior, label, adj,
+            isolatedTimes, results, baseline)
+          Files.writeString(driftPath, renderDrift(next))
+          flags
+        } catch { case _: Throwable => Map.empty[String, (Double, Double)] }
+      }.getOrElse(Map.empty)
+    val regressions = BenchGate.confirmed(rawRegressions, isolatedTimes, adj)
+    val isolatedWarn = BenchGate.isolatedWarn(rawRegressions, isolatedTimes, adj)
+
+    def n2(v: Double) = Json.num(v, 2)
+    def readings(rs: Seq[Reading]) =
+      ListMap(rs.map { case (n, t, b) => n -> Seq(n2(t), n2(b)) }: _*)
+    val total = results.map(_._2).filter(_ >= 0).sum
     // failure diagnostics go to the FILE only (stdout is tail-budgeted):
     // a silent -1 in the per-query map is undebuggable after the fact
-    val details = if (errorDetails.isEmpty) ""
-      else errorDetails.map { case (k, v) => s""""$k": "$v"""" }
-        .mkString(""","error_details":{""", ",", "}")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_result.json"),
-      line(4).stripSuffix("}") + details + "}\n")
+    def when(cond: Boolean)(kvs: (String, Any)*) = if (cond) kvs else Nil
+    val result = ListMap[String, Any]("metric" -> "total",
+        "value" -> Json.num(total, 4),
+        "queries" -> ListMap(results.map { case (n, t) =>
+          n -> Json.num(t, 4) }: _*),
+        "regressions" -> readings(regressions),
+        "isolated_recheck" -> ListMap(rawRegressions.map { case (n, t, b) =>
+          n -> Seq(n2(t), n2(isolatedTimes.getOrElse(n, -1.0)), n2(b)) }: _*),
+        "floor_exempted" -> readings(floorExempted),
+        "unit" -> "sec", "sf" -> sfDir, "calib" -> n2(calib),
+        "calib_io" -> n2(calibIo), "calib_io_scan" -> (if (calibIoScan) 1 else 0),
+        "calib_adjust" -> n2(adj)) ++
+      when(failed.nonEmpty)("errors" -> failed) ++
+      when(isolatedWarn.nonEmpty)("isolated_warn" -> readings(isolatedWarn)) ++
+      when(driftWatch.nonEmpty)(
+        "drift_isolated" -> ListMap(driftWatch.flatMap(n =>
+          isolatedTimes.get(n).map(t => n -> n2(t))): _*),
+        "drift_flags" -> TreeMap(driftFlags.toSeq.map {
+          case (n, (prev, now)) => n -> Seq(n2(prev), n2(now)) }: _*)) ++
+      when(errorDetails.nonEmpty)(
+        "error_details" -> TreeMap(errorDetails.toSeq: _*))
+    Files.writeString(Paths.get("bench_result.json"), Json.write(result) + "\n")
     // gate verdicts that must reach the driver's stdout tail:
     // rechecked = shared-JVM breaches adjudicated in a fresh JVM;
     // regr = breaches the ISOLATED run confirmed (zero when every
@@ -490,6 +223,42 @@ object Bench {
       (if (driftFlags.isEmpty) "" else s""","drift":${driftFlags.size}""")
     println(stdoutLine(results, failed, gateBits, sfDir))
     spark.stop()
+  }
+
+  /** Query -> isolated best from [[Profile]]'s `PROFILE {json}` lines in
+    * a fork's output; a line that does not parse (cut by a timeout, or
+    * interleaved with log output) adjudicates nothing. */
+  private[graft] def profileBests(out: String): Map[String, Double] =
+    out.linesIterator.filter(_.startsWith("PROFILE ")).flatMap { l =>
+      scala.util.Try(Json.read(l.stripPrefix("PROFILE "))).toOption
+        .filter(_.has("best")).map(r => r.get("q").asText -> r.get("best").asDouble)
+    }.toMap
+
+  /** DRIFT.json -> ledger; a record without an adj reads as adj 1.0. */
+  private[graft] def readDrift(text: String): BenchGate.Drift = {
+    val root = Json.read(text)
+    BenchGate.Drift(
+      Json.elements(root.get("watch")).map(_.asText),
+      Json.elements(root.get("watch_log"))
+        .map(Json.mapper.treeToValue(_, classOf[BenchGate.WatchLog])),
+      Json.elements(root.get("records")).map(r => BenchGate.DriftRecord(
+        r.get("label").asText,
+        Option(r.get("adj")).map(_.asDouble).getOrElse(1.0),
+        Json.doubles(r.get("isolated")), Json.doubles(r.get("shared_over")))))
+  }
+
+  /** Ledger -> DRIFT.json: one log entry or record per line, numbers at
+    * 2 decimals. */
+  private[graft] def renderDrift(d: BenchGate.Drift): String = {
+    def nums(m: Map[String, Double]) =
+      TreeMap(m.toSeq.map { case (k, v) => k -> Json.num(v, 2) }: _*)
+    val records = d.records.map(r => ListMap[String, Any]("label" -> r.label,
+        "adj" -> Json.num(r.adj, 2), "isolated" -> nums(r.isolated)) ++
+      (if (r.sharedOver.isEmpty) Nil else Seq("shared_over" -> nums(r.sharedOver))))
+    def lines(xs: Seq[Any]) = xs.map("  " + Json.write(_)).mkString(",\n")
+    s"""{"watch": [${d.watch.map(Json.write).mkString(", ")}],\n""" +
+      s""" "watch_log": [\n${lines(d.log)}\n ],\n""" +
+      s""" "records": [\n${lines(records)}\n ]}\n"""
   }
 
   // Locale.ROOT: a comma-decimal default locale must not corrupt the

@@ -73,7 +73,7 @@ object Engine {
     // postings) have at most a few hundred partition dirs (bounded by
     // 2^planes / the shard count), but Spark's default threshold of 32
     // schedules a WHOLE distributed listing job for every read of one
-    // (JobProbe: four 64-task listing jobs per IVF upsert lifecycle —
+    // (Profile -jobs: four 64-task listing jobs per IVF upsert lifecycle —
     // pure scheduling overhead). Driver-side serial listing is cheaper
     // up to hundreds of dirs on any filesystem; genuinely huge
     // partitioned tables (thousands of dirs on object stores) still
@@ -107,7 +107,7 @@ object Engine {
         scala.collection.concurrent.TrieMap[String, DataFrame]]())
 
   /** Run `f` with a Spark job description (guide §1.5): labels every
-    * job `f` schedules so the UI / JobProbe attribute lifecycle
+    * job `f` schedules so the UI / Profile -jobs attribute lifecycle
     * operators' many small jobs to their protocol step. Thread-local,
     * restored after; driver-side only — zero cost in the jobs. */
   def label[T](spark: SparkSession, desc: String)(f: => T): T = {
@@ -166,16 +166,12 @@ object Engine {
     * (hundreds of small files apiece: real filesystem weather). */
   def collectAndClean(df: DataFrame, tmpDir: String): DataFrame = {
     val rows = df.collect()
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmrf)
-      f.delete(); ()
-    }
-    rmrf(new java.io.File(tmpDir))
+    operators.Segments.rmrf(new java.io.File(tmpDir))
     df.sparkSession.createDataFrame(
       // one slice: these are bounded collected row sets (tens to a few
       // thousand rows), and the default 32-slice parallelize makes
       // every downstream stage of every consumer pay 32 task launches
-      // to move a handful of rows (JobProbe: 32-task 1.5s-tasktime
+      // to move a handful of rows (Profile -jobs: 32-task 1.5s-tasktime
       // force jobs on 11-row lifecycle results)
       df.sparkSession.sparkContext.parallelize(rows.toSeq, 1), df.schema)
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** Dev-only 10× spot-bench of the headline tail (r11 verdict item 7):
   * one data point an order of magnitude above the per-round bench SF,
@@ -150,11 +151,6 @@ object ScaleBench {
   private def resolve(n: String): (SparkSession, String) => DataFrame =
     extraProbes.getOrElse(n, SparkEntry.queries(n))
 
-  private def force(df: DataFrame): Unit = {
-    df.agg(sum(xxhash64(struct(df.columns.map(col): _*)))).collect()
-    ()
-  }
-
   /** Tables covered by the legacy single `_OK` marker (the original
     * wave-1/2 replica set); newer tables get per-table `_OK_<name>`
     * markers so extending the probe to another family never forces a
@@ -270,52 +266,33 @@ object ScaleBench {
     require(factor >= 2, "factor must be >= 2")
     val qArgs = args.filterNot(_.startsWith("-"))
     val names = if (qArgs.nonEmpty) qArgs.toSeq else defaults
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Engine.configure(spark)
+    val spark = Harness.session(32)
 
     val base = "/root/testdata/sf0.1"
     val big = s"target/scalebench/sf${factor}x"
     buildReplica(spark, base, big, factor)
 
     // JIT/codegen warm at tiny scale
-    val warm = "/root/testdata/sf0.001"
-    names.foreach { n =>
-      try force(resolve(n)(spark, warm))
-      catch { case _: Throwable => () }
+    names.foreach(n => Harness.warm(resolve(n)(spark, Harness.WarmDir)))
+
+    def best(n: String, d: String): Double = {
+      Harness.sweep(spark)
+      Harness.best(2)(Harness.force(resolve(n)(spark, d)))
     }
 
-    def best(n: String, d: String, runs: Int): Double =
-      (1 to runs).map { _ =>
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        System.gc()
-        val t0 = System.nanoTime()
-        force(resolve(n)(spark, d))
-        (System.nanoTime() - t0) / 1e9
-      }.min
-
     names.foreach { n =>
-      try {
-        val t1 = best(n, base, 2)
-        val t10 = best(n, big, 2)
+      val line: ListMap[String, Any] = try {
+        val t1 = best(n, base)
+        val t10 = best(n, big)
         val ratio = t10 / t1
-        val exp = math.log(ratio) / math.log(factor.toDouble)
-        println(f"""SCALE10X {"q":"$n","factor":$factor,""" +
-          f""""t_sf01":$t1%.2f,"t_big":$t10%.2f,""" +
-          f""""ratio":$ratio%.2f,"exponent":$exp%.2f}""")
+        ListMap("q" -> n, "factor" -> factor, "t_sf01" -> Json.num(t1, 2),
+          "t_big" -> Json.num(t10, 2), "ratio" -> Json.num(ratio, 2),
+          "exponent" -> Json.num(math.log(ratio) / math.log(factor.toDouble), 2))
       } catch { case e: Throwable =>
         // one query's replica gap must not kill the rest of the probe
-        println(s"""SCALE10X {"q":"$n","error":"${e.getClass.getSimpleName}: ${
-          String.valueOf(e.getMessage).replaceAll("[\\s\"\\\\]+", " ").take(160)}"}""")
+        ListMap("q" -> n, "error" -> Harness.describe(e, 200))
       }
+      println("SCALE10X " + Json.write(line))
     }
     spark.stop()
   }

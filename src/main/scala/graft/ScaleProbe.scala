@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Similarity}
+import scala.collection.immutable.ListMap
 
 /** Dev-only empirical scale probe for the dedup/ANN family: measures
   * the CANDIDATE-STAGE row counts (the quantity that decides whether an
@@ -179,18 +180,10 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScaleProbe <sfDir> [<sfDir> ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Engine.configure(spark)
+    val spark = Harness.session(32)
     val rows = args.toSeq.map { d => d -> metrics(spark, d) }
     rows.foreach { case (d, m) =>
-      println(s"""SCALE {"sf":"$d",${m.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":$v""" }.mkString(",")}}""")
+      println("SCALE " + Json.write(ListMap("sf" -> d) ++ m.toSeq.sortBy(_._1)))
     }
     // growth exponents between consecutive sf dirs; each metric is
     // normalized by ITS input's growth (embedding metrics by n_vecs,
@@ -210,9 +203,10 @@ object ScaleProbe {
             val e =
               if (m1(k) <= 0 || m2(k) <= 0 || nr <= 1.0) Double.NaN
               else math.log(m2(k).toDouble / m1(k)) / math.log(nr)
-            f""""$k":$e%.2f"""
+            k -> Json.num(e, 2)
           }
-        println(s"""SCALE_EXP {"from":"$d1","to":"$d2",${exps.mkString(",")}}""")
+        println("SCALE_EXP " + Json.write(
+          ListMap("from" -> d1, "to" -> d2) ++ exps))
       case _ =>
     }
     spark.stop()

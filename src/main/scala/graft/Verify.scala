@@ -33,34 +33,24 @@ object Verify {
     errors.toMap
   }
 
-  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — a tab or CR in builder-authored SQL would otherwise make the
-    * driver's json.load fail and silently zero the round's correctness. */
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  /** The driver's two JSON artifacts beside the dumps: `oracle_sql.json`
+    * (query -> oracle SQL) and `errors.json` (query -> the first 500
+    * chars of its error). Jackson escapes every control char — a tab or
+    * CR in builder-authored SQL would otherwise make the driver's
+    * json.load fail and silently zero the round's correctness. */
+  def writeArtifacts(outDir: String, errors: Map[String, String]): Unit = {
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json.write(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/errors.json"),
+      Json.write(errors.map { case (k, v) => k -> Json.clip(v, 500) }))
+  }
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional dev-only 3rd arg: comma-separated query names to dump.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Engine.configure(spark)
+    val spark = Harness.session(4)
     // fail fast with a NAMED diff on testdata type drift, instead of
     // N identical analysis errors deep inside unrelated queries
     Engine.assertSchemas(spark, sfDir)
@@ -68,13 +58,7 @@ object Verify {
     val errors = dumpAll(spark, sfDir, outDir,
       SparkEntry.queries
         .filter { case (name, _) => only.forall(_.contains(name)) })
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v.take(500))}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    writeArtifacts(outDir, errors)
     spark.stop()
     if (errors.nonEmpty) {
       System.err.println(s"[verify] ${errors.size} queries FAILED: " +

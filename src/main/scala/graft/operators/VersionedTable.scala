@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.hadoop.fs.{FileSystem, Path}
+import scala.jdk.CollectionConverters._
 
 /** Minimal versioned table format: append/overwrite commits as numbered
   * manifests over immutable data directories — the lakehouse commit
@@ -838,8 +839,7 @@ object VersionedTable {
         case _ => ()
       }
     }
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .createObjectNode()
+    val node = graft.Json.mapper.createObjectNode()
     statable.foreach { f =>
       (metrics.get(s"min:${f.name}"), metrics.get(s"max:${f.name}")) match {
         case (Some(mn: String), Some(mx: String)) =>
@@ -872,15 +872,12 @@ object VersionedTable {
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
     try {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(text)
-      val b = Map.newBuilder[String, (String, String, Boolean)]
-      node.fields().forEachRemaining { e =>
-        b += e.getKey -> (e.getValue.get("min").asText(),
+      val node = graft.Json.read(text)
+      Some(node.properties.asScala.map { e =>
+        e.getKey -> (e.getValue.get("min").asText(),
           e.getValue.get("max").asText(),
           e.getValue.get("kind").asText() == "str")
-      }
-      Some(b.result())
+      }.toMap)
     } catch { case _: Exception => None } // corrupt sidecar: no pruning
   }
 

@@ -44,4 +44,32 @@ class VerifySpec extends SparkSuite {
     assert(undeclared.isEmpty,
       s"oracleSql keys without a queries entry: $undeclared")
   }
+
+  test("oracle_sql.json and errors.json parse back to what was written") {
+    val out = tmpDir("verifyjson")
+    val astral = "\uD83D\uDE00"
+    val errors = Map(
+      "q_tab" -> "a\tb",
+      "q_cr" -> "line\r\nnext",
+      "q_quote" -> "say \"hi\" \\ back",
+      "q_ctl" -> "x\u0001y",
+      "q_astral" -> s"emoji $astral end",
+      // a 500-char cut never splits a surrogate pair
+      "q_long" -> ("x" * 499 + astral + "tail"))
+    Verify.writeArtifacts(out, errors)
+    val strict = new com.fasterxml.jackson.databind.ObjectMapper()
+      .enable(com.fasterxml.jackson.databind.DeserializationFeature
+        .FAIL_ON_TRAILING_TOKENS)
+    def read(name: String): Map[String, String] = {
+      val text = java.nio.file.Files.readString(
+        java.nio.file.Paths.get(s"$out/$name"))
+      // a strict json.load rejects raw control chars inside strings
+      assert(!text.exists(_ < ' '), s"raw control char in $name")
+      import scala.jdk.CollectionConverters._
+      strict.readValue(text, classOf[java.util.Map[String, String]])
+        .asScala.toMap
+    }
+    assert(read("oracle_sql.json") == SparkEntry.oracleSql)
+    assert(read("errors.json") == errors + ("q_long" -> "x" * 499))
+  }
 }
