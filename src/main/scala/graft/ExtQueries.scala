@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import graft.functions.{davg2, dec2, dec4, dsum2, dsum4}
@@ -143,45 +145,20 @@ object ExtQueries {
     "q_union_fusion_rule", Seq("J9", "U1"),
     (s, d) => {
       Engine.registerAll(s, d)
-      // Scope the experimental rewrite to THIS query: remember the
-      // session's prior state, pin the optimized plan while the rule is
-      // active (plans are lazy — restoring before optimization would
-      // silently run the naive plan), then restore in finally so later
-      // queries in the same session keep exact default semantics. When
-      // the session was built with GraftExtensions the rule is already
-      // injected — appending to extraOptimizations would register it
-      // twice, so only add it when absent.
-      val exp = s.experimental
-      val priorRules = exp.extraOptimizations
-      val builtWithExtensions = s.conf
-        .getOption("spark.sql.extensions").exists(
-          _.contains("graft.plans.GraftExtensions"))
-      val priorFlag = s.conf.getOption("spark.graft.unionFusedJoin.enabled")
-      if (!builtWithExtensions &&
-          !priorRules.contains(graft.plans.UnionFusedJoinRewrite))
-        exp.extraOptimizations =
-          priorRules :+ graft.plans.UnionFusedJoinRewrite
-      s.conf.set("spark.graft.unionFusedJoin.enabled", "true")
-      try {
+      // scope the experimental rewrite to THIS query (see withRule)
+      withRule(s, graft.plans.UnionFusedJoinRewrite,
+          "spark.graft.unionFusedJoin.enabled") {
         s.sql("""SELECT event_id, user_id, pmod(event_id, 50) AS alt_id
                  FROM events""").createOrReplaceTempView("fusion_log")
         s.sql("""SELECT c_custkey, c_name FROM customer
                  WHERE c_custkey < 40""").createOrReplaceTempView("fusion_dim")
-        val out = s.sql("""
+        s.sql("""
           SELECT l.event_id, l.user_id, d.c_name
           FROM fusion_log l JOIN fusion_dim d ON l.user_id = d.c_custkey
           UNION ALL
           SELECT l.event_id, l.user_id, d.c_name
           FROM fusion_log l JOIN fusion_dim d ON l.alt_id = d.c_custkey
           ORDER BY event_id, user_id, c_name""")
-        out.queryExecution.executedPlan // pin while the rule is active
-        out
-      } finally {
-        priorFlag match {
-          case Some(v) => s.conf.set("spark.graft.unionFusedJoin.enabled", v)
-          case None => s.conf.unset("spark.graft.unionFusedJoin.enabled")
-        }
-        exp.extraOptimizations = priorRules
       }
     },
     Some("""WITH fusion_log AS (
@@ -891,21 +868,8 @@ object ExtQueries {
     "q_agg_route", Seq("A1", "A6", "S4"),
     (s, d) => {
       val fact = ensureAggRoute(s, d)
-      // scope the opt-in rule to this query (same protocol as
-      // q_union_fusion_rule): inject when the session lacks the
-      // extensions, pin the plan while active, restore in finally
-      val exp = s.experimental
-      val priorRules = exp.extraOptimizations
-      val builtWithExtensions = s.conf
-        .getOption("spark.sql.extensions").exists(
-          _.contains("graft.plans.GraftExtensions"))
-      val priorFlag = s.conf.getOption("spark.graft.aggRouting.enabled")
-      if (!builtWithExtensions &&
-          !priorRules.contains(graft.plans.AggRouteRewrite))
-        exp.extraOptimizations = priorRules :+ graft.plans.AggRouteRewrite
-      s.conf.set("spark.graft.aggRouting.enabled", "true")
-      try {
-        val out = fact
+      withAggRouting(s) {
+        fact
           .filter(col("l_shipdate") >= lit("1994-01-01").cast("timestamp_ntz") &&
             col("l_shipdate") < lit("1997-01-01").cast("timestamp_ntz"))
           .groupBy("l_returnflag", "l_linestatus")
@@ -918,14 +882,6 @@ object ExtQueries {
             min(col("l_quantity")).as("min_qty"),
             max(col("l_quantity")).as("max_qty"))
           .orderBy("l_returnflag", "l_linestatus")
-        out.queryExecution.executedPlan // pin while the rule is active
-        out
-      } finally {
-        priorFlag match {
-          case Some(v) => s.conf.set("spark.graft.aggRouting.enabled", v)
-          case None => s.conf.unset("spark.graft.aggRouting.enabled")
-        }
-        exp.extraOptimizations = priorRules
       }
     },
     Some("""SELECT l_returnflag, l_linestatus,
@@ -949,18 +905,8 @@ object ExtQueries {
     "q_agg_route_having", Seq("A1", "A8"),
     (s, d) => {
       ensureAggRoute(s, d)
-      val exp = s.experimental
-      val priorRules = exp.extraOptimizations
-      val builtWithExtensions = s.conf
-        .getOption("spark.sql.extensions").exists(
-          _.contains("graft.plans.GraftExtensions"))
-      val priorFlag = s.conf.getOption("spark.graft.aggRouting.enabled")
-      if (!builtWithExtensions &&
-          !priorRules.contains(graft.plans.AggRouteRewrite))
-        exp.extraOptimizations = priorRules :+ graft.plans.AggRouteRewrite
-      s.conf.set("spark.graft.aggRouting.enabled", "true")
-      try {
-        val out = Engine.table(s, d, "lineitem")
+      withAggRouting(s) {
+        Engine.table(s, d, "lineitem")
           .groupBy("l_returnflag", "l_linestatus")
           .agg(count(lit(1)).as("n"),
             dsum2(col("l_quantity")).as("sum_qty"))
@@ -968,14 +914,6 @@ object ExtQueries {
           .select(col("l_returnflag"), col("l_linestatus"), col("n"),
             (col("sum_qty") / col("n")).as("qty_per_item"))
           .orderBy("l_returnflag", "l_linestatus")
-        out.queryExecution.executedPlan // pin while the rule is active
-        out
-      } finally {
-        priorFlag match {
-          case Some(v) => s.conf.set("spark.graft.aggRouting.enabled", v)
-          case None => s.conf.unset("spark.graft.aggRouting.enabled")
-        }
-        exp.extraOptimizations = priorRules
       }
     },
     Some("""SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
@@ -1033,33 +971,45 @@ object ExtQueries {
             GROUP BY l_returnflag, l_linestatus
             ORDER BY l_returnflag, l_linestatus"""))
 
-  /** Run `body` with [[graft.plans.AggRouteRewrite]] active (same
-    * inject/pin/restore protocol as q_agg_route). */
-  private[graft] def withAggRouting[T](s: SparkSession)(
-      body: => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+  /** Run `body` with the opt-in optimizer `rule` active under its
+    * `flag`, scoped to the frame `body` returns: remember the session's
+    * prior rules and flag, inject the rule, pin the optimized plan
+    * while it is active (plans are lazy — restoring before optimization
+    * would silently run the naive plan), then restore in finally so
+    * later queries in the same session keep exact default semantics.
+    * When the session was built with GraftExtensions the rule is
+    * already injected — appending to extraOptimizations would register
+    * it twice, so it is only added when absent. */
+  private[graft] def withRule(s: SparkSession,
+      rule: Rule[LogicalPlan], flag: String)(body: => DataFrame)
+      : DataFrame = {
     val exp = s.experimental
     val priorRules = exp.extraOptimizations
     val builtWithExtensions = s.conf
       .getOption("spark.sql.extensions").exists(
         _.contains("graft.plans.GraftExtensions"))
-    val priorFlag = s.conf.getOption("spark.graft.aggRouting.enabled")
-    if (!builtWithExtensions &&
-        !priorRules.contains(graft.plans.AggRouteRewrite))
-      exp.extraOptimizations = priorRules :+ graft.plans.AggRouteRewrite
-    s.conf.set("spark.graft.aggRouting.enabled", "true")
+    val priorFlag = s.conf.getOption(flag)
+    if (!builtWithExtensions && !priorRules.contains(rule))
+      exp.extraOptimizations = priorRules :+ rule
+    s.conf.set(flag, "true")
     try {
       val out = body
       out.queryExecution.executedPlan // pin while the rule is active
       out
     } finally {
       priorFlag match {
-        case Some(v) => s.conf.set("spark.graft.aggRouting.enabled", v)
-        case None => s.conf.unset("spark.graft.aggRouting.enabled")
+        case Some(v) => s.conf.set(flag, v)
+        case None => s.conf.unset(flag)
       }
       exp.extraOptimizations = priorRules
     }
   }
+
+  /** Run `body` with [[graft.plans.AggRouteRewrite]] active. */
+  private[graft] def withAggRouting(s: SparkSession)(body: => DataFrame)
+      : DataFrame =
+    withRule(s, graft.plans.AggRouteRewrite,
+      "spark.graft.aggRouting.enabled")(body)
 
   /** Build `dws.audience_route_<sf>` (a per-event_type summary of
     * events whose distinct-user measure is a BITMAP, not a count) and

@@ -1,8 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.math.{BigInteger, BigDecimal => JBD}
+
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, DoubleType, StructField,
+  StructType}
 
 /** Link-graph centrality for corpus quality weighting.
   *
@@ -28,20 +33,27 @@ import org.apache.spark.sql.types.DecimalType
   *
   * Two arithmetic modes:
   *
-  *  - [[pageRank]] — doubles, for production rank-ordering (absolute
-  *    low-order bits are partitioning-dependent, as with any
-  *    floating-point sum).
-  *  - [[pageRankExact]] — decimal arithmetic that is bit-reproducible
-  *    on ANY partitioning and matches an independent engine running
-  *    the same recurrence. Division never happens: out-degree weights
-  *    are scaled to integers by S = lcm(distinct out-degrees), and
-  *    the damping step folds d/S into one terminating-decimal
-  *    constant. Per-iteration result scale grows by scale(d/S), and
-  *    every intermediate decimal type is sized to hold the exact
-  *    value (never capped to Spark's 38-digit ceiling), so no
-  *    rounding occurs anywhere. Requires d/S to be a terminating
-  *    decimal and bounded iterations — the differential-validation
-  *    mode for planted graphs, not the 100 TB path.
+  *  - [[pageRank]] and [[pageRankConverged]] — doubles, for production
+  *    rank-ordering (absolute low-order bits are partitioning-
+  *    dependent, as with any floating-point sum). Both run one round
+  *    step; the converged loop adds its max-delta probe on top.
+  *  - [[pageRankExact]] and [[katzCentralityExact]] — one exact
+  *    recurrence x_k = c + a · Σ_{u→v} w·x_{k-1}(u) in decimal
+  *    arithmetic that is bit-reproducible on ANY partitioning and
+  *    matches an independent engine running the same recurrence.
+  *    Division never happens: weights are integers and `a` is a
+  *    terminating-decimal constant, so the rank scale grows by
+  *    scale(a) per round, and every intermediate decimal type is sized
+  *    to hold the exact value (never capped to Spark's 38-digit
+  *    ceiling), so no rounding occurs anywhere. PageRank scales its
+  *    out-degree weights to integers by S = lcm(distinct out-degrees)
+  *    and folds d/S into `a`; Katz takes integer weights as given.
+  *    The recurrence has one distributed kernel ([[exactRecurrence]])
+  *    and one driver-local twin ([[exactRecurrenceLocal]]); the two
+  *    operators differ only in their constants, digit budget
+  *    ([[ExactBudget]]) and output shape. Requires bounded iterations
+  *    — the differential-validation mode for planted graphs, not the
+  *    100 TB path.
   *
   * Dangling nodes (no out-edges) keep receiving rank but their own
   * mass is not redistributed — the simplified recurrence
@@ -52,8 +64,9 @@ import org.apache.spark.sql.types.DecimalType
 object Graph {
 
   /** Iterative-loop checkpoint hygiene, two concerns in one helper
-    * (every iterative loop in the engine routes through it — PageRank
-    * ×3, label propagation, star contraction):
+    * (every iterative loop in the engine routes through it — the
+    * double-mode PageRank loops, the exact recurrence's one end
+    * checkpoint, label propagation, star contraction):
     *
     * 1. STATS — localCheckpoint, then REBUILD the frame from the
     *    checkpointed RDD. The rebuild is load-bearing:
@@ -112,8 +125,7 @@ object Graph {
     * Generate, single-key join): the skew machinery costs nothing on
     * the graphs that don't need it. */
   private[graft] final case class Prepped(weighted: DataFrame,
-      nodes: DataFrame, deg: DataFrame, salted: Boolean,
-      degHist: Array[Long]) {
+      nodes: DataFrame, salted: Boolean, degHist: Array[Long]) {
     /** The rank side of the iteration join, keyed to match `weighted`:
       * expanded to one row per (source, salt shard) when salted. */
     def ranksSide(ranks: DataFrame): DataFrame =
@@ -214,8 +226,8 @@ object Graph {
         if (materialize) ckpt(e.join(deg, Seq("src"))
           .repartition(par, col("src")))
         else e.join(deg, Seq("src"))
-      return Prepped(weighted, nodes0.localCheckpoint(), deg,
-        salted = false, degHist)
+      return Prepped(weighted, nodes0.localCheckpoint(), salted = false,
+        degHist)
     }
     // shards per source: 1 for everyone below the threshold, capped at
     // the parallelism (more shards than tasks buys nothing)
@@ -238,7 +250,21 @@ object Graph {
         "left")
       .select(col("id"), coalesce(col("nsh"), lit(1L)).as("nsh"))
       .localCheckpoint()
-    Prepped(weighted, nodes, deg, salted = true, degHist)
+    Prepped(weighted, nodes, salted = true, degHist)
+  }
+
+  /** One double-mode round before its checkpoint: every node's
+    * (1-d) + d·Σ_{u→v} pr(u)/deg(u), carrying `p.rankCols`. */
+  private def pageRankStep(p: Prepped, ranks: DataFrame,
+      damping: Double): DataFrame = {
+    val contrib = p.weighted
+      .join(p.ranksSide(ranks), p.joinKeys)
+      .groupBy(col("dst").as("id"))
+      .agg(sum(col("pr") / col("deg")).as("m"))
+    p.nodes.join(contrib, Seq("id"), "left")
+      .select(p.rankCols :+
+        (lit(1.0 - damping) + lit(damping) * coalesce(col("m"), lit(0.0)))
+          .as("pr"): _*)
   }
 
   /** Damped PageRank over doubles: (id, pr) for every node in
@@ -250,16 +276,7 @@ object Graph {
     val p = prep(edges, srcCol, dstCol, saltThreshold)
     var ranks = p.nodes.withColumn("pr", lit(1.0))
     val roll = new RollingCheckpoint
-    for (_ <- 1 to iterations) {
-      val contrib = p.weighted
-        .join(p.ranksSide(ranks), p.joinKeys)
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("pr") / col("deg")).as("m"))
-      ranks = roll(p.nodes.join(contrib, Seq("id"), "left")
-        .select(p.rankCols :+
-          (lit(1.0 - damping) + lit(damping) * coalesce(col("m"), lit(0.0)))
-            .as("pr"): _*))
-    }
+    for (_ <- 1 to iterations) ranks = roll(pageRankStep(p, ranks, damping))
     ranks.select("id", "pr")
   }
 
@@ -287,21 +304,14 @@ object Graph {
     val carry = p.rankCols :+ col("pr")
     val roll = new RollingCheckpoint
     while (!converged && iter < maxIter) {
-      val contrib = p.weighted
-        .join(p.ranksSide(ranks), p.joinKeys)
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("pr") / col("deg")).as("m"))
       // the convergence probe rides the checkpoint's materialization
       // as an observed metric (CollectMetrics accumulates during the
       // localCheckpoint action) — fused, it costs ZERO extra jobs; as
       // a separate max-aggregate it doubled the loop's job count,
       // which on small graphs was most of the wall time
       val obs = org.apache.spark.sql.Observation()
-      val next = roll(p.nodes.join(contrib, Seq("id"), "left")
+      val next = roll(pageRankStep(p, ranks, damping)
         .join(ranks.select(col("id"), col("pr").as("prev")), Seq("id"))
-        .select(p.rankCols ++ Seq(col("prev"),
-          (lit(1.0 - damping) + lit(damping) * coalesce(col("m"), lit(0.0)))
-            .as("pr")): _*)
         .observe(obs, max(abs(col("pr") - col("prev"))).as("d")))
       converged = Checkpoints.metric(obs, "d") match {
         case Some(d: Double) => d < tol
@@ -325,6 +335,228 @@ object Graph {
     a / gcd(a, b) * b
   }
 
+  /** `num/den` as a decimal with trailing zeros stripped; throws unless
+    * it terminates (`what` names the ratio in the message). */
+  private def terminating(num: Long, den: Long, what: => String): JBD = {
+    val exact = BigDecimal(num) / BigDecimal(den)
+    require((exact * BigDecimal(den)).toBigIntExact.contains(BigInt(num)),
+      s"$what is not a terminating decimal")
+    exact.underlying.stripTrailingZeros
+  }
+
+  /** Rank scale after `rounds` exact rounds: 2 at init, growing by
+    * scale(a), at least 1, per round. */
+  private def rankScale(a: JBD, rounds: Int): Int =
+    2 + a.scale.max(1) * rounds
+
+  /** An exact operator's decimal digit budget: integer digits of a
+    * rank (`prDigits`) and of the summed mass (`massDigits`), the
+    * precision of the integer edge weight, the cap on the final rank
+    * scale, and the two overflow messages — raised inside the mass
+    * aggregate, and by the post-loop null scan. */
+  private final case class ExactBudget(prDigits: Int, wPrec: Int,
+      massDigits: Int, scaleCap: Int, massOverflow: String,
+      rankOverflow: String)
+
+  private val pageRankBudget = ExactBudget(prDigits = 6, wPrec = 7,
+    massDigits = 12, scaleCap = 18,
+    massOverflow = "pageRankExact: decimal overflow (mass sum " +
+      "or a prior rank exceeded its integer-digit headroom); " +
+      "use pageRank (double)",
+    rankOverflow = "pageRankExact: decimal overflow (a rank exceeded " +
+      "its integer-digit headroom); use pageRank (double)")
+
+  /** Katz scores GROW with α above the inverse spectral radius, so a
+    * rank carries 12 integer digits (vs PageRank's 6) and the mass 18;
+    * the wider digits buy a smaller scale cap (8 vs 18), keeping every
+    * multiply under precision 38 — past 38 Spark's precision-loss rule
+    * silently rounds scale away, which would break bit-exactness
+    * without any error. */
+  private val katzBudget = ExactBudget(prDigits = 12, wPrec = 12,
+    massDigits = 18, scaleCap = 8,
+    massOverflow = "katzCentralityExact: decimal overflow; " +
+      "lower alpha or iterations",
+    rankOverflow = "katzCentralityExact: decimal overflow (a score " +
+      "exceeded its integer-digit headroom); lower alpha or iterations")
+
+  /** The output id column of an exact operator: the probe's coerced
+    * (src, dst) type, nullable when either side is — as the src ∪ dst
+    * node union derives it. */
+  private def idField(probe: DataFrame): StructField =
+    StructField("id", probe.schema(0).dataType,
+      probe.schema(0).nullable || probe.schema(1).nullable)
+
+  /** The exact recurrence, distributed: from x_0 = 1 over the node set
+    * `g.nodes`, `iterations` rounds of
+    * x_k(v) = c + a · Σ_{u→v} w·x_{k-1}(u) over `g.weighted`
+    * (src, dst, w[, salt]), joined on `g.joinKeys`. Returns
+    * `g.rankCols` plus the decimal `pr`, checkpointed; overflow
+    * throws `b`'s messages, never rounds.
+    *
+    * No per-iteration checkpoint: the scale cap bounds the rounds
+    * (PageRank's 18 at 0.0425 → 4 digits/round allows ≤4; Katz takes
+    * ≤5), so the whole recurrence compiles into ONE plan over the
+    * checkpointed weighted/nodes frames — neither the SPARK-39834
+    * stats compounding (needs ~40 rounds to bite) nor lineage depth is
+    * a concern, and dropping the K eager checkpoint jobs roughly halves
+    * the job count of a 3-iteration run (the sf0.1 bench's
+    * link_pagerank/centrality_gate are fixed job overhead, not data).
+    * One checkpoint at the END materializes the result for the null
+    * scan + caller's action. */
+  private def exactRecurrence(g: Prepped, iterations: Int, c: JBD,
+      a: JBD, b: ExactBudget): DataFrame = {
+    val w = g.weighted.withColumn("w",
+      col("w").cast(DecimalType(b.wPrec, 0)))
+    var ranks = g.nodes.withColumn("pr",
+      lit(JBD.ONE).cast(DecimalType(8, 2)))
+    for (k <- 1 to iterations) {
+      val prScale = rankScale(a, k - 1)
+      // type walkthrough at rank scale s (P = prDigits, W = wPrec,
+      // M = massDigits):
+      //   pr (s+P, s) * w (W, 0) -> (s+P+W+1, s); the sum adds 10
+      //   digits of headroom (capped at 38, scale kept); the value
+      //   needs at most M int digits, so cast the mass down to
+      //   (s+M, s) BEFORE multiplying by a — without it the multiply's
+      //   p1+p2+1 crosses Spark's 38-cap and the precision-loss rule
+      //   rounds the last digit away. With it every multiply peaks
+      //   at precision <= 31: never capped, never rounded.
+      val contrib = w
+        .join(g.ranksSide(ranks), g.joinKeys)
+        .groupBy(col("dst").as("id"))
+        .agg(sum(col("pr") * col("w")).as("m"), count(lit(1)).as("nc"),
+          count(col("pr") * col("w")).as("nn"))
+      // overflow must THROW, never silently degrade — detected INSIDE
+      // expressions this iteration already evaluates (no extra jobs):
+      //  - m NULL while nc > 0: the mass sum itself overflowed (a
+      //    coalesce would turn that into rank c);
+      //  - nn < nc: some pr*w INPUT was null, i.e. a previous round's
+      //    pr cast overflowed on a node with out-edges, or a weight
+      //    cast overflowed (non-ANSI sum would silently SKIP the null
+      //    and lose its mass).
+      // Nodes with no in-edges (nc null from the left join)
+      // legitimately get zero mass. The one case neither counter sees —
+      // an overflowed pr on a node with NO out-edges — is caught by the
+      // single post-loop null scan below.
+      val overflow = col("nc").isNotNull &&
+        (col("m").isNull || col("nn") < col("nc"))
+      val mTight = when(overflow, raise_error(lit(b.massOverflow)))
+        .otherwise(coalesce(col("m"), lit(JBD.ZERO)))
+        .cast(DecimalType(prScale + b.massDigits, prScale))
+      val next = rankScale(a, k)
+      ranks = g.nodes.join(contrib, Seq("id"), "left")
+        .select(g.rankCols :+ (lit(c) + lit(a) * mTight)
+          .cast(DecimalType(next + b.prDigits, next)).as("pr"): _*)
+    }
+    // last line of defense: a cast overflow in the FINAL round, or on
+    // a sink node whose pr never feeds a mass sum, surfaces as a null
+    // rank — counted as an observed metric DURING the end checkpoint's
+    // materialization (zero extra jobs) instead of a separate scan
+    val nullProbe = org.apache.spark.sql.Observation()
+    ranks = new RollingCheckpoint()(ranks.observe(nullProbe,
+      count(when(col("pr").isNull, 1)).as("nulls")))
+    val nulls = Checkpoints.metric(nullProbe, "nulls") match {
+      case Some(n: Long) => n
+      case _ => // listener event lost: explicit scan, never hang
+        ranks.filter(col("pr").isNull).count()
+    }
+    require(nulls == 0L, b.rankOverflow)
+    ranks
+  }
+
+  /** Driver-local twin of [[exactRecurrence]] over collected
+    * (src, dst, w) rows — bit-identical BY ARITHMETIC (every step is
+    * exact decimal, so evaluation order cannot matter) with the same
+    * SQL semantics replicated join for join:
+    *  - ids are Spark values coerced in the caller's probe select, so
+    *    equality here is the equi-join's ([[graft.Engine.boundedLocal]]
+    *    refuses the binary and floating id types where the two differ);
+    *  - null-src edges never contribute mass (the src equi-join drops
+    *    them); mass to a null dst is lost (its contrib group matches no
+    *    node — and is therefore never overflow-checked either);
+    *  - a null pr or a null w (a weight cast Spark overflowed) makes
+    *    pr*w null, so a REACHED mass group containing one, or a sum past
+    *    its decimal precision, THROWS the in-aggregate message; an
+    *    mTight/pr cast overflow propagates a null rank caught by the
+    *    post-loop scan — exactly the distributed escalation. */
+  private def exactRecurrenceLocal(spark: SparkSession, idCol: StructField,
+      edges: Array[(Option[Any], Option[Any], JBD)], iterations: Int,
+      c: JBD, a: JBD, b: ExactBudget): DataFrame = {
+    val nodes = mutable.LinkedHashSet.empty[Option[Any]]
+    edges.foreach { case (s, d, _) => nodes += s; nodes += d }
+    // Decimal overflow rule: unscaled |value| must stay below 10^p
+    def fits(x: JBD, p: Int): Boolean =
+      x.unscaledValue.abs.compareTo(BigInteger.TEN.pow(p)) < 0
+    var prType = DecimalType(8, 2)
+    val ranks = mutable.HashMap.empty[Option[Any], JBD]
+    nodes.foreach(ranks.update(_, JBD.ONE.setScale(2)))
+    for (k <- 1 to iterations) {
+      val prScale = prType.scale
+      // mass per non-null dst reached from a non-null src
+      val m = mutable.HashMap.empty[Any, JBD]
+      val poisoned = mutable.HashSet.empty[Any]
+      edges.foreach {
+        case (srcOpt @ Some(_), Some(d), w) =>
+          val pr = ranks(srcOpt)
+          if (pr == null || w == null) poisoned += d // nn < nc
+          else m.update(d, m.getOrElse(d, JBD.ZERO.setScale(prScale))
+            .add(pr.multiply(w)))
+        case _ => () // null src: dropped by the equi-join
+      }
+      // decimal sum result precision: (pr precision + wPrec + 1) + 10,
+      // capped at 38
+      val sumPrec = math.min(38, prType.precision + b.wPrec + 11)
+      val next = rankScale(a, k)
+      nodes.foreach { v =>
+        val matched = v.flatMap(id =>
+          if (poisoned.contains(id))
+            throw new IllegalArgumentException(b.massOverflow)
+          else m.get(id))
+        val pr = matched match {
+          case Some(mass) =>
+            if (!fits(mass, sumPrec)) // the mass sum itself overflowed
+              throw new IllegalArgumentException(b.massOverflow)
+            if (!fits(mass, prScale + b.massDigits)) null // mTight cast
+            else {
+              val x = c.add(a.multiply(mass)).setScale(next)
+              if (fits(x, next + b.prDigits)) x else null
+            }
+          case None => c.setScale(next)
+        }
+        ranks.update(v, pr)
+      }
+      prType = DecimalType(next + b.prDigits, next)
+    }
+    require(!ranks.values.exists(_ == null), b.rankOverflow)
+    val rows = nodes.iterator.map(v => Row(v.orNull, ranks(v))).toSeq
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+      StructType(Seq(idCol, StructField("pr", prType))))
+  }
+
+  /** pageRankExact's recurrence constants from the distinct out-degree
+    * values: weights are scaled to integers S/deg by S = lcm(degrees),
+    * so a round is x' = (1-d) + (d/S) · Σ (S/deg)·x. Returns
+    * (S, 1-d, d/S), or None for an edgeless graph; throws when the
+    * degree profile or damping make exactness impossible. */
+  private def pageRankConstants(degs: collection.Seq[Long],
+      iterations: Int, damping: (Int, Int)): Option[(Long, JBD, JBD)] = {
+    require(degs.length <= 1000,
+      "pageRankExact: > 1000 distinct out-degrees; use pageRank (double)")
+    if (degs.isEmpty) return None
+    val s = degs.reduce(lcm)
+    require(s > 0 && s <= 1000000L,
+      s"pageRankExact: degree lcm $s too large for exact weights; " +
+        "use pageRank (double)")
+    val (dNum, dDen) = damping
+    require(dNum > 0 && dDen > dNum, "damping must be in (0, 1)")
+    val dOverS = terminating(dNum, dDen * s,
+      s"pageRankExact: $dNum/(${dDen}*$s)")
+    val finalScale = rankScale(dOverS, iterations)
+    require(finalScale <= pageRankBudget.scaleCap,
+      s"pageRankExact: $iterations iterations need scale $finalScale > " +
+        pageRankBudget.scaleCap)
+    Some((s, (BigDecimal(dDen - dNum) / BigDecimal(dDen)).underlying, dOverS))
+  }
+
   /** Bit-exact damped PageRank (see class doc): decimal arithmetic
     * with LCM-scaled integer edge weights and a terminating d/S
     * damping constant; throws if the degree profile or damping make
@@ -340,247 +572,44 @@ object Graph {
       srcCol: String = "src", dstCol: String = "dst",
       saltThreshold: Long = hotOutDegreeShard): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    graft.Engine.boundedLocal(edges.select(
-        col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst")), "pageRankExact") match {
+    val probe = edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst"))
+    val ranks = graft.Engine.boundedLocal(probe, "pageRankExact") match {
       case Some(rows) =>
-        return pageRankExactLocal(edges.sparkSession, rows, iterations,
-          damping)
-      case None =>
-    }
-    // materialize = false: the whole ≤4-round recurrence below compiles
-    // into ONE plan (no per-iteration checkpoints), so weighted/nodes
-    // are re-read only inside that single job where exchange reuse
-    // computes them once; both derive from prep's single checkpointed
-    // edge snapshot, so the frames can never disagree on the input
-    val p = prep(edges, srcCol, dstCol, saltThreshold,
-      materialize = false)
-    // distinct out-degree VALUES, collected once by prep's histogram
-    // probe (bounded; the cap makes a pathological graph fail loudly,
-    // not slowly)
-    val degs = p.degHist
-    require(degs.length <= 1000,
-      "pageRankExact: > 1000 distinct out-degrees; use pageRank (double)")
-    if (degs.isEmpty) // no edges: pr stays init
-      return p.nodes.select("id").withColumn("pr", lit(1.0))
-    val s = degs.reduce(lcm)
-    require(s > 0 && s <= 1000000L,
-      s"pageRankExact: degree lcm $s too large for exact weights; " +
-        "use pageRank (double)")
-    val (dNum, dDen) = damping
-    require(dNum > 0 && dDen > dNum, "damping must be in (0, 1)")
-    // d/S = dNum / (dDen * S) must terminate: strip 2s and 5s, then
-    // the remaining denominator must divide the numerator's factors
-    val dOverS = {
-      val exact = BigDecimal(dNum) / BigDecimal(dDen * s)
-      require((exact * BigDecimal(dDen * s)).toBigIntExact
-          .contains(BigInt(dNum)),
-        s"pageRankExact: $dNum/(${dDen}*$s) is not a terminating decimal")
-      exact.underlying.stripTrailingZeros
-    }
-    val oneMinusD = BigDecimal(dDen - dNum) / BigDecimal(dDen)
-    val inc = dOverS.scale.max(1)
-    val finalScale = 2 + inc * iterations
-    require(finalScale <= 18,
-      s"pageRankExact: $iterations iterations need scale $finalScale > 18")
-    // integer weight w = S / deg, exact by construction of S
-    val w = p.weighted.withColumn("w",
-      (lit(s) / col("deg")).cast(DecimalType(7, 0)))
-    var prScale = 2
-    var ranks = p.nodes.withColumn("pr",
-      lit(java.math.BigDecimal.ONE).cast(DecimalType(8, 2)))
-    // No per-iteration checkpoint here: the scale-18 guard above caps
-    // exact mode at ≤4 iterations (0.0425 → 4 digits/round), so the
-    // whole recurrence compiles into ONE plan over the checkpointed
-    // weighted/nodes frames — neither the SPARK-39834 stats
-    // compounding (needs ~40 rounds to bite) nor lineage depth is a
-    // concern, and dropping the K eager checkpoint jobs roughly halves
-    // the job count of a 3-iteration run (the sf0.1 bench's
-    // link_pagerank/centrality_gate are fixed job overhead, not data).
-    // One checkpoint at the END materializes the result for the null
-    // scan + caller's action.
-    for (_ <- 1 to iterations) {
-      // type walkthrough (int digits of pr bounded by 6, of the
-      // summed mass by 12):
-      //   pr (prScale+6, prScale) * w (7,0) -> (prScale+14, prScale)
-      //   sum adds 10 digits of headroom -> (prScale+24, prScale);
-      //   the value needs at most 12 int digits, so cast the mass
-      //   down to (prScale+12, prScale) BEFORE multiplying by dOverS
-      //   — without it the multiply's p1+p2+1 crosses Spark's 38-cap
-      //   at scale 14 and the precision-loss rule rounds the last
-      //   digit away. With it the multiply peaks at precision
-      //   (finalScale-inc)+12+inc+scale(dOverS)+1 <= 31: never capped,
-      //   never rounded.
-      val contrib = w
-        .join(p.ranksSide(ranks), p.joinKeys)
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("pr") * col("w")).as("m"), count(lit(1)).as("nc"),
-          count(col("pr") * col("w")).as("nn"))
-      // overflow must THROW, never silently degrade — detected INSIDE
-      // expressions this iteration already evaluates (no extra jobs):
-      //  - m NULL while nc > 0: the mass sum itself overflowed (the old
-      //    coalesce would have turned that into rank (1-d));
-      //  - nn < nc: some pr*w INPUT was null, i.e. a previous round's
-      //    pr cast overflowed on a node with out-edges (non-ANSI sum
-      //    would silently SKIP the null and lose its mass).
-      // Nodes with no in-edges (nc null from the left join)
-      // legitimately get zero mass. The one case neither counter sees —
-      // an overflowed pr on a node with NO out-edges — is caught by the
-      // single post-loop null scan below.
-      val overflow = col("nc").isNotNull &&
-        (col("m").isNull || col("nn") < col("nc"))
-      val mRaw = when(overflow,
-          raise_error(lit("pageRankExact: decimal overflow (mass sum " +
-            "or a prior rank exceeded its integer-digit headroom); " +
-            "use pageRank (double)")))
-        .otherwise(coalesce(col("m"), lit(java.math.BigDecimal.ZERO)))
-      val mTight = mRaw.cast(DecimalType(prScale + 12, prScale))
-      prScale += inc
-      ranks = p.nodes.join(contrib, Seq("id"), "left")
-        .select(p.rankCols :+
-          (lit(oneMinusD.underlying) + lit(dOverS) * mTight)
-            .cast(DecimalType(prScale + 6, prScale)).as("pr"): _*)
-    }
-    // last line of defense: a cast overflow in the FINAL round, or on
-    // a sink node whose pr never feeds a mass sum, surfaces as a null
-    // rank — counted as an observed metric DURING the end checkpoint's
-    // materialization (zero extra jobs) instead of a separate scan
-    val nullProbe = org.apache.spark.sql.Observation()
-    ranks = new RollingCheckpoint()(ranks.observe(nullProbe,
-      count(when(col("pr").isNull, 1)).as("nulls")))
-    val nulls = Checkpoints.metric(nullProbe, "nulls") match {
-      case Some(n: Long) => n
-      case _ => // listener event lost: explicit scan, never hang
-        ranks.filter(col("pr").isNull).count()
-    }
-    require(nulls == 0L,
-      "pageRankExact: decimal overflow (a rank exceeded its " +
-        "integer-digit headroom); use pageRank (double)")
-    ranks.select(col("id"), col("pr").cast("double").as("pr"))
-  }
-
-  /** Driver-local twin of [[pageRankExact]]'s distributed recurrence —
-    * bit-identical BY ARITHMETIC (every step is exact decimal, so
-    * evaluation order cannot matter) with the same SQL semantics
-    * replicated join-for-join:
-    *  - deg groups include a null-src group (its count participates in
-    *    the degree lcm, as the distributed groupBy's null group does);
-    *  - null-src edges never contribute mass (the src equi-join drops
-    *    them); mass to a null dst is lost (the null-keyed contrib
-    *    group matches no node in the left join — and is therefore
-    *    never overflow-checked either);
-    *  - sum overflow past the decimal sum's precision, or a null pr
-    *    feeding a reached mass group, THROWS the in-aggregate message;
-    *    an mTight/pr cast overflow propagates a null rank caught by
-    *    the post-loop scan — exactly the distributed escalation. */
-  private def pageRankExactLocal(spark: org.apache.spark.sql.SparkSession,
-      edgeRows: Array[org.apache.spark.sql.Row], iterations: Int,
-      damping: (Int, Int)): DataFrame = {
-    import java.math.{BigDecimal => JBD, BigInteger}
-    import scala.collection.mutable
-    val overflowInAgg = "pageRankExact: decimal overflow (mass sum " +
-      "or a prior rank exceeded its integer-digit headroom); " +
-      "use pageRank (double)"
-    val edges: Array[(Option[Long], Option[Long])] = edgeRows.map(r =>
-      (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-        if (r.isNullAt(1)) None else Some(r.getLong(1))))
-    val deg = mutable.HashMap.empty[Option[Long], Long]
-    edges.foreach { case (s, _) => deg.update(s, deg.getOrElse(s, 0L) + 1) }
-    val degs = deg.values.toSeq.distinct
-    require(degs.length <= 1000,
-      "pageRankExact: > 1000 distinct out-degrees; use pageRank (double)")
-    if (degs.isEmpty) // no edges: empty node universe, pr stays init
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("pr",
-            org.apache.spark.sql.types.DoubleType))))
-    val s = degs.reduce(lcm)
-    require(s > 0 && s <= 1000000L,
-      s"pageRankExact: degree lcm $s too large for exact weights; " +
-        "use pageRank (double)")
-    val (dNum, dDen) = damping
-    require(dNum > 0 && dDen > dNum, "damping must be in (0, 1)")
-    val dOverS = {
-      val exact = BigDecimal(dNum) / BigDecimal(dDen * s)
-      require((exact * BigDecimal(dDen * s)).toBigIntExact
-          .contains(BigInt(dNum)),
-        s"pageRankExact: $dNum/(${dDen}*$s) is not a terminating decimal")
-      exact.underlying.stripTrailingZeros
-    }
-    val oneMinusD = (BigDecimal(dDen - dNum) / BigDecimal(dDen)).underlying
-    val inc = dOverS.scale.max(1)
-    val finalScale = 2 + inc * iterations
-    require(finalScale <= 18,
-      s"pageRankExact: $iterations iterations need scale $finalScale > 18")
-    // nodes = src groups ∪ dst values (null included once, like the
-    // distributed union+distinct)
-    val nodes = mutable.LinkedHashSet.empty[Option[Long]]
-    deg.keys.foreach(nodes += _)
-    edges.foreach { case (_, d) => nodes += d }
-    // integer weight w = S / deg, exact by construction of S
-    val w: Map[Option[Long], JBD] =
-      deg.iterator.map { case (k, dg) => k -> JBD.valueOf(s / dg) }.toMap
-    // Decimal overflow rule: unscaled |value| must stay below 10^p
-    def fits(x: JBD, p: Int): Boolean =
-      x.unscaledValue.abs.compareTo(BigInteger.TEN.pow(p)) < 0
-    var prScale = 2
-    val ranks = mutable.HashMap.empty[Option[Long], JBD]
-    nodes.foreach(ranks.update(_, JBD.ONE.setScale(2)))
-    for (_ <- 1 to iterations) {
-      // mass per non-null dst reached from a non-null src
-      val m = mutable.HashMap.empty[Long, JBD]
-      val poisoned = mutable.HashSet.empty[Long]
-      edges.foreach {
-        case (srcOpt @ Some(_), Some(d)) =>
-          ranks(srcOpt) match {
-            case null => poisoned += d // nn < nc in the distributed agg
-            case pr => m.update(d,
-              m.getOrElse(d, JBD.ZERO.setScale(prScale))
-                .add(pr.multiply(w(srcOpt))))
+        // deg groups include a null-src group: its count joins the lcm,
+        // as the distributed groupBy's null group does
+        val deg = rows.groupMapReduce(r => Option(r.get(0)))(_ => 1L)(_ + _)
+        pageRankConstants(deg.values.toSeq.distinct, iterations, damping)
+          .map { case (s, c, a) =>
+            exactRecurrenceLocal(edges.sparkSession, idField(probe),
+              rows.map { r =>
+                val src = Option(r.get(0))
+                (src, Option(r.get(1)), JBD.valueOf(s / deg(src)))
+              }, iterations, c, a, pageRankBudget)
           }
-        case _ => () // null src: dropped by the equi-join
-      }
-      // decimal sum result precision: (prScale+14)+10 capped at 38
-      val sumPrec = math.min(38, prScale + 24)
-      val nextScale = prScale + inc
-      nodes.foreach { v =>
-        val matched = v.flatMap(id =>
-          if (poisoned.contains(id)) throw new IllegalArgumentException(
-            overflowInAgg)
-          else m.get(id))
-        val pr = matched match {
-          case Some(mass) =>
-            if (!fits(mass, sumPrec)) // the mass sum itself overflowed
-              throw new IllegalArgumentException(overflowInAgg)
-            if (!fits(mass, prScale + 12)) null // mTight cast overflow
-            else {
-              val next = oneMinusD.add(dOverS.multiply(mass))
-                .setScale(nextScale)
-              if (fits(next, nextScale + 6)) next else null
-            }
-          case None =>
-            oneMinusD.add(dOverS.multiply(JBD.ZERO.setScale(prScale)))
-              .setScale(nextScale)
-        }
-        ranks.update(v, pr)
-      }
-      prScale = nextScale
+      case None =>
+        // materialize = false: the whole recurrence compiles into ONE
+        // plan (no per-iteration checkpoints), so weighted/nodes are
+        // re-read only inside that single job where exchange reuse
+        // computes them once; both derive from prep's single
+        // checkpointed edge snapshot, so the frames can never disagree
+        // on the input. The distinct out-degree VALUES come from prep's
+        // bounded histogram probe.
+        val p = prep(edges, srcCol, dstCol, saltThreshold,
+          materialize = false)
+        pageRankConstants(p.degHist, iterations, damping)
+          .map { case (s, c, a) =>
+            // integer weight w = S / deg, exact by construction of S
+            exactRecurrence(
+              p.copy(weighted =
+                p.weighted.withColumn("w", lit(s) / col("deg"))),
+              iterations, c, a, pageRankBudget)
+          }
     }
-    require(!ranks.values.exists(_ == null),
-      "pageRankExact: decimal overflow (a rank exceeded its " +
-        "integer-digit headroom); use pageRank (double)")
-    val rows = nodes.iterator.map(v => org.apache.spark.sql.Row(
-      v.map(Long.box).orNull, ranks(v).doubleValue)).toSeq
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("pr",
-          org.apache.spark.sql.types.DoubleType))))
+    ranks.fold( // no edges: no nodes
+      edges.sparkSession.createDataFrame(java.util.List.of[Row](),
+        StructType(Seq(idField(probe), StructField("pr", DoubleType)))))(
+      _.select(col("id"), col("pr").cast("double").as("pr")))
   }
 
   /** Bit-exact truncated Katz centrality (Katz 1953, "A new status
@@ -589,8 +618,8 @@ object Graph {
     * Unlike PageRank there is NO division by out-degree, so exact
     * decimal arithmetic needs no degree-profile precondition — any
     * weighted graph qualifies as long as α is a terminating decimal
-    * and the summed mass stays inside its 12 integer-digit headroom
-    * (overflow throws, never silently rounds — same discipline as
+    * and the summed mass stays inside its 18 integer-digit headroom
+    * (overflow throws, never silently rounds — the same recurrence as
     * [[pageRankExact]]). This is the engine's TextRank-family scorer:
     * run over a token co-occurrence graph it ranks keywords the way
     * Mihalcea & Tarau (2004) do, with the random-walk normalization
@@ -612,172 +641,36 @@ object Graph {
       "katzCentralityExact: 1..5 iterations (scale grows per round)")
     val (aNum, aDen) = alpha
     require(aNum > 0 && aDen > aNum, "alpha must be in (0, 1)")
-    val aExact = {
-      val a = BigDecimal(aNum) / BigDecimal(aDen)
-      require((a * BigDecimal(aDen)).toBigIntExact.contains(BigInt(aNum)),
-        s"katzCentralityExact: $aNum/$aDen is not a terminating decimal")
-      a.underlying.stripTrailingZeros
-    }
-    val inc = aExact.scale.max(1)
-    // scale cap 8 (not pageRankExact's 18): Katz scores GROW with α
-    // above the inverse spectral radius, so pr carries 12 integer
-    // digits (vs 6) and the type walkthrough below needs the smaller
-    // scale budget to keep every multiply under precision 38 — past
-    // 38 Spark's precision-loss rule silently rounds scale away,
-    // which would break bit-exactness without any error
-    require(2 + inc * iterations <= 8,
-      s"katzCentralityExact: $iterations rounds at alpha scale $inc " +
-        "exceed decimal scale 8")
-    // the node-id type is the src∪dst union's coerced type — derived
-    // by ANALYSIS only (no job); probing and joining on it mirrors the
-    // distributed union+join coercions
+    val a = terminating(aNum, aDen, s"katzCentralityExact: $aNum/$aDen")
+    require(rankScale(a, iterations) <= katzBudget.scaleCap,
+      s"katzCentralityExact: $iterations rounds at alpha scale " +
+        s"${a.scale.max(1)} exceed decimal scale ${katzBudget.scaleCap}")
+    // ids coerced to the src∪dst union's type — derived by ANALYSIS
+    // only (no job), as the distributed union+join coerce them; the
+    // weight CAST rides the probe select so the twin sees exactly
+    // Spark's cast values (incl. its rounding and overflow-null)
     val idType = edges.select(col(srcCol).as("id"))
       .union(edges.select(col(dstCol).as("id"))).schema.head.dataType
-    // driver-local twin, exact like pageRankExact's: the weight CAST
-    // rides the probe select so the local loop sees exactly Spark's
-    // cast values (incl. its rounding and overflow-null)
-    graft.Engine.boundedLocal(edges.select(
-        col(srcCol).cast(idType).as("src"),
-        col(dstCol).cast(idType).as("dst"),
-        col(weightCol).cast(DecimalType(12, 0)).as("w")),
-        "katzCentralityExact") match {
+    val e = edges.select(col(srcCol).cast(idType).as("src"),
+      col(dstCol).cast(idType).as("dst"),
+      col(weightCol).cast(DecimalType(katzBudget.wPrec, 0)).as("w"))
+    graft.Engine.boundedLocal(e, "katzCentralityExact") match {
       case Some(rows) =>
-        return katzExactLocal(edges.sparkSession, rows, iterations,
-          aExact, inc, idType)
+        exactRecurrenceLocal(edges.sparkSession, idField(e),
+          rows.map(r => (Option(r.get(0)), Option(r.get(1)),
+            r.getDecimal(2))), iterations, JBD.ONE, a, katzBudget)
       case None =>
+        val snap = e.localCheckpoint(true)
+        // checkpointed: referenced by the init ranks plus every round's
+        // left join, and the union+distinct re-derivation is not
+        // deduplicated across references (same evidence as Graph.prep)
+        val nodes = snap.select(col("src").as("id"))
+          .union(snap.select(col("dst").as("id"))).distinct()
+          .localCheckpoint(true)
+        // an unsalted Prepped: Katz joins ranks on plain src
+        exactRecurrence(Prepped(snap, nodes, salted = false,
+          degHist = Array.empty), iterations, JBD.ONE, a, katzBudget)
     }
-    // w at (12,0): pr (s+12, s) * w (12, 0) -> (s+25, s) <= 31 for
-    // s <= 6, sum caps precision at 38 with scale PRESERVED; a long
-    // (20,0) weight would push the multiply past the cap
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(weightCol).cast(DecimalType(12, 0)).as("w"))
-      .localCheckpoint(true)
-    // checkpointed: referenced by the init ranks plus every round's
-    // left join, and the union+distinct re-derivation is not
-    // deduplicated across references (same evidence as Graph.prep)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(true)
-    var prScale = 2
-    var ranks = nodes.withColumn("pr",
-      lit(java.math.BigDecimal.ONE).cast(DecimalType(8, 2)))
-    for (_ <- 1 to iterations) {
-      // same overflow counters as pageRankExact: m NULL with incoming
-      // edges = the mass sum overflowed; nn < nc = a prior pr cast
-      // overflowed and the non-ANSI sum would silently skip it
-      val contrib = e
-        .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("pr") * col("w")).as("m"), count(lit(1)).as("nc"),
-          count(col("pr") * col("w")).as("nn"))
-      val overflow = col("nc").isNotNull &&
-        (col("m").isNull || col("nn") < col("nc"))
-      val mRaw = when(overflow,
-          raise_error(lit("katzCentralityExact: decimal overflow; " +
-            "lower alpha or iterations")))
-        .otherwise(coalesce(col("m"), lit(java.math.BigDecimal.ZERO)))
-      // 18 integer digits of mass headroom; pr itself carries 12 —
-      // geometric growth past either throws via the counters/null scan
-      val mTight = mRaw.cast(DecimalType(prScale + 18, prScale))
-      prScale += inc
-      ranks = nodes.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(java.math.BigDecimal.ONE) + lit(aExact) * mTight)
-            .cast(DecimalType(prScale + 12, prScale)).as("pr"))
-    }
-    // a cast overflow on a sink node never feeds a mass sum: surface
-    // as a null rank, counted during the end checkpoint (zero jobs)
-    val nullProbe = org.apache.spark.sql.Observation()
-    ranks = new RollingCheckpoint()(ranks.observe(nullProbe,
-      count(when(col("pr").isNull, 1)).as("nulls")))
-    val nulls = Checkpoints.metric(nullProbe, "nulls") match {
-      case Some(n: Long) => n
-      case _ => ranks.filter(col("pr").isNull).count()
-    }
-    require(nulls == 0L,
-      "katzCentralityExact: decimal overflow (a score exceeded its " +
-        "integer-digit headroom); lower alpha or iterations")
-    ranks
-  }
-
-  /** Driver-local twin of [[katzCentralityExact]]'s distributed
-    * recurrence — bit-identical by the same exact-arithmetic argument
-    * as [[pageRankExactLocal]]. Replicated SQL semantics: null-src
-    * edges drop at the equi-join; mass to a null dst is lost (and
-    * never overflow-checked — its contrib group matches no node); a
-    * null weight (or a weight the (12,0) cast overflowed — the cast
-    * happened Spark-side in the probe) makes pr*w null, so any REACHED
-    * group containing one throws the in-aggregate message. */
-  private def katzExactLocal(spark: org.apache.spark.sql.SparkSession,
-      edgeRows: Array[org.apache.spark.sql.Row], iterations: Int,
-      aExact: java.math.BigDecimal, inc: Int,
-      idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    import java.math.{BigDecimal => JBD, BigInteger}
-    import scala.collection.mutable
-    val overflowInAgg = "katzCentralityExact: decimal overflow; " +
-      "lower alpha or iterations"
-    // ids collected AS SPARK VALUES (coerced to the union type in the
-    // probe select): equality below is the equi-join's equality, as
-    // boundedLocal refuses the binary and floating id types where the
-    // two differ
-    val edges: Array[(Option[Any], Option[Any], JBD)] = edgeRows.map(r =>
-      (Option(r.get(0)), Option(r.get(1)),
-        if (r.isNullAt(2)) null else r.getDecimal(2)))
-    val nodes = mutable.LinkedHashSet.empty[Option[Any]]
-    edges.foreach { case (s, d, _) => nodes += s; nodes += d }
-    def fits(x: JBD, p: Int): Boolean =
-      x.unscaledValue.abs.compareTo(BigInteger.TEN.pow(p)) < 0
-    var prScale = 2
-    val ranks = mutable.HashMap.empty[Option[Any], JBD]
-    nodes.foreach(ranks.update(_, JBD.ONE.setScale(2)))
-    for (_ <- 1 to iterations) {
-      val m = mutable.HashMap.empty[Any, JBD]
-      val poisoned = mutable.HashSet.empty[Any]
-      edges.foreach {
-        case (srcOpt @ Some(_), Some(d), w) =>
-          val pr = ranks(srcOpt)
-          if (pr == null || w == null) poisoned += d
-          else m.update(d, m.getOrElse(d, JBD.ZERO.setScale(prScale))
-            .add(pr.multiply(w)))
-        case _ => () // null src: dropped by the equi-join
-      }
-      // decimal sum result precision: (prScale+25)+10 capped at 38
-      val sumPrec = math.min(38, prScale + 35)
-      val nextScale = prScale + inc
-      nodes.foreach { v =>
-        val matched = v.flatMap(id =>
-          if (poisoned.contains(id))
-            throw new IllegalArgumentException(overflowInAgg)
-          else m.get(id))
-        val pr = matched match {
-          case Some(mass) =>
-            if (!fits(mass, sumPrec))
-              throw new IllegalArgumentException(overflowInAgg)
-            if (!fits(mass, prScale + 18)) null // mTight cast overflow
-            else {
-              val next = JBD.ONE.add(aExact.multiply(mass))
-                .setScale(nextScale)
-              if (fits(next, nextScale + 12)) next else null
-            }
-          case None =>
-            JBD.ONE.add(aExact.multiply(JBD.ZERO.setScale(prScale)))
-              .setScale(nextScale)
-        }
-        ranks.update(v, pr)
-      }
-      prScale = nextScale
-    }
-    require(!ranks.values.exists(_ == null),
-      "katzCentralityExact: decimal overflow (a score exceeded its " +
-        "integer-digit headroom); lower alpha or iterations")
-    val rows = nodes.iterator.map(v => org.apache.spark.sql.Row(
-      v.orNull, ranks(v).setScale(prScale))).toSeq
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", idType),
-        org.apache.spark.sql.types.StructField("pr",
-          DecimalType(prScale + 12, prScale)))))
   }
 
   /** The planted link graph both conformance sides construct from the

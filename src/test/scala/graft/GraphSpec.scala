@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.operators.Graph
 
 /** PageRank laws: exactness, conservation, structural fixed points. */
@@ -146,13 +147,26 @@ class GraphSpec extends SparkSuite {
     // exact mode is partitioning-invariant by construction, so salted
     // == unsalted proves the expansion join pairs every edge with
     // exactly one rank row (no dup, no drop)
-    val salted = Graph.pageRankExact(hubGraph, 2, saltThreshold = 128L)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val plain = Graph.pageRankExact(hubGraph, 2,
-        saltThreshold = Long.MaxValue)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    def exact(threshold: Long) =
+      Graph.pageRankExact(hubGraph, 2, saltThreshold = threshold)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val salted = exact(128L)
+    val plain = exact(Long.MaxValue)
     assert(salted.size == plain.size && salted.keySet == plain.keySet)
     salted.foreach { case (id, pr) => assert(pr == plain(id), s"node $id") }
+    // hubGraph's 6,250 edges fit the driver-local twin, which runs
+    // before prep and ignores the threshold: force the distributed
+    // plans so the salted exact plan itself runs
+    val (dSaltedExact, dPlain) =
+      withSQLConf("spark.graft.localTwin.maxRows" -> "0") {
+        (exact(128L), exact(Long.MaxValue))
+      }
+    assert(dSaltedExact.size == dPlain.size &&
+      dSaltedExact.keySet == dPlain.keySet)
+    dSaltedExact.foreach { case (id, pr) =>
+      assert(pr == dPlain(id), s"node $id distributed")
+      assert(pr == plain(id), s"node $id distributed vs twin")
+    }
     val dSalted = Graph.pageRank(hubGraph, 2, saltThreshold = 128L)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     dSalted.foreach { case (id, pr) =>
@@ -240,16 +254,24 @@ class GraphSpec extends SparkSuite {
       withNulls.toDF("src", "dst")
     } :+ planted.toDF()
     randoms.zipWithIndex.foreach { case (df, i) =>
-      def run() = Graph.pageRankExact(df, 3).orderBy("id").collect()
-        .map(r => (if (r.isNullAt(0)) -1L else r.getLong(0),
-          r.getDouble(1)))
-      val local = run() // default bound: local path
-      val dist = withSQLConf("spark.graft.localTwin.maxRows" -> "0") {
-        run() // forced distributed
+      def run() = {
+        val out = Graph.pageRankExact(df, 3)
+        (out.schema, out.orderBy("id").collect()
+          .map(r => (if (r.isNullAt(0)) -1L else r.getLong(0),
+            r.getDouble(1))))
       }
+      val (localSchema, local) = run() // default bound: local path
+      val (distSchema, dist) =
+        withSQLConf("spark.graft.localTwin.maxRows" -> "0") {
+          run() // forced distributed
+        }
       assert(local.sameElements(dist), s"graph $i: local != distributed")
+      assert(localSchema == distSchema,
+        s"graph $i: $localSchema vs $distSchema")
+      assert(distSchema.map(f => f.name -> f.dataType) ==
+        Seq("id" -> LongType, "pr" -> DoubleType), s"graph $i: $distSchema")
       // a bound past Int.MaxValue (2^32+10) must not truncate the probe
-      val huge =
+      val (_, huge) =
         withSQLConf("spark.graft.localTwin.maxRows" -> "4294967306") {
           run()
         }
@@ -277,19 +299,28 @@ class GraphSpec extends SparkSuite {
       (Array[Byte](2), Array[Byte](3), 2L),
       (Array[Byte](3), Array[Byte](1), 1L)).toDF("src", "dst", "w")
     (strings :+ doubles :+ binaries).zipWithIndex.foreach { case (e, trial) =>
-      def run() = Graph.katzCentralityExact(e, 3, alpha = (1, 100))
-        .collect()
-        .map(r => (r.get(0) match {
-          case b: Array[Byte] => b.mkString("bytes(", ",", ")")
-          case id => String.valueOf(id)
-        }, r.getDecimal(1).toString)) // toString: equal value AND scale
-        .sorted
-      val local = run()
-      val dist = withSQLConf("spark.graft.localTwin.maxRows" -> "0") {
-        run()
+      def run() = {
+        val out = Graph.katzCentralityExact(e, 3, alpha = (1, 100))
+        (out.schema, out.collect()
+          .map(r => (r.get(0) match {
+            case b: Array[Byte] => b.mkString("bytes(", ",", ")")
+            case id => String.valueOf(id)
+          }, r.getDecimal(1).toString)) // toString: equal value AND scale
+          .sorted)
       }
+      val (localSchema, local) = run()
+      val (distSchema, dist) =
+        withSQLConf("spark.graft.localTwin.maxRows" -> "0") {
+          run()
+        }
       assert(local.sameElements(dist), s"trial $trial: " +
         s"${local.mkString(" ")} vs ${dist.mkString(" ")}")
+      // 3 rounds at alpha scale 2: rank scale 2 + 2*3 = 8, plus the 12
+      // integer digits of Katz's budget
+      assert(localSchema == distSchema,
+        s"trial $trial: $localSchema vs $distSchema")
+      assert(distSchema("pr").dataType == DecimalType(20, 8),
+        s"trial $trial: $distSchema")
     }
   }
 

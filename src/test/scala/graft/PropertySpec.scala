@@ -609,13 +609,18 @@ class PropertySpec extends AnyFunSuite with SparkSuite {
       val doubleOk = salted.keySet == plain.keySet &&
         salted.forall { case (k, v) => math.abs(v - plain(k)) < 1e-9 }
       val exactOk = !lcmOk || {
-        val se = graft.operators.Graph
-          .pageRankExact(df, 2, saltThreshold = 1L)
+        def exact(threshold: Long) = graft.operators.Graph
+          .pageRankExact(df, 2, saltThreshold = threshold)
           .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        val pe = graft.operators.Graph
-          .pageRankExact(df, 2, saltThreshold = Long.MaxValue)
-          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        se == pe
+        val se = exact(1L)
+        val pe = exact(Long.MaxValue)
+        // these graphs fit the driver-local twin, which ignores the
+        // threshold: force the distributed plans so the salted exact
+        // plan runs, and compare it with the unsalted one and the twin
+        val (sd, pd) = withSQLConf("spark.graft.localTwin.maxRows" -> "0") {
+          (exact(1L), exact(Long.MaxValue))
+        }
+        se == pe && sd == pd && sd == se
       }
       doubleOk && exactOk
     })
