@@ -117,6 +117,13 @@ object Engine {
     try f finally sc.setJobDescription(prev)
   }
 
+  /** `base`, `_base`, `__base`, …: the first prefix no name in `taken`
+    * starts with (case-insensitively) — a working column never
+    * replaces a user column. */
+  private[graft] def freshPrefix(base: String, taken: Seq[String]): String =
+    Iterator.iterate(base)("_" + _).find(p =>
+      !taken.exists(_.toLowerCase.startsWith(p.toLowerCase))).get
+
   /** The one gate of every driver-local twin: an operator whose input
     * is usually small keeps a driver-side loop that computes the same
     * result as its distributed plan, and takes it when `df` fits.

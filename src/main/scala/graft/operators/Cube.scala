@@ -157,9 +157,8 @@ object Cube {
       case i if !dims.contains(baseDims(i)) => 1L << (baseDims.length - 1 - i)
     }.sum
     // working column: a prefix no fact or measure column starts with
-    val taken = (fact.columns ++ measures.map(_.name)).map(_.toLowerCase)
-    val gid = Iterator.iterate("__gid")("_" + _)
-      .find(p => !taken.exists(_.startsWith(p))).get
+    val gid = graft.Engine.freshPrefix("__gid",
+      fact.columns.toSeq ++ measures.map(_.name))
     val typed = baseDims.map(col) ++ measures.map(m =>
       col(m.name).cast(base.schema(m.name).dataType).as(m.name))
     val children = ordered.filter(gidOf(_) != 0L)

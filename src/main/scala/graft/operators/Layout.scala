@@ -48,16 +48,20 @@ object Layout {
     }.reduce(_ bitwiseOR _)
   }
 
+  /** `df` range-partitioned into `nFiles` partitions on the Z-order of
+    * `cols` and sorted within each, both keyed on the z expression
+    * itself — no working column replaces or drops a column of `df`. */
+  private[operators] def zOrdered(df: DataFrame, cols: Seq[String],
+      nFiles: Int, bits: Int): DataFrame = {
+    val z = zValueN(cols.map(col), bits)
+    df.repartitionByRange(nFiles, z).sortWithinPartitions(z)
+  }
+
   /** Rewrite `df` as `nFiles` parquet files clustered by the Z-order
-    * of (colX, colY). Range partitioning puts contiguous z-ranges in
-    * the same file; the within-partition sort tightens each file's
-    * min/max envelope on BOTH columns. */
+    * of (colX, colY) — [[zOrdered]] written out. */
   def writeZOrdered(df: DataFrame, path: String, colX: String,
       colY: String, nFiles: Int, bits: Int = 20): Unit =
-    df.withColumn("__z", zValue(col(colX), col(colY), bits))
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
+    zOrdered(df, Seq(colX, colY), nFiles, bits)
       .write.mode("overwrite").parquet(path)
 
   // --------------------------------------------- file-level inverted index

@@ -311,16 +311,11 @@ object VersionedTable {
     *    stalled loser deletes the slot a competitor just committed. */
   private def commitManifest(spark: SparkSession, root: String,
       dirsFor: Option[Long] => Seq[String],
-      schemaFor: Option[Long] => Option[StructType] = _ => None,
-      constraintsFor: Option[Long] => Seq[(String, String)] = null,
-      op: String = "commit"): Long = {
+      schemaFor: Option[Long] => Option[StructType],
+      constraintsFor: Option[Long] => Seq[(String, String)],
+      op: String): Long = {
     val f = fs(spark, root)
     f.mkdirs(new Path(root, logDir))
-    // default: CARRY the latest committed snapshot's constraint set
-    // forward — a write path never silently sheds table constraints
-    val consFor = Option(constraintsFor).getOrElse(
-      (l: Option[Long]) => l.flatMap(readManifestFull(f, root, _))
-        .map(_.constraints).getOrElse(Seq.empty))
     var committed = -1L
     while (committed < 0) {
       val latest = versions(spark, root).lastOption
@@ -333,7 +328,7 @@ object VersionedTable {
       // always type-consistent with its recorded schema
       val schemaLine = schemaFor(latest)
         .map(s => s"$schemaMark${s.json}\n").getOrElse("")
-      val consLines = consFor(latest)
+      val consLines = constraintsFor(latest)
         .map { case (n, e) => s"$constraintMark$n:$e\n" }.mkString
       // provenance only — never consulted for correctness, so the
       // wall clock here is safe
@@ -432,26 +427,16 @@ object VersionedTable {
     * `idempotencyKey` makes RE-DELIVERY of the same logical commit a
     * no-op returning the original version (the exactly-once contract a
     * streaming micro-batch sink needs: foreachBatch is at-least-once,
-    * so a restarted query re-offers committed batch ids). A keyed data
-    * dir left by a writer that died BEFORE its manifest landed is
-    * unreferenced, so the retry safely rewrites it. Keyed commits are
-    * for sequential re-delivery, not concurrent writers sharing a key. */
+    * so a restarted query re-offers committed batch ids; see
+    * [[redelivered]]). Keyed commits are for sequential re-delivery,
+    * not concurrent writers sharing a key. */
   def commit(spark: SparkSession, root: String, df: DataFrame,
       overwrite: Boolean = false,
       idempotencyKey: Option[String] = None,
       mergeSchema: Boolean = false): Long = {
     val f = fs(spark, root)
-    val dataDir = "data/" + idempotencyKey.map(k => s"k-$k")
-      .getOrElse(java.util.UUID.randomUUID().toString)
-    if (idempotencyKey.isDefined) {
-      val already = versions(spark, root).find(v =>
-        // dirKey identity: a shallow clone rewrites a keyed dir as an
-        // absolute source path, and re-delivery must still no-op there
-        readManifest(f, root, v).exists(_.exists(dirKey(_) == dataDir)))
-      already.foreach(v => return v)
-      // crash orphan from a previous attempt: unreferenced, rewrite
-      f.delete(new Path(root, dataDir), true)
-    }
+    redelivered(spark, root, idempotencyKey).foreach(v => return v)
+    val dataDir = newDataDir(idempotencyKey)
     def gate(latest: Option[Long]): StructType =
       if (overwrite) normalize(df.schema)
       else evolvedSchema(
@@ -509,6 +494,26 @@ object VersionedTable {
       },
       op = if (overwrite) "overwrite" else "append")
   }
+
+  /** A write's new dir: `data/k-<key>` when keyed, else a UUID. */
+  private def newDataDir(idempotencyKey: Option[String]): String =
+    "data/" + idempotencyKey.map(k => s"k-$k")
+      .getOrElse(java.util.UUID.randomUUID().toString)
+
+  /** Re-delivery of a keyed [[commit]]/[[merge]]: the version already
+    * referencing the key's dir (by [[dirKey]], so a shallow clone's
+    * absolute entry counts), else None after deleting the dir — the
+    * orphan of an attempt that died before its manifest landed. */
+  private def redelivered(spark: SparkSession, root: String,
+      idempotencyKey: Option[String]): Option[Long] =
+    idempotencyKey.flatMap { k =>
+      val f = fs(spark, root)
+      val dir = newDataDir(Some(k))
+      val already = versions(spark, root).find(v =>
+        readManifest(f, root, v).exists(_.exists(dirKey(_) == dir)))
+      if (already.isEmpty) f.delete(new Path(root, dir), true)
+      already
+    }
 
   // ------------------------------------------------ snapshot schema
 
@@ -621,14 +626,11 @@ object VersionedTable {
     require(versions(spark, dstRoot).isEmpty,
       s"cloneShallow target $dstRoot already has committed versions")
     val fSrc = fs(spark, srcRoot)
-    val v = asOf.getOrElse(versions(spark, srcRoot).lastOption.getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $srcRoot")))
+    val v = asOf.getOrElse(latestVersion(spark, srcRoot))
     val md = readManifestFull(fSrc, srcRoot, v).getOrElse(
       throw new IllegalArgumentException(s"version $v not committed"))
     val (dirs, cons) = (md.dirs, md.constraints)
-    val schema = snapshotSchema(spark, srcRoot, v)
-      .getOrElse(schemaOfVersion(spark, srcRoot, v, dirs))
+    val schema = schemaOfVersion(spark, srcRoot, v, dirs)
     val absolute = dirs.map(d =>
       fSrc.makeQualified(new Path(srcRoot, d)).toString)
     // the emptiness REQUIRE above is a fast-fail, not the guard: it is
@@ -659,8 +661,7 @@ object VersionedTable {
   def read(spark: SparkSession, root: String,
       asOf: Option[Long] = None): DataFrame = {
     val f = fs(spark, root)
-    val v = asOf.getOrElse(versions(spark, root).lastOption.getOrElse(
-      throw new IllegalStateException(s"no committed version under $root")))
+    val v = asOf.getOrElse(latestVersion(spark, root))
     val dirs = readManifest(f, root, v).getOrElse(
       throw new IllegalArgumentException(s"version $v not committed"))
     snapshotSchema(spark, root, v) match {
@@ -669,6 +670,12 @@ object VersionedTable {
         dirs.map(d => new Path(root, d).toString): _*)
     }
   }
+
+  /** The highest committed version; IllegalStateException when the
+    * table has none. */
+  private def latestVersion(spark: SparkSession, root: String): Long =
+    versions(spark, root).lastOption.getOrElse(
+      throw new IllegalStateException(s"no committed version under $root"))
 
   /** Roll the table back to `v`'s content by committing a NEW version
     * with `v`'s dir list — history is append-only, so the "undone"
@@ -722,25 +729,19 @@ object VersionedTable {
     require(versions(spark, root).nonEmpty,
       "addConstraint needs a committed version — commit the table " +
         "first (an empty frame works)")
-    val f = fs(spark, root)
-    commitManifest(spark, root,
-      latest => latest.flatMap(readManifest(f, root, _)).getOrElse(Seq.empty),
-      latest => latest.flatMap(v => snapshotSchema(spark, root, v)),
-      latest => {
-        val cur = latest.flatMap(readManifestFull(f, root, _))
-          .map(_.constraints).getOrElse(Seq.empty)
-        require(!cur.exists(_._1 == name),
-          s"constraint '$name' already exists")
-        latest.foreach { v =>
-          val bad = read(spark, root, Some(v))
-            .filter(not(coalesce(expr(exprSql), lit(true))))
-            .limit(1).count()
-          require(bad == 0,
-            s"existing rows violate CHECK constraint '$name' ($exprSql)" +
-              " — clean the data first (deleteWhere/updateWhere)")
-        }
-        cur :+ (name -> exprSql)
-      }, op = "add-constraint")
+    alterConstraints(spark, root, "add-constraint") { (latest, cur) =>
+      require(!cur.exists(_._1 == name),
+        s"constraint '$name' already exists")
+      latest.foreach { v =>
+        val bad = read(spark, root, Some(v))
+          .filter(not(coalesce(expr(exprSql), lit(true))))
+          .limit(1).count()
+        require(bad == 0,
+          s"existing rows violate CHECK constraint '$name' ($exprSql)" +
+            " — clean the data first (deleteWhere/updateWhere)")
+      }
+      cur :+ (name -> exprSql)
+    }
   }
 
   /** NOT NULL constraint sugar: `addConstraint("nn_<col>", "<col> IS
@@ -754,16 +755,24 @@ object VersionedTable {
       name: String): Long = {
     require(versions(spark, root).nonEmpty,
       "dropConstraint needs a committed version")
+    alterConstraints(spark, root, "drop-constraint") { (_, cur) =>
+      require(cur.exists(_._1 == name), s"no constraint named '$name'")
+      cur.filterNot(_._1 == name)
+    }
+  }
+
+  /** Commit the latest snapshot's dirs and schema again with its
+    * constraint set replaced by `alter(latest, set)` — evaluated inside
+    * the CAS loop, so against the snapshot the new set lands on. */
+  private def alterConstraints(spark: SparkSession, root: String,
+      op: String)(alter: (Option[Long], Seq[(String, String)]) =>
+        Seq[(String, String)]): Long = {
     val f = fs(spark, root)
     commitManifest(spark, root,
       latest => latest.flatMap(readManifest(f, root, _)).getOrElse(Seq.empty),
       latest => latest.flatMap(v => snapshotSchema(spark, root, v)),
-      latest => {
-        val cur = latest.flatMap(readManifestFull(f, root, _))
-          .map(_.constraints).getOrElse(Seq.empty)
-        require(cur.exists(_._1 == name), s"no constraint named '$name'")
-        cur.filterNot(_._1 == name)
-      }, op = "drop-constraint")
+      latest => alter(latest, latest.flatMap(readManifestFull(f, root, _))
+        .map(_.constraints).getOrElse(Seq.empty)), op)
   }
 
   // ------------------------------------------------- per-dir column stats
@@ -927,9 +936,69 @@ object VersionedTable {
     }
   }
 
-  /** MERGE INTO the latest snapshot with dir-granularity COPY-ON-WRITE
-    * — the Delta/Iceberg merge shape re-expressed on the manifest
-    * protocol. Semantics (one source row per key; caller dedups):
+  /** The snapshot a [[copyOnWrite]] starts from: version `v`'s dirs,
+    * constraints and RECORDED schema — rewrites read and write through
+    * it, so older narrower dirs never drop an evolved column. */
+  private final class Base(spark: SparkSession, root: String, v: Long) {
+    val dirs: Seq[String] = readManifest(fs(spark, root), root, v).get
+    lazy val schema: StructType = schemaOfVersion(spark, root, v, dirs)
+    val constraints: Seq[(String, String)] =
+      constraintsOf(spark, root, Some(v))
+    def read(ds: Seq[String]): DataFrame =
+      readDirsAs(spark, root, schema, ds)
+  }
+
+  /** The one copy-on-write rewrite of [[merge]], [[deleteWhere]],
+    * [[updateWhere]], [[compact]] and [[optimizeZOrder]]. `plan` gets
+    * the [[Base]] at `baseV` and returns the base dirs to keep plus the
+    * rows to write, or None to commit nothing (returns `baseV`). The
+    * rows land fully in one new dir ([[newDataDir]]) before anything
+    * references it, under the base's CHECK constraints when `enforce`
+    * — compact/optimize rewrite admitted rows unchanged, so they only
+    * carry the set, never wedge on a false rejection. The install is
+    * first-writer-wins: kept dirs + the new dir, with the base's schema
+    * and constraints, land only while the table is still at `baseV`
+    * (which also pins both between validation and install), else
+    * [[java.util.ConcurrentModificationException]] — rerun. */
+  private def copyOnWrite(spark: SparkSession, root: String, op: String,
+      baseV: Long, enforce: Boolean,
+      idempotencyKey: Option[String] = None)(
+      plan: Base => Option[(Seq[String], DataFrame)]): Long = {
+    val base = new Base(spark, root, baseV)
+    plan(base) match {
+      case None => baseV
+      case Some((kept, rows)) =>
+        val newDir = newDataDir(idempotencyKey)
+        writeDataDir(spark, root, newDir, rows,
+          if (enforce) base.constraints else Seq.empty)
+        commitManifest(spark, root, latest => {
+          if (!latest.contains(baseV))
+            throw new java.util.ConcurrentModificationException(
+              s"$op read v$baseV but table is now at v$latest — rerun")
+          kept :+ newDir
+        }, _ => Some(base.schema), _ => base.constraints, op = op)
+    }
+  }
+
+  /** Which manifest entries hold a row of `matching(scan)`: one scan
+    * that tags `scan`'s rows with their `data/<dir>` before `matching`
+    * joins anything, in a column no table column is replaced by.
+    * Entries match by [[dirKey]] (shallow-clone entries are absolute). */
+  private def touchedDirs(spark: SparkSession, op: String,
+      scan: DataFrame)(matching: DataFrame => DataFrame): String => Boolean = {
+    import org.apache.spark.sql.functions.{input_file_name, regexp_extract}
+    val dir = graft.Engine.freshPrefix("__dir", scan.columns.toSeq)
+    val touched = graft.Engine.label(spark, s"vtab $op: touched-dir scan")(
+      matching(scan.withColumn(dir,
+          regexp_extract(input_file_name(), "/(data/[^/]+)/", 1)))
+        .select(dir).distinct().collect().map(_.getString(0)).toSet)
+    d => touched(dirKey(d))
+  }
+
+  /** MERGE INTO the latest snapshot, a [[copyOnWrite]] rewrite at dir
+    * granularity — the Delta/Iceberg merge shape re-expressed on the
+    * manifest protocol. Semantics (one source row per key; caller
+    * dedups):
     *  - matched target rows are REPLACED by their source row
     *    (upsert), or dropped when `deleteMatched` holds on the source
     *    row (whenMatched delete);
@@ -938,24 +1007,14 @@ object VersionedTable {
     *    bit-for-bit — and, crucially, kept WITHOUT being rewritten
     *    when their whole data dir contains no matched key.
     *
-    * Scale shape: the snapshot is scanned once (key columns only — the
-    * parquet reader prunes the rest) to find the TOUCHED data dirs via
-    * a semi-join against the source keys; only those dirs' rows are
-    * re-read in full and rewritten. A merge touching 0.1% of a 100 TB
-    * table rewrites ~0.1% of it, not the table. The driver holds only
-    * the dir-name list (O(commits)).
+    * The TOUCHED dirs come from one key-column scan semi-joined to the
+    * source keys ([[touchedDirs]]); only their rows are rewritten, so a
+    * merge touching 0.1% of a 100 TB table rewrites ~0.1% of it. A merge
+    * touching nothing still commits its inserts as a new version.
     *
-    * Concurrency: first-writer-wins serializable — the commit installs
-    * only if the table is still at the snapshot the merge read
-    * (otherwise [[java.util.ConcurrentModificationException]]; rerun
-    * the merge on the new snapshot). Returns the committed version.
-    *
-    * `idempotencyKey` gives merge the same exactly-once re-delivery
-    * contract as [[commit]]: a re-offered merge whose keyed dir is
-    * already referenced by a committed manifest is a no-op returning
-    * the original version (what a streaming upsert sink needs —
-    * foreachBatch is at-least-once). Keyed merges are for sequential
-    * re-delivery, not concurrent writers sharing a key.
+    * `idempotencyKey`: exactly-once re-delivery as for [[commit]]
+    * ([[redelivered]]) — what a streaming upsert sink needs, since
+    * foreachBatch is at-least-once; not for concurrent writers.
     *
     * `updateSet` switches matched rows from whole-row replacement to
     * COLUMN-LEVEL assignment (`WHEN MATCHED THEN UPDATE SET col =
@@ -971,23 +1030,14 @@ object VersionedTable {
     * and unassigned columns keep the target's value. Unmatched source
     * rows still INSERT whole rows; `deleteMatched` still deletes. On
     * an EMPTY table updateSet is vacuously inapplicable (every row
-    * inserts). */
+    * inserts). Returns the committed version. */
   def merge(spark: SparkSession, root: String, source: DataFrame,
       keys: Seq[String],
       deleteMatched: Option[org.apache.spark.sql.Column] = None,
       idempotencyKey: Option[String] = None,
       updateSet: Option[Seq[(String, org.apache.spark.sql.Column)]] = None)
       : Long = {
-    idempotencyKey.foreach { k =>
-      val f = fs(spark, root)
-      val dir = s"data/k-$k"
-      val already = versions(spark, root).find(v =>
-        // dirKey identity — same clone-entry caveat as [[commit]]'s check
-        readManifest(f, root, v).exists(_.exists(dirKey(_) == dir)))
-      already.foreach(v => return v)
-      // crash orphan from a previous attempt: unreferenced, rewrite
-      f.delete(new Path(root, dir), true)
-    }
+    redelivered(spark, root, idempotencyKey).foreach(v => return v)
     versions(spark, root).lastOption match {
       case None => // empty table: nothing matches, every row inserts
         commit(spark, root, source, idempotencyKey = idempotencyKey)
@@ -1009,142 +1059,104 @@ object VersionedTable {
       : Long = {
     import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "merge needs at least one key column")
-    val f = fs(spark, root)
-    val dirs = readManifest(f, root, baseV).get
-    // every target read below goes through the snapshot's RECORDED
-    // schema: after an additive evolution a touched-dir set mixing
-    // pre- and post-evolution dirs (or consisting only of older,
-    // narrower dirs) must read — and REWRITE — the full table schema,
-    // or the rewrite silently drops the evolved column's data
-    val tableSchema = schemaOfVersion(spark, root, baseV, dirs)
-    // source alignment contract: extra source columns are REJECTED
-    // (merge never evolves the schema — evolve via commit(mergeSchema)
-    // first), missing columns null-fill — a merge replaces matched
-    // rows WHOLESALE, so a source lacking an evolved column upserts
-    // NULL for it, and a pure-insert batch predating an evolution
-    // keeps committing (it reads back null-filled, same as read())
-    // all alignment is case-INSENSITIVE (Spark's default resolution):
-    // a source column named ID for table column id is the same column,
-    // not an extra — matching the INSERT BY NAME and updateSet checks
-    val srcCols = source.columns.toSet
-    val extraSrc = srcCols.filterNot(c =>
-      tableSchema.fieldNames.exists(_.equalsIgnoreCase(c)))
-    require(extraSrc.isEmpty,
-      s"merge source carries column(s) [${extraSrc.mkString(", ")}] " +
-        "not in the table schema — evolve via commit(mergeSchema = " +
-        "true) first")
-    val missingKeys = keys.filterNot(k =>
-      srcCols.exists(_.equalsIgnoreCase(k)))
-    require(missingKeys.isEmpty,
-      s"merge source is missing key column(s) " +
-        s"[${missingKeys.mkString(", ")}]")
-    val alignedSource = source.select(tableSchema.fields.map(fd =>
-      srcCols.find(_.equalsIgnoreCase(fd.name)) match {
-        case Some(c) => col(c).as(fd.name)
-        case None => lit(null).cast(fd.dataType).as(fd.name)
-      }): _*)
-    // NO .distinct(): every consumer is distinct-insensitive — the
-    // left_semi/left_anti probes and the min/max range aggregate give
-    // identical results over a keyed bag — and the distinct cost a
-    // full exchange + two aggregates inside both the touched-dir scan
-    // job and the rewrite job's plan
-    val srcKeys = alignedSource.select(keys.map(col): _*)
-    // stats sidecars first: dirs whose key range can't intersect the
-    // source's are never opened at all (manifest-level data skipping).
-    // Range pruning costs one source-range aggregate job, which only
-    // pays for itself when there are enough dirs to skip — on a small
-    // manifest the touched-dir scan below prunes exactly at the same
-    // cost, so the sidecar pass is skipped entirely (at 100 TB the
-    // manifest is long and the pruning is what keeps the key scan off
-    // most of the table).
-    val candidates =
-      if (dirs.size <= 8) dirs
-      else pruneDirsByKeyRange(spark, root, dirs, srcKeys, keys)
-    // then one key-column-pruned scan over the candidates → touched dirs
-    val touched =
-      if (candidates.isEmpty) Set.empty[String]
-      else graft.Engine.label(spark, "vtab merge: touched-dir scan")(
-        readDirsAs(spark, root, tableSchema, candidates)
-          .select(keys.map(col): _*)
-          .withColumn("__dir",
-            regexp_extract(input_file_name(), "/(data/[^/]+)/", 1))
-          .join(srcKeys, keys, "left_semi")
-          .select("__dir").distinct().collect().map(_.getString(0)).toSet)
-    // dirKey matching: shallow-clone entries are absolute source paths
-    val untouched = dirs.filterNot(d => touched(dirKey(d)))
-    val target =
-      if (touched.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
-      else readDirsAs(spark, root, tableSchema,
-        dirs.filter(d => touched(dirKey(d))))
-    val targetKeys = target.select(keys.map(col): _*) // semi/anti only
-    val keptTarget = target.join(srcKeys, keys, "left_anti")
-    // WHEN MATCHED AND c THEN DELETE deletes only where c is TRUE: a
-    // NULL verdict falls through to the update clause (filter(!c)
-    // would silently delete NULL-verdict rows — same three-valued
-    // hazard as deleteWhere)
-    val updates = updateSet match {
-      case None => // whole-row replacement (UPDATE SET *)
-        val matchedSrc = alignedSource.join(targetKeys, keys, "left_semi")
-        deleteMatched.fold(matchedSrc)(c =>
-            matchedSrc.filter(!coalesce(c, lit(false))))
-          .select(target.columns.map(col): _*)
-      case Some(assigns) => // column-level UPDATE SET col = expr
-        val byLower = assigns.map { case (k, v) =>
-          k.toLowerCase -> v }.toMap
-        require(byLower.size == assigns.size,
-          "merge updateSet: duplicate assignment targets")
-        val unknown = assigns.map(_._1).filterNot(k =>
-          tableSchema.fieldNames.exists(_.equalsIgnoreCase(k)))
-        require(unknown.isEmpty,
-          s"merge updateSet: target(s) [${unknown.mkString(", ")}] " +
-            "are not columns of the table")
-        // RAW source columns under alias `s` (a ref to a column the
-        // source doesn't carry must be an analysis ERROR, which the
-        // null-filled aligned frame would mask), matched target rows
-        // under alias `t`
-        val srcMatched = source.join(targetKeys, keys, "left_semi")
-        val srcUpd = deleteMatched.fold(srcMatched)(c =>
-          srcMatched.filter(!coalesce(c, lit(false))))
-        val joined = target.alias("t").join(srcUpd.alias("s"),
-          keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _),
-          "inner")
-        joined.select(tableSchema.fields.map { fd =>
-          byLower.get(fd.name.toLowerCase) match {
-            case Some(e) => e.cast(fd.dataType).as(fd.name)
-            case None => col(s"t.${fd.name}").as(fd.name)
-          }
-        }.toSeq: _*)
+    copyOnWrite(spark, root, "merge", baseV, enforce = true,
+        idempotencyKey) { b =>
+      val tableSchema = b.schema
+      // source alignment, case-INSENSITIVE like Spark's resolution:
+      // extra source columns are REJECTED (merge never evolves the
+      // schema), missing ones null-fill — matched rows are replaced
+      // WHOLESALE, so a source lacking an evolved column upserts NULL
+      val srcCols = source.columns.toSet
+      val extraSrc = srcCols.filterNot(c =>
+        tableSchema.fieldNames.exists(_.equalsIgnoreCase(c)))
+      require(extraSrc.isEmpty,
+        s"merge source carries column(s) [${extraSrc.mkString(", ")}] " +
+          "not in the table schema — evolve via commit(mergeSchema = " +
+          "true) first")
+      val missingKeys = keys.filterNot(k =>
+        srcCols.exists(_.equalsIgnoreCase(k)))
+      require(missingKeys.isEmpty,
+        s"merge source is missing key column(s) " +
+          s"[${missingKeys.mkString(", ")}]")
+      val alignedSource = source.select(tableSchema.fields.map(fd =>
+        srcCols.find(_.equalsIgnoreCase(fd.name)) match {
+          case Some(c) => col(c).as(fd.name)
+          case None => lit(null).cast(fd.dataType).as(fd.name)
+        }): _*)
+      // NO .distinct(): the semi/anti probes and the range aggregate
+      // are distinct-insensitive, and it would cost an exchange + two
+      // aggregates in both the touched-dir scan and the rewrite
+      val srcKeys = alignedSource.select(keys.map(col): _*)
+      // stats sidecars first: dirs whose key range can't meet the
+      // source's are never opened. That costs one source-range job, so
+      // only a manifest long enough to skip dirs pays for it; on a
+      // short one the touched-dir scan prunes as well at no extra job
+      val candidates =
+        if (b.dirs.size <= 8) b.dirs
+        else pruneDirsByKeyRange(spark, root, b.dirs, srcKeys, keys)
+      // then one key-column-pruned scan over the candidates
+      val touched =
+        if (candidates.isEmpty) (_: String) => false
+        else touchedDirs(spark, "merge",
+          b.read(candidates).select(keys.map(col): _*))(
+          _.join(srcKeys, keys, "left_semi"))
+      val (hit, kept) = b.dirs.partition(touched)
+      val target =
+        if (hit.isEmpty)
+          spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
+        else b.read(hit)
+      val targetKeys = target.select(keys.map(col): _*) // semi/anti only
+      val keptTarget = target.join(srcKeys, keys, "left_anti")
+      // WHEN MATCHED AND c THEN DELETE deletes only where c is TRUE: a
+      // NULL verdict falls through to the update clause (filter(!c)
+      // would silently delete NULL-verdict rows — same three-valued
+      // hazard as deleteWhere)
+      val updates = updateSet match {
+        case None => // whole-row replacement (UPDATE SET *)
+          val matchedSrc = alignedSource.join(targetKeys, keys, "left_semi")
+          deleteMatched.fold(matchedSrc)(c =>
+              matchedSrc.filter(!coalesce(c, lit(false))))
+            .select(target.columns.map(col): _*)
+        case Some(assigns) => // column-level UPDATE SET col = expr
+          val byLower = assigns.map { case (k, v) =>
+            k.toLowerCase -> v }.toMap
+          require(byLower.size == assigns.size,
+            "merge updateSet: duplicate assignment targets")
+          val unknown = assigns.map(_._1).filterNot(k =>
+            tableSchema.fieldNames.exists(_.equalsIgnoreCase(k)))
+          require(unknown.isEmpty,
+            s"merge updateSet: target(s) [${unknown.mkString(", ")}] " +
+              "are not columns of the table")
+          // RAW source columns under alias `s` (a ref to a column the
+          // source doesn't carry must be an analysis ERROR, which the
+          // null-filled aligned frame would mask), matched target rows
+          // under alias `t`
+          val srcMatched = source.join(targetKeys, keys, "left_semi")
+          val srcUpd = deleteMatched.fold(srcMatched)(c =>
+            srcMatched.filter(!coalesce(c, lit(false))))
+          val joined = target.alias("t").join(srcUpd.alias("s"),
+            keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _),
+            "inner")
+          joined.select(tableSchema.fields.map { fd =>
+            byLower.get(fd.name.toLowerCase) match {
+              case Some(e) => e.cast(fd.dataType).as(fd.name)
+              case None => col(s"t.${fd.name}").as(fd.name)
+            }
+          }.toSeq: _*)
+      }
+      val inserts = alignedSource.join(targetKeys, keys, "left_anti")
+      Some((kept, keptTarget
+        .unionByName(updates)
+        .unionByName(inserts.select(target.columns.map(col): _*))))
     }
-    val inserts = alignedSource.join(targetKeys, keys, "left_anti")
-    val newRows = keptTarget
-      .unionByName(updates)
-      .unionByName(inserts.select(target.columns.map(col): _*))
-    val newDir = "data/" + idempotencyKey.map(k => s"k-$k")
-      .getOrElse(java.util.UUID.randomUUID().toString)
-    // constraints of baseV enforced on the rewrite (upserted rows can
-    // violate); the first-writer-wins check below means the set cannot
-    // have moved between validation and install
-    val consBase = constraintsOf(spark, root, Some(baseV))
-    writeDataDir(spark, root, newDir, newRows, consBase)
-    // schema preserved: the closure's first-writer-wins check already
-    // guarantees the table hasn't moved (so it can't have evolved)
-    commitManifest(spark, root, latest => {
-      if (!latest.contains(baseV))
-        throw new java.util.ConcurrentModificationException(
-          s"merge read v$baseV but table is now at v$latest — rerun")
-      untouched :+ newDir
-    }, _ => Some(tableSchema), _ => consBase, op = "merge")
   }
 
-  /** Predicate DELETE with the same dir-granularity copy-on-write as
-    * [[merge]]: dirs containing no matching row are kept untouched;
-    * matching dirs are rewritten without the matching rows. The
-    * predicate itself finds the touched dirs via one column-pruned
-    * scan, so a selective delete on a 100 TB table rewrites only the
-    * dirs it hits. First-writer-wins. Returns the new version (or the
-    * current one when nothing matches — no empty commit).
+  /** Predicate DELETE: a [[copyOnWrite]] rewrite of exactly the dirs
+    * holding a matching row, found by [[touchedDirs]] with the
+    * predicate, so a selective delete on a 100 TB table rewrites only
+    * the dirs it hits. Returns the new version, or the current one
+    * when nothing matches (no empty commit).
     *
     * SQL three-valued semantics: only rows where `cond` is TRUE are
     * deleted — a NULL verdict KEEPS the row. (`filter(!cond)` would
@@ -1157,9 +1169,10 @@ object VersionedTable {
       df.filter(!coalesce(cond, lit(false))))
   }
 
-  /** Predicate UPDATE (`SET col = expr` for each assignment), dir-
-    * granularity copy-on-write like [[deleteWhere]]. Assignment
-    * expressions may reference any table column.
+  /** Predicate UPDATE (`SET col = expr` for each assignment), the same
+    * touched-dir [[copyOnWrite]] rewrite as [[deleteWhere]] — no commit
+    * when nothing matches. Assignment expressions may reference any
+    * table column.
     *
     * SQL simultaneous-assignment semantics: every RHS evaluates
     * against the PRE-update row — all assignments land in ONE select
@@ -1188,51 +1201,27 @@ object VersionedTable {
     }
   }
 
-  /** Shared copy-on-write core of [[deleteWhere]]/[[updateWhere]]:
-    * find the data dirs with rows matching `cond`, apply `rewrite` to
-    * exactly those dirs' rows, commit untouched dirs + the rewrite as
-    * the next version iff the table hasn't moved. */
+  /** [[deleteWhere]]/[[updateWhere]] on the latest snapshot: apply
+    * `rewrite` to the rows of the dirs holding a row matching `cond`,
+    * keep the rest; no commit when no dir matches. */
   private def rewriteTouched(spark: SparkSession, root: String,
       cond: org.apache.spark.sql.Column, op: String)(
-      rewrite: DataFrame => DataFrame): Long = {
-    import org.apache.spark.sql.functions._
-    val f = fs(spark, root)
-    val baseV = versions(spark, root).lastOption.getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
-    val dirs = readManifest(f, root, baseV).get
-    // snapshot-schema reads, as in merge: a rewrite spanning an
-    // additive evolution must carry the full table schema through
-    val tableSchema = schemaOfVersion(spark, root, baseV, dirs)
-    val touched = graft.Engine.label(spark, s"vtab $op: touched-dir scan")(
-      readDirsAs(spark, root, tableSchema, dirs)
-        .filter(cond)
-        .select(regexp_extract(input_file_name(), "/(data/[^/]+)/", 1)
-          .as("__dir"))
-        .distinct().collect().map(_.getString(0)).toSet)
-    if (touched.isEmpty) return baseV
-    // match by dirKey, not raw entry: a shallow clone's entries are
-    // absolute source paths while input_file_name reports data/<name>
-    val untouched = dirs.filterNot(d => touched(dirKey(d)))
-    val newRows = rewrite(
-      readDirsAs(spark, root, tableSchema,
-        dirs.filter(d => touched(dirKey(d)))))
-    require(normalize(newRows.schema) == tableSchema,
-      s"rewrite changed the table schema (" +
-        s"${normalize(newRows.schema).catalogString} vs " +
-        s"${tableSchema.catalogString}) — an UPDATE may not retype or " +
-        "add columns; evolve via commit(mergeSchema = true) first")
-    val newDir = "data/" + java.util.UUID.randomUUID().toString
-    // UPDATE can SET a column into violation — enforce baseV's
-    // constraints on the rewrite (first-writer-wins pins the set)
-    val consBase = constraintsOf(spark, root, Some(baseV))
-    writeDataDir(spark, root, newDir, newRows, consBase)
-    commitManifest(spark, root, latest => {
-      if (!latest.contains(baseV))
-        throw new java.util.ConcurrentModificationException(
-          s"rewrite read v$baseV but table is now at v$latest — rerun")
-      untouched :+ newDir
-    }, _ => Some(tableSchema), _ => consBase, op = op)
-  }
+      rewrite: DataFrame => DataFrame): Long =
+    copyOnWrite(spark, root, op, latestVersion(spark, root),
+        enforce = true) { b =>
+      val (hit, kept) = b.dirs.partition(
+        touchedDirs(spark, op, b.read(b.dirs).filter(cond))(identity))
+      if (hit.isEmpty) None
+      else {
+        val newRows = rewrite(b.read(hit))
+        require(normalize(newRows.schema) == b.schema,
+          s"rewrite changed the table schema (" +
+            s"${normalize(newRows.schema).catalogString} vs " +
+            s"${b.schema.catalogString}) — an UPDATE may not retype or " +
+            "add columns; evolve via commit(mergeSchema = true) first")
+        Some((kept, newRows))
+      }
+    }
 
   /** Row-level CHANGES between two committed versions (CDC read):
     * `(change, <row>)` with `change` ∈ insert|delete; an update
@@ -1321,8 +1310,7 @@ object VersionedTable {
         // working columns get a prefix no table column starts with
         // (case-insensitively), so none can replace a user column
         val cols = a.columns.toSeq
-        val pre = Iterator.iterate("__cdc")("_" + _).find(p =>
-          !cols.exists(_.toLowerCase.startsWith(p.toLowerCase))).get
+        val pre = graft.Engine.freshPrefix("__cdc", cols)
         val (sign, net, n, c) =
           (s"${pre}_sign", s"${pre}_net", s"${pre}_n", s"${pre}_c")
         a.withColumn(sign, lit(1L))
@@ -1342,78 +1330,40 @@ object VersionedTable {
 
   /** Rewrite the latest snapshot's dirs into ONE data dir (the
     * small-file compaction a log-of-snapshots table accretes toward
-    * after many append/merge commits), committed as a new version with
-    * identical content — history stays time-travelable. `nFiles > 0`
-    * additionally coalesces the output file count. No-op (returns the
-    * current version) when the snapshot is already one dir and no
-    * file-count target is given. First-writer-wins like [[merge]]. */
-  def compact(spark: SparkSession, root: String, nFiles: Int = 0): Long = {
-    val f = fs(spark, root)
-    val baseV = versions(spark, root).lastOption.getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
-    val dirs = readManifest(f, root, baseV).get
-    if (dirs.size <= 1 && nFiles <= 0) return baseV
-    // snapshot-schema read: compacting an additively-evolved table
-    // must write the UNION schema, not an arbitrary first footer's —
-    // a narrow footer winning would erase the evolved column table-wide
-    val tableSchema = schemaOfVersion(spark, root, baseV, dirs)
-    val snap = readDirsAs(spark, root, tableSchema, dirs)
-    val out = if (nFiles > 0) snap.coalesce(nFiles) else snap
-    val newDir = "data/" + java.util.UUID.randomUUID().toString
-    // content-identical rewrite of already-valid rows: constraints
-    // carried, not re-enforced (validation would be a free metric but
-    // a false rejection here could wedge maintenance; trust the gate
-    // that admitted the rows)
-    val consBase = constraintsOf(spark, root, Some(baseV))
-    writeDataDir(spark, root, newDir, out)
-    commitManifest(spark, root, latest => {
-      if (!latest.contains(baseV))
-        throw new java.util.ConcurrentModificationException(
-          s"compact read v$baseV but table is now at v$latest — rerun")
-      Seq(newDir)
-    }, _ => Some(tableSchema), _ => consBase, op = "compact")
-  }
+    * after many append/merge commits) — a [[copyOnWrite]] rewrite with
+    * identical content that keeps no old dir; history stays
+    * time-travelable. `nFiles > 0` additionally coalesces the output
+    * file count. No-op (returns the current version) when the snapshot
+    * is already one dir and no file-count target is given. */
+  def compact(spark: SparkSession, root: String, nFiles: Int = 0): Long =
+    copyOnWrite(spark, root, "compact", latestVersion(spark, root),
+        enforce = false) { b =>
+      if (b.dirs.size <= 1 && nFiles <= 0) None
+      else {
+        val snap = b.read(b.dirs)
+        Some((Nil, if (nFiles > 0) snap.coalesce(nFiles) else snap))
+      }
+    }
 
-  /** OPTIMIZE ZORDER: rewrite the latest snapshot into one data dir
-    * laid out on the N-D Z-curve of `zCols` — [[compact]] plus the
-    * Delta `OPTIMIZE ... ZORDER BY` idea on the manifest protocol.
-    * Content-identical new version; range predicates on any curve
-    * column then cluster into few files, which file-level min/max
-    * pruning ([[Layout.buildFileStats]]/[[Layout.statsRangeScan]]),
+  /** OPTIMIZE ZORDER: [[compact]] with the rows laid out on the N-D
+    * Z-curve of `zCols` ([[Layout.zOrdered]]: a range exchange on the
+    * z-value + per-partition sort, fully parallel at any table size) —
+    * the Delta `OPTIMIZE ... ZORDER BY` idea as a [[copyOnWrite]]
+    * rewrite. Content-identical new version; range predicates on any
+    * curve column then cluster into few files, which file-level
+    * min/max pruning ([[Layout.buildFileStats]]/[[Layout.statsRangeScan]]),
     * the per-dir stats sidecars, and parquet row-group stats all
     * exploit. Per-dimension resolution is `bits` capped so the word
     * fits 63 bits (more columns = coarser per-column, the standard
-    * multi-column Z-order tradeoff). The rewrite is a range exchange
-    * on the z-value + per-partition sort — fully parallel at any
-    * table size. First-writer-wins like [[merge]]. */
+    * multi-column Z-order tradeoff). */
   def optimizeZOrder(spark: SparkSession, root: String,
       zCols: Seq[String], nFiles: Int, bits: Int = 20): Long = {
-    import org.apache.spark.sql.functions.col
     require(zCols.nonEmpty, "optimizeZOrder needs at least one column")
-    val f = fs(spark, root)
-    val baseV = versions(spark, root).lastOption.getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
-    val dirs = readManifest(f, root, baseV).get
-    // snapshot-schema read — same reason as [[compact]]
-    val tableSchema = schemaOfVersion(spark, root, baseV, dirs)
-    val snap = readDirsAs(spark, root, tableSchema, dirs)
-    val perDim = math.min(bits, 63 / zCols.size)
-    val ordered = snap
-      .withColumn("__z",
-        Layout.zValueN(zCols.map(col), perDim))
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-    val newDir = "data/" + java.util.UUID.randomUUID().toString
-    // content-identical rewrite: carry constraints, same as [[compact]]
-    val consBase = constraintsOf(spark, root, Some(baseV))
-    writeDataDir(spark, root, newDir, ordered)
-    commitManifest(spark, root, latest => {
-      if (!latest.contains(baseV))
-        throw new java.util.ConcurrentModificationException(
-          s"optimize read v$baseV but table is now at v$latest — rerun")
-      Seq(newDir)
-    }, _ => Some(tableSchema), _ => consBase, op = "optimize")
+    copyOnWrite(spark, root, "optimize", latestVersion(spark, root),
+        enforce = false) { b =>
+      Some((Nil, Layout.zOrdered(b.read(b.dirs), zCols, nFiles,
+        math.min(bits, 63 / zCols.size))))
+    }
   }
 
   /** Incremental CDC consumer: process every version committed since

@@ -477,14 +477,11 @@ object Warehouse {
         col(c).cast(updates.schema(c).dataType)): _*)
     val merged = upsertByKey(existing, updates, keys, versionCol)
     // crash safety (same protocol as [[compactSmallFiles]]): the merged
-    // partitions land FULLY in a side dir first; the manifest is the
-    // commit point; the swap replaces whole partition directories via
-    // rename (atomic per partition on HDFS/local). A writer killed at
-    // ANY point either left the target untouched (no committed
-    // manifest → recovery discards the side dir) or is rolled FORWARD
-    // by the next merge/recoverMerge — never a half-overwritten
-    // partition, which is what dynamic-partition overwrite risks when
-    // the deleting-and-rewriting job dies mid-partition.
+    // partitions land FULLY in a side dir; the manifest is the commit
+    // point ([[rollForward]]); the swap renames whole partition dirs
+    // (atomic per partition on HDFS/local) — never a half-overwritten
+    // partition, which dynamic-partition overwrite risks when its
+    // deleting-and-rewriting job dies mid-partition.
     val tmp = path.stripSuffix("/") + "__merge_tmp"
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
     merged.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(tmp)
@@ -517,35 +514,11 @@ object Warehouse {
 
   /** Roll forward an interrupted partitioned-merge swap, if any —
     * called on entry by every merge, callable standalone after a crash.
-    * Same torn-write rules as [[recoverCompaction]]: a manifest without
-    * a matching `#END:<n>` terminator never committed, so the side dir
-    * is discarded and the target keeps its pre-merge content. Returns
-    * true only when a committed swap was rolled forward. */
-  def recoverMerge(spark: SparkSession, dir: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path, mergeManifestName + ".tmp"),
-      false)
-    val mf = new org.apache.hadoop.fs.Path(path, mergeManifestName)
-    if (!fs.exists(mf)) return false
-    val in = fs.open(mf)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.split("\n").filter(_.nonEmpty)
-    val valid = lines.length >= 2 &&
-      lines.last.startsWith(manifestEnd) &&
-      lines.last.stripPrefix(manifestEnd).toIntOption
-        .contains(lines.length - 2)
-    if (!valid) {
-      fs.delete(mf, false)
-      fs.delete(new org.apache.hadoop.fs.Path(
-        dir.stripSuffix("/") + "__merge_tmp"), true)
-      return false
-    }
-    completeMergeSwap(fs, path, lines.head,
-      lines.slice(1, lines.length - 1).toSeq)
-    true
-  }
+    * Same torn-write rules as [[recoverCompaction]] ([[rollForward]]).
+    * Returns true only when a committed swap was rolled forward. */
+  def recoverMerge(spark: SparkSession, dir: String): Boolean =
+    rollForward(spark, dir, mergeManifestName, "__merge_tmp")(
+      completeMergeSwap)
 
   /** SCD2 merge (reference docs/数据模型.md:41-46): close out changed
     * rows (set `valid_to`), append new versions open-ended; change rows
@@ -676,21 +649,24 @@ object Warehouse {
     fs.delete(new org.apache.hadoop.fs.Path(target, manifestName), false)
   }
 
-  /** Roll forward an interrupted compaction swap, if any.
-    *
-    * A manifest missing its `#END:<n>` terminator (or whose input count
-    * disagrees) is a torn write — the swap never committed, and acting
-    * on a truncated input list would delete files without installing
-    * their replacement. Treat it as "swap not started": drop the bad
-    * manifest (and any leftover manifest temp / output tmp dir), keep
-    * every input. Returns true only when a committed swap was rolled
-    * forward. */
-  def recoverCompaction(spark: SparkSession, dir: String): Boolean = {
+  /** Roll forward an interrupted compaction swap, if any
+    * ([[rollForward]]). Returns true only when a committed swap was
+    * rolled forward. */
+  def recoverCompaction(spark: SparkSession, dir: String): Boolean =
+    rollForward(spark, dir, manifestName, "__compact_tmp")(completeSwap)
+
+  /** The recovery of both side-dir swaps (manifest `name`, side dir
+    * `<dir><tmpSuffix>`). A manifest without a matching `#END:<n>` is
+    * torn — never committed, and a truncated list would delete data
+    * without its replacement — so it and the side dir are dropped and
+    * the target kept; a complete one is rolled FORWARD by `complete`. */
+  private def rollForward(spark: SparkSession, dir: String, name: String,
+      tmpSuffix: String)(complete: (org.apache.hadoop.fs.FileSystem,
+        org.apache.hadoop.fs.Path, String, Seq[String]) => Unit): Boolean = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path, manifestName + ".tmp"),
-      false)
-    val mf = new org.apache.hadoop.fs.Path(path, manifestName)
+    fs.delete(new org.apache.hadoop.fs.Path(path, name + ".tmp"), false)
+    val mf = new org.apache.hadoop.fs.Path(path, name)
     if (!fs.exists(mf)) return false
     val in = fs.open(mf)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
@@ -703,10 +679,10 @@ object Warehouse {
     if (!valid) {
       fs.delete(mf, false)
       fs.delete(new org.apache.hadoop.fs.Path(
-        dir.stripSuffix("/") + "__compact_tmp"), true)
+        dir.stripSuffix("/") + tmpSuffix), true)
       return false
     }
-    completeSwap(fs, path, lines.head, lines.slice(1, lines.length - 1).toSeq)
+    complete(fs, path, lines.head, lines.slice(1, lines.length - 1).toSeq)
     true
   }
 

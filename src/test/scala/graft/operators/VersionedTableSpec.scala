@@ -1127,4 +1127,40 @@ class VersionedTableSpec extends SparkSuite {
     }
     assert(ex.getMessage.contains("ascend"))
   }
+
+  test("merge keyed on a string column named __dir upserts") {
+    // the touched-dir scan tags rows with a working dir column; a key
+    // of the same name must not be replaced by it
+    val root = tmpDir("vtabdirkey_s")
+    VersionedTable.commit(spark, root,
+      Seq(("k1", "a"), ("k2", "b")).toDF("__dir", "v"))
+    VersionedTable.merge(spark, root,
+      Seq(("k1", "A")).toDF("__dir", "v"), Seq("__dir"))
+    assert(VersionedTable.read(spark, root).collect()
+      .map(r => (r.getString(0), r.getString(1))).sorted.toSeq ==
+      Seq(("k1", "A"), ("k2", "b")))
+  }
+
+  test("merge keyed on a bigint column named __dir upserts") {
+    val root = tmpDir("vtabdirkey_l")
+    VersionedTable.commit(spark, root,
+      Seq((1L, "a"), (2L, "b")).toDF("__dir", "v"))
+    VersionedTable.merge(spark, root,
+      Seq((1L, "A")).toDF("__dir", "v"), Seq("__dir"))
+    assert(VersionedTable.read(spark, root).collect()
+      .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq ==
+      Seq((1L, "A"), (2L, "b")))
+  }
+
+  test("optimizeZOrder keeps a user column named __z") {
+    val root = tmpDir("vtabzcol")
+    VersionedTable.commit(spark, root,
+      Seq((1L, 2L, "keep1"), (3L, 4L, "keep2")).toDF("x", "y", "__z"))
+    VersionedTable.commit(spark, root,
+      Seq((5L, 6L, "keep3")).toDF("x", "y", "__z"))
+    VersionedTable.optimizeZOrder(spark, root, Seq("x", "y"), nFiles = 2)
+    assert(VersionedTable.read(spark, root).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted.toSeq ==
+      Seq((1L, 2L, "keep1"), (3L, 4L, "keep2"), (5L, 6L, "keep3")))
+  }
 }
