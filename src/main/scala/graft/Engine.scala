@@ -252,8 +252,6 @@ object Engine {
   private[graft] def footerSchema(spark: SparkSession, path: String)
       : Option[(org.apache.spark.sql.types.StructType,
         org.apache.parquet.schema.MessageType)] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.spark.sql.types.{DataType, StructType}
     val conf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(path)
@@ -264,22 +262,49 @@ object Engine {
       if (!st.isDirectory) Array(st)
       else fs.listStatus(p).filterNot(_.getPath.getName.matches("[._].*"))
     if (files.exists(_.isDirectory)) return None
-    files.sortBy(_.getPath.getName).headOption.map { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
-      try {
-        val meta = reader.getFooter.getFileMetaData
-        val fromSpark = Option(meta.getKeyValueMetaData
-            .get("org.apache.spark.sql.parquet.row.metadata"))
-          .flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
-          .collect { case t: StructType => t }
-        val schema = fromSpark.getOrElse(
-          new org.apache.spark.sql.execution.datasources.parquet
-            .ParquetToSparkSchemaConverter(spark.sessionState.conf)
-            .convert(meta.getSchema))
-        (org.apache.spark.sql.graft.Bridge.asNullable(schema),
-          meta.getSchema)
-      } finally reader.close()
+    files.sortBy(_.getPath.getName).headOption.map(withFooter(_, conf) { reader =>
+      val meta = reader.getFooter.getFileMetaData
+      val fromSpark = Option(meta.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        .flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+        .collect { case t: StructType => t }
+      val schema = fromSpark.getOrElse(
+        new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetToSparkSchemaConverter(spark.sessionState.conf)
+          .convert(meta.getSchema))
+      (org.apache.spark.sql.graft.Bridge.asNullable(schema),
+        meta.getSchema)
+    })
+  }
+
+  /** `read` over one parquet file's footer, on the driver. */
+  private def withFooter[T](f: org.apache.hadoop.fs.FileStatus,
+      conf: org.apache.hadoop.conf.Configuration)(
+      read: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+    try read(reader) finally reader.close()
+  }
+
+  /** True when `df` is only Projects and Filters over one parquet file
+    * relation whose footers, read on the driver until their running
+    * total reaches `cap`, count fewer than `cap` rows: then `df` has
+    * fewer than `cap` rows, known without a Spark job. */
+  private[graft] def footerRowsBelow(df: DataFrame, cap: Long): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    def files(p: LogicalPlan): Seq[org.apache.hadoop.fs.FileStatus] = p match {
+      case Project(_, child) => files(child)
+      case Filter(_, child) => files(child)
+      case LogicalRelation(HadoopFsRelation(idx: PartitioningAwareFileIndex,
+          _, _, _, _: ParquetFileFormat, _), _, _, _, _) => idx.allFiles()
+      case _ => Nil
     }
+    val conf = df.sparkSession.sessionState.newHadoopConf()
+    val fs = files(df.queryExecution.analyzed)
+    fs.nonEmpty && fs.iterator.scanLeft(0L)((n, f) =>
+      n + withFooter(f, conf)(_.getRecordCount)).forall(_ < cap)
   }
 
   /** True iff the parquet schema's `ts` column carries an explicit

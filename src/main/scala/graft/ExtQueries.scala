@@ -825,26 +825,20 @@ object ExtQueries {
     aggRouteReady.computeIfAbsent(tbl, _ => {
       s.sql("CREATE DATABASE IF NOT EXISTS dws")
       Warehouse.dropManaged(s, tbl)
-      fact.groupBy("l_returnflag", "l_linestatus", "l_shipdate")
-        .agg(
-          sum(dec2(col("l_quantity"))).as("s_qty"),
-          sum(dec4(col("l_extendedprice") * (lit(1) - col("l_discount"))))
-            .as("s_disc"),
-          count(lit(1)).as("cnt"),
-          count(col("l_quantity")).as("cnt_qty"),
-          min(col("l_quantity")).as("mn_qty"),
-          max(col("l_quantity")).as("mx_qty"))
+      val dims = Seq("l_returnflag", "l_linestatus", "l_shipdate")
+      val measures = Seq(
+        sum(dec2(col("l_quantity"))) -> "s_qty",
+        sum(dec4(col("l_extendedprice") * (lit(1) - col("l_discount"))))
+          -> "s_disc",
+        count(lit(1)) -> "cnt",
+        count(col("l_quantity")) -> "cnt_qty",
+        min(col("l_quantity")) -> "mn_qty",
+        max(col("l_quantity")) -> "mx_qty")
+      val aggs = measures.map { case (c, n) => c.as(n) }
+      fact.groupBy(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
         .write.format("parquet").saveAsTable(tbl)
-      graft.plans.AggRouting.register(fact, s.table(tbl),
-        dims = Seq("l_returnflag", "l_linestatus", "l_shipdate"),
-        measures = Map(
-          sum(dec2(col("l_quantity"))) -> "s_qty",
-          sum(dec4(col("l_extendedprice") * (lit(1) - col("l_discount"))))
-            -> "s_disc",
-          count(lit(1)) -> "cnt",
-          count(col("l_quantity")) -> "cnt_qty",
-          min(col("l_quantity")) -> "mn_qty",
-          max(col("l_quantity")) -> "mx_qty"))
+      graft.plans.AggRouting.register(fact, s.table(tbl), dims,
+        measures.toMap)
       java.lang.Boolean.TRUE
     })
     fact
@@ -1023,15 +1017,13 @@ object ExtQueries {
     aggRouteReady.computeIfAbsent(tbl, _ => {
       s.sql("CREATE DATABASE IF NOT EXISTS dws")
       Warehouse.dropManaged(s, tbl)
-      fact.groupBy("event_type")
-        .agg(bitmapBuild(col("user_id")).as("bm_users"),
-          count(lit(1)).as("cnt"))
+      val measures = Map(bitmapBuild(col("user_id")) -> "bm_users",
+        count(lit(1)) -> "cnt")
+      val aggs = measures.toSeq.map { case (c, n) => c.as(n) }
+      fact.groupBy("event_type").agg(aggs.head, aggs.tail: _*)
         .write.format("parquet").saveAsTable(tbl)
       graft.plans.AggRouting.register(fact, s.table(tbl),
-        dims = Seq("event_type"),
-        measures = Map(
-          bitmapBuild(col("user_id")) -> "bm_users",
-          count(lit(1)) -> "cnt"))
+        Seq("event_type"), measures)
       java.lang.Boolean.TRUE
     })
     fact

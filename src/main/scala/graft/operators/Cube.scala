@@ -1,9 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, HllUnionAgg, Max, Min, Sum}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.Path
+import graft.functions.{Bitmap64, BitmapMergeAgg}
 
 /** Cuboid-lattice materialization — the Kylin cube BUILD, to pair
   * with [[graft.plans.AggRouting]]'s cube ANSWERING (reference
@@ -12,9 +16,8 @@ import org.apache.hadoop.fs.Path
   *
   * The build is Gray et al.'s one-pass CUBE ("Data Cube", ICDE '96):
   * the fact is aggregated ONCE, to the base grain, and every coarser
-  * cuboid is a grouping set of one exact re-aggregation of that base
-  * (sum of sums, min of mins, union of sketches …). The lattice is
-  * one Spark write: its job count does not grow with the cuboid
+  * cuboid is a grouping set of one exact re-aggregation of that
+  * base. The lattice is one Spark write: its job count does not grow with the cuboid
   * count, and at interactive sizes jobs, not bytes, cost the time.
   *
   * Every materialized cuboid is registered as a routing summary
@@ -23,28 +26,46 @@ import org.apache.hadoop.fs.Path
   * build-once / route-everything: the user keeps writing aggregates
   * against the fact table.
   *
-  * Measure kinds are exactly the decomposable set routing accepts;
-  * measure columns of every cuboid are cast to the base aggregate's
-  * declared types, so re-aggregation can't widen decimals.
+  * Measure kinds are the table in [[MKind]]. Every coarser cuboid,
+  * built, derived or maintained, re-aggregates through one step
+  * ([[reaggregate]]) that casts each measure back to the base
+  * aggregate's declared type, so re-aggregation can't widen decimals.
   */
 object Cube {
 
-  sealed trait MKind
-  case object MSum extends MKind
-  case object MCountAll extends MKind
-  case object MCountCol extends MKind
-  case object MMin extends MKind
-  case object MMax extends MKind
-  /** Mergeable approximate-distinct sketch (Datasketches HLL — the
-    * Druid/Kylin sketch measure): the base cuboid stores a serialized
-    * sketch per group; coarser cuboids union the sketches (register
-    * max-merge — associative and lossless over the register state, so
-    * a sketch derived through ANY lattice path estimates identically
-    * to one built from the fact). Routing never uses these — sketch
-    * estimates are approximate, and routing promises exactness — but
-    * any cuboid can answer approx-distinct at its grain by
-    * `hll_sketch_estimate` without rescanning anything. */
-  case object MHllSketch extends MKind
+  /** The measure table: each kind's fact-side aggregate, exact combine
+    * over stored partials, routability, and CDC retraction (a change
+    * row's signed contribution from the ±1 sign and the aggregate's
+    * inputs; retractable kinds combine by sum). A new measure kind is
+    * one entry; [[graft.plans.AggRouting.kindOf]] maps aggregates here. */
+  sealed abstract class MKind(
+      val aggregate: Column => Column,
+      val combine: Expression => AggregateFunction,
+      val routable: Boolean = true,
+      val retract: Option[(Column, Seq[Column]) => Column] = None) {
+    /** [[combine]] as a DataFrame aggregate over a stored column. */
+    def combined(stored: Column): Column = Bridge.column(
+      combine(Bridge.expression(stored)).toAggregateExpression())
+  }
+  case object MSum extends MKind(sum(_), Sum(_),
+    retract = Some((sign, in) => sign * in.head))
+  case object MCountAll extends MKind(_ => count(lit(1)), Sum(_),
+    retract = Some((sign, _) => sign))
+  /** count(c1, …, cn): a row counts only when every input is non-null. */
+  case object MCountCol extends MKind(count(_), Sum(_),
+    retract = Some((sign, in) =>
+      when(in.map(_.isNotNull).reduce(_ && _), sign).otherwise(lit(0L))))
+  case object MMin extends MKind(min(_), Min(_))
+  case object MMax extends MKind(max(_), Max(_))
+  /** Exact distinct-id set (the Kylin precise count-distinct measure):
+    * OR-merge combines it, and COUNT(DISTINCT x) routes onto it. */
+  case object MBitmap extends MKind(Bitmap64.bitmapBuild, BitmapMergeAgg(_))
+  /** Datasketches HLL (the Druid/Kylin sketch measure): sketches
+    * union losslessly over register state, so any lattice path
+    * estimates as a fact build does; approximate, so never routed —
+    * `hll_sketch_estimate` answers approx-distinct at any cuboid. */
+  case object MHllSketch extends MKind(hll_sketch_agg(_),
+    new HllUnionAgg(_), routable = false)
 
   /** One cube measure: `name` is the cuboid column; `input` the fact
     * expression (ignored for MCountAll). */
@@ -53,24 +74,26 @@ object Cube {
     /** Aggregate from raw fact rows. */
     def base: Column = canonical.as(name)
     /** Exact re-aggregate from a parent cuboid's column. */
-    def combine: Column = (kind match {
-      case MSum | MCountAll | MCountCol => sum(col(name))
-      case MMin => min(col(name))
-      case MMax => max(col(name))
-      case MHllSketch => hll_union_agg(col(name))
-    }).as(name)
+    def combine: Column = kind.combined(col(name)).as(name)
     /** Canonical fact-side aggregate (route registration + delta
       * maintenance both compare against this). */
-    def canonical: Column = kind match {
-      case MSum => sum(input)
-      case MCountAll => count(lit(1))
-      case MCountCol => count(input)
-      case MMin => min(input)
-      case MMax => max(input)
-      case MHllSketch => hll_sketch_agg(input)
+    def canonical: Column = kind.aggregate(input)
+    def routable: Boolean = kind.routable
+  }
+
+  /** The one exact re-aggregation of stored partials ([[derive]], the
+    * maintenance fold, [[build]]'s grouping sets): `group` groups
+    * `stored`, `lead` aggregates come first, and each measure combines
+    * by its kind and is cast back to its stored type (a re-summed
+    * decimal would otherwise gain 10 digits per lattice level). */
+  private[graft] def reaggregate(stored: DataFrame, measures: Seq[MeasureDef],
+      group: DataFrame => RelationalGroupedDataset, lead: Column*): DataFrame = {
+    val aggs = lead ++ measures.map { m =>
+      val tpe = stored.schema.find(_.name.equalsIgnoreCase(m.name))
+        .getOrElse(stored.schema(m.name)).dataType
+      m.kind.combined(col(m.name)).cast(tpe).as(m.name)
     }
-    /** Sketches are approximate; routing promises exactness. */
-    def routable: Boolean = kind != MHllSketch
+    group(stored).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Build manifest entry: `parentDims` is None iff the cuboid was
@@ -136,7 +159,10 @@ object Cube {
     val union = cuboids.flatten.distinct
     val baseDims =
       if (ordered.head.toSet == union.toSet) ordered.head else union
-    if (maxBaseRatio < 1.0) {
+    // a plain-file fact whose footers already count fewer rows than
+    // the guard's floor skips the sketch pass: its answer is ignored
+    if (maxBaseRatio < 1.0 && !graft.Engine.footerRowsBelow(fact,
+        BaseRatioGuardMinRows)) {
       val r = graft.Engine.label(spark, "cube.build: base-ratio guard")(
         fact.agg(count(lit(1)),
           approx_count_distinct(struct(baseDims.map(col): _*))).head())
@@ -159,16 +185,15 @@ object Cube {
     // working column: a prefix no fact or measure column starts with
     val gid = graft.Engine.freshPrefix("__gid",
       fact.columns.toSeq ++ measures.map(_.name))
-    val typed = baseDims.map(col) ++ measures.map(m =>
-      col(m.name).cast(base.schema(m.name).dataType).as(m.name))
+    val names = (baseDims ++ measures.map(_.name)).map(col)
     val children = ordered.filter(gidOf(_) != 0L)
     val out = (
       (if (ordered.exists(gidOf(_) == 0L))
-        Seq(base.select(typed :+ lit(0L).as(gid): _*)) else Nil) ++
-      (if (children.nonEmpty) Seq(base
-        .groupingSets(children.map(_.map(col)), baseDims.map(col): _*)
-        .agg(grouping_id().as(gid), measures.map(_.combine): _*)
-        .select(typed :+ col(gid): _*)) else Nil)).reduce(_.unionByName(_))
+        Seq(base.select(names :+ lit(0L).as(gid): _*)) else Nil) ++
+      (if (children.nonEmpty) Seq(reaggregate(base, measures,
+        _.groupingSets(children.map(_.map(col)), baseDims.map(col): _*),
+        grouping_id().as(gid)).select(names :+ col(gid): _*))
+      else Nil)).reduce(_.unionByName(_))
     val run = java.util.UUID.randomUUID().toString.replace("-", "")
     val obs = new org.apache.spark.sql.Observation(s"graft-cube-$run")
     val counts = ordered.zipWithIndex.map { case (d, i) =>
@@ -339,26 +364,21 @@ object Cube {
   }
 
   /** Derive a coarser cuboid's contents from a parent cuboid's
-    * contents by exact re-aggregation (the same combine the lattice
-    * build uses). `parent` must contain `dims` plus every measure
-    * column. */
+    * contents by the build's own [[reaggregate]]. `parent` must contain
+    * `dims` plus every measure column. */
   def derive(parent: DataFrame, dims: Seq[String],
       measures: Seq[MeasureDef]): DataFrame =
-    parent.groupBy(dims.map(col): _*)
-      .agg(measures.head.combine, measures.tail.map(_.combine): _*)
+    reaggregate(parent, measures, _.groupBy(dims.map(col): _*))
 
   /** Incremental maintenance of a whole lattice — the Kylin segment
     * build generalized to every cuboid: fold the delta into the BASE
-    * cuboid only ([[graft.plans.AggRouting.maintainSummary]]: one
-    * aggregation of the delta, one summary-sized combine — the fact
-    * is never rescanned), then re-derive each coarser cuboid from the
-    * checkpointed base — one re-aggregation of stored summary rows per
-    * cuboid, like the build's one-pass lattice (a smaller maintained
-    * ancestor would be a lazy frame, re-aggregating the base under
-    * every child it feeds). Descendant maintenance therefore
-    * costs aggregations over summaries, exactly like the build; and
-    * because every measure combines exactly, maintained lattice ==
-    * lattice rebuilt from the full fact, row for row.
+    * cuboid only ([[graft.plans.AggRouting.fold]] over these measures'
+    * kinds: one aggregation of the delta, one summary-sized combine —
+    * the fact is never rescanned), then [[derive]] each coarser cuboid
+    * from the checkpointed base, like the build's one-pass lattice.
+    * Build, derive and the fold share [[reaggregate]], so maintained
+    * lattice == lattice rebuilt from the full fact, row for row and
+    * type for type.
     *
     * Cost model inherits [[build]]'s reduction contract: maintenance
     * is summary-sized ONLY when the base cuboid reduces the fact
@@ -380,7 +400,6 @@ object Cube {
       cuboids: Seq[Seq[String]]): Map[Seq[String], DataFrame] = {
     require(cuboids.forall(_.forall(baseDims.contains)),
       "every cuboid must be a subset of the base dims")
-    val canonical = measures.map(m => m.canonical -> m.name).toMap
     // the maintained base feeds EVERY derived cuboid's plan: left lazy,
     // a k-cuboid maintenance re-runs the whole base maintenance (delta
     // agg + summary combine — at 100 TB the delta scan) k times, once
@@ -389,8 +408,8 @@ object Cube {
     // materializes the summary-sized base once; every derive then
     // re-aggregates stored summary rows. Base-only maintenance (no
     // cuboids) keeps the lazy frame — nothing re-derives it here.
-    val base0 = graft.plans.AggRouting.maintainSummary(
-      baseSummary, delta, baseDims, canonical)
+    val base0 = graft.plans.AggRouting.fold(baseSummary, delta, baseDims,
+      measures.map(m => m -> m.canonical))
     val base = if (cuboids.nonEmpty) base0.localCheckpoint() else base0
     Map(baseDims -> base) ++
       cuboids.map(dims => dims -> derive(base, dims, measures))

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, lit, sum, when}
 import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, Expression, NamedExpression}
@@ -9,6 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPl
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.internal.SQLConf
+import graft.operators.Cube
 
 /** Automatic aggregate routing onto a materialized summary table — the
   * Kylin capability the reference's MOLAP layer provides (reference
@@ -26,12 +28,13 @@ import org.apache.spark.sql.internal.SQLConf
   *    dims (a dim filter selects whole summary groups, so applying it
   *    to the summary is exact; a measure filter would need raw rows);
   *  - every aggregate call matches a registered canonical measure
-  *    (semantic equality after rebinding attributes by name), with a
-  *    re-aggregation that is EXACT over partial aggregates: sum of
-  *    sums, sum of counts, min of mins, max of maxes. count(distinct)
-  *    and arbitrary aggregates do not decompose — no route. `avg` is
-  *    deliberately not special-cased: the repo's exact-arithmetic
-  *    house style already phrases averages as decimal-sum / count
+  *    (semantic equality after rebinding attributes by name) whose
+  *    kind in the measure table ([[Cube.MKind]], reached by
+  *    [[AggRouting.kindOf]]) is routable; the kind's combine
+  *    re-aggregates the stored partials exactly. Aggregates outside
+  *    the table do not decompose — no route. `avg` is deliberately not
+  *    special-cased: the repo's exact-arithmetic house style already
+  *    phrases averages as decimal-sum / count
   *    ([[graft.functions.davg2]]), and both pieces route.
   *
   * At 100 TB this is the difference between scanning the fact table
@@ -116,14 +119,31 @@ object AggRouting {
       }
     }.flatten.toSet
 
+  /** The one map from a resolved aggregate to its row of the measure
+    * table ([[Cube.MKind]]); None: no exact re-aggregation. COUNT over
+    * non-null constants is COUNT(*). */
+  private[graft] def kindOf(ae: AggregateExpression): Option[Cube.MKind] =
+    ae.aggregateFunction match {
+      case _: Sum => Some(Cube.MSum)
+      case c: Count if c.children.forall(e => e.foldable && !e.nullable) =>
+        Some(Cube.MCountAll)
+      case _: Count => Some(Cube.MCountCol)
+      case _: Min => Some(Cube.MMin)
+      case _: Max => Some(Cube.MMax)
+      case _: graft.functions.BitmapBuildAgg => Some(Cube.MBitmap)
+      case _: HllSketchAgg => Some(Cube.MHllSketch)
+      case _ => None
+    }
+
   /** Resolve a measure Column against the fact into its (single)
-    * AggregateExpression with the fact's canonical attribute ids.
-    * Taken from the OPTIMIZED plan, not the analyzed one: the rewrite
-    * compares against query trees the optimizer has already
-    * constant-folded (e.g. `1 - l_discount` loses its literal cast),
-    * so the canonical must be folded the same way or semantic
+    * AggregateExpression with the fact's canonical attribute ids, and
+    * its measure kind. Taken from the OPTIMIZED plan, not the analyzed
+    * one: the rewrite compares against query trees the optimizer has
+    * already constant-folded (e.g. `1 - l_discount` loses its literal
+    * cast), so the canonical must be folded the same way or semantic
     * equality never fires. */
-  private def canonical(fact: DataFrame, c: Column): AggregateExpression = {
+  private def canonical(fact: DataFrame, c: Column)
+      : (AggregateExpression, Cube.MKind) = {
     // canonicals must be phrased over BUILTIN aggregates: the
     // DecimalSum128 rewrite would otherwise replace Sum with an
     // aggregate over a projected unscaled column whose attribute can
@@ -141,18 +161,9 @@ object AggRouting {
     val ae = found.head
     require(!ae.isDistinct && ae.filter.isEmpty,
       s"distinct/filtered aggregates do not decompose over a summary: $c")
-    ae.aggregateFunction match {
-      case _: Sum | _: Count | _: Min | _: Max => ae
-      // bitmap id-set measures combine exactly via OR-merge — the
-      // Kylin precise-count-distinct cube measure (docs/olap.md:24)
-      case _: graft.functions.BitmapBuildAgg => ae
-      // HLL sketches union-combine losslessly over register state
-      // (max-merge) — maintainable, though never routed (approximate)
-      case _: HllSketchAgg => ae
-      case other => throw new IllegalArgumentException(
-        s"no exact re-aggregation for ${other.prettyName}; " +
-          "register sum/count/min/max/bitmap_build measures")
-    }
+    ae -> kindOf(ae).getOrElse(throw new IllegalArgumentException(
+      s"no exact re-aggregation for ${ae.aggregateFunction.prettyName}; " +
+        "register sum/count/min/max/bitmap_build measures"))
   }
 
   /** Register a route. `measures` maps the canonical aggregate Column
@@ -178,78 +189,64 @@ object AggRouting {
     val canon = measures.toSeq.map { case (c, sumCol) =>
       require(sumCols.contains(sumCol.toLowerCase),
         s"summary is missing measure column $sumCol")
-      canonical(fact, c) -> sumCol
+      canonical(fact, c)._1 -> sumCol
     }
     routes.add(Route(paths, dimMap, canon, factAttrs,
       EliminateSubqueryAliases(summary.queryExecution.analyzed), rows))
   }
 
+  /** The summary's measure columns in its own order, each with its
+    * measure from `measures`. */
+  private def summaryMeasures(summary: DataFrame, dims: Seq[String],
+      measures: Map[Column, String]): Seq[(String, Column)] = {
+    val byName = measures.map { case (c, n) => n.toLowerCase -> c }
+    summary.columns.toSeq.filterNot(c => dims.exists(_.equalsIgnoreCase(c)))
+      .flatMap(c => byName.get(c.toLowerCase).map(c -> _))
+  }
+
   /** INCREMENTAL summary maintenance — the Kylin segment-build shape:
     * when a new fact partition lands, aggregate ONLY the delta with
-    * the canonical measures, append it to the current summary, and
-    * re-aggregate by dims with each measure's exact combine (sum of
-    * sums, sum of counts, min of mins, max of maxes). The fact table
-    * is never rescanned: at 100 TB a day's ingest maintains the cube
-    * at the cost of aggregating one day. Output column names, order,
-    * and types match the input summary exactly (re-aggregated
-    * decimals are cast back to the summary's declared widths), so the
-    * result can overwrite the summary table in place — and because
-    * every registered measure decomposes exactly, maintained-summary
-    * == rebuilt-from-scratch-summary, row for row.
+    * the canonical measures and [[fold]] it into the current summary.
+    * The fact table is never rescanned: at 100 TB a day's ingest
+    * maintains the cube at the cost of aggregating one day. Output
+    * column names, order, and types match the input summary exactly,
+    * so the result can overwrite the summary table in place, and
+    * maintained == rebuilt-from-scratch, row for row.
     *
     * `summary`'s columns must be exactly `dims ++ measures.values`
     * (anything else cannot be maintained). `measures` is the same map
     * [[register]] takes. */
   def maintainSummary(summary: DataFrame, delta: DataFrame,
-      dims: Seq[String], measures: Map[Column, String]): DataFrame = {
-    val sumCols = summary.columns
-    val dimSet = dims.map(_.toLowerCase).toSet
-    val measureByName = measures.map { case (c, n) => n.toLowerCase -> c }
-    require(sumCols.forall(c => dimSet.contains(c.toLowerCase) ||
-      measureByName.contains(c.toLowerCase)),
-      s"summary has unmaintainable columns: ${sumCols.filterNot(c =>
-        dimSet.contains(c.toLowerCase) ||
-          measureByName.contains(c.toLowerCase)).mkString(", ")}")
-    val aggCols = measures.toSeq.map { case (c, name) => c.as(name) }
-    val deltaAgg = delta.groupBy(dims.map(org.apache.spark.sql.functions
-        .col): _*)
-      .agg(aggCols.head, aggCols.tail: _*)
-      .select(sumCols.map(c => org.apache.spark.sql.functions.col(c)
-        .cast(summary.schema(c).dataType)): _*)
-    val combined = summary.unionByName(deltaAgg)
-    import org.apache.spark.sql.functions.{col => fcol, max => fmax, min => fmin, sum => fsum}
-    val reAggs = sumCols.filterNot(c => dimSet.contains(c.toLowerCase))
-      .map { name =>
-        val fn = canonical(delta, measureByName(name.toLowerCase))
-          .aggregateFunction
-        val re = fn match {
-          case _: Sum | _: Count => fsum(fcol(name))
-          case _: Min => fmin(fcol(name))
-          case _: Max => fmax(fcol(name))
-          case _: graft.functions.BitmapBuildAgg =>
-            graft.functions.Bitmap64.bitmapMerge(fcol(name))
-          case _: HllSketchAgg =>
-            org.apache.spark.sql.functions.hll_union_agg(fcol(name))
-          case other => throw new IllegalArgumentException(
-            s"no exact combine for ${other.prettyName}")
-        }
-        re.cast(summary.schema(name).dataType).as(name)
-      }
-    combined.groupBy(dims.map(fcol): _*).agg(reAggs.head, reAggs.tail: _*)
-      .select(sumCols.map(fcol): _*)
+      dims: Seq[String], measures: Map[Column, String]): DataFrame =
+    fold(summary, delta, dims, summaryMeasures(summary, dims, measures)
+      .map { case (n, c) => Cube.MeasureDef(n, canonical(delta, c)._2) -> c })
+
+  /** The maintenance fold: aggregate `delta` by `dims` with each
+    * measure's fact-side aggregate, append it to the summary in its
+    * types, and re-aggregate through the lattice's [[Cube.reaggregate]].
+    * Every summary column must be a dim or one of `measures`. */
+  private[graft] def fold(summary: DataFrame, delta: DataFrame,
+      dims: Seq[String], measures: Seq[(Cube.MeasureDef, Column)]): DataFrame = {
+    val known = dims ++ measures.map(_._1.name)
+    val bad = summary.columns.filterNot(c => known.exists(_.equalsIgnoreCase(c)))
+    require(bad.isEmpty, s"summary has unmaintainable columns: ${bad.mkString(", ")}")
+    val aggs = measures.map { case (m, c) => c.as(m.name) }
+    val partials = delta.groupBy(dims.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .select(summary.schema.map(f => col(f.name).cast(f.dataType)): _*)
+    Cube.reaggregate(summary.unionByName(partials), measures.map(_._1),
+      _.groupBy(dims.map(col): _*)).select(summary.columns.map(col): _*)
   }
 
   /** Incremental view maintenance FROM A CHANGE FEED — [[maintainSummary]]
     * for CDC input ([[graft.operators.VersionedTable.changesBetween]]'s
     * shape: data columns + `change` ∈ insert|delete): inserts add,
-    * deletes RETRACT. Classic IVM restriction applies: only
-    * self-inverse measures decompose under deletion — sum subtracts,
-    * count decrements; min/max cannot retract (a deleted minimum
-    * requires rescanning the group) and are rejected up front. Groups
-    * whose live row count reaches zero drop out entirely, so
-    * maintained == rebuilt holds row-for-row after any mix of
-    * merges/deletes/updates (an update is a delete+insert pair and
-    * retracts exactly).
+    * deletes RETRACT by their kind's retraction ([[Cube.MKind]]);
+    * kinds without one (min/max, sketches: a deleted minimum needs the
+    * group rescanned) are rejected up front. Groups whose live row
+    * count reaches zero drop out entirely, so maintained == rebuilt
+    * holds row-for-row after any mix of merges/deletes/updates (an
+    * update is a delete+insert pair and retracts exactly).
     *
     * `countCol` names the summary's COUNT(*) measure — the group
     * liveness witness. Scale shape: one bounded aggregate over the
@@ -257,50 +254,23 @@ object AggRouting {
   def maintainSummaryFromCdc(summary: DataFrame, changes: DataFrame,
       dims: Seq[String], measures: Map[Column, String],
       countCol: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col => fcol, lit, sum => fsum, when}
-    val sumCols = summary.columns
-    val dimSet = dims.map(_.toLowerCase).toSet
-    val measureByName = measures.map { case (c, n) => n.toLowerCase -> c }
-    require(sumCols.forall(c => dimSet.contains(c.toLowerCase) ||
-      measureByName.contains(c.toLowerCase)),
-      s"summary has unmaintainable columns: ${sumCols.filterNot(c =>
-        dimSet.contains(c.toLowerCase) ||
-          measureByName.contains(c.toLowerCase)).mkString(", ")}")
-    require(measureByName.contains(countCol.toLowerCase),
+    val ms = summaryMeasures(summary, dims, measures)
+    require(countCol != null && ms.exists(_._1.equalsIgnoreCase(countCol)),
       s"countCol $countCol must be one of the summary's measures")
     val data = changes.drop("change")
-    val sign = when(fcol("change") === "insert", lit(1L)).otherwise(lit(-1L))
-    val signedAggs = measures.toSeq.map { case (c, name) =>
-      val ae = canonical(data, c)
-      val signed = ae.aggregateFunction match {
-        case s: Sum =>
-          fsum(sign * org.apache.spark.sql.graft.Bridge.column(s.child))
-        case cnt: Count if cnt.children.forall(_.foldable) => fsum(sign)
-        case cnt: Count =>
-          fsum(when(org.apache.spark.sql.graft.Bridge
-            .column(cnt.children.head).isNotNull, sign).otherwise(lit(0L)))
-        case other => throw new IllegalArgumentException(
-          s"measure $name (${other.prettyName}) cannot RETRACT — " +
-            "min/max and sketch measures need a rebuild on delete")
-      }
-      signed.as(name)
+    val sign = when(col("change") === "insert", lit(1L)).otherwise(lit(-1L))
+    val signed = ms.map { case (n, c) =>
+      val (ae, kind) = canonical(data, c)
+      val retract = kind.retract.getOrElse(throw new IllegalArgumentException(
+        s"measure $n (${ae.aggregateFunction.prettyName}) cannot RETRACT — " +
+          "min/max and sketch measures need a rebuild on delete"))
+      Cube.MeasureDef(n, kind) -> sum(retract(sign, ae.aggregateFunction
+        .children.map(org.apache.spark.sql.graft.Bridge.column)))
     }
-    if (countCol != null) canonical(data, measureByName(countCol
-      .toLowerCase)).aggregateFunction match {
-      case c: Count if c.children.forall(_.foldable) => // ok: COUNT(*)
-      case _ => throw new IllegalArgumentException(
-        s"countCol $countCol must be a COUNT(*) measure")
-    }
-    val delta = changes.groupBy(dims.map(fcol): _*)
-      .agg(signedAggs.head, signedAggs.tail: _*)
-      .select(sumCols.map(c => fcol(c)
-        .cast(summary.schema(c).dataType)): _*)
-    val reAggs = sumCols.filterNot(c => dimSet.contains(c.toLowerCase))
-      .map(n => fsum(fcol(n)).cast(summary.schema(n).dataType).as(n))
-    summary.unionByName(delta)
-      .groupBy(dims.map(fcol): _*).agg(reAggs.head, reAggs.tail: _*)
-      .filter(fcol(countCol) > 0)
-      .select(sumCols.map(fcol): _*)
+    require(signed.exists { case (m, _) =>
+        m.name.equalsIgnoreCase(countCol) && m.kind == Cube.MCountAll },
+      s"countCol $countCol must be a COUNT(*) measure")
+    fold(summary, changes, dims, signed).filter(col(countCol) > 0)
   }
 }
 
@@ -389,32 +359,22 @@ object AggRouteRewrite extends Rule[LogicalPlan] {
         rebased.aggregateFunction match {
           case Count(Seq(child)) =>
             r.measures.collectFirst {
-              case (m, sumCol) if (m.aggregateFunction match {
-                  case b: graft.functions.BitmapBuildAgg =>
-                    b.child.semanticEquals(child)
-                  case _ => false
-                }) =>
+              case (m, sumCol) if AggRouting.kindOf(m).contains(Cube.MBitmap) &&
+                  m.aggregateFunction.children.head.semanticEquals(child) =>
                 val bm = sAttr(sumCol.toLowerCase)
                 graft.functions.BitmapCardinality(
                   if (exact) bm
-                  else graft.functions.BitmapMergeAgg(bm)
-                    .toAggregateExpression())
+                  else Cube.MBitmap.combine(bm).toAggregateExpression())
             }
           case _ => None
         }
       } else {
+        // a routable kind re-aggregates by its combine (HLL never routes)
         r.measures.find(_._1.semanticEquals(rebased)).flatMap {
-          case (_, sumCol) =>
-            val col = sAttr(sumCol.toLowerCase)
-            (ae.aggregateFunction match {
-              case _: Sum => Some(Sum(col))
-              case _: Count => Some(Sum(col)) // count re-aggregates as a sum
-              case _: Min => Some(Min(col))
-              case _: Max => Some(Max(col))
-              case _: graft.functions.BitmapBuildAgg =>
-                Some(graft.functions.BitmapMergeAgg(col))
-              case _ => None // HLL sketches: maintainable, never routed
-            }).map(fn => if (exact) col else fn.toAggregateExpression())
+          case (m, sumCol) => AggRouting.kindOf(m).filter(_.routable).map { k =>
+            val stored = sAttr(sumCol.toLowerCase)
+            if (exact) stored else k.combine(stored).toAggregateExpression()
+          }
         }
       }
       re.map(e => if (e.dataType == ae.dataType) e else Cast(e, ae.dataType))

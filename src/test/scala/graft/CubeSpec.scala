@@ -239,6 +239,52 @@ class CubeSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       CubeQueries.measures, built)
   }
 
+  test("below the base-ratio guard's floor a plain parquet fact skips " +
+      "the guard: the 7-cuboid lattice builds in 3 jobs") {
+    val (_, jobs, _) = onePass
+    assert(jobs == 3, s"lattice build scheduled $jobs jobs")
+  }
+
+  test("a parquet fact above the guard's floor still runs the guard " +
+      "and is refused when its base grain does not reduce it") {
+    val path = tmpDir("cube_guard_parquet") + "/fact"
+    spark.range(Cube.BaseRatioGuardMinRows + 1).select(
+      col("id").as("k"), (col("id") % 97).as("d"), lit(1L).as("v"))
+      .write.parquet(path)
+    val ex = intercept[IllegalArgumentException] {
+      Cube.build(spark.read.parquet(path),
+        Seq(Cube.MeasureDef("n", Cube.MCountAll)),
+        Seq(Seq("k", "d"), Seq("d")), "cube_guard_pq_t_", register = false)
+    }
+    assert(ex.getMessage.contains("would not reduce the fact"),
+      ex.getMessage)
+  }
+
+  test("maintained cuboids keep the built measure types: a decimal(18,2) " +
+      "sum is not widened by derivation") {
+    val fact = Engine.table(spark, sf, "lineitem")
+    val cutoff = lit("1996-01-01").cast("timestamp_ntz")
+    val baseDims = Seq("l_returnflag", "l_linestatus", "l_suppkey")
+    val children = Seq(Seq("l_returnflag", "l_linestatus"),
+      Seq("l_returnflag"))
+    val ms = Seq(Cube.MeasureDef("n", Cube.MCountAll),
+      Cube.MeasureDef("s_qty", Cube.MSum,
+        col("l_quantity").cast("decimal(18,2)")))
+    val built = Cube.build(fact, ms, baseDims +: children,
+      "cube_types_t_", register = false)
+    val oldBase = fact.filter(col("l_shipdate") < cutoff)
+      .groupBy(baseDims.map(col): _*).agg(ms.head.base, ms.tail.map(_.base): _*)
+    val maintained = Cube.maintainLattice(baseDims, oldBase,
+      fact.filter(col("l_shipdate") >= cutoff), ms, children)
+    built.foreach { b =>
+      val want = spark.table(b.table)
+      def types(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+      assert(types(maintained(b.dims)) == types(want),
+        s"${b.dims}: ${maintained(b.dims).schema} vs ${want.schema}")
+      assertSameRows(maintained(b.dims), want)
+    }
+  }
+
   /** Each built cuboid's table holds exactly `fact.groupBy(dims)`
     * with the cuboid's measure types, and its manifest row count. */
   private def assertLatticeIsGroupBy(fact: DataFrame,
@@ -555,6 +601,31 @@ class CubeSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       s"rollup must not touch the fact:\n$plan")
     assert(plan.contains(s"cube_${suf}_"),
       "rollup members must scan cuboid tables")
+  }
+
+  test("measure table: every kind's aggregate maps back to its kind; " +
+      "avg, count distinct and filtered aggregates are refused") {
+    import spark.implicits._
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    import graft.plans.AggRouting
+    // two rows: over one row the optimizer drops DISTINCT altogether
+    val fact = Seq(("x", Option(1L)), ("y", None)).toDF("g", "v")
+    Seq(Cube.MSum, Cube.MCountAll, Cube.MCountCol, Cube.MMin, Cube.MMax,
+        Cube.MBitmap, Cube.MHllSketch).foreach { k =>
+      val found = fact.groupBy().agg(k.aggregate(col("v")))
+        .queryExecution.optimizedPlan.flatMap(_.expressions)
+        .flatMap(_.collect { case ae: AggregateExpression => ae })
+      assert(found.map(AggRouting.kindOf) == Seq(Some(k)), s"$k: $found")
+    }
+    def refusal(c: Column) = intercept[IllegalArgumentException] {
+      AggRouting.maintainSummary(fact.groupBy("g").agg(c.as("m")), fact,
+        Seq("g"), Map(c -> "m"))
+    }.getMessage
+    assert(refusal(avg(col("v"))).contains("no exact re-aggregation for avg"))
+    Seq(countDistinct(col("v")), expr("count(v) FILTER (WHERE v > 0)"))
+      .foreach(c => assert(refusal(c).contains(
+        "distinct/filtered aggregates do not decompose"), c))
   }
 
   test("MeasureDef rejects nothing it cannot combine exactly") {

@@ -1142,6 +1142,37 @@ class ExtensionsSpec extends SparkSuite {
     summary0.unpersist()
   }
 
+  test("CDC retraction of a multi-column count counts a row only when " +
+      "every column is non-null") {
+    import org.apache.spark.sql.Column
+    import spark.implicits._
+    val rows = Seq(("x", Some(1), Option.empty[Int]), ("x", Some(1), Some(2)))
+      .toDF("g", "a", "b")
+    val measures = Map[Column, String](
+      count(lit(1)) -> "n", call_function("count", col("a"), col("b")) -> "c2")
+    def summarize(df: org.apache.spark.sql.DataFrame) = df.groupBy("g")
+      .agg(count(lit(1)).as("n"), call_function("count", col("a"), col("b"))
+        .as("c2"))
+    val changes = rows.limit(1).withColumn("change", lit("delete"))
+    val maintained = plans.AggRouting.maintainSummaryFromCdc(
+      summarize(rows), changes, Seq("g"), measures, countCol = "n")
+    assertSameRows(maintained,
+      summarize(Seq(("x", Some(1), Some(2))).toDF("g", "a", "b")))
+  }
+
+  test("CDC maintenance refuses a null countCol by name") {
+    import org.apache.spark.sql.Column
+    import spark.implicits._
+    val fact = Seq(("x", 1L)).toDF("g", "v")
+    val summary = fact.groupBy("g").agg(count(lit(1)).as("n"))
+    val ex = intercept[IllegalArgumentException] {
+      plans.AggRouting.maintainSummaryFromCdc(summary,
+        fact.withColumn("change", lit("insert")), Seq("g"),
+        Map[Column, String](count(lit(1)) -> "n"), countCol = null)
+    }
+    assert(ex.getMessage.contains("countCol"), ex.getMessage)
+  }
+
   test("text/similarity kernel family is reachable from SQL text") {
     import spark.implicits._
     val df = Seq((1L, "the cat sat on the mat the cat"))

@@ -658,4 +658,53 @@ class PropertySpec extends AnyFunSuite with SparkSuite {
       }
     })
   }
+
+  test("measure-table law: for every kind a maintained lattice equals " +
+      "the built one, cuboid by cuboid, and the Map-form fold agrees") {
+    import graft.operators.Cube
+    import graft.operators.Cube._
+    val factGen: Gen[List[(Option[String], Option[Int], Option[BigDecimal],
+        Option[Double], Option[Long])]] = Gen.listOf(for {
+      a <- Gen.option(Gen.oneOf("p", "q"))
+      b <- Gen.option(Gen.chooseNum(0, 2))
+      v <- Gen.option(Gen.chooseNum(-500L, 500L).map(c => BigDecimal(c, 2)))
+      d <- Gen.option(Gen.frequency(
+        4 -> Gen.chooseNum(-5.0, 5.0), 1 -> Gen.const(Double.NaN)))
+      id <- Gen.option(Gen.chooseNum(0L, 20L))
+    } yield (a, b, v, d, id))
+    val ms = Seq(MeasureDef("n", MCountAll),
+      MeasureDef("cv", MCountCol, col("v")), MeasureDef("sv", MSum, col("v")),
+      MeasureDef("mn", MMin, col("d")), MeasureDef("mx", MMax, col("d")),
+      MeasureDef("bm", MBitmap, col("id")),
+      MeasureDef("hll", MHllSketch, col("id")))
+    val baseDims = Seq("a", "b")
+    val children = Seq(Seq("a"), Seq("b"))
+    def df(rows: List[(Option[String], Option[Int], Option[BigDecimal],
+        Option[Double], Option[Long])]) = rows.toDF("a", "b", "v", "d", "id")
+      .withColumn("v", col("v").cast("decimal(18,2)"))
+    def types(f: org.apache.spark.sql.DataFrame) =
+      f.schema.map(x => x.name -> x.dataType)
+    // a bitmap compares by its canonical bytes, a sketch by its estimate
+    def rows(f: org.apache.spark.sql.DataFrame) = f
+      .withColumn("bm", base64(col("bm")))
+      .withColumn("hll", hll_sketch_estimate(col("hll")))
+      .collect().map(_.toString).sorted.toSeq
+    def same(a: org.apache.spark.sql.DataFrame,
+        b: org.apache.spark.sql.DataFrame) =
+      types(a) == types(b) && rows(a) == rows(b)
+    check(forAll(factGen, Gen.chooseNum(0, 40)) { (fact, cut) =>
+      val (prefix, rest) = fact.splitAt(cut)
+      val built = Cube.build(df(fact), ms, baseDims +: children,
+        "law_cube_t_", register = false)
+      val bases = ms.map(_.base)
+      val oldBase = df(prefix).groupBy(baseDims.map(col): _*)
+        .agg(bases.head, bases.tail: _*)
+      val maintained = Cube.maintainLattice(baseDims, oldBase, df(rest),
+        ms, children)
+      val viaMap = graft.plans.AggRouting.maintainSummary(oldBase, df(rest),
+        baseDims, ms.map(m => m.canonical -> m.name).toMap)
+      built.forall(b => same(maintained(b.dims), spark.table(b.table))) &&
+        same(viaMap, maintained(baseDims))
+    })
+  }
 }
