@@ -21,10 +21,30 @@ object Engine {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def session(
-      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-      shufflePartitions: Int = 32): SparkSession = {
-    val spark = SparkSession.builder()
+  /** Entries of Spark's generated-class cache (the static conf
+    * `spark.sql.codegen.cache.maxEntries`, default 100). A dashboard
+    * daemon compiles the same statement shapes over and over, and at
+    * 100 entries they do not fit: perfbench's `serve_mixed` (twelve
+    * JDBC statements, two clients, 4-core box) compiles 166–172
+    * distinct generated sources per serve run (mean 6.5 KB, p95 24 KB,
+    * max 74 KB), so the cache thrashed and a 10 s measured phase
+    * recompiled 481–612 times (ten runs) — about three Janino compiles
+    * per statement, each fresh class then JIT-compiled again. At 1000
+    * entries the same phase compiled 3–5 times and the median
+    * statement fell from 87 to 67 ms (ten paired seeds, all lower).
+    * 1000 keeps that working set with headroom, about 6.5 MB of source
+    * text at the mean. Compile cost is paid per statement shape, not
+    * per byte scanned, so this holds at any data size. */
+  val CodegenCacheEntries = 1000
+
+  /** The one session builder: local `master`, the engine's extensions
+    * and the confs that must be set before the session exists. The
+    * generated-class cache is JVM-global and sized by the first
+    * session that generates code, so its size is set here and not in
+    * [[configure]] (a static conf cannot change at runtime). */
+  private[graft] def builder(master: String, shufflePartitions: Int)
+      : SparkSession.Builder =
+    SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
@@ -34,13 +54,19 @@ object Engine {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toString)
       // static conf, consumed only by the Thrift JDBC endpoint
       // (graft.Serve): every JDBC connection shares THIS session's
       // state, so registered temp views and the routing rule are
       // visible to BI clients; harmless otherwise
       .config("spark.sql.hive.thriftServer.singleSession", "true")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+
+  def session(
+      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
+      shufflePartitions: Int = 32): SparkSession = {
+    val spark = builder(master, shufflePartitions).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
@@ -252,17 +278,26 @@ object Engine {
   private[graft] def footerSchema(spark: SparkSession, path: String)
       : Option[(org.apache.spark.sql.types.StructType,
         org.apache.parquet.schema.MessageType)] = {
-    import org.apache.spark.sql.types.{DataType, StructType}
-    val conf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val st = fs.getFileStatus(p)
     // names starting with '_' or '.' are hidden, as in Spark's file index
     val files =
       if (!st.isDirectory) Array(st)
       else fs.listStatus(p).filterNot(_.getPath.getName.matches("[._].*"))
     if (files.exists(_.isDirectory)) return None
-    files.sortBy(_.getPath.getName).headOption.map(withFooter(_, conf) { reader =>
+    files.sortBy(_.getPath.getName).headOption.map(fileSchema(spark, _))
+  }
+
+  /** One parquet file's schema from its footer, read on the driver:
+    * Spark's row-metadata key when the writer stored one, else the
+    * session's parquet converter over the parquet schema. */
+  private[graft] def fileSchema(spark: SparkSession,
+      f: org.apache.hadoop.fs.FileStatus)
+      : (org.apache.spark.sql.types.StructType,
+        org.apache.parquet.schema.MessageType) = {
+    import org.apache.spark.sql.types.{DataType, StructType}
+    withFooter(f, spark.sessionState.newHadoopConf()) { reader =>
       val meta = reader.getFooter.getFileMetaData
       val fromSpark = Option(meta.getKeyValueMetaData
           .get("org.apache.spark.sql.parquet.row.metadata"))
@@ -274,7 +309,7 @@ object Engine {
           .convert(meta.getSchema))
       (org.apache.spark.sql.graft.Bridge.asNullable(schema),
         meta.getSchema)
-    })
+    }
   }
 
   /** `read` over one parquet file's footer, on the driver. */

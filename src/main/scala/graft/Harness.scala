@@ -12,19 +12,16 @@ object Harness {
     * any timing starts. */
   val WarmDir = "/root/testdata/sf0.001"
 
-  /** A local session for a dev main: `SPARK_GRAFT_CPUS` cores
-    * (`defaultCpus` when unset) and as many shuffle partitions, the
-    * engine's extensions and confs, no UI. The app-status stores keep
-    * per-execution metrics even with the UI off; over a whole suite the
-    * default retention is tens of MB of old-gen ballast that taxes the
-    * queries run late, so it is capped. */
+  /** A local session for a dev main: [[Engine.builder]]'s session
+    * with `SPARK_GRAFT_CPUS` cores (`defaultCpus` when unset) and as
+    * many shuffle partitions, the engine's runtime confs, log level
+    * ERROR. The app-status stores keep per-execution metrics even with
+    * the UI off; over a whole suite the default retention is tens of MB
+    * of old-gen ballast that taxes the queries run late, so it is
+    * capped. */
   def session(defaultCpus: Int): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString).toInt
+    val spark = Engine.builder(s"local[$cpus]", cpus)
       .config("spark.sql.ui.retainedExecutions", "8")
       .config("spark.ui.retainedJobs", "100")
       .config("spark.ui.retainedStages", "200")

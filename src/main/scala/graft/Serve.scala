@@ -24,7 +24,10 @@ import org.apache.spark.sql.SparkSession
   * Scale shape: the daemon holds no per-query state beyond Spark's own
   * session handles; concurrency is Spark's scheduler (FAIR pool
   * recommended for mixed dashboards); the lattice tables live in the
-  * warehouse, shared across connections.
+  * warehouse, shared across connections. The daemon keeps the
+  * generated classes of its whole statement working set
+  * ([[Engine.CodegenCacheEntries]]), so a repeated dashboard statement
+  * compiles no code.
   *
   * Usage: runMain graft.Serve [port] [sfDir]   (defaults 10015,
   * /root/testdata/sf0.1) — blocks until killed.

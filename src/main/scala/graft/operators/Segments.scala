@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -122,21 +122,37 @@ private[graft] object Segments {
     * file index skips them — counting them would send the reader into
     * a dir it then finds empty (AnalysisException on a crashed batch's
     * staging debris). */
-  def hasParquetFile(dir: String): Boolean = {
+  def hasParquetFile(dir: String): Boolean = firstParquetFile(dir).isDefined
+
+  /** The first such part file under `dir`, walking names in order. */
+  private def firstParquetFile(dir: String): Option[FileStatus] = {
     val p = new Path(dir)
-    hasParquetFile(fsOf(p), p)
+    firstParquetFile(fsOf(p), p)
   }
 
-  private def hasParquetFile(fs: FileSystem, dir: Path): Boolean =
-    fs.exists(dir) && fs.listStatus(dir).exists { f =>
+  private def firstParquetFile(fs: FileSystem, dir: Path): Option[FileStatus] =
+    if (!fs.exists(dir)) None
+    else fs.listStatus(dir).sortBy(_.getPath.getName).iterator.filter { f =>
       // Spark's listing rule: underscore/dot names are hidden UNLESS
       // they contain '=' (partition dirs — __batch=N must survive)
       val n = f.getPath.getName
-      val hidden =
-        (n.startsWith("_") || n.startsWith(".")) && !n.contains("=")
-      !hidden && ((f.isFile && n.endsWith(".parquet")) ||
-        (f.isDirectory && hasParquetFile(fs, f.getPath)))
-    }
+      !((n.startsWith("_") || n.startsWith(".")) && !n.contains("="))
+    }.flatMap { f =>
+      if (f.isFile) Some(f).filter(_.getPath.getName.endsWith(".parquet"))
+      else firstParquetFile(fs, f.getPath)
+    }.nextOption()
+
+  /** `spark.read.parquet(dir)` over a dir this engine's writers fixed,
+    * without the schema-inference job Spark schedules per read: the
+    * data columns come from one footer read on the driver
+    * ([[graft.Engine.fileSchema]]); partition columns (`__batch`,
+    * `bucket`, `shard`) are still discovered from the paths, with the
+    * types inference gives them. Every file under such a dir holds its
+    * writer's one schema, so any footer is the one inference would
+    * read. Without a data file, Spark infers (and raises) as before. */
+  def read(spark: SparkSession, dir: String): DataFrame =
+    firstParquetFile(dir).fold(spark.read.parquet(dir))(f =>
+      spark.read.schema(graft.Engine.fileSchema(spark, f)._1).parquet(dir))
 
   // ------------------------------------------------ the delta overlay
 
@@ -228,20 +244,20 @@ private[graft] object Segments {
     * the base and every delta batch alike. */
   def resolveDeltaTable(spark: SparkSession, indexDir: String,
       basePath: String, idCol: String): DataFrame = {
-    val base = spark.read.parquet(readable(basePath))
+    val base = read(spark, readable(basePath))
     if (!new java.io.File(s"$indexDir/_maint").exists()) return base
     val committed = committedSeq(indexDir)
     val raw =
       if (!hasParquetFile(s"${basePath}_delta"))
         base.withColumn("__seq", lit(0L))
       else base.withColumn("__seq", lit(0L)).unionByName(
-        spark.read.parquet(s"${basePath}_delta")
+        read(spark, s"${basePath}_delta")
           .filter(col("__batch").cast("long") <= committed)
           .withColumn("__seq", col("__batch").cast("long"))
           .drop("__batch"))
     if (!hasParquetFile(s"$indexDir/tombstones"))
       return raw.drop("__seq")
-    val tmax = spark.read.parquet(s"$indexDir/tombstones")
+    val tmax = read(spark, s"$indexDir/tombstones")
       .filter(col("__batch").cast("long") <= committed)
       .groupBy(idCol)
       .agg(max(col("__batch").cast("long")).as("__tmax"))

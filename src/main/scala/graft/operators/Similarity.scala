@@ -211,7 +211,7 @@ object Similarity {
     // in-memory materialization of a whole bucket
     val spark = embeddings.sparkSession
     graft.Engine.label(spark, "ivf build: centroids")(
-      spark.read.parquet(Segments.readable(s"$indexDir/vectors"))
+      Segments.read(spark, Segments.readable(s"$indexDir/vectors"))
         .select(col("bucket"),
           transform(col(vecCol), _.cast("double")).as("dv"))
         .groupBy("bucket")
@@ -444,11 +444,11 @@ object Similarity {
         val hit = centroidCache.synchronized(centroidCache.get(key))
         if (hit != null) hit
         else {
-          val v = collectCentroids(spark.read.parquet(path))
+          val v = collectCentroids(Segments.read(spark, path))
           centroidCache.synchronized { centroidCache.put(key, v); () }
           v
         }
-      case None => collectCentroids(spark.read.parquet(path))
+      case None => collectCentroids(Segments.read(spark, path))
     }
 
   /** The probe's bucket selection, DRIVER-SIDE over cached centroids:
@@ -744,7 +744,7 @@ object Similarity {
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     val qs = queries.select(col(qidCol).as("qid"),
       transform(col(qvecCol), _.cast("double")).as("qv"))
-    val cents = spark.read.parquet(s"$indexDir/centroids")
+    val cents = Segments.read(spark, s"$indexDir/centroids")
     val probed = graft.plans.TopKPerGroup.topKPerGroup(
       qs.crossJoin(broadcast(cents))
         .select(col("qid"), col("qv"), col("bucket"),
@@ -833,7 +833,7 @@ object Similarity {
       vecCol: String = "embedding", idCol: String = "vec_id"): Unit = {
     clearBuilt(indexDir, "codes")
     writePartitionedBase(
-      spark.read.parquet(Segments.readable(s"$indexDir/vectors"))
+      Segments.read(spark, Segments.readable(s"$indexDir/vectors"))
         .select(col(idCol), col("bucket"),
           graft.functions.ProductQuant.pqEncode(col(vecCol), cb)
             .as("pq_code")),
@@ -854,7 +854,7 @@ object Similarity {
     val buckets = nearestBuckets(
       readCentroids(spark, s"$indexDir/centroids"), query, nprobe)
     val lut = graft.functions.ProductQuant.buildLut(query, cb)
-    val cand = spark.read.parquet(s"$indexDir/codes")
+    val cand = Segments.read(spark, s"$indexDir/codes")
       .filter(bucketIn(buckets)) // partition-pruned scan
       .select(col(idCol),
         graft.functions.ProductQuant.pqAdc(col("pq_code"), lut, cb.ksub)
@@ -862,7 +862,7 @@ object Similarity {
       .orderBy(desc("adc"), asc(idCol))
       .limit(k * overfetch)
       .select(idCol)
-    spark.read.parquet(Segments.readable(s"$indexDir/vectors"))
+    Segments.read(spark, Segments.readable(s"$indexDir/vectors"))
       .filter(bucketIn(buckets)) // pruned again
       .join(broadcast(cand), Seq(idCol))
       .select(col(idCol), cosineSimilarity(col(vecCol), q).as("cos"))

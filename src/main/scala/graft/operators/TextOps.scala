@@ -489,7 +489,7 @@ object TextOps {
     // extra jobs per build on what is a lifecycle-constant-bound
     // operation at any corpus size
     val dl = docs.select(col(idCol))
-      .join(spark.read.parquet(s"$indexDir/postings")
+      .join(Segments.read(spark, s"$indexDir/postings")
           .groupBy(col(idCol)).agg(sum(col("tf")).as("__dl")),
         Seq(idCol), "left")
       .select(col(idCol), coalesce(col("__dl"), lit(0L))
@@ -521,7 +521,7 @@ object TextOps {
         Seq((n, Option(s).map(String.valueOf(_).toLong).getOrElse(0L)))
           .toDF("n_docs", "sum_dl")
       case _ => // listener event lost: explicit job, never hang
-        spark.read.parquet(doclenPath)
+        Segments.read(spark, doclenPath)
           .agg(count(lit(1)).as("n_docs"),
             coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
     }
@@ -565,7 +565,7 @@ object TextOps {
       .resolveDeltaTable(spark, indexDir, s"$indexDir/doclen", idCol)
       .select(col(idCol), col("dl"))
     val stats =
-      if (!maintained) spark.read.parquet(s"$indexDir/stats")
+      if (!maintained) Segments.read(spark, s"$indexDir/stats")
       else dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
     bm25FromPostings(tf, dl, stats, terms, k, k1, b, idCol)
   }
@@ -608,7 +608,7 @@ object TextOps {
       val dlRows =
         if (Segments.hasParquetFile(postingsDelta))
           ins.select(col(idCol))
-            .join(spark.read.parquet(postingsDelta)
+            .join(Segments.read(spark, postingsDelta)
                 .groupBy(col(idCol)).agg(sum(col("tf")).as("__dl")),
               Seq(idCol), "left")
             .select(col(idCol), coalesce(col("__dl"), lit(0L))

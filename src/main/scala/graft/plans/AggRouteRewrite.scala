@@ -137,30 +137,34 @@ object AggRouting {
 
   /** Resolve a measure Column against the fact into its (single)
     * AggregateExpression with the fact's canonical attribute ids, and
-    * its measure kind. Taken from the OPTIMIZED plan, not the analyzed
-    * one: the rewrite compares against query trees the optimizer has
+    * its measure kind. The canonical is taken from the OPTIMIZED plan:
+    * the rewrite compares against query trees the optimizer has
     * already constant-folded (e.g. `1 - l_discount` loses its literal
     * cast), so the canonical must be folded the same way or semantic
-    * equality never fires. */
+    * equality never fires. The distinct/filter refusal reads the
+    * ANALYZED aggregate, as written: over a fact of at most one row
+    * the optimizer drops DISTINCT (`OptimizeOneRowPlan`), which would
+    * pass a count(DISTINCT) off as a plain count. */
   private def canonical(fact: DataFrame, c: Column)
       : (AggregateExpression, Cube.MKind) = {
+    def only(plan: LogicalPlan): AggregateExpression = {
+      val aggExprs = plan.collect { case a: Aggregate => a.aggregateExpressions }.head
+      val found = aggExprs.head.collect { case ae: AggregateExpression => ae }
+      require(found.length == 1,
+        s"measure must be exactly one aggregate call: $c")
+      found.head
+    }
     // canonicals must be phrased over BUILTIN aggregates: the
     // DecimalSum128 rewrite would otherwise replace Sum with an
     // aggregate over a projected unscaled column whose attribute can
     // never semanticEquals a later query's tree. Routing itself is
     // unaffected (it runs before the 128-bit rewrite in the same
     // optimizer batch, so it always sees builtin Sums first).
-    val optimized = withDecimalSum128Off {
-      fact.groupBy().agg(c).queryExecution.optimizedPlan
-    }
-    val aggExprs = optimized.collect {
-      case a: Aggregate => a.aggregateExpressions }.head
-    val found = aggExprs.head.collect { case ae: AggregateExpression => ae }
-    require(found.length == 1,
-      s"measure must be exactly one aggregate call: $c")
-    val ae = found.head
-    require(!ae.isDistinct && ae.filter.isEmpty,
+    val qe = fact.groupBy().agg(c).queryExecution
+    val written = only(qe.analyzed)
+    require(!written.isDistinct && written.filter.isEmpty,
       s"distinct/filtered aggregates do not decompose over a summary: $c")
+    val ae = withDecimalSum128Off(only(qe.optimizedPlan))
     ae -> kindOf(ae).getOrElse(throw new IllegalArgumentException(
       s"no exact re-aggregation for ${ae.aggregateFunction.prettyName}; " +
         "register sum/count/min/max/bitmap_build measures"))

@@ -1061,6 +1061,24 @@ class ExtensionsSpec extends SparkSuite {
     assert(err.getMessage.contains("extra"))
   }
 
+  test("maintainSummary refuses count(DISTINCT) over a one-row delta " +
+      "as over a two-row one") {
+    import spark.implicits._
+    import graft.plans.AggRouting
+    // over one row the optimizer drops DISTINCT; the refusal must not
+    // depend on the delta's size
+    val c = countDistinct(col("v"))
+    val summary = Seq(("a", 1L)).toDF("g", "m")
+    def refusal(delta: org.apache.spark.sql.DataFrame) =
+      intercept[IllegalArgumentException] {
+        AggRouting.maintainSummary(summary, delta, Seq("g"), Map(c -> "m"))
+      }.getMessage
+    val twoRows = refusal(Seq(("a", 1L), ("b", 2L)).toDF("g", "v"))
+    assert(twoRows.contains("distinct/filtered aggregates do not decompose"),
+      twoRows)
+    assert(refusal(Seq(("a", 1L)).toDF("g", "v")) == twoRows)
+  }
+
   test("agg routing bails out: measure filter, unknown aggregate, " +
       "distinct, global (no grouping), and disabled flag") {
     ensureRoute()

@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 /** Spark jobs each index-maintenance entry point schedules on a small
   * maintained IVF and BM25 index. The CDC ingest path runs all four on
   * every batch, so its cost is bound by job count: a change to the
-  * store format or its swap must leave these numbers as they are. */
+  * store format or its swap must leave these numbers as they are. No
+  * read of an index table schedules a schema-inference job
+  * ([[Segments.read]]). */
 class IndexMaintenanceJobsSpec extends graft.SparkSuite {
 
   private lazy val vecs = {
@@ -49,8 +51,8 @@ class IndexMaintenanceJobsSpec extends graft.SparkSuite {
     (upsert, compact)
   }
 
-  test("ivfUpsert schedules 5 jobs") { assert(ivf._1 == 5) }
-  test("ivfCompact schedules 6 jobs") { assert(ivf._2 == 6) }
-  test("invertedIndexUpsert schedules 9 jobs") { assert(bm25._1 == 9) }
-  test("invertedIndexCompact schedules 13 jobs") { assert(bm25._2 == 13) }
+  test("ivfUpsert schedules 4 jobs") { assert(ivf._1 == 4) }
+  test("ivfCompact schedules 3 jobs") { assert(ivf._2 == 3) }
+  test("invertedIndexUpsert schedules 8 jobs") { assert(bm25._1 == 8) }
+  test("invertedIndexCompact schedules 7 jobs") { assert(bm25._2 == 7) }
 }
