@@ -321,6 +321,50 @@ object Engine {
     try read(reader) finally reader.close()
   }
 
+  /** Feeds the rows of a parquet relation without partition columns,
+    * read on the driver with Spark's parquet reader from the files its
+    * index lists (no Spark job), to `sink` as UnsafeRows in the
+    * relation's column order, each valid only during its call. Stops
+    * and returns false before the rows' total size would pass
+    * `maxBytes`: no more than that is ever fed. */
+  private[graft] def parquetRows(spark: SparkSession,
+      relation: org.apache.spark.sql.execution.datasources.HadoopFsRelation,
+      maxBytes: Long)(
+      sink: org.apache.spark.sql.catalyst.expressions.UnsafeRow => Unit): Boolean = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    require(relation.partitionSchema.isEmpty,
+      "parquetRows reads relations without partition columns")
+    val schema = relation.dataSchema
+    val read = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
+        relation.partitionSchema, schema, Nil,
+        relation.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConfWithOptions(relation.options))
+    val toUnsafe = org.apache.spark.sql.catalyst.expressions
+      .UnsafeProjection.create(schema)
+    var bytes = 0L
+    val files = relation.location.listFiles(Nil, Nil).flatMap(_.files)
+      .map(_.fileStatus).sortBy(_.getPath.toString).iterator
+    var within = true
+    while (within && files.hasNext) {
+      val f = files.next()
+      val in = read(PartitionedFile(InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromPath(f.getPath), 0, f.getLen,
+        Array.empty, f.getModificationTime, f.getLen))
+      try while (within && in.hasNext) {
+        val r = toUnsafe(in.next())
+        bytes += r.getSizeInBytes
+        within = bytes <= maxBytes
+        if (within) sink(r)
+      } finally in match {
+        case c: java.io.Closeable => c.close()
+        case _ => ()
+      }
+    }
+    within
+  }
+
   /** True when `df` is only Projects and Filters over one parquet file
     * relation whose footers, read on the driver until their running
     * total reaches `cap`, count fewer than `cap` rows: then `df` has

@@ -16,10 +16,13 @@ import org.apache.spark.sql.SparkSession
   * JDBC are rewritten onto the smallest subsuming cuboid — a fact-table
   * GROUP BY serves from a few-thousand-row summary, never rescanning
   * the 100 TB fact. Queries outside the lattice still run (the full
-  * engine is behind the endpoint); routed ones are just fast. Each
-  * routed aggregate runs as one Spark job: a GROUP BY at a cuboid's
-  * exact grain reads the cuboid rows as they are, and a coarser one
-  * re-aggregates a small cuboid in a single task (no shuffle).
+  * engine is behind the endpoint); routed ones are just fast. A
+  * cuboid within `spark.sql.autoBroadcastJoinThreshold` has its rows
+  * held on the driver when it is registered, so a statement routed
+  * onto it is answered there — dim filter, projection or
+  * re-aggregation, then its ORDER BY … LIMIT — and schedules no Spark
+  * job at all; one onto a larger cuboid runs as one Spark job over the
+  * cuboid's files.
   *
   * Scale shape: the daemon holds no per-query state beyond Spark's own
   * session handles; concurrency is Spark's scheduler (FAIR pool
@@ -45,24 +48,34 @@ object Serve {
     // the Kylin move: lattice materialized + routing on for EVERY
     // connection this daemon serves
     CubeQueries.ensureCube(spark, sfDir)
-    val exp = spark.experimental
-    if (!exp.extraOptimizations.contains(graft.plans.AggRouteRewrite))
-      exp.extraOptimizations =
-        exp.extraOptimizations :+ graft.plans.AggRouteRewrite
+    // the routing rules come with GraftExtensions; the flag turns them on
     spark.conf.set("spark.graft.aggRouting.enabled", "true")
-    // singleSession (one shared session state, so the routing rule +
-    // temp views registered above are visible to every JDBC
-    // connection) is a STATIC conf — Engine.session sets it at build
-    // time; require it here so a mis-built session fails loudly
-    // instead of serving connections that can't see the warehouse
-    require(spark.conf.get(
+    // the extensions and singleSession (one shared session state, so
+    // the routing rules + temp views registered above are visible to
+    // every JDBC connection) are STATIC confs — Engine.session sets
+    // them at build time; require them here so a mis-built session
+    // fails loudly instead of serving connections that can't see the
+    // warehouse or route onto it
+    require(spark.conf.get("spark.sql.extensions", "")
+        .contains("graft.plans.GraftExtensions") && spark.conf.get(
         "spark.sql.hive.thriftServer.singleSession", "false") == "true",
-      "Serve needs spark.sql.hive.thriftServer.singleSession=true at " +
-        "session build time (Engine.session sets it)")
+      "Serve needs spark.sql.extensions=graft.plans.GraftExtensions and " +
+        "spark.sql.hive.thriftServer.singleSession=true at session " +
+        "build time (Engine.session sets both)")
     spark.conf.set("hive.server2.thrift.port", port.toString)
     spark.conf.set("hive.server2.thrift.bind.host", "localhost")
-    org.apache.spark.sql.hive.thriftserver.HiveThriftServer2
-      .startWithContext(spark.sqlContext)
+    // the Thrift service takes its port from the Hive session state
+    // bound to the calling thread, which an earlier start on the same
+    // thread left behind (a restart would listen on the old port): a
+    // fresh thread carries none
+    var started: Either[Throwable, org.apache.hive.service.server.HiveServer2] = null
+    val starter = new Thread(() => started =
+      try Right(org.apache.spark.sql.hive.thriftserver.HiveThriftServer2
+        .startWithContext(spark.sqlContext))
+      catch { case e: Throwable => Left(e) }, "graft-serve-start")
+    starter.start()
+    starter.join()
+    started.fold(e => throw e, identity)
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,15 +1,18 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.{col, lit, sum, when}
 import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, Expression, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, Expression, NamedExpression, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, HllSketchAgg, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, Repartition, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.unsafe.Platform
 import graft.operators.Cube
 
 /** Automatic aggregate routing onto a materialized summary table — the
@@ -42,23 +45,40 @@ import graft.operators.Cube
   * shuffle, and the aggregation hash all shrink by the fact-to-summary
   * ratio, for free in every dashboard query that hits the lattice.
   *
-  * A routed aggregate takes one of three shapes, each one Spark stage
-  * (interactive latency is the fixed cost per stage, not data volume):
+  * A routed aggregate takes one of four shapes; each answer is either
+  * computed on the driver (no Spark job) or one Spark stage
+  * (interactive latency is the fixed cost per job, not data volume):
   *
-  *  - EXACT GRAIN — grouping columns equal the route's dims as a set:
+  *  - HELD — [[AggRouting.register]] holds the summary's rows on the
+  *    driver (one plain parquet relation, no partition columns, rows
+  *    within `spark.sql.autoBroadcastJoinThreshold`, all held rows
+  *    within `spark.driver.maxResultSize`, smallest first) and the
+  *    threshold, read at route time, is ≥ 0 and still covers them:
+  *    the dim filter, then the exact-grain projection or the coarser
+  *    re-aggregation (each kind's combine, through Spark's own
+  *    aggregate evaluation) run on the driver, and the answer is a
+  *    `LocalRelation` — a `LocalTableScan` that schedules no job.
+  *    [[LocalSortFold]] then folds the statement's ORDER BY … LIMIT
+  *    into it. The rewrite replaces the Aggregate before
+  *    [[DecimalSum128Rewrite]] sees it.
+  *  - EXACT SCAN — grouping columns equal the route's dims as a set:
   *    `Project` over the (filtered) summary. [[AggRouting.register]]
   *    promises one summary row per dims-group, so re-aggregating is
   *    the identity; each measure is its summary column (cast to the
   *    query's result type when they differ) and COUNT(DISTINCT x) is
   *    `bitmap_cardinality` of the stored bitmap, with no merge.
-  *  - COARSER GRAIN, SMALL SUMMARY — the summary's plan statistics are
-  *    at most `spark.sql.autoBroadcastJoinThreshold` (≥ 0): the
+  *  - COALESCED — a coarser grain over a summary whose plan statistics
+  *    are at most `spark.sql.autoBroadcastJoinThreshold` (≥ 0): the
   *    re-aggregating `Aggregate` reads the summary through
   *    `Repartition(1, shuffle = false)`. Its `CoalesceExec(1)` reports
   *    `SinglePartition`, so the aggregate plans without an exchange —
   *    the same size bound Spark already trusts for broadcasts.
-  *  - COARSER GRAIN, LARGE SUMMARY (or threshold -1): the distributed
-  *    re-aggregation, a partial/final `Aggregate` across a shuffle.
+  *  - DISTRIBUTED — a coarser grain over a large summary (or threshold
+  *    -1, which also forces every held summary here or to EXACT SCAN):
+  *    a partial/final `Aggregate` across a shuffle.
+  *
+  * Each pick is recorded for the planning thread
+  * ([[AggRouting.recording]]): the summary, its rows and the shape.
   *
   * Output attribute ids, names, and data types are preserved exactly
   * (re-aggregated values are cast back to the original result type
@@ -68,7 +88,10 @@ import graft.operators.Cube
   *
   * Freshness is the registrant's contract, exactly as it is Kylin's:
   * a summary built from yesterday's fact answers with yesterday's
-  * data until refreshed. Routes are per-JVM ([[AggRouting.register]]);
+  * data until refreshed; held rows are a snapshot taken at
+  * registration, like the summary's file index, so a rebuilt summary
+  * is registered again, which replaces its route (one route per
+  * summary location). Routes are per-JVM ([[AggRouting.register]]);
   * the rewrite is opt-in via `spark.graft.aggRouting.enabled`
   * (default false), mirroring the other graft rules.
   */
@@ -88,7 +111,37 @@ object AggRouting {
       /** summary row count, if known — the rewrite prefers the
         * SMALLEST subsuming summary (the Kylin cuboid-selection
         * rule); unknown sizes sort last */
-      rows: Long = Long.MaxValue)
+      rows: Long,
+      /** the summary's location: its file relation's root paths, or
+        * "" when it scans no file; one route per non-empty location */
+      summary: String,
+      /** the summary's rows held on the driver, if any */
+      held: Option[HeldRows])
+
+  /** A summary's rows held on the driver: UnsafeRows laid out as its
+    * plan's output, packed back to back in one buffer (row i ends at
+    * `ends(i)`), so each row costs its bytes and one offset. A snapshot
+    * taken at [[register]], like the summary's file index. */
+  final class HeldRows(data: Array[Byte], ends: Array[Int], numFields: Int) {
+    def bytes: Long = data.length
+    def rows: Iterator[InternalRow] = ends.indices.iterator.map { i =>
+      val start = if (i == 0) 0 else ends(i - 1)
+      val r = new UnsafeRow(numFields)
+      r.pointTo(data, Platform.BYTE_ARRAY_OFFSET + start, ends(i) - start)
+      r
+    }
+  }
+
+  /** How a routed aggregate is answered (see [[AggRouteRewrite]]). */
+  sealed trait Shape
+  /** on the driver, from the summary's held rows: no Spark job */
+  case object Held extends Shape
+  case object ExactScan extends Shape
+  case object Coalesced extends Shape
+  case object Distributed extends Shape
+
+  /** One routing decision: the summary picked, its rows, the shape. */
+  final case class Decision(summary: String, rows: Long, shape: Shape)
 
   private val routes = new java.util.concurrent.CopyOnWriteArrayList[Route]
 
@@ -97,7 +150,26 @@ object AggRouting {
     routes.asScala.toSeq
   }
 
+  /** Drop every route, and with them their held rows. */
   def clear(): Unit = routes.clear()
+
+  private val recorder =
+    new ThreadLocal[scala.collection.mutable.ArrayBuffer[Decision]]
+
+  /** Run `f` and return the routing decisions planned on THIS thread
+    * while it ran. Plans are lazy: `f` must force the optimized plan. */
+  def recording[T](f: => T): (T, Seq[Decision]) = {
+    val prev = recorder.get()
+    val log = scala.collection.mutable.ArrayBuffer.empty[Decision]
+    recorder.set(log)
+    try {
+      val r = f
+      (r, log.toSeq)
+    } finally recorder.set(prev)
+  }
+
+  private[plans] def record(d: Decision): Unit =
+    Option(recorder.get()).foreach(_ += d)
 
   /** Run `f` with [[DecimalSum128Rewrite]] disabled on THIS thread,
     * restoring after. Thread-confined (a ThreadLocal the rewrite
@@ -177,7 +249,11 @@ object AggRouting {
     * the fact (i.e. be the result of `fact.groupBy(dims).agg(...)`).
     * Exact-grain answers depend on this contract: a query grouped by
     * exactly `dims` is answered by projecting the summary rows as they
-    * are, so a summary holding two rows for one group returns both. */
+    * are, so a summary holding two rows for one group returns both.
+    *
+    * Registering a summary location again replaces its route. A small
+    * plain parquet summary has its rows read on the driver here, with
+    * no Spark job, and held for the HELD shape (see [[AggRouteRewrite]]). */
   def register(fact: DataFrame, summary: DataFrame, dims: Seq[String],
       measures: Map[Column, String], rows: Long = Long.MaxValue): Unit = {
     val paths = scanPaths(fact)
@@ -195,8 +271,58 @@ object AggRouting {
         s"summary is missing measure column $sumCol")
       canonical(fact, c)._1 -> sumCol
     }
-    routes.add(Route(paths, dimMap, canon, factAttrs,
-      EliminateSubqueryAliases(summary.queryExecution.analyzed), rows))
+    val plan = EliminateSubqueryAliases(summary.queryExecution.analyzed)
+    val location = scanPaths(summary).toSeq.sorted.mkString(",")
+    val held = hold(summary.sparkSession, plan)
+    val route = Route(paths, dimMap, canon, factAttrs, plan, rows, location, held)
+    synchronized {
+      // a rebuilt summary replaces its old route: the old one's file
+      // index and held rows still describe the deleted files
+      if (location.nonEmpty) routes.removeIf(_.summary == location)
+      routes.add(route)
+      keepHeldWithin(summary.sparkSession.sparkContext.getConf
+        .getSizeAsBytes("spark.driver.maxResultSize", "1g"))
+    }
+  }
+
+  /** The summary's rows, read on the driver with no Spark job, when it
+    * is one plain parquet relation with no partition columns and its
+    * rows take at most `spark.sql.autoBroadcastJoinThreshold` bytes —
+    * the size Spark already trusts to hold on the driver. */
+  private def hold(spark: SparkSession, plan: LogicalPlan): Option[HeldRows] = {
+    // one buffer with Int offsets holds the rows: below 2 GB
+    val cap = math.min(spark.sessionState.conf.autoBroadcastJoinThreshold,
+      Int.MaxValue - 8L)
+    plan match {
+      case lr: LogicalRelation if cap >= 0 => lr.relation match {
+        case h: HadoopFsRelation if h.fileFormat.isInstanceOf[ParquetFileFormat] &&
+            h.partitionSchema.isEmpty =>
+          val data = new java.io.ByteArrayOutputStream
+          val ends = Array.newBuilder[Int]
+          val writeBuffer = new Array[Byte](4096)
+          val within = graft.Engine.parquetRows(spark, h, cap) { r =>
+            r.writeToStream(data, writeBuffer)
+            ends += data.size
+          }
+          Option.when(within)(
+            new HeldRows(data.toByteArray, ends.result(), h.dataSchema.length))
+        case _ => None
+      }
+      case _ => None
+    }
+  }
+
+  /** Keep the smallest summaries' held rows while their total stays
+    * within `budget` (0: no limit); the larger ones let theirs go. */
+  private def keepHeldWithin(budget: Long): Unit = {
+    val limit = if (budget <= 0) Long.MaxValue else budget
+    var total = 0L
+    (0 until routes.size).filter(i => routes.get(i).held.nonEmpty)
+      .sortBy(i => routes.get(i).held.get.bytes).foreach { i =>
+        val r = routes.get(i)
+        if (total + r.held.get.bytes <= limit) total += r.held.get.bytes
+        else routes.set(i, r.copy(held = None))
+      }
   }
 
   /** The summary's measure columns in its own order, each with its
@@ -280,7 +406,7 @@ object AggRouting {
 
 object AggRouteRewrite extends Rule[LogicalPlan] {
 
-  private def enabled: Boolean =
+  private[plans] def enabled: Boolean =
     SQLConf.get
       .getConfString("spark.graft.aggRouting.enabled", "false")
       .toBoolean
@@ -293,8 +419,11 @@ object AggRouteRewrite extends Rule[LogicalPlan] {
         // smallest subsuming summary wins (Kylin's cuboid selection):
         // among the routes whose dims/measures/filters all match, the
         // one with the fewest rows re-aggregates the least data
-        routes.sortBy(_.rows).iterator.map(r => route(agg, r))
-          .collectFirst { case Some(p) => p }.getOrElse(agg)
+        routes.sortBy(_.rows).iterator.flatMap(r => route(agg, r).map(r -> _))
+          .nextOption().map { case (r, (p, shape)) =>
+            AggRouting.record(AggRouting.Decision(r.summary, r.rows, shape))
+            p
+          }.getOrElse(agg)
     }
   }
 
@@ -314,7 +443,7 @@ object AggRouteRewrite extends Rule[LogicalPlan] {
   }
 
   private def route(agg: Aggregate, r: AggRouting.Route)
-      : Option[LogicalPlan] = {
+      : Option[(LogicalPlan, AggRouting.Shape)] = {
     val grouping = agg.groupingExpressions
     if (grouping.isEmpty) return None // empty-summary vs count()=0 edge
     if (!grouping.forall(_.isInstanceOf[Attribute])) return None
@@ -406,21 +535,28 @@ object AggRouteRewrite extends Rule[LogicalPlan] {
     }
     if (!ok) return None
 
-    val filtered = conds.map(_.transformUp {
+    val cond = conds.map(_.transformUp {
         case a: Attribute => dimAttr(a.name)
       })
       .reduceOption(org.apache.spark.sql.catalyst.expressions.And(_, _))
-      .map(Filter(_, summary)).getOrElse(summary)
-    if (exact) return Some(Project(outExprs, filtered))
     val newGrouping: Seq[Expression] =
       grouping.map(g => dimAttr(g.asInstanceOf[Attribute].name))
-    // a summary small enough to broadcast re-aggregates in ONE task:
-    // CoalesceExec(1) reports SinglePartition, so no exchange is planned
     val threshold = SQLConf.get.autoBroadcastJoinThreshold
-    val input =
-      if (threshold >= 0 && summary.stats.sizeInBytes <= threshold)
-        Repartition(1, shuffle = false, filtered)
-      else filtered
-    Some(Aggregate(newGrouping, outExprs, input))
+    val filtered = cond.map(Filter(_, summary)).getOrElse(summary)
+    r.held.filter(h => threshold >= 0 && h.bytes <= threshold &&
+        LocalAnswer.evaluable(cond.toSeq ++ outExprs)) match {
+      // held rows within the threshold answer on the driver: no job
+      case Some(h) =>
+        Some(LocalAnswer(h.rows, summary.output, cond, outExprs,
+          Option.when(!exact)(newGrouping)) -> AggRouting.Held)
+      case None if exact => Some(Project(outExprs, filtered) -> AggRouting.ExactScan)
+      // a summary small enough to broadcast re-aggregates in ONE task:
+      // CoalesceExec(1) reports SinglePartition, so no exchange is planned
+      case None if threshold >= 0 && summary.stats.sizeInBytes <= threshold =>
+        Some(Aggregate(newGrouping, outExprs,
+          Repartition(1, shuffle = false, filtered)) -> AggRouting.Coalesced)
+      case None =>
+        Some(Aggregate(newGrouping, outExprs, filtered) -> AggRouting.Distributed)
+    }
   }
 }

@@ -22,7 +22,9 @@ import org.apache.spark.sql.internal.SQLConf
   *  - [[AggRouteRewrite]]: answers fact-table aggregates from a
   *    registered materialized summary (the Kylin cube-routing
   *    capability, reference docs/olap.md:24). Opt-in via
-  *    `spark.graft.aggRouting.enabled`.
+  *    `spark.graft.aggRouting.enabled`, which also turns on
+  *    [[LocalSortFold]]: a routed answer computed on the driver keeps
+  *    its ORDER BY … LIMIT on the driver too.
   *  - [[DecimalSum128Rewrite]]: result-identical 128/192-bit integer
   *    accumulation for decimal SUMs (the engine's deterministic-
   *    decimal convention made Sum's BigDecimal buffer the hottest
@@ -89,6 +91,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => ApproxDistinctRewrite)
     ext.injectOptimizerRule(_ => UnionFusedJoinRewrite)
     ext.injectOptimizerRule(_ => AggRouteRewrite)
+    ext.injectOptimizerRule(_ => LocalSortFold)
     // registered AFTER AggRouteRewrite: routing matches builtin Sum
     // nodes, so the 128-bit rewrite must see each Aggregate only once
     // routing has had first pass at it (same-batch rule order)

@@ -26,4 +26,28 @@ object Bridge {
   /** The analyzed logical plan of a DataFrame (for plan composition). */
   def logicalPlan(df: org.apache.spark.sql.DataFrame): LogicalPlan =
     df.asInstanceOf[Dataset[_]].queryExecution.analyzed
+
+  /** `e` with float and double values normalized as Spark normalizes
+    * grouping keys: every NaN to one NaN, -0.0 to 0.0. */
+  def normalizeFloats(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
+  /** Spark's aggregate evaluation on the driver, the evaluator behind
+    * `Dataset.observe`: a function that folds one group's rows (over
+    * `input`) through `functions`, each an aggregate expression, and
+    * returns one row of their results. Declarative, imperative and
+    * typed aggregates keep Spark's semantics. Not thread-safe: one
+    * caller folds one group at a time. */
+  def aggregator(functions: Seq[Expression],
+      input: Seq[org.apache.spark.sql.catalyst.expressions.Attribute])
+      : Iterator[org.apache.spark.sql.catalyst.InternalRow] =>
+        org.apache.spark.sql.catalyst.InternalRow = {
+    val acc = org.apache.spark.sql.execution.AggregatingAccumulator(
+      functions, input)
+    rows => {
+      acc.reset()
+      rows.foreach(acc.add)
+      acc.value.copy()
+    }
+  }
 }

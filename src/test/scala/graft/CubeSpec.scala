@@ -14,6 +14,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.Cube
+import graft.plans.AggRouting
 
 /** The cube lattice's two contracts: built in one pass (fact scanned
   * once) and routed-to-smallest-cuboid. */
@@ -385,15 +386,23 @@ class CubeSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     physical(df).collect { case s: FileSourceScanExec =>
       s.relation.location.rootPaths.map(_.toString) }.flatten
 
-  private def scannedPaths = scanPaths(CubeQueries.q_cube_route.run(spark, sf))
+  /** `df`, planned, with the routing decisions its planning records
+    * on this thread. */
+  private def routedDf(df: => DataFrame): (DataFrame, Seq[AggRouting.Decision]) =
+    AggRouting.recording {
+      val d = df
+      d.queryExecution.optimizedPlan
+      d
+    }
+
+  private def decisions(df: => DataFrame) = routedDf(df)._2
 
   test("q_cube_route scans the smallest subsuming cuboid, not the fact") {
     val suf = sf.replaceAll("[^A-Za-z0-9]", "_")
-    val paths = scannedPaths
-    assert(paths.nonEmpty)
+    val picked = decisions(CubeQueries.q_cube_route.run(spark, sf))
     val want = s"cube_${suf}_" + graft.operators.Cube.mangle(Seq("l_suppkey"))
-    assert(paths.forall(_.contains(want)),
-      s"expected the {l_suppkey} cuboid scan ($want), got $paths")
+    assert(picked.nonEmpty && picked.forall(_.summary.endsWith(want)),
+      s"expected the {l_suppkey} cuboid ($want), got $picked")
   }
 
   test("routing and the decimal-sum kernel COEXIST in one plan: the " +
@@ -407,16 +416,21 @@ class CubeSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     // The routed re-aggregation sums the cuboid's DECIMAL(28,2)
     // measure, so the eligible plan carries the 192-bit kernel. The
     // query groups coarser than its cuboid ({rf,ls}): an exact-grain
-    // query has no re-aggregation, hence no kernel.
+    // query has no re-aggregation, hence no kernel. A held cuboid is
+    // re-aggregated on the driver, before the kernel rewrite sees any
+    // plan; at threshold -1 nothing is held and the plan is the
+    // distributed re-aggregation the kernel must reach.
     manifest
-    val df = linestatusQuery
-    val planStr = df.queryExecution.executedPlan.toString
-    val paths = scanPaths(df)
-    assert(paths.nonEmpty && paths.forall(_.contains("cube_")),
-      s"routed summary scan missing: $paths")
-    assert(planStr.contains("decimal_sum192") ||
-      planStr.contains("decimal_sum128"),
-      s"decimal-sum kernel missing from the routed plan:\n$planStr")
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val df = linestatusQuery
+      val planStr = df.queryExecution.executedPlan.toString
+      val paths = scanPaths(df)
+      assert(paths.nonEmpty && paths.forall(_.contains("cube_")),
+        s"routed summary scan missing: $paths")
+      assert(planStr.contains("decimal_sum192") ||
+        planStr.contains("decimal_sum128"),
+        s"decimal-sum kernel missing from the routed plan:\n$planStr")
+    }
   }
 
   private def exchanges(df: DataFrame) =
@@ -432,24 +446,47 @@ class CubeSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   test("exact-grain routing plans no aggregate and no exchange") {
     manifest
-    val df = ExtQueries.withAggRouting(spark) {
+    def df = ExtQueries.withAggRouting(spark) {
       Engine.table(spark, sf, "lineitem")
         .groupBy("l_suppkey")
         .agg(count(lit(1)).as("n"),
           graft.functions.dsum2(col("l_quantity")).as("sum_qty"),
           min(col("l_quantity")).as("min_qty"))
     }
-    val plan = physical(df)
-    assert(plan.collect { case a: BaseAggregateExec => a }.isEmpty,
-      s"exact-grain route must not re-aggregate:\n$plan")
-    assert(exchanges(df) == 0, s"exact-grain route shuffled:\n$plan")
-    val paths = scanPaths(df)
-    assert(paths.nonEmpty && paths.forall(_.contains("cube_")), paths)
+    // the held cuboid answers on the driver; at threshold -1 nothing is
+    // held and the plan is a projection of the cuboid scan
+    assert(decisions(df).map(_.shape) == Seq(AggRouting.Held))
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val (scan, picked) = routedDf(df)
+      assert(picked.map(_.shape) == Seq(AggRouting.ExactScan))
+      val plan = physical(scan)
+      assert(plan.collect { case a: BaseAggregateExec => a }.isEmpty,
+        s"exact-grain route must not re-aggregate:\n$plan")
+      assert(exchanges(scan) == 0, s"exact-grain route shuffled:\n$plan")
+      val paths = scanPaths(scan)
+      assert(paths.nonEmpty && paths.forall(_.contains("cube_")), paths)
+    }
   }
 
   test("coarser routing over a small cuboid re-aggregates in one task") {
     manifest
-    val df = linestatusQuery
+    // the lattice's cuboids are held: re-aggregated on the driver
+    assert(decisions(linestatusQuery).map(_.shape) == Seq(AggRouting.Held))
+    // a partitioned summary is never held: under the threshold it
+    // re-aggregates in one task over Coalesce 1
+    val fact = tmpDir("graft_coalesced_fact")
+    val summary = tmpDir("graft_coalesced_summary")
+    Engine.table(spark, sf, "lineitem").write.mode("overwrite").parquet(fact)
+    val lineitem = spark.read.parquet(fact)
+    lineitem.groupBy("l_returnflag", "l_linestatus")
+      .agg(count(lit(1)).as("n"))
+      .write.mode("overwrite").partitionBy("l_returnflag").parquet(summary)
+    AggRouting.register(lineitem, spark.read.parquet(summary),
+      Seq("l_returnflag", "l_linestatus"), Map(count(lit(1)) -> "n"))
+    val (df, picked) = routedDf(ExtQueries.withAggRouting(spark) {
+      lineitem.groupBy("l_linestatus").agg(count(lit(1)).as("n"))
+    })
+    assert(picked.map(_.shape) == Seq(AggRouting.Coalesced))
     val plan = physical(df)
     assert(plan.collect { case c: CoalesceExec if c.numPartitions == 1 =>
       c }.length == 1, s"expected one Coalesce 1:\n$plan")
@@ -475,48 +512,34 @@ class CubeSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   test("q_cube_budget routes onto the budget-selected lattice: zero " +
       "fact scans") {
-    val df = CubeQueries.q_cube_budget.run(spark, sf)
-    val plan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    val paths = plan.collect { case s: FileSourceScanExec =>
-      s.relation.location.rootPaths.map(_.toString) }.flatten
-    assert(paths.nonEmpty)
+    val (df, picked) = routedDf(CubeQueries.q_cube_budget.run(spark, sf))
+    val paths = scanPaths(df)
+    assert(picked.nonEmpty)
     // when the full-lattice suite has ALSO registered its cuboids in
     // this session, routing may legitimately pick an equally small one
     // of those — the query's contract is zero FACT scans, not which
     // registered lattice answered
     assert(paths.forall(p => !p.contains("lineitem")),
       s"expected only cuboid scans (no fact), got $paths")
-    assert(paths.exists(p => p.contains("cubebgt_") || p.contains("cube_")),
-      s"expected a cuboid-table scan, got $paths")
+    assert(picked.forall(d => d.summary.contains("cubebgt_") ||
+        d.summary.contains("cube_")),
+      s"expected cuboid tables only, got $picked")
   }
 
   test("grouping subsumed by two cuboids picks the fewer-row one") {
     // group by (rf, ls): subsumed by base, {rf,ls,sd} and {rf,ls};
     // the 6-row {rf,ls} cuboid must win
     manifest // force build+registration
-    val exp = spark.experimental
-    val prior = exp.extraOptimizations
-    if (!prior.contains(graft.plans.AggRouteRewrite))
-      exp.extraOptimizations = prior :+ graft.plans.AggRouteRewrite
-    try withSQLConf("spark.graft.aggRouting.enabled" -> "true") {
-      val df = Engine.table(spark, sf, "lineitem")
+    val picked = decisions(ExtQueries.withAggRouting(spark) {
+      Engine.table(spark, sf, "lineitem")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(count(lit(1)).as("n"))
-      val plan = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-      val paths = plan.collect { case s: FileSourceScanExec =>
-        s.relation.location.rootPaths.map(_.toString) }.flatten
-      val suf = sf.replaceAll("[^A-Za-z0-9]", "_")
-      val want = s"cube_${suf}_" +
-        graft.operators.Cube.mangle(Seq("l_returnflag", "l_linestatus"))
-      assert(paths.nonEmpty && paths.forall(_.contains(want)),
-        s"expected the 6-row {rf,ls} cuboid ($want), got $paths")
-    } finally exp.extraOptimizations = prior
+    })
+    val suf = sf.replaceAll("[^A-Za-z0-9]", "_")
+    val want = s"cube_${suf}_" +
+      graft.operators.Cube.mangle(Seq("l_returnflag", "l_linestatus"))
+    assert(picked.nonEmpty && picked.forall(_.summary.endsWith(want)),
+      s"expected the 6-row {rf,ls} cuboid ($want), got $picked")
   }
 
   test("route answers equal the naive fact aggregate exactly") {
@@ -529,6 +552,106 @@ class CubeSpec extends SparkSuite with AdaptiveSparkPlanHelper {
         max(col("l_quantity")).as("max_qty"))
       .orderBy("l_suppkey")
     assertSameRows(routed, naive)
+  }
+
+  test("a rebuild at the same prefix over changed data replaces the " +
+      "old routes: the routed answer equals the fact aggregate") {
+    spark.sql("CREATE DATABASE IF NOT EXISTS dws")
+    val dir = tmpDir("graft_rebuilt_fact")
+    val ms = Seq(Cube.MeasureDef("n", Cube.MCountAll),
+      Cube.MeasureDef("mx", Cube.MMax, col("l_quantity")))
+    val lineitem = Engine.table(spark, sf, "lineitem")
+      .select("l_returnflag", "l_linestatus", "l_quantity")
+    def build(rows: DataFrame) = {
+      rows.write.mode("overwrite").parquet(dir)
+      Cube.build(spark.read.parquet(dir), ms,
+        Seq(Seq("l_returnflag", "l_linestatus"), Seq("l_returnflag")),
+        "dws.rebuilt_")
+    }
+    build(lineitem.filter(col("l_returnflag") === "R"))
+    build(lineitem)
+    val fact = spark.read.parquet(dir)
+    def q = fact.groupBy("l_returnflag")
+      .agg(count(lit(1)).as("n"), max(col("l_quantity")).as("mx"))
+    val naive = q
+    val (routed, picked) = routedDf(ExtQueries.withAggRouting(spark)(q))
+    assert(picked.map(_.summary).forall(_.contains("rebuilt_")) &&
+      picked.nonEmpty, picked)
+    assert(AggRouting.all.count(_.summary.contains("rebuilt_")) == 2,
+      AggRouting.all.map(_.summary))
+    assertSameRows(routed, naive)
+  }
+
+  /** A routed answer from held rows equals the same query's answer at
+    * threshold -1, where nothing is held: rows compared by their first
+    * `keys` columns, values by Row equality (NaN == NaN, -0.0 == 0.0). */
+  private def heldEqualsDistributed(keys: Int)(q: => DataFrame): Unit = {
+    def run() = AggRouting.recording {
+      ExtQueries.withAggRouting(spark)(q).collect().toSeq
+        .sortBy(_.toSeq.take(keys).mkString("|"))
+    }
+    val (held, h) = run()
+    val (dist, d) =
+      withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(run())
+    assert(h.nonEmpty && h.forall(_.shape == AggRouting.Held), h)
+    assert(d.nonEmpty && d.forall(_.shape != AggRouting.Held), d)
+    assert(held == dist, s"held $held != distributed $dist")
+  }
+
+  test("held rows answer like the distributed path: null dim groups, " +
+      "NaN and -0.0 under min/max, bitmap COUNT(DISTINCT) at a coarser " +
+      "grain, HAVING, a dim filter meeting NULL, an empty cuboid") {
+    import spark.implicits._
+    spark.sql("CREATE DATABASE IF NOT EXISTS dws")
+    val nan = Double.NaN
+    val rows = Seq[(String, String, Long, Double)](
+      ("a", "p", 1L, 1.0), ("a", "q", 2L, nan), ("a", null, 3L, -0.0),
+      (null, "p", 3L, -0.0), (null, "q", 4L, 0.0), (null, null, 4L, nan),
+      ("b", "p", 1L, 2.5), ("b", null, 5L, 0.0), ("b", "q", 6L, -1.5))
+    val ms = Seq(Cube.MeasureDef("n", Cube.MCountAll),
+      Cube.MeasureDef("mn", Cube.MMin, col("v")),
+      Cube.MeasureDef("mx", Cube.MMax, col("v")),
+      Cube.MeasureDef("bm", Cube.MBitmap, col("id")))
+    def cube(name: String, data: Seq[(String, String, Long, Double)]) = {
+      val dir = tmpDir(s"graft_held_$name")
+      data.toDF("g", "h", "id", "v").write.mode("overwrite").parquet(dir)
+      val fact = spark.read.parquet(dir)
+      Cube.build(fact, ms, Seq(Seq("g", "h"), Seq("g")), s"dws.held_${name}_")
+      fact
+    }
+    val fact = cube("full", rows)
+    val empty = cube("empty", Nil)
+    def measures(df: org.apache.spark.sql.RelationalGroupedDataset) =
+      df.agg(count(lit(1)).as("n"), min(col("v")).as("mn"),
+        max(col("v")).as("mx"), countDistinct(col("id")).as("u"))
+    Seq(fact, empty).foreach { f =>
+      // coarser than {g,h}: re-aggregated, with null h groups
+      heldEqualsDistributed(1)(measures(f.groupBy("h")))
+      // exact grain of {g,h} and of {g}
+      heldEqualsDistributed(2)(measures(f.groupBy("g", "h")))
+      heldEqualsDistributed(1)(measures(f.groupBy("g")))
+      // a dim filter that meets NULL drops the null rows
+      heldEqualsDistributed(1)(measures(f.filter(col("g") =!= "a").groupBy("h")))
+      heldEqualsDistributed(2)(measures(f.filter(col("h") === "p").groupBy("g", "h")))
+    }
+    fact.createOrReplaceTempView("held_full_fact")
+    heldEqualsDistributed(1)(spark.sql(
+      "SELECT h, COUNT(*) AS n, MIN(v) AS mn FROM held_full_fact " +
+        "GROUP BY h HAVING COUNT(*) > 2 AND MAX(v) > 0"))
+    heldEqualsDistributed(1)(spark.sql(
+      "SELECT h, COUNT(DISTINCT id) AS u FROM held_full_fact " +
+        "WHERE g IS NOT NULL GROUP BY h ORDER BY h LIMIT 2"))
+    // a dim filter holding a subquery cannot run on the driver: the
+    // held cuboid is answered by a file-scan shape instead
+    val sub = "SELECT h, COUNT(*) AS n FROM held_full_fact " +
+      "WHERE g = (SELECT MIN(g) FROM held_full_fact) GROUP BY h"
+    val (subRows, subPicked) = AggRouting.recording {
+      ExtQueries.withAggRouting(spark)(spark.sql(sub)).collect().toSeq
+    }
+    assert(subPicked.nonEmpty && subPicked.forall(_.shape != AggRouting.Held),
+      subPicked)
+    assert(subRows.sortBy(_.toString) ==
+      spark.sql(sub).collect().toSeq.sortBy(_.toString))
   }
 
   test("maintained lattice equals rebuilt lattice for every cuboid") {
@@ -594,13 +717,13 @@ class CubeSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   test("q_cube_rollup: every grouping set answered from a cuboid, " +
       "zero fact scans") {
-    val df = CubeQueries.q_cube_rollup.run(spark, sf)
+    val (df, picked) = routedDf(CubeQueries.q_cube_rollup.run(spark, sf))
     val plan = df.queryExecution.executedPlan.toString
     val suf = sf.replaceAll("[^A-Za-z0-9]", "_")
     assert(!plan.contains("lineitem"),
       s"rollup must not touch the fact:\n$plan")
-    assert(plan.contains(s"cube_${suf}_"),
-      "rollup members must scan cuboid tables")
+    assert(picked.nonEmpty && picked.forall(_.summary.contains(s"cube_${suf}_")),
+      s"rollup members must route onto cuboid tables: $picked")
   }
 
   test("measure table: every kind's aggregate maps back to its kind; " +

@@ -969,14 +969,20 @@ class ExtensionsSpec extends SparkSuite {
     val naive = q.collect()
     assert(scannedPaths(q).contains("lineitem"), "naive must scan the fact")
     withSQLConf("spark.graft.aggRouting.enabled" -> "true") {
-      val routed = q
+      val (routed, picked) = graft.plans.AggRouting.recording {
+        val r = q
+        r.queryExecution.optimizedPlan
+        r
+      }
       val plan = scannedPaths(routed)
       // with the cube lattice registered in the same JVM the rewrite
       // may (correctly) prefer a smaller cuboid over agg_route_ —
       // the contract is: a registered summary, never the fact
-      assert((plan.contains("agg_route_") || plan.contains("cube_")) &&
+      assert(picked.nonEmpty && picked.forall(d =>
+          d.summary.contains("agg_route_") || d.summary.contains("cube_")) &&
         !plan.contains("lineitem"),
-        s"routed plan must scan a registered summary only:\n$plan")
+        s"routed plan must answer from a registered summary only " +
+          s"($picked):\n$plan")
       assert(routed.collect().toSeq == naive.toSeq,
         "routed result must equal the naive result exactly")
     }
@@ -992,9 +998,12 @@ class ExtensionsSpec extends SparkSuite {
     val naive = q.collect()
     assert(scannedPaths(q).contains("events"), "naive must scan the fact")
     withSQLConf("spark.graft.aggRouting.enabled" -> "true") {
-      val plan = scannedPaths(q)
-      assert(plan.contains("audience_route_") && !plan.contains("events"),
-        s"routed plan must scan the bitmap summary only:\n$plan")
+      val (plan, picked) = graft.plans.AggRouting.recording(scannedPaths(q))
+      assert(picked.nonEmpty &&
+        picked.forall(_.summary.contains("audience_route_")) &&
+        !plan.contains("events"),
+        s"routed plan must answer from the bitmap summary only " +
+          s"($picked):\n$plan")
       assert(q.collect().toSeq == naive.toSeq,
         "routed count-distinct differs from naive")
     }

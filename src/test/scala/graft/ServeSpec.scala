@@ -14,25 +14,27 @@ class ServeSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
     try s.getLocalPort finally s.close()
   }
 
-  // One daemon for the suite, started on first use: a stopped Thrift
-  // server does not bind again in the same JVM. It mutates session
-  // confs on the SHARED suite session (observed:
-  // spark.sql.datetime.java8API.enabled flips to true, which makes
-  // Row.getDate throw for every later date-typed suite) — snapshot
-  // before it starts and restore after it stops.
-  private var confBefore = Map.empty[String, String]
+  // A daemon mutates session confs on the SHARED suite session
+  // (observed: spark.sql.datetime.java8API.enabled flips to true, which
+  // makes Row.getDate throw for every later date-typed suite) —
+  // snapshot before the first start and restore after the last stop.
+  private var confBefore: Option[Map[String, String]] = None
+  private def start(port: Int): org.apache.hive.service.server.HiveServer2 = {
+    if (confBefore.isEmpty) confBefore = Some(spark.conf.getAll)
+    Class.forName("org.apache.hive.jdbc.HiveDriver")
+    Serve.start(spark, port, sf)
+  }
+
+  // One daemon serves the suite's JDBC tests, started on first use.
   private var server: org.apache.hive.service.server.HiveServer2 = null
   private lazy val url: String = {
     val port = freePort()
-    confBefore = spark.conf.getAll
-    server = Serve.start(spark, port, sf)
-    Class.forName("org.apache.hive.jdbc.HiveDriver")
+    server = start(port)
     s"jdbc:hive2://localhost:$port/default"
   }
 
-  /** Run `body` with a new connection to the suite's daemon. */
-  private def withServe(body: (String, java.sql.Connection) => Unit): Unit = {
-    // the server binds asynchronously; poll the socket
+  /** A connection to `url`; the server binds asynchronously, so poll. */
+  private def connect(url: String): java.sql.Connection = {
     var conn: java.sql.Connection = null
     val deadline = System.nanoTime() + 60L * 1000000000L
     while (conn == null) {
@@ -43,16 +45,22 @@ class ServeSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
           Thread.sleep(500)
       }
     }
+    conn
+  }
+
+  /** Run `body` with a new connection to the suite's daemon. */
+  private def withServe(body: (String, java.sql.Connection) => Unit): Unit = {
+    val conn = connect(url)
     try body(url, conn) finally conn.close()
   }
 
+  /** Every row of `rs`, read and dropped. */
+  private def drain(rs: java.sql.ResultSet): Unit = while (rs.next()) ()
+
   override def afterAll(): Unit = try {
-    if (server != null) {
-      server.stop()
-      // the daemon flips state session-wide; restore for other suites
-      val exp = spark.experimental
-      exp.extraOptimizations = exp.extraOptimizations
-        .filterNot(_ == graft.plans.AggRouteRewrite)
+    if (server != null) server.stop()
+    // the daemon flips state session-wide; restore for other suites
+    confBefore.foreach { confBefore =>
       val confAfter = spark.conf.getAll
       (confAfter.keySet ++ confBefore.keySet).foreach { k =>
         (confBefore.get(k), confAfter.get(k)) match {
@@ -67,6 +75,29 @@ class ServeSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
       }
     }
   } finally super.afterAll()
+
+  test("a daemon started again after a stop serves on its new port") {
+    def selectOne(port: Int): Unit = {
+      val conn = connect(s"jdbc:hive2://localhost:$port/default")
+      try {
+        val rs = conn.createStatement().executeQuery("SELECT 1")
+        assert(rs.next() && rs.getInt(1) == 1)
+      } finally conn.close()
+    }
+    val first = freePort()
+    val once = start(first)
+    try selectOne(first) finally once.stop()
+    val second = Iterator.continually(freePort()).find(_ != first).get
+    val again = start(second)
+    try {
+      selectOne(second)
+      def listening(port: Int) =
+        scala.util.Try(new java.net.Socket("localhost", port).close()).isSuccess
+      val deadline = System.nanoTime() + 10L * 1000000000L
+      while (listening(first) && System.nanoTime() < deadline) Thread.sleep(200)
+      assert(!listening(first), s"the stopped daemon's port $first still listens")
+    } finally again.stop()
+  }
 
   test("JDBC client gets engine answers; dashboard agg routes to the " +
       "lattice-backed result") {
@@ -93,8 +124,8 @@ class ServeSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
 
       // 2) the Kylin move: a fact-table dashboard aggregate served
       // over JDBC matches the raw-fact answer (routing is enabled
-      // daemon-wide; CubeSpec pins that this exact shape scans the
-      // {l_suppkey} cuboid, not the fact)
+      // daemon-wide; CubeSpec pins that this exact shape routes onto
+      // the {l_suppkey} cuboid, not the fact)
       val rs2 = st.executeQuery(
         "SELECT l_suppkey, COUNT(*) AS n FROM lineitem " +
           "GROUP BY l_suppkey ORDER BY l_suppkey LIMIT 5")
@@ -118,9 +149,11 @@ class ServeSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
           "* (1 - l_discount) AS DECIMAL(18,4))) AS s_disc, " +
           "MAX(l_quantity) AS mx FROM lineitem " +
           "GROUP BY l_linestatus ORDER BY l_linestatus").foreach { sql =>
-        val plan = spark.sql(sql).queryExecution.executedPlan.toString
-        assert(plan.contains("cube_") && !plan.contains("lineitem"),
-          s"$sql must route onto a cuboid:\n$plan")
+        val (plan, picked) = graft.plans.AggRouting.recording(
+          spark.sql(sql).queryExecution.executedPlan.toString)
+        assert(picked.nonEmpty && picked.forall(_.summary.contains("cube_")) &&
+          !plan.contains("lineitem"),
+          s"$sql must route onto a cuboid ($picked):\n$plan")
         // BigDecimal by value: the JDBC and Row decimals may differ
         // in scale only
         def norm(v: Any): Any = v match {
@@ -245,6 +278,42 @@ class ServeSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
     }
   }
 
+  private def routed(dims: String, measures: String, where: String) =
+    s"SELECT $dims, $measures FROM lineitem $where GROUP BY $dims " +
+      s"ORDER BY $dims LIMIT 200"
+
+  /** perfbench's serve_mixed routed statements, one per dimension set. */
+  private val routedStatements = Seq(
+    routed("l_returnflag", "COUNT(*) AS n, MIN(l_quantity) AS mn",
+      "WHERE l_shipdate >= '1994-01-01' AND l_shipdate < '1995-03-01'"),
+    routed("l_returnflag, l_linestatus", "COUNT(l_quantity) AS c, " +
+      "SUM(CAST(l_quantity AS DECIMAL(18,2))) AS s_qty",
+      "WHERE l_returnflag = 'R'"),
+    routed("l_suppkey", "SUM(CAST(l_extendedprice * (1 - l_discount) " +
+      "AS DECIMAL(18,4))) AS s_disc, MAX(l_quantity) AS mx", ""),
+    routed("l_linestatus, l_suppkey", "COUNT(*) AS n, " +
+      "MIN(l_quantity) AS mn, MAX(l_quantity) AS mx",
+      "WHERE l_shipdate >= '1995-06-01' AND l_shipdate < '1996-06-01'"),
+    routed("l_returnflag, l_shipdate", "COUNT(l_quantity) AS c, " +
+      "SUM(CAST(l_quantity AS DECIMAL(18,2))) AS s_qty",
+      "WHERE l_returnflag = 'A'"),
+    routed("l_returnflag, l_linestatus, l_shipdate", "COUNT(*) AS n, " +
+      "SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) " +
+      "AS s_disc, MAX(l_quantity) AS mx", ""))
+
+  test("after warm-up, each routed statement of the dashboard mix " +
+      "schedules no Spark job") {
+    withServe { (_, conn) =>
+      val st = conn.createStatement()
+      routedStatements.foreach(sql => drain(st.executeQuery(sql)))
+      routedStatements.foreach { sql =>
+        val (_, jobs) = org.apache.spark.graft.JobCount.all(spark)(
+          drain(st.executeQuery(sql)))
+        assert(jobs == 0, s"$jobs Spark job(s) for $sql")
+      }
+    }
+  }
+
   test("a dashboard pool sent again compiles no generated code") {
     withServe { (_, conn) =>
       import spark.implicits._
@@ -261,56 +330,39 @@ class ServeSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
         Seq("o_orderkey"))
       val revenue = "CAST(SUM(CAST(l_extendedprice * (1 - l_discount) " +
         "AS DECIMAL(18,4))) AS DOUBLE)"
-      def routed(dims: String, measures: String, where: String) =
-        s"SELECT $dims, $measures FROM lineitem $where GROUP BY $dims " +
-          s"ORDER BY $dims LIMIT 200"
       // perfbench's serve_mixed mix: one statement per routed dimension
       // set, ad-hoc join template and lookup kind, classes interleaved
-      val pool = Seq(
-        routed("l_returnflag", "COUNT(*) AS n, MIN(l_quantity) AS mn",
-          "WHERE l_shipdate >= '1994-01-01' AND l_shipdate < '1995-03-01'"),
-        routed("l_returnflag, l_linestatus", "COUNT(l_quantity) AS c, " +
-          "SUM(CAST(l_quantity AS DECIMAL(18,2))) AS s_qty",
-          "WHERE l_returnflag = 'R'"),
+      val Seq(r1, r2, r3, r4, r5, r6) = routedStatements
+      val pool = Seq(r1, r2,
         "SELECT c_mktsegment, COUNT(*) AS n, CAST(SUM(CAST(o_totalprice " +
           "AS DECIMAL(18,2))) AS DOUBLE) AS total FROM orders JOIN customer " +
           "ON o_custkey = c_custkey WHERE o_orderdate >= '1995-01-01' AND " +
           "o_orderdate < '1995-06-01' GROUP BY c_mktsegment " +
           "ORDER BY c_mktsegment",
-        routed("l_suppkey", "SUM(CAST(l_extendedprice * (1 - l_discount) " +
-          "AS DECIMAL(18,4))) AS s_disc, MAX(l_quantity) AS mx", ""),
+        r3,
         "SELECT o_orderkey, o_orderstatus, o_totalprice FROM " +
           s"vtab.`$root` VERSION AS OF 1 WHERE o_orderkey = 1",
-        routed("l_linestatus, l_suppkey", "COUNT(*) AS n, " +
-          "MIN(l_quantity) AS mn, MAX(l_quantity) AS mx",
-          "WHERE l_shipdate >= '1995-06-01' AND l_shipdate < '1996-06-01'"),
+        r4,
         s"SELECT l_orderkey, $revenue AS revenue, o_orderdate FROM customer " +
           "JOIN orders ON c_custkey = o_custkey JOIN lineitem ON " +
           "l_orderkey = o_orderkey WHERE c_mktsegment = 'BUILDING' AND " +
           "o_orderdate < '1995-03-15' AND l_shipdate > '1995-03-15' " +
           "GROUP BY l_orderkey, o_orderdate " +
           "ORDER BY revenue DESC, l_orderkey LIMIT 10",
-        routed("l_returnflag, l_shipdate", "COUNT(l_quantity) AS c, " +
-          "SUM(CAST(l_quantity AS DECIMAL(18,2))) AS s_qty",
-          "WHERE l_returnflag = 'A'"),
+        r5,
         "SELECT l_suppkey, COUNT(*) AS n FROM lineitem WHERE l_discount " +
           "BETWEEN 0.03 AND 0.05 AND l_quantity < 24 GROUP BY l_suppkey " +
           "ORDER BY n DESC, l_suppkey LIMIT 20",
         s"SELECT change, COUNT(*) AS n FROM table_changes('$root', 1, 2) " +
           "GROUP BY change ORDER BY change",
-        routed("l_returnflag, l_linestatus, l_shipdate", "COUNT(*) AS n, " +
-          "SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) " +
-          "AS s_disc, MAX(l_quantity) AS mx", ""),
+        r6,
         s"SELECT n_name, $revenue AS revenue FROM lineitem JOIN supplier ON " +
           "l_suppkey = s_suppkey JOIN nation ON s_nationkey = n_nationkey " +
           "WHERE n_regionkey = 2 AND l_shipdate >= '1994-01-01' AND " +
           "l_shipdate < '1995-01-01' GROUP BY n_name " +
           "ORDER BY revenue DESC, n_name")
       val st = conn.createStatement()
-      def send(): Unit = pool.foreach { sql =>
-        val rs = st.executeQuery(sql)
-        while (rs.next()) ()
-      }
+      def send(): Unit = pool.foreach(sql => drain(st.executeQuery(sql)))
       def compiles = org.apache.spark.metrics.source.CodegenMetrics
         .METRIC_COMPILATION_TIME.getCount
       send() // warm-up: every statement's generated classes
