@@ -106,18 +106,21 @@ object Bpe {
     * SAMPLE (statistically equivalent for frequent pairs): pass
     * `wordCounts(sample)` here, then [[bpeTokens]] — corpus-scale and
     * map-only — encodes everything. */
-  def learnFromCounts(words: DataFrame, numMerges: Int): Seq[(String, String)] = {
-    // BYTE-aware second bound: the local loop's working set is the
-    // per-codepoint symbol arrays plus pair/occurrence indexes —
-    // proportional to total word LENGTH, not row count, so a
-    // long-word corpus (URLs, DNA, agglutinative text) must fall back
-    // to the distributed loop even under the row cap. Chars (UTF-16
-    // units) proxy bytes here; the in-memory blow-up per char is the
-    // ~20-40x of one boxed String per codepoint, so the 32 MiB
-    // default keeps the loop's footprint ~1 GiB worst-case on the 8g
-    // driver.
-    val maxChars = words.sparkSession.conf
-      .get("spark.graft.bpe.localVocabMaxChars", "33554432").toLong
+  def learnFromCounts(words: DataFrame, numMerges: Int): Seq[(String, String)] =
+    learnFromCounts(words, numMerges, LocalVocabMaxChars)
+
+  /** BYTE-aware second bound of the driver-local loop: its working set
+    * is the per-codepoint symbol arrays plus pair/occurrence indexes —
+    * proportional to total word LENGTH, not row count, so a long-word
+    * corpus (URLs, DNA, agglutinative text) must fall back to the
+    * distributed loop even under the row cap. Chars (UTF-16 units)
+    * proxy bytes here; the in-memory blow-up per char is the ~20-40x
+    * of one boxed String per codepoint, so 32 Mi chars keeps the
+    * loop's footprint ~1 GiB worst-case on the 8g driver. */
+  val LocalVocabMaxChars: Long = 33554432L
+
+  private[graft] def learnFromCounts(words: DataFrame, numMerges: Int,
+      maxChars: Long): Seq[(String, String)] = {
     // the probe collects RAW (word, cnt) rows; the codepoint split
     // happens driver-side only once the local path is chosen
     graft.Engine.boundedLocal(

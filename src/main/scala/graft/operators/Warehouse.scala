@@ -160,183 +160,95 @@ object Warehouse {
             .otherwise(col(s"s.$c"))).as(c)): _*)
   }
 
-  /** Thin `MERGE INTO` TEXT shim: parses the reference's
-    * updatable-snapshot statement form (docs/数据模型.md:25,
-    * docs/kudu.md:19) —
-    * {{{
-    * MERGE INTO tgt [AS] t USING src [AS] s ON t.k = s.k [AND ...]
-    *   [WHEN MATCHED [AND cond] THEN DELETE]
-    *   [WHEN MATCHED [AND cond] THEN UPDATE SET c = expr, ...]
-    *   [WHEN NOT MATCHED THEN INSERT *]
-    * }}}
-    * — into [[mergeInto]], so a user can run the statement verbatim
-    * against parquet-backed frames (Spark itself parses MERGE only for
-    * v2 tables). Deliberately thin, not a SQL engine:
-    *  - the ON clause must be a conjunction of `t.k = s.k` equalities
-    *    with the SAME column name on both sides (the merge-key shape);
-    *  - at most one UPDATE and one DELETE matched branch; ANSI
-    *    first-match-wins ordering is honored (whichever branch comes
-    *    second is gated on the negation of the first's condition);
-    *  - INSERT takes the source row by target column names (`INSERT *`;
-    *    an explicit `(cols) VALUES (s.cols)` list is accepted when it
-    *    is that same identity mapping).
+  /** `MERGE INTO` as SQL text over plain frames — the reference's
+    * updatable-snapshot statement (docs/数据模型.md:25,
+    * docs/kudu.md:19) run verbatim against parquet-backed frames, which
+    * Spark itself merges into only as v2 tables. The session's parser
+    * reads the text and [[graft.plans.MergeStatement]] — the front end
+    * the vtab MERGE route shares — reads the plan; [[mergeInto]] runs it:
+    *  - ON: a conjunction of same-name column equalities (the keys);
+    *  - WHEN MATCHED [AND c] THEN DELETE / UPDATE SET c = e, … /
+    *    UPDATE SET *, any number, ANSI first-match-wins (each matched
+    *    row takes the first clause whose condition holds);
+    *  - at most one unconditional WHEN NOT MATCHED THEN INSERT: `*`, or
+    *    a list naming every target column as `s.<same column>`;
+    *  - BY SOURCE clauses and schema evolution are refused.
     * Table names resolve from `tables` first, then the session catalog
-    * (temp views included). Update/condition expressions may use the
-    * statement's own aliases — they are rewritten to the `t`/`s` the
-    * underlying operator binds. */
+    * (temp views included). */
   def mergeIntoSql(spark: SparkSession, mergeSql: String,
       tables: Map[String, DataFrame] = Map.empty): DataFrame = {
-    val head = ("(?is)^\\s*MERGE\\s+INTO\\s+([\\w.]+)" +
-      "(?:\\s+(?:AS\\s+)?(?!USING\\b)(\\w+))?" +
-      "\\s+USING\\s+([\\w.]+)(?:\\s+(?:AS\\s+)?(?!ON\\b)(\\w+))?" +
-      "\\s+ON\\s+(.+?)\\s+(WHEN\\s+.+?)\\s*;?\\s*$").r
-    val m = head.findFirstMatchIn(mergeSql).getOrElse(throw
-      new IllegalArgumentException(s"unparseable MERGE statement:\n$mergeSql"))
-    val (tgtName, srcName) = (m.group(1), m.group(3))
-    val tAlias = Option(m.group(2)).getOrElse(tgtName)
-    val sAlias = Option(m.group(4)).getOrElse(srcName)
-    def resolve(n: String) = tables.getOrElse(n, spark.table(n))
-    val target = resolve(tgtName)
-    val source = resolve(srcName)
-    require(!tAlias.equalsIgnoreCase(sAlias),
-      s"target and source aliases must differ: '$tAlias' vs '$sAlias'")
-    // rewrite statement aliases to the operator's fixed t/s aliases —
-    // in ONE pass over both aliases (two sequential replaceAlls would
-    // re-rewrite the "t." just produced by the first pass whenever the
-    // SOURCE alias is literally "t", silently reading source columns
-    // where target ones were written), and never inside 'string
-    // literals' (an alias-shaped substring in quoted text is data)
-    val aliasRef = ("(?i)\\b(" + java.util.regex.Pattern.quote(tAlias) +
-      "|" + java.util.regex.Pattern.quote(sAlias) + ")\\.").r
-    val strLit = "'(?:[^']|'')*'".r
-    def rebind(e: String): String = {
-      def seg(u: String): String = aliasRef.replaceAllIn(u, mm =>
-        if (mm.group(1).equalsIgnoreCase(tAlias)) "t." else "s.")
-      val sb = new StringBuilder
-      var last = 0
-      strLit.findAllMatchIn(e).foreach { lm =>
-        sb.append(seg(e.substring(last, lm.start))).append(lm.matched)
-        last = lm.end
-      }
-      sb.append(seg(e.substring(last))).toString
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
+      UnresolvedRelation}
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan,
+      MergeIntoTable, SubqueryAlias}
+    import org.apache.spark.sql.graft.Bridge
+    import graft.plans.MergeStatement
+    import graft.plans.MergeStatement.{Delete, Insert, Update}
+    val m = spark.sessionState.sqlParser.parsePlan(mergeSql) match {
+      case p: MergeIntoTable => MergeStatement.read(p, "MERGE")
+      case _ => throw new IllegalArgumentException(
+        s"not a MERGE INTO statement:\n$mergeSql")
     }
-    val keys = m.group(5).split("(?i)\\s+AND\\s+").map(_.trim).map { eq =>
-      val kv = "(?i)^(\\w+)\\.(\\w+)\\s*=\\s*(\\w+)\\.(\\w+)$".r
-      val km = kv.findFirstMatchIn(eq).getOrElse(throw
-        new IllegalArgumentException(s"ON term is not alias.col = alias.col: $eq"))
-      require(km.group(2).equalsIgnoreCase(km.group(4)) &&
-        Set(km.group(1), km.group(3)).map(_.toLowerCase) ==
-          Set(tAlias, sAlias).map(_.toLowerCase),
-        s"ON term must equate the same column across target/source: $eq")
-      km.group(2)
-    }.toSeq
-    // split and classify the WHEN clauses (first-match-wins order)
-    case class Upd(cond: Option[String], sets: String)
-    var upd: Option[Upd] = None
-    var del: Option[Option[String]] = None // Some(cond-opt) when present
-    var updBeforeDel = false
-    var insert = false
-    m.group(6).split("(?i)(?=\\bWHEN\\b)").map(_.trim).filter(_.nonEmpty)
-      .foreach { c =>
-        val mu = ("(?is)^WHEN\\s+MATCHED(?:\\s+AND\\s+(.+?))?\\s+THEN\\s+" +
-          "UPDATE\\s+SET\\s+(.+)$").r.findFirstMatchIn(c)
-        val md = "(?is)^WHEN\\s+MATCHED(?:\\s+AND\\s+(.+?))?\\s+THEN\\s+DELETE\\s*$"
-          .r.findFirstMatchIn(c)
-        val mi = ("(?is)^WHEN\\s+NOT\\s+MATCHED\\s+THEN\\s+INSERT\\s*" +
-          "(\\*|\\([^)]*\\)\\s*VALUES\\s*\\([^)]*\\))\\s*$").r.findFirstMatchIn(c)
-        (mu, md, mi) match {
-          case (Some(u), _, _) =>
-            require(upd.isEmpty, "at most one WHEN MATCHED ... UPDATE branch")
-            upd = Some(Upd(Option(u.group(1)), u.group(2)))
-            updBeforeDel = del.isEmpty
-          case (_, Some(d), _) =>
-            require(del.isEmpty, "at most one WHEN MATCHED ... DELETE branch")
-            del = Some(Option(d.group(1)))
-          case (_, _, Some(i)) =>
-            val ins = i.group(1).trim
-            if (ins != "*") {
-              val colsVals = "(?is)^\\(([^)]*)\\)\\s*VALUES\\s*\\(([^)]*)\\)$"
-                .r.findFirstMatchIn(ins).get
-              val cs = colsVals.group(1).split(",").map(_.trim.toLowerCase)
-              val vs = colsVals.group(2).split(",")
-                .map(v => rebind(v.trim).toLowerCase)
-              require(cs.length == vs.length &&
-                  cs.zip(vs).forall { case (cn, vn) =>
-                    vn == s"s.$cn" || vn == cn },
-                s"INSERT list must be the identity source mapping: $ins")
-            }
-            insert = true
-          case _ => throw new IllegalArgumentException(
-            s"unsupported MERGE clause: $c")
+    def frame(p: LogicalPlan): DataFrame = p match {
+      case SubqueryAlias(_, child) => frame(child)
+      case u: UnresolvedRelation =>
+        val n = u.multipartIdentifier.mkString(".")
+        tables.getOrElse(n, spark.table(n))
+      case other => throw new IllegalArgumentException(
+        s"MERGE over frames names its target and source tables, got: $other")
+    }
+    val target = frame(m.target)
+    val source = frame(m.source)
+    require(!m.bySource && !m.schemaEvolution,
+      "MERGE over frames supports neither WHEN NOT MATCHED BY SOURCE " +
+        "nor WITH SCHEMA EVOLUTION")
+    val cols = target.columns
+    def targetCol(n: String): String = cols.find(_.equalsIgnoreCase(n))
+      .getOrElse(throw new IllegalArgumentException(
+        s"SET column not in target: $n"))
+    val insert = m.inserts match {
+      case Seq() => false
+      case Seq(Insert(None, values)) =>
+        // mergeInto inserts the whole source row, where ANSI leaves an
+        // unlisted column NULL
+        values.foreach { vs =>
+          val unlisted = cols.filterNot(c => vs.exists(_._1.equalsIgnoreCase(c)))
+          require(unlisted.isEmpty && vs.forall {
+              case (c, UnresolvedAttribute(Seq("s", v))) => c.equalsIgnoreCase(v)
+              case (c, UnresolvedAttribute(Seq(v))) => c.equalsIgnoreCase(v)
+              case _ => false
+            }, "INSERT list must name every target column as its identity " +
+              "source column (c = s.c); unlisted: " + unlisted.mkString(", "))
         }
-      }
-    // ANSI first-match-wins order: a DELETE after an UPDATE only sees
-    // rows the UPDATE's condition rejected — and an UNCONDITIONAL
-    // UPDATE captures every matched row, making a later DELETE
-    // unreachable (the reverse directions fall out of the underlying
-    // operator: deletes are applied before updates there, so a DELETE
-    // written first always outranks the update branch)
-    val delCond = del.flatMap { dc =>
-      if (updBeforeDel && upd.exists(_.cond.isEmpty)) None
-      else {
-        val base = dc.map(c => expr(rebind(c))).getOrElse(lit(true))
-        Some(if (updBeforeDel && upd.exists(_.cond.nonEmpty))
-          base && !coalesce(expr(rebind(upd.get.cond.get)), lit(false))
-        else base)
-      }
+        true
+      case _ => throw new IllegalArgumentException(
+        "MERGE over frames supports one unconditional WHEN NOT MATCHED " +
+          "THEN INSERT")
     }
-    // conditional UPDATE: non-matching rows keep target values
-    val updates: Map[String, Column] = upd.map { u =>
-      splitTopLevel(u.sets).map { a =>
-        val Array(lhs, rhs) = a.split("=", 2)
-        // the rest of the parser is case-insensitive, so the alias
-        // strip must be too ('SET T.x = ...' under alias 't'); an
-        // unknown SET column would otherwise be a silent no-op
-        // (mergeInto ignores unlisted names) — raise instead
-        val stripped = lhs.trim
-        val name = Seq(s"$tAlias.", "t.").foldLeft(stripped) { (n, p) =>
-          if (n.length > p.length &&
-            n.substring(0, p.length).equalsIgnoreCase(p))
-            n.substring(p.length) else n
-        }
-        val resolved = target.columns.find(_.equalsIgnoreCase(name))
-          .getOrElse(throw new IllegalArgumentException(
-            s"SET column not in target: $stripped"))
-        val value = expr(rebind(rhs.trim))
-        resolved -> u.cond.map(c =>
-            when(coalesce(expr(rebind(c)), lit(false)), value)
-              .otherwise(col(s"t.$resolved")))
-          .getOrElse(value)
-      }.toMap
-    }.getOrElse(Map.empty)
-    mergeInto(target, source, keys, updates,
-      whenNotMatchedInsert = insert, whenMatchedDelete = delCond)
-  }
-
-  /** Split on commas not nested inside parentheses or 'string literals'
-    * (SET lists whose expressions contain function calls or quoted
-    * text). A doubled '' escape toggles the quote state twice — net
-    * unchanged — so it stays inside the literal, as SQL requires. */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    var depth = 0
-    var inQuote = false
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') inQuote = !inQuote
-      else if (!inQuote) c match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 =>
-          out += s.substring(start, i); start = i + 1
-        case _ =>
+    // each WHEN MATCHED clause with the target columns it sets
+    val clauses = m.matched.map { cl => cl -> (cl match {
+      case Update(_, None) => cols.map(c => c -> col(s"s.$c")).toMap
+      case Update(_, Some(set)) =>
+        set.map { case (k, v) => targetCol(k) -> Bridge.column(v) }.toMap
+      case _: Delete => Map.empty[String, Column]
+    }) }
+    // ANSI first-match-wins: each decision is one CASE over the clauses
+    // in statement order (a NULL condition does not match)
+    def firstMatch(pick: (MergeStatement.Matched, Map[String, Column]) => Column,
+        otherwise: Column): Column =
+      clauses.foldRight(otherwise) { case ((cl, set), rest) =>
+        when(Bridge.column(cl.cond.getOrElse(Literal.TrueLiteral)),
+          pick(cl, set)).otherwise(rest)
       }
-      i += 1
-    }
-    out += s.substring(start)
-    out.map(_.trim).filter(_.nonEmpty).toSeq
+    val updates = cols.filter(c => clauses.exists(_._2.contains(c)))
+      .map(c => c -> firstMatch((_, set) => set.getOrElse(c, col(s"t.$c")),
+        col(s"t.$c"))).toMap
+    val delete =
+      if (!m.matched.exists(_.isInstanceOf[Delete])) None
+      else Some(firstMatch((cl, _) => lit(cl.isInstanceOf[Delete]), lit(false)))
+    mergeInto(target, source, m.keys, updates,
+      whenNotMatchedInsert = insert, whenMatchedDelete = delete)
   }
 
   /** Partition-level MERGE into a partitioned parquet table: the

@@ -1,41 +1,42 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedIdentifier,
+  UnresolvedRelation, UnresolvedTable}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.parser.ParserInterface
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint,
+  CreateTable, CreateTableAsSelect, DropConstraint, LogicalPlan,
+  TableSpecBase, UnresolvedTableSpec}
+import org.apache.spark.sql.execution.command.ExplainCommand
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Delegating SQL parser adding the versioned-table MAINTENANCE verbs
-  * Spark's grammar lacks — the last Scala-only lifecycle operations on
-  * the SQL-first surface (reference docs/数据湖.md's managed-lake
-  * maintenance: retention + compaction):
-  *
+/** Delegating SQL parser for the versioned-table (vtab) statements.
+  * Spark's grammar lacks four Delta-style verbs — VACUUM, OPTIMIZE,
+  * DESCRIBE HISTORY and RESTORE (reference docs/数据湖.md's managed-lake
+  * maintenance) — so they, and EXPLAIN of them, are the only text this
+  * parser claims by regex:
   * {{{
-  *   VACUUM vtab.`/p`                      -- keep last 2 versions
-  *   VACUUM vtab.`/p` RETAIN 5 VERSIONS    -- explicit retention
-  *   OPTIMIZE vtab.`/p`                    -- compact to one data dir
-  *   OPTIMIZE vtab.`/p` INTO 8 FILES       -- compact + file-count target
-  *   OPTIMIZE vtab.`/p` ZORDER BY (a, b)   -- Z-order rewrite
-  *   DESCRIBE HISTORY vtab.`/p`            -- one row per version
-  *   RESTORE vtab.`/p` TO VERSION AS OF 3  -- rollback as a NEW version
-  *   ALTER TABLE dws.inv ADD CONSTRAINT c CHECK (v >= 0)
-  *   ALTER TABLE dws.inv DROP CONSTRAINT c
-  *   CREATE TABLE dws.inv USING vtab LOCATION '/p'  -- bind a name
-  *   EXPLAIN VACUUM vtab.`/p`              -- shows the command, no-op
+  *   VACUUM vtab.`/p` [RETAIN 5 VERSIONS]       -- default keeps 2
+  *   OPTIMIZE vtab.`/p` [ZORDER BY (a, b)] [INTO 8 FILES]
+  *   DESCRIBE HISTORY vtab.`/p`                 -- one row per version
+  *   RESTORE vtab.`/p` TO VERSION AS OF 3       -- rollback as a NEW version
   * }}}
-  *
-  * The target is a `vtab.`/path`` identifier or a registered name
-  * ([[graft.operators.VTabCatalog]]). Everything else — including the
-  * first token not being VACUUM/OPTIMIZE — delegates to Spark's own
-  * parser untouched, so this parser adds grammar without shadowing
-  * any. The verbs become [[VTabVacuumCommand]]/[[VTabOptimizeCommand]]
-  * (LeafRunnableCommands, same pattern as the routed DML): work
-  * happens at EXECUTION time, so EXPLAIN — claimed here and wrapped in
-  * Spark's own ExplainCommand — never deletes or rewrites anything.
-  * Retention safety lives in [[graft.operators.VersionedTable.vacuum]]
-  * (keepVersions >= 1, the in-flight-commit orphan grace, and
-  * dropped-manifest-first reclamation), which these verbs call
+  * Every other statement is Spark's own parse. Three of its plans are
+  * mapped onto routed commands; every other plan is returned untouched:
+  * {{{
+  *   ALTER TABLE dws.inv ADD CONSTRAINT c CHECK (v >= 0)  -- AddCheckConstraint
+  *   ALTER TABLE dws.inv DROP CONSTRAINT c                -- DropConstraint
+  *   CREATE TABLE dws.inv USING vtab LOCATION '/p'        -- CreateTable
+  * }}}
+  * A target is a `vtab.`/path`` identifier or a registered name
+  * ([[graft.operators.VTabCatalog]]); ALTER TABLE on any other target
+  * stays Spark's. CREATE … USING vtab is mapped here because Spark's
+  * ResolveSessionCatalog rejects the unknown provider before any
+  * injected resolution rule could route it. Every claimed statement is
+  * a LeafRunnableCommand that works at EXECUTION time, so EXPLAIN never
+  * binds, deletes or rewrites anything. Retention safety lives in
+  * [[graft.operators.VersionedTable.vacuum]], which VACUUM calls
   * unchanged. */
 class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 
@@ -45,16 +46,6 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
   private val optimizeRe = ("(?is)^\\s*OPTIMIZE\\s+" + identP +
     "(?:\\s+ZORDER\\s+BY\\s*\\(([^)]*)\\))?" +
     "(?:\\s+INTO\\s+(\\d+)\\s+FILES)?\\s*;?\\s*$").r
-  // CREATE TABLE <name> USING vtab [LOCATION '<path>'] — claimed here
-  // because Spark's ResolveSessionCatalog validates the provider
-  // against the DataSource registry (and rejects `vtab`) before any
-  // injected resolution rule can route the statement. Group 2 captures
-  // whatever sits between the name and USING (a column list — refused
-  // with a real message: the manifest records the schema per commit).
-  private val createVtabRe = ("(?is)^\\s*CREATE\\s+TABLE\\s+" +
-    "(IF\\s+NOT\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_.]*)\\s*" +
-    "(\\([^)]*\\))?\\s*USING\\s+vtab\\b([\\s\\S]*?);?\\s*$").r
-  private val locationRe = "(?is)^\\s*LOCATION\\s+'([^']+)'\\s*$".r
   // DESCRIBE HISTORY <target> — Delta's verb. Claimed ONLY for
   // vtab-resolvable targets: `DESC history <col>` is VALID Spark
   // syntax (describe a column of a table literally named `history`),
@@ -66,18 +57,8 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
   // parse error either way, like VACUUM)
   private val restoreRe = ("(?is)^\\s*RESTORE\\s+(?:TABLE\\s+)?" +
     identP + "\\s+(?:TO\\s+)?VERSION\\s+AS\\s+OF\\s+(\\d+)\\s*;?\\s*$").r
-  // ALTER TABLE <target> ADD CONSTRAINT n CHECK (e) / DROP CONSTRAINT
-  // n — claimed ONLY when the target is vtab-resolvable (a path form
-  // or a registered name): every other ALTER TABLE belongs to Spark's
-  // own grammar and delegates untouched.
-  private val alterAddRe = ("(?is)^\\s*ALTER\\s+TABLE\\s+" + identP +
-    "\\s+ADD\\s+CONSTRAINT\\s+([A-Za-z0-9_]+)\\s+CHECK\\s*" +
-    "\\(([\\s\\S]+)\\)\\s*;?\\s*$").r
-  private val alterDropRe = ("(?is)^\\s*ALTER\\s+TABLE\\s+" + identP +
-    "\\s+DROP\\s+CONSTRAINT\\s+([A-Za-z0-9_]+)\\s*;?\\s*$").r
   private val explainRe = ("(?is)^\\s*EXPLAIN\\s+" +
-    "((?:VACUUM|OPTIMIZE|CREATE|RESTORE|ALTER|" +
-    "DESC(?:RIBE)?\\s+HISTORY)\\b[\\s\\S]*)$").r
+    "((?:VACUUM|OPTIMIZE|RESTORE|DESC(?:RIBE)?\\s+HISTORY)\\b[\\s\\S]*)$").r
 
   private def vtabTarget(ident: String): Boolean =
     ident.startsWith("vtab.`") ||
@@ -95,8 +76,7 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     explainRe.findFirstMatchIn(sqlText) match {
       case Some(m) =>
         claimed(m.group(1)).map(inner =>
-          org.apache.spark.sql.execution.command.ExplainCommand(
-            inner, org.apache.spark.sql.execution.SimpleMode))
+          ExplainCommand(inner, org.apache.spark.sql.execution.SimpleMode))
       case None =>
         vacuumRe.findFirstMatchIn(sqlText).map { m =>
           VTabVacuumCommand(rootOf(m.group(1)),
@@ -113,37 +93,85 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
             VTabHistoryCommand(rootOf(m.group(1)))
         }).orElse(restoreRe.findFirstMatchIn(sqlText).map { m =>
           VTabRestoreCommand(rootOf(m.group(1)), m.group(2).toLong)
-        }).orElse(alterAddRe.findFirstMatchIn(sqlText)
-          .filter(m => vtabTarget(m.group(1))).map { m =>
-            VTabConstraintCommand(rootOf(m.group(1)), m.group(2),
-              Some(m.group(3).trim))
-        }).orElse(alterDropRe.findFirstMatchIn(sqlText)
-          .filter(m => vtabTarget(m.group(1))).map { m =>
-            VTabConstraintCommand(rootOf(m.group(1)), m.group(2), None)
-        }).orElse(createVtabRe.findFirstMatchIn(sqlText).map { m =>
-          val ifNotExists = m.group(1) != null
-          val name = m.group(2)
-          require(m.group(3) == null,
-            s"CREATE TABLE $name USING vtab: column lists are not " +
-              "supported — the versioned manifest records the schema " +
-              "per commit (the first INSERT defines it)")
-          // the tail must be EXACTLY a LOCATION clause: anything else
-          // (AS SELECT, PARTITIONED BY, TBLPROPERTIES) must be a loud
-          // refusal, never a silently-dropped clause
-          val loc = locationRe.findFirstMatchIn(m.group(4))
-            .map(_.group(1)).getOrElse(
-              throw new IllegalArgumentException(
-                s"CREATE TABLE $name USING vtab supports exactly one " +
-                  "clause: LOCATION '<path>' (the versioned-table " +
-                  "root) — got: USING vtab" + m.group(4).trim.take(80) +
-                  ". CTAS/PARTITIONED BY/TBLPROPERTIES are not " +
-                  "supported; INSERT INTO the table after binding it"))
-          VTabRegisterCommand(name, loc, ifNotExists)
         })
     }
 
+  /** The root of an ALTER TABLE plan's vtab-resolvable target. */
+  private object VTab {
+    def unapply(table: LogicalPlan): Option[String] = table.collectFirst {
+      case u: UnresolvedRelation => u.multipartIdentifier
+      case u: UnresolvedTable => u.multipartIdentifier
+    }.map {
+      case Seq(v, path) if v.equalsIgnoreCase("vtab") && path.contains("/") =>
+        s"vtab.`$path`"
+      case parts => parts.mkString(".")
+    }.filter(vtabTarget).map(rootOf)
+  }
+
+  private object VTabSpec {
+    def unapply(spec: TableSpecBase): Option[UnresolvedTableSpec] =
+      Some(spec).collect { case s: UnresolvedTableSpec
+        if s.provider.exists(_.equalsIgnoreCase("vtab")) => s }
+  }
+
+  /** `CREATE TABLE name USING vtab LOCATION '<root>'`: the LOCATION
+    * must be the ONLY clause — anything else is a loud refusal, never
+    * a silently-dropped clause. */
+  private def vtabCreate(name: String, columns: Boolean,
+      spec: UnresolvedTableSpec, partitioned: Boolean, asSelect: Boolean,
+      ifNotExists: Boolean): VTabRegisterCommand = {
+    require(!columns, s"CREATE TABLE $name USING vtab: column lists are " +
+      "not supported — the versioned manifest records the schema per " +
+      "commit (the first INSERT defines it)")
+    val extra = Seq("AS SELECT" -> asSelect,
+      "PARTITIONED BY / CLUSTERED BY" -> partitioned,
+      "TBLPROPERTIES" -> spec.properties.nonEmpty,
+      "OPTIONS" -> spec.optionExpression.options.nonEmpty,
+      "COMMENT" -> spec.comment.isDefined,
+      "DEFAULT COLLATION" -> spec.collation.isDefined,
+      "ROW FORMAT / STORED AS" -> spec.serde.isDefined,
+      "EXTERNAL" -> spec.external).collect { case (c, true) => c }
+    VTabRegisterCommand(name, spec.location.filter(_ => extra.isEmpty)
+      .getOrElse(throw new IllegalArgumentException(
+        s"CREATE TABLE $name USING vtab supports exactly one clause: " +
+          "LOCATION '<path>' (the versioned-table root) — got: " +
+          (if (extra.isEmpty) "no LOCATION" else extra.mkString(", ")) +
+          ". INSERT INTO the table after binding it")), ifNotExists)
+  }
+
+  /** Spark's parse of a vtab DDL statement, mapped onto its routed
+    * command; every other plan is returned untouched. */
+  private def mapped(plan: LogicalPlan): LogicalPlan = plan match {
+    case e: ExplainCommand =>
+      val inner = mapped(e.logicalPlan)
+      if (inner eq e.logicalPlan) e else e.copy(logicalPlan = inner)
+    case AddCheckConstraint(VTab(root), c) =>
+      require(c.userProvidedName != null,
+        "a vtab CHECK needs a name: ADD CONSTRAINT <name> CHECK (…)")
+      val ch = Option(c.userProvidedCharacteristic).toSeq.flatMap(ch =>
+        ch.enforced.map(if (_) "ENFORCED" else "NOT ENFORCED") ++
+          ch.rely.map(if (_) "RELY" else "NORELY"))
+      require(ch.isEmpty, s"ADD CONSTRAINT ${c.userProvidedName}: " +
+        s"${ch.mkString(" ")} is not supported — every write enforces " +
+        "a vtab CHECK")
+      VTabConstraintCommand(root, c.userProvidedName, Some(c.condition))
+    case DropConstraint(VTab(root), name, ifExists, cascade) =>
+      require(!ifExists && !cascade, s"DROP CONSTRAINT $name: IF EXISTS " +
+        "and CASCADE are not supported on a vtab")
+      VTabConstraintCommand(root, name, None)
+    case CreateTable(UnresolvedIdentifier(n, _), cols, part,
+        VTabSpec(spec), ifNotExists) =>
+      vtabCreate(n.mkString("."), cols.nonEmpty, spec, part.nonEmpty,
+        asSelect = false, ifNotExists)
+    case CreateTableAsSelect(UnresolvedIdentifier(n, _), part, _,
+        VTabSpec(spec), _, ifNotExists, _) =>
+      vtabCreate(n.mkString("."), columns = false, spec, part.nonEmpty,
+        asSelect = true, ifNotExists)
+    case _ => plan
+  }
+
   override def parsePlan(sqlText: String): LogicalPlan =
-    claimed(sqlText).getOrElse(delegate.parsePlan(sqlText))
+    claimed(sqlText).getOrElse(mapped(delegate.parsePlan(sqlText)))
 
   override def parseExpression(sqlText: String): Expression =
     delegate.parseExpression(sqlText)

@@ -145,13 +145,13 @@ case class VTabTimeTravelRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     import org.apache.spark.sql.catalyst.plans.logical.{Assignment,
-      DeleteAction, DeleteFromTable, DropTable, InsertIntoStatement,
-      InsertStarAction, MergeIntoTable, SubqueryAlias, UpdateAction,
-      UpdateStarAction, UpdateTable}
+      DeleteFromTable, DropTable, InsertIntoStatement, MergeIntoTable,
+      SubqueryAlias, UpdateTable}
     import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
       UnresolvedIdentifier, UnresolvedTableOrView}
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Literal, SubqueryExpression}
+    import org.apache.spark.sql.catalyst.expressions.{Literal, SubqueryExpression}
     import graft.operators.VersionedTable
+    import MergeStatement.{Delete, Insert, Update}
     // Write-target scan BEFORE the bottom-up substitution below can
     // resolve a write's target relation: a DML statement whose target
     // resolved to the snapshot's parquet relation could mutate files
@@ -189,6 +189,9 @@ case class VTabTimeTravelRule(spark: SparkSession) extends Rule[LogicalPlan] {
             a.nameParts.head.equalsIgnoreCase(al) =>
           UnresolvedAttribute(a.nameParts.tail)
       })
+    def mergeOf(root: String, m: MergeIntoTable): MergeStatement =
+      MergeStatement.read(m, s"vtab.`$root`: MERGE (routed through " +
+        "VersionedTable.merge)")
     def refuseSubquery(root: String, verb: String, es: Seq[Expression]): Unit =
       es.foreach { e =>
         if (e.exists(_.isInstanceOf[SubqueryExpression]))
@@ -230,33 +233,22 @@ case class VTabTimeTravelRule(spark: SparkSession) extends Rule[LogicalPlan] {
           // routed; anything else must be refused, not approximated
           // (a BY SOURCE clause or a CONDITIONED update silently
           // treated as the canonical shape would corrupt data)
-          val shapeMsg =
+          val st = mergeOf(root, m)
+          val upsert = (st.matched match {
+            case Seq(Update(None, _)) | Seq(Delete(_), Update(None, _)) => true
+            case _ => false
+          }) && st.inserts == Seq(Insert(None, None)) &&
+            !st.bySource && !st.schemaEvolution
+          if (!upsert) throw new IllegalArgumentException(
             s"vtab.`$root`: MERGE routes through VersionedTable.merge" +
               " (key-based upsert) and supports exactly: ON a " +
               "conjunction of same-name column equalities, optional " +
               "WHEN MATCHED [AND c] THEN DELETE, then WHEN MATCHED " +
               "THEN UPDATE SET * or UPDATE SET col = expr, …, and " +
               "WHEN NOT MATCHED THEN INSERT * — use the Scala API " +
-              "for other shapes"
-          m.matchedActions match {
-            case Seq(UpdateStarAction(None)) =>
-            case Seq(DeleteAction(_), UpdateStarAction(None)) =>
-            case Seq(UpdateAction(None, as, false)) if as.nonEmpty =>
-            case Seq(DeleteAction(_), UpdateAction(None, as, false))
-                if as.nonEmpty =>
-            case _ => throw new IllegalArgumentException(shapeMsg)
-          }
-          m.notMatchedActions match {
-            case Seq(InsertStarAction(None)) =>
-            case _ => throw new IllegalArgumentException(shapeMsg)
-          }
-          if (m.notMatchedBySourceActions.nonEmpty ||
-              m.withSchemaEvolution)
-            throw new IllegalArgumentException(shapeMsg)
+              "for other shapes")
           refuseSubquery(root, "MERGE", Seq(m.mergeCondition) ++
-            m.matchedActions.collect { case DeleteAction(Some(c)) => c } ++
-            m.matchedActions.collect {
-              case UpdateAction(_, as, _) => as.map(_.value) }.flatten)
+            m.matchedActions)
           claim(m.targetTable)
         }
       case _ =>
@@ -317,95 +309,34 @@ case class VTabTimeTravelRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case m: MergeIntoTable
           if claimed(m.targetTable) && m.sourceTable.resolved =>
         val root = rootOf(m.targetTable)
-        val tAlias = targetAlias(m.targetTable)
-        val sAlias = m.sourceTable.collectFirst {
-          case a: SubqueryAlias => a.alias }
+        val st = mergeOf(root, m)
         val srcCols = m.sourceTable.output.map(_.name)
-        val srcLower = srcCols.map(_.toLowerCase).toSet
-        // keys from the ON conjunction: every conjunct must be an
-        // equality of two same-name column refs (one per side)
-        def conjuncts(e: Expression): Seq[Expression] = e match {
-          case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-            conjuncts(l) ++ conjuncts(r)
-          case x => Seq(x)
-        }
-        def lastName(e: Expression): Option[String] = e match {
-          case a: UnresolvedAttribute => Some(a.nameParts.last)
-          case a: AttributeReference => Some(a.name)
-          case _ => None
-        }
-        val keys = conjuncts(m.mergeCondition).map {
-          case org.apache.spark.sql.catalyst.expressions.EqualTo(l, r) =>
-            (lastName(l), lastName(r)) match {
-              case (Some(a), Some(b)) if a.equalsIgnoreCase(b) =>
-                srcCols.find(_.equalsIgnoreCase(a)).getOrElse(
-                  throw new IllegalArgumentException(
-                    s"vtab.`$root`: MERGE key $a is not a source column"))
-              case _ => throw new IllegalArgumentException(
-                s"vtab.`$root`: MERGE ON must equate same-name columns " +
-                  s"(t.k = s.k — VersionedTable.merge upserts whole " +
-                  s"rows by key), got: $l = $r")
-            }
-          case other => throw new IllegalArgumentException(
-            s"vtab.`$root`: MERGE ON must be a conjunction of column " +
-              s"equalities (the VersionedTable.merge keys), got: $other")
-        }
+        val keys = st.keys.map(k => srcCols.find(_.equalsIgnoreCase(k))
+          .getOrElse(throw new IllegalArgumentException(
+            s"vtab.`$root`: MERGE key $k is not a source column")))
         // the matched-delete condition filters ALIGNED SOURCE rows in
         // VersionedTable.merge — it may reference source columns only
-        val deleteMatched = m.matchedActions.collectFirst {
-          case DeleteAction(c) =>
-            val raw = c.getOrElse(Literal.TrueLiteral)
-            val norm = stripAlias(raw, sAlias).transform {
-              case a: AttributeReference => UnresolvedAttribute(Seq(a.name))
-            }
-            norm.foreach {
-              case a: UnresolvedAttribute =>
-                val head = a.nameParts.head
-                if (tAlias.exists(head.equalsIgnoreCase) ||
-                    !srcLower.contains(head.toLowerCase))
-                  throw new IllegalArgumentException(
-                    s"vtab.`$root`: MERGE's WHEN MATCHED AND <c> THEN " +
-                      s"DELETE condition may reference SOURCE columns " +
-                      s"only (filters the incoming row), got: $a")
-              case _ =>
-            }
-            VTabExpr(norm)
+        val deleteMatched = st.matched.collectFirst { case Delete(c) =>
+          val norm = c.getOrElse(Literal.TrueLiteral).transform {
+            case UnresolvedAttribute("s" +: col) if col.nonEmpty =>
+              UnresolvedAttribute(col)
+          }
+          norm.foreach {
+            case a: UnresolvedAttribute
+                if a.nameParts.length > 1 && a.nameParts.head == "t" ||
+                  !srcCols.exists(_.equalsIgnoreCase(a.nameParts.head)) =>
+              throw new IllegalArgumentException(
+                s"vtab.`$root`: MERGE's WHEN MATCHED AND <c> THEN " +
+                  s"DELETE condition may reference SOURCE columns " +
+                  s"only (filters the incoming row), got: $a")
+            case _ =>
+          }
+          VTabExpr(norm)
         }
-        // column-level UPDATE SET list: LHS must be a whole target
-        // column; RHS refs are rewritten onto the CANONICAL aliases
-        // the runtime joined frame uses — resolved attrs can only be
-        // source-side (the target is this unresolved vtab relation)
-        // → s.<col>; statement-alias-qualified refs map t→t, s→s;
-        // unqualified refs resolve on the joined frame (ambiguity
-        // errors loudly at run, same as SQL)
-        val updateSet = m.matchedActions.collectFirst {
-          case UpdateAction(None, assigns, false) if assigns.nonEmpty =>
-            assigns.map { case Assignment(k, v) =>
-              val key = stripAlias(k, tAlias) match {
-                case a: UnresolvedAttribute if a.nameParts.length == 1 =>
-                  a.nameParts.head
-                case other => throw new IllegalArgumentException(
-                  s"vtab.`$root`: MERGE UPDATE SET targets whole " +
-                    s"columns, got $other — struct-field assignment " +
-                    "is not supported")
-              }
-              val norm = v.transform {
-                case a: AttributeReference =>
-                  UnresolvedAttribute(Seq("s", a.name))
-                case a: UnresolvedAttribute if a.nameParts.length > 1 &&
-                    sAlias.exists(a.nameParts.head.equalsIgnoreCase) =>
-                  UnresolvedAttribute("s" +: a.nameParts.tail)
-                case a: UnresolvedAttribute if a.nameParts.length > 1 &&
-                    tAlias.exists(a.nameParts.head.equalsIgnoreCase) =>
-                  UnresolvedAttribute("t" +: a.nameParts.tail)
-              }
-              key -> VTabExpr(norm)
-            }
-        }
-        updateSet.foreach { set =>
-          require(set.map(_._1.toLowerCase).distinct.size == set.size,
-            s"vtab.`$root`: duplicate assignment target in MERGE " +
-              "UPDATE SET")
+        // a column-level SET list already reads the canonical t/s
+        // aliases VersionedTable.merge's joined frame binds
+        val updateSet = st.matched.collectFirst {
+          case Update(_, Some(set)) => set.map { case (k, v) => k -> VTabExpr(v) }
         }
         VTabMergeCommand(root, m.sourceTable, keys, deleteMatched,
           updateSet)

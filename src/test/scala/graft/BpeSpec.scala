@@ -89,9 +89,7 @@ class BpeSpec extends SparkSuite {
     // rows fit (4 <= 1M) but chars (~2500) exceed the tiny cap: the
     // fallback must produce the same merges as the local loop
     val viaFallback =
-      withSQLConf("spark.graft.bpe.localVocabMaxChars" -> "100") {
-        Bpe.learn(docs, 6)
-      }
+      Bpe.learnFromCounts(Bpe.wordCounts(docs), 6, maxChars = 100L)
     val viaLocal = learnWith(1000000, docs, 6)
     assert(viaFallback == viaLocal)
   }

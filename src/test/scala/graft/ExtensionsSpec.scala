@@ -601,6 +601,19 @@ class ExtensionsSpec extends SparkSuite {
     }
     assert(overViol.getMessage.contains("violate"),
       overViol.getMessage.take(200))
+    // a constraint characteristic is refused by name, and EXPLAIN of
+    // the mapped statement never writes
+    Seq("NOT ENFORCED", "RELY").foreach { ch =>
+      val e = intercept[Exception] {
+        spark.sql(s"ALTER TABLE vtab.`$root` ADD CONSTRAINT c2 " +
+          s"CHECK (id > 0) $ch").collect()
+      }
+      assert(e.getMessage.contains(ch), e.getMessage.take(200))
+    }
+    val before = VersionedTable.versions(spark, root)
+    spark.sql(s"EXPLAIN ALTER TABLE vtab.`$root` ADD CONSTRAINT c2 " +
+      "CHECK (id > 0)").collect()
+    assert(VersionedTable.versions(spark, root) == before)
     // DROP CONSTRAINT by name mints a version and stops enforcement
     spark.sql(s"ALTER TABLE vtab.`$root` ADD CONSTRAINT id_pos " +
       "CHECK (id > 0)")

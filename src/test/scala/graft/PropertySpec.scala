@@ -707,4 +707,51 @@ class PropertySpec extends AnyFunSuite with SparkSuite {
         same(viaMap, maintained(baseDims))
     })
   }
+
+  test("mergeIntoSql equals mergeInto called directly: random aliases " +
+      "(t/s, swapped, upper-case), clause orders, alias-shaped literals") {
+    import graft.operators.Warehouse
+    val tgt = Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", -5L))
+      .toDF("k", "st", "tp")
+    val src = Seq((2L, "x", 7L), (3L, "y", -1L), (4L, "z", 40L))
+      .toDF("k", "st", "tp")
+    val aliasGen = Gen.oneOf(("t", "s"), ("s", "t"), ("T", "S"),
+      ("tgt", "src"), ("SNAP", "t"), ("x", "Y"))
+    // SQL literal text (with {t}/{s} standing for the aliases) and the
+    // value it denotes: alias-shaped text inside quotes is data
+    val litGen = Gen.oneOf("{s}.x, {t}.y", "{t}.st = {s}.st", "s.x, t.y",
+      "it''s {s}.k")
+    check(forAll(aliasGen, Gen.chooseNum(0, 4), Gen.oneOf(true, false),
+        litGen) { case ((ta, sa), shape, insert, litTpl) =>
+      val litSql = litTpl.replace("{t}", ta).replace("{s}", sa)
+      val litVal = litSql.replace("''", "'")
+      val set = s"UPDATE SET st = '$litSql', tp = $sa.tp + $ta.tp"
+      val clauses = shape match {
+        case 0 => s"WHEN MATCHED AND $sa.tp < 0 THEN DELETE WHEN MATCHED THEN $set"
+        case 1 => s"WHEN MATCHED AND $sa.tp > 0 THEN $set WHEN MATCHED THEN DELETE"
+        case 2 => s"WHEN MATCHED THEN $set"
+        case 3 => s"WHEN MATCHED AND $sa.tp < 0 THEN DELETE"
+        case _ => s"WHEN MATCHED AND $sa.tp > 0 THEN $set"
+      }
+      val text = s"MERGE INTO snap $ta USING delta $sa ON $ta.k = $sa.k " +
+        clauses + (if (insert) " WHEN NOT MATCHED THEN INSERT *" else "")
+      val sets = Map("st" -> lit(litVal), "tp" -> (col("s.tp") + col("t.tp")))
+      val (updates, delete) = shape match {
+        case 0 => (sets, Some(col("s.tp") < 0))
+        case 1 => (sets, Some(!coalesce(col("s.tp") > 0, lit(false))))
+        case 2 => (sets, None)
+        case 3 => (Map.empty[String, org.apache.spark.sql.Column],
+          Some(col("s.tp") < 0))
+        case _ => (sets.map { case (c, v) =>
+          c -> when(col("s.tp") > 0, v).otherwise(col(s"t.$c")) }, None)
+      }
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      val got = rows(Warehouse.mergeIntoSql(spark, text,
+        Map("snap" -> tgt, "delta" -> src)))
+      val want = rows(Warehouse.mergeInto(tgt, src, Seq("k"), updates,
+        whenNotMatchedInsert = insert, whenMatchedDelete = delete))
+      Prop.propBoolean(got == want) :| s"$text\n got  $got\n want $want"
+    })
+  }
 }

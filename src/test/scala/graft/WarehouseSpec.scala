@@ -296,16 +296,18 @@ class WarehouseSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getDouble(2))).sortBy(_._1)
     assert(collide.toSeq == Seq((1L, 10.0), (2L, 119.0), (3L, -6.0)),
       collide.mkString(","))
-    // ANSI first-match-wins: an UNCONDITIONAL update captures every
-    // matched row, so the later conditional DELETE is unreachable
-    val shadowed = graft.operators.Warehouse.mergeIntoSql(spark,
-      """MERGE INTO snap t USING delta s ON t.k = s.k
-         WHEN MATCHED THEN UPDATE SET tp = s.tp
-         WHEN MATCHED AND s.tp < 0 THEN DELETE""",
-      Map("snap" -> t, "delta" -> s))
-      .collect().map(r => (r.getLong(0), r.getDouble(2))).sortBy(_._1)
-    assert(shadowed.toSeq == Seq((1L, 10.0), (2L, 99.0), (3L, -1.0)),
-      shadowed.mkString(","))
+    // an UNCONDITIONAL update before another WHEN MATCHED clause would
+    // make that clause unreachable: Spark's grammar refuses it, on
+    // frames as on every MERGE target
+    val shadowed = intercept[org.apache.spark.sql.catalyst.parser.ParseException] {
+      graft.operators.Warehouse.mergeIntoSql(spark,
+        """MERGE INTO snap t USING delta s ON t.k = s.k
+           WHEN MATCHED THEN UPDATE SET tp = s.tp
+           WHEN MATCHED AND s.tp < 0 THEN DELETE""",
+        Map("snap" -> t, "delta" -> s))
+    }
+    assert(shadowed.getMessage.contains(
+      "NON_LAST_MATCHED_CLAUSE_OMIT_CONDITION"), shadowed.getMessage)
     // quoted literals: a comma inside a string must not split the SET
     // list, and alias-shaped text inside quotes must stay verbatim
     // (a quote-blind rewrite would turn 'src.x, tgt.y' into 's.x, t.y')
@@ -324,6 +326,56 @@ class WarehouseSpec extends SparkSuite {
            WHEN MATCHED THEN UPDATE SET tp = x.tp""",
         Map("snap" -> t, "delta" -> s))
     }
+  }
+
+  test("mergeIntoSql: UPDATE SET * takes the whole source row; a " +
+      "partial INSERT list is refused, not widened") {
+    import spark.implicits._
+    val t = Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("k", "st", "tp")
+    val s = Seq((2L, "x", 99.0), (4L, "z", 40.0)).toDF("k", "st", "tp")
+    val star = graft.operators.Warehouse.mergeIntoSql(spark,
+      """MERGE INTO snap t USING delta s ON t.k = s.k
+         WHEN MATCHED THEN UPDATE SET *
+         WHEN NOT MATCHED THEN INSERT *""",
+      Map("snap" -> t, "delta" -> s))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
+      .sortBy(_._1)
+    assert(star.toSeq == Seq((1L, "a", 10.0), (2L, "x", 99.0),
+      (4L, "z", 40.0)), star.mkString(","))
+    // ANSI leaves unlisted INSERT columns NULL; mergeInto inserts the
+    // whole source row, so a list that skips a column is an error
+    val partial = intercept[IllegalArgumentException] {
+      graft.operators.Warehouse.mergeIntoSql(spark,
+        """MERGE INTO snap t USING delta s ON t.k = s.k
+           WHEN NOT MATCHED THEN INSERT (k) VALUES (s.k)""",
+        Map("snap" -> t, "delta" -> s))
+    }
+    assert(partial.getMessage.contains("st, tp"), partial.getMessage)
+  }
+
+  test("one MERGE text, two targets: frames via mergeIntoSql and a " +
+      "vtab via SQL give the same rows") {
+    import spark.implicits._
+    import graft.operators.{VTabCatalog, VersionedTable}
+    val rows = Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L))
+    val root = tmpDir("merge_twin")
+    VersionedTable.commit(spark, root, rows.toDF("k", "st", "qty"))
+    Seq((2L, "x", 5L), (3L, "DEL", 7L), (4L, "n", 9L))
+      .toDF("k", "st", "qty").createOrReplaceTempView("merge_twin_src")
+    val stmt =
+      """MERGE INTO merge_twin.snap t USING merge_twin_src s ON t.k = s.k
+         WHEN MATCHED AND s.st = 'DEL' THEN DELETE
+         WHEN MATCHED THEN UPDATE SET qty = t.qty + s.qty
+         WHEN NOT MATCHED THEN INSERT *"""
+    VTabCatalog.register("merge_twin.snap", root)
+    try {
+      val frames = graft.operators.Warehouse.mergeIntoSql(spark, stmt,
+        Map("merge_twin.snap" -> rows.toDF("k", "st", "qty")))
+      spark.sql(stmt)
+      assertSameRows(frames, VersionedTable.read(spark, root))
+      assert(frames.collect().map(_.getLong(0)).sorted.toSeq ==
+        Seq(1L, 2L, 4L))
+    } finally VTabCatalog.unregister("merge_twin.snap")
   }
 
   test("compactSmallFiles merges many small files, preserves rows") {
